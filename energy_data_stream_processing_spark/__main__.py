@@ -14,7 +14,13 @@ semantic validation with a dead-letter quarantine, partitioned raw event
 store, hourly business metrics table, and an ingest-metrics summary on
 stdout (the reference's Prometheus counters, engine-side). ``--streaming``
 replays the file through the custom jsonl_replay source in paced
-micro-batches with checkpointed upserts — the Kafka-consumer form.
+micro-batches with checkpointed upserts — the Kafka-consumer form. Each
+micro-batch (``fold``) reads its source once: it tags every row with its
+reason and persists that, then runs only the jobs that write output (the
+dead letter, whose write also observes the valid/invalid counts; the raw
+landing, whose write observes the touched hours; the touched-hour
+recompute). The batch form takes its summary counts from observations on
+its writes too.
 """
 
 from __future__ import annotations
@@ -88,17 +94,74 @@ def cmd_oracle_check(args) -> int:
     return 0 if ok else 1
 
 
+def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
+    """One ``pipeline --streaming`` micro-batch (module docstring: one
+    source scan). The tagged frame is persisted because two writes read it,
+    and both writes are keyed by ``batch_id``, so a batch re-run after a
+    crash before its offset commit rewrites its own rows. Returns the
+    batch's ``{"valid": n, "invalid": m}``.
+    """
+    from pyspark.sql import functions as F
+
+    from .functions.observe import observed_ingest
+    from .operators.validation import flatten_events, validation_reason
+    from .sources import sinks
+    from .sources.jsonl import CORRUPT_COL, PAYLOAD_SCHEMA
+
+    # one reason per row: the transport verdict for envelope-invalid replay
+    # rows, semantic validation for the rest
+    envelope = batch_df.withColumns({
+        "payload": F.from_json("payload", PAYLOAD_SCHEMA),
+        CORRUPT_COL: F.lit(None).cast("string"),
+    }).withColumn(
+        "reason", F.when(F.col("valid"), validation_reason()).otherwise(F.col("reason"))
+    )
+    # envelope-invalid rows dead-letter their source line; semantically
+    # invalid ones the envelope as validated, reason included
+    dead_letter_raw = F.when(~F.col("valid"), F.col("raw")).when(
+        F.col("reason").isNotNull(),
+        F.to_json(F.struct("event_type", "event_time", "payload", CORRUPT_COL, "reason")),
+    )
+    tagged = envelope.select(
+        "event_type", "event_time", "payload", "reason", dead_letter_raw.alias("raw")
+    ).persist()
+    try:
+        observed, obs = observed_ingest(tagged)
+        sinks.write_quarantine(
+            observed.where(F.col("reason").isNotNull()).select("raw", "reason"),
+            f"{out}/dead_letter",
+            batch_id,
+        )
+        n = obs.get
+        if n["events_valid"]:
+            # idempotent landing + touched-hour recompute (exact distincts
+            # across batches, no additive-merge drift)
+            sinks.refresh_hourly_incremental(
+                batch_df.sparkSession, f"{out}/raw_events", f"{out}/hourly_metrics",
+                flatten_events(tagged.where(F.col("reason").isNull())),
+                increment_id=f"b{batch_id}",
+            )
+    finally:
+        tagged.unpersist()
+    return {"valid": n["events_valid"], "invalid": n["events_failed"]}
+
+
+def _counted(df):
+    """``df`` with a row count observed on whatever action runs it."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
 def cmd_pipeline(args) -> int:
     from pyspark.sql import functions as F
 
     from .operators.hourly import hourly_business_metrics
     from .operators.validation import split_events
-    from .sources.jsonl import PAYLOAD_SCHEMA, read_events_jsonl
-    from .sources.sinks import (
-        refresh_hourly_incremental,
-        write_quarantine,
-        write_raw_events_parquet,
-    )
+    from .sources.jsonl import read_events_jsonl
+    from .sources.sinks import write_quarantine, write_raw_events_parquet
 
     spark = _spark()
     out = args.output.rstrip("/")
@@ -114,43 +177,17 @@ def cmd_pipeline(args) -> int:
         )
         counts = {"valid": 0, "invalid": 0, "batches": 0}
 
-        def fold(batch_df, batch_id):
-            s = batch_df.sparkSession
-            # reconstruct the envelope frame the batch validators expect;
-            # envelope-invalid replay rows go straight to the dead letter
-            envelope = batch_df.where(F.col("valid")).select(
-                "event_type",
-                "event_time",
-                F.from_json("payload", PAYLOAD_SCHEMA).alias("payload"),
-                F.lit(None).cast("string").alias("_corrupt"),
-            )
-            transport_bad = batch_df.where(~F.col("valid")).select(
-                F.col("raw"), F.col("reason")
-            )
-            valid, invalid = split_events(envelope)
-            n_valid = valid.count()
-            counts["valid"] += n_valid
-            counts["invalid"] += invalid.count() + transport_bad.count()
+        def on_batch(batch_df, batch_id):
+            for k, v in fold(out, batch_df, batch_id).items():
+                counts[k] += v
             counts["batches"] += 1
-            write_quarantine(
-                invalid.select(F.to_json(F.struct("*")).alias("raw"), "reason")
-                .unionByName(transport_bad),
-                f"{out}/dead_letter",
-            )
-            if n_valid:
-                # idempotent landing + touched-hour recompute (exact
-                # distincts across batches — no additive-merge drift)
-                refresh_hourly_incremental(
-                    s, f"{out}/raw_events", f"{out}/hourly_metrics",
-                    valid, increment_id=f"b{batch_id}",
-                )
 
         # NOT availableNow: that trigger snapshots latestOffset once, but
         # this source paces by advancing the offset lines_per_batch per
         # trigger — processAllAvailable() drives triggers until the file is
         # drained, preserving the multi-micro-batch replay.
         q = (
-            stream.writeStream.foreachBatch(fold)
+            stream.writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", f"{out}/_checkpoint")
             .start()
         )
@@ -160,20 +197,22 @@ def cmd_pipeline(args) -> int:
     else:
         raw = read_events_jsonl(spark, args.input)
         valid, invalid = split_events(raw)
-        write_raw_events_parquet(valid, f"{out}/raw_events")
+        landed, n_valid = _counted(valid)
+        write_raw_events_parquet(landed, f"{out}/raw_events")
+        quarantined, n_invalid = _counted(invalid)
         write_quarantine(
-            invalid.select(F.to_json(F.struct("*")).alias("raw"), "reason"),
+            quarantined.select(F.to_json(F.struct("*")).alias("raw"), "reason"),
             f"{out}/dead_letter",
         )
-        metrics = hourly_business_metrics(valid)
+        metrics, n_hours = _counted(hourly_business_metrics(valid))
         metrics.write.mode("overwrite").parquet(f"{out}/hourly_metrics")
         print(
             json.dumps(
                 {
                     "mode": "batch",
-                    "valid": valid.count(),
-                    "invalid": invalid.count(),
-                    "hours": spark.read.parquet(f"{out}/hourly_metrics").count(),
+                    "valid": n_valid.get["n"],
+                    "invalid": n_invalid.get["n"],
+                    "hours": n_hours.get["n"],
                     "output": out,
                 }
             )

@@ -34,6 +34,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.columns import gateway_columns
 from ..sources.jsonl import CORRUPT_COL
 
 # consumer/consumer.py:102-110 verbatim semantics.
@@ -87,7 +88,16 @@ def parsed_event_time() -> Column:
 
 def validation_reason() -> Column:
     """NULL for valid rows, else the first failing reason (reference order:
-    malformed -> envelope -> event_time -> per-type payload fields)."""
+    malformed -> envelope -> event_time -> per-type payload fields).
+
+    The tree is built once per JVM (``gateway_columns``): it takes some
+    hundred py4j round trips, which a streaming micro-batch would otherwise
+    pay on every trigger. It carries no alias, so sharing it across plans
+    pins no exprId."""
+    return gateway_columns("validation_reason", _build_validation_reason)
+
+
+def _build_validation_reason() -> Column:
     blank_type = F.col("event_type").isNull() | (F.trim(F.col("event_type")) == "")
     return (
         F.when(F.col(CORRUPT_COL).isNotNull(), "Malformed JSON")

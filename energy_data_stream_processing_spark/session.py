@@ -1,6 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads); the
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` with a
+``$SPARK_DRIVER_MEMORY`` driver; unset, they default to the cores this
+process may run on and half the host's physical memory (at most 16g). The
 same settings are what we would ship as cluster defaults:
 
 - AQE on (runtime re-plan, skew-join handling, shuffle coalescing);
@@ -63,6 +65,29 @@ def _driver_java_options(run_dir: str) -> str:
     return f"{base} {' '.join(add)}".strip()
 
 
+def _host_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return os.environ["SPARK_GRAFT_CPUS"]
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no affinity API off Linux
+        return str(os.cpu_count() or 1)
+
+
+def _host_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else half the host's physical memory
+    capped at 16g: in local mode the driver JVM is the whole engine, and a
+    heap larger than the box lets the JVM grow until the OS kills it."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError):  # no sysconf, or no such key
+        return "1g"  # Spark's own default
+    return f"{min(phys // 2, 16 * 2**30) // 2**20}m"
+
+
 def get_spark(app_name: str = "energy-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -73,7 +98,7 @@ def get_spark(app_name: str = "energy-spark", shuffle_partitions: int | None = N
     that app's session settings."""
     import tempfile
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _host_cpus()
     parts = str(shuffle_partitions or cpus)
     # Keep session byproducts (spark-warehouse/ from saveAsTable, Derby's
     # derby.log/metastore_db) out of the caller's cwd: root them under a
@@ -90,7 +115,7 @@ def get_spark(app_name: str = "energy-spark", shuffle_partitions: int | None = N
         .config("spark.sql.shuffle.partitions", parts)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", _host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.path.join(run_dir, "warehouse"))
         .config("spark.driver.extraJavaOptions", _driver_java_options(run_dir))

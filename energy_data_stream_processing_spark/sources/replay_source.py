@@ -164,15 +164,36 @@ def _clear_watermark(sidecar: str) -> None:
             pass
 
 
-def _order(path: str, seed: str | None) -> list[int]:
+def _order(path: str, seed: str | None) -> Sequence[int]:
+    """File line index for each replay position: the identity ``range``
+    unseeded, the md5(seed:line_no) sort when seeded. One O(file) pass —
+    computed once per reader on the driver, never per read."""
     import hashlib
 
     with open(path) as f:
         n = sum(1 for _ in f)
-    idx = list(range(n))
-    if seed is not None:
-        idx.sort(key=lambda i: hashlib.md5(f"{seed}:{i}".encode()).hexdigest())
-    return idx
+    if seed is None:
+        return range(n)
+    return sorted(range(n), key=lambda i: hashlib.md5(f"{seed}:{i}".encode()).hexdigest())
+
+
+def _read_range(path: str, part: "_Range") -> Iterator[tuple]:
+    """Rows of one planned range: the file is streamed only up to the
+    highest line the range needs, keeping just those lines."""
+    import itertools
+
+    lines = part.lines
+    if not lines:
+        return
+    wanted = set(lines)
+    with open(path) as f:
+        kept = {
+            i: raw
+            for i, raw in enumerate(itertools.islice(f, max(lines) + 1))
+            if i in wanted
+        }
+    for pos, line_idx in enumerate(lines, part.start):
+        yield _parse_line(pos, kept[line_idx])
 
 
 def _parse_line(line_no: int, raw: str):
@@ -204,9 +225,13 @@ def _parse_line(line_no: int, raw: str):
 
 
 class _Range(InputPartition):
-    def __init__(self, start: int, end: int):
+    """Replay positions ``[start, end)`` and the file line of each
+    (``order[start:end]``, planned on the driver)."""
+
+    def __init__(self, start: int, end: int, lines: Sequence[int]):
         self.start = start
         self.end = end
+        self.lines = lines
 
 
 class _ReplayBatchReader(DataSourceReader):
@@ -215,14 +240,11 @@ class _ReplayBatchReader(DataSourceReader):
         self.seed = options.get("shuffle_seed")
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [_Range(0, len(_order(self.path, None)))]
+        order = _order(self.path, self.seed)
+        return [_Range(0, len(order), order)]
 
     def read(self, part: _Range) -> Iterator[tuple]:
-        order = _order(self.path, self.seed)
-        with open(self.path) as f:
-            lines = f.readlines()
-        for pos in range(part.start, part.end):
-            yield _parse_line(pos, lines[order[pos]])
+        return _read_range(self.path, part)
 
 
 class _ReplayStreamReader(DataSourceStreamReader):
@@ -230,7 +252,8 @@ class _ReplayStreamReader(DataSourceStreamReader):
         self.path = options["path"]
         self.seed = options.get("shuffle_seed")
         self.per_batch = int(options.get("lines_per_batch", "50"))
-        self.total = len(_order(self.path, None))
+        self._order = _order(self.path, self.seed)
+        self.total = len(self._order)
         # Durable committed-offset floor (see _load_watermark): keyed by the
         # replayed file by default; pass commit_id to namespace per query
         # when several independently-checkpointed queries replay one file.
@@ -279,14 +302,15 @@ class _ReplayStreamReader(DataSourceStreamReader):
         eff_start, eff_end = hw, max(e, hw)
         self._hw = eff_end
         self._last = max(getattr(self, "_last", 0), e, eff_end)
-        return [_Range(eff_start, eff_end)]
+        if eff_end > self.total:
+            raise ValueError(
+                f"{self.path} has {self.total} lines but the offset log "
+                f"asks for line {eff_end}: the replayed file shrank"
+            )
+        return [_Range(eff_start, eff_end, self._order[eff_start:eff_end])]
 
     def read(self, part: _Range) -> Iterator[tuple]:
-        order = _order(self.path, self.seed)
-        with open(self.path) as f:
-            lines = f.readlines()
-        for pos in range(part.start, part.end):
-            yield _parse_line(pos, lines[order[pos]])
+        return _read_range(self.path, part)
 
     def commit(self, end: dict) -> None:
         # Durable watermark: once Spark commits a batch end, no future

@@ -54,7 +54,9 @@ def _conf_override(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, prev)
 
 
-def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
+def overwrite_partitions(
+    df: DataFrame, path: str, *cols: str, fmt: str = "parquet"
+) -> None:
     """Dynamic-partition overwrite expressed as a WRITER option, not a
     session-conf mutation. The previous `_conf_override(spark, "spark.sql.
     sources.partitionOverwriteMode", "dynamic")` pattern mutated SHARED
@@ -71,13 +73,24 @@ def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*cols)
-        .parquet(path)
+        .format(fmt)
+        .save(path)
     )
 
 
-def write_quarantine(invalid: DataFrame, path: str) -> None:
-    """Dead-letter sink: reason + raw envelope as JSON lines (S8)."""
-    invalid.write.mode("append").json(path)
+def write_quarantine(invalid: DataFrame, path: str, batch_id: int | None = None) -> None:
+    """Dead-letter sink: reason + raw envelope as JSON lines (S8).
+
+    With ``batch_id`` (a streaming micro-batch) the rows land in that
+    batch's ``_batch_id=`` partition, overwritten on a re-run, so a batch
+    replayed after a crash before its offset commit does not duplicate its
+    dead letters. Without one the write is a plain append."""
+    if batch_id is None:
+        invalid.write.mode("append").json(path)
+    else:
+        overwrite_partitions(
+            invalid.withColumn("_batch_id", F.lit(batch_id)), path, "_batch_id", fmt="json"
+        )
 
 
 def write_raw_events_parquet(valid: DataFrame, path: str) -> None:
@@ -1079,54 +1092,52 @@ def refresh_hourly_incremental(
     landing is a plain append and the CALLER must guarantee at-most-once
     application of each increment.
 
-    Returns the recomputed hour list (for tests/observability).
+    Touched hours and days are observed ON the landing write (an
+    ``Observation``, computed by the write's own job): they come from
+    exactly the rows written, with no second pass over the increment and no
+    persist of the caller's lineage. Both are derived Spark-side — hours as
+    epoch seconds, which no time zone can shift, and days through
+    ``to_date`` in the session tz, the expression that keyed the
+    ``event_date`` partitions; rendering collected timestamps through the
+    DRIVER's tz would filter the raw read to the wrong partitions whenever
+    driver tz != session tz, and those hours would silently never refresh.
+
+    Returns the recomputed hours, ascending, as the naive datetimes a
+    ``collect()`` of the hour column yields (for tests/observability).
     """
+    from datetime import datetime
+
+    from pyspark.sql import Observation
+
     from ..operators.hourly import hourly_business_metrics
 
     _refuse_mixed_raw_layout(raw_path, increment_id)
-    # two actions over the increment (raw landing + touched-hour probe) —
-    # persist so the caller's lineage (often a transformed micro-batch)
-    # runs once, and the landed rows and the probed hours cannot diverge
-    # under a nondeterministic upstream
-    increment.persist()
-    try:
-        if increment_id is None:
-            write_raw_events_parquet(increment, raw_path)
-        else:
-            overwrite_partitions(
-                increment.withColumn("_increment_id", F.lit(increment_id))
-                .withColumn("event_date", F.to_date("event_time")),
-                raw_path,
-                "_increment_id",
-                "event_date",
-            )
-        # touched days are derived SPARK-SIDE (to_date in the session tz,
-        # the same expression that keyed the event_date partitions).
-        # Calling .date() on collected timestamps renders through the
-        # DRIVER's local tz — under driver tz != session tz that filtered
-        # the raw read to the wrong partitions and hours silently never
-        # refreshed. The touched HOURS themselves round-trip safely (the
-        # collect->isin conversion is symmetric through the driver tz).
-        trunc = (
-            increment.select(
-                F.date_trunc("hour", F.col("event_time")).alias("h"),
-                F.to_date("event_time").cast("string").alias("d"),
-            )
-            .distinct()
-            .collect()
+    touched_obs = Observation()
+    landed = increment.observe(
+        touched_obs,
+        F.collect_set(F.unix_seconds(F.date_trunc("hour", "event_time"))).alias("hours"),
+        F.collect_set(F.to_date("event_time").cast("string")).alias("days"),
+    )
+    if increment_id is None:
+        write_raw_events_parquet(landed, raw_path)
+    else:
+        overwrite_partitions(
+            landed.withColumn("_increment_id", F.lit(increment_id))
+            .withColumn("event_date", F.to_date("event_time")),
+            raw_path,
+            "_increment_id",
+            "event_date",
         )
-    finally:
-        increment.unpersist()
-    touched = [r["h"] for r in trunc]
-    if not touched:
+    seen = touched_obs.get
+    epochs = sorted(seen["hours"])
+    if not epochs:
         return []
-    days = sorted({r["d"] for r in trunc})
-    raw = spark.read.parquet(raw_path).where(F.col("event_date").isin(days))
+    raw = spark.read.parquet(raw_path).where(F.col("event_date").isin(sorted(seen["days"])))
     recomputed = hourly_business_metrics(raw).where(
-        F.col("hour").isin(touched)
+        F.unix_seconds("hour").isin(epochs)
     )
     upsert_hourly_metrics_parquet(spark, recomputed, store_path)
-    return touched
+    return [datetime.fromtimestamp(e) for e in epochs]
 
 
 def small_files_audit(spark: SparkSession, path: str) -> DataFrame:

@@ -140,3 +140,49 @@ def test_stream_checkpoint_restart_no_duplicates(registered, fixture_path, tmp_p
     assert len(seen) == n_first, (
         f"restart re-emitted {len(seen) - n_first} committed lines"
     )
+
+
+def _rows_by_full_read(path, seed, start, end):
+    """Reference read: the whole file and the full md5 order per call."""
+    import hashlib
+
+    from energy_data_stream_processing_spark.sources.replay_source import _parse_line
+
+    with open(path) as f:
+        lines = f.readlines()
+    order = list(range(len(lines)))
+    if seed is not None:
+        order.sort(key=lambda i: hashlib.md5(f"{seed}:{i}".encode()).hexdigest())
+    return [_parse_line(pos, lines[order[pos]]) for pos in range(start, end)]
+
+
+@pytest.mark.parametrize("seed", [None, "s1"])
+def test_range_reads_match_full_file_reads(tmp_path, seed):
+    """Readers plan the line order once and read only up to the last line a
+    range needs; every range still yields the rows a full read gives."""
+    from energy_data_stream_processing_spark.sources.replay_source import (
+        _ReplayBatchReader,
+        _ReplayStreamReader,
+    )
+
+    path = str(tmp_path / "events.jsonl")
+    with open(path, "w") as f:
+        for i in range(40):
+            f.write(LINES[i % len(LINES)].replace("C1", f"C{i}") + "\n")
+    opts = {"path": path, "lines_per_batch": "7"}
+    if seed is not None:
+        opts["shuffle_seed"] = seed
+
+    (whole,) = _ReplayBatchReader(opts).partitions()
+    assert list(_ReplayBatchReader(opts).read(whole)) == _rows_by_full_read(path, seed, 0, 40)
+
+    # contiguous batches from one reader, then resumed ranges on fresh ones
+    stream = _ReplayStreamReader(opts)
+    stream.initialOffset()
+    for start, end in [(0, 7), (7, 14), (14, 15), (15, 40)]:
+        (part,) = stream.partitions({"line": start}, {"line": end})
+        assert list(stream.read(part)) == _rows_by_full_read(path, seed, start, end)
+    for start, end in [(3, 9), (21, 40), (39, 40), (12, 12)]:
+        fresh = _ReplayStreamReader(opts)
+        (part,) = fresh.partitions({"line": start}, {"line": end})
+        assert list(fresh.read(part)) == _rows_by_full_read(path, seed, start, end)
