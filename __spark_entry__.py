@@ -45,74 +45,64 @@ def entry(spark: SparkSession) -> DataFrame:
 # drops can't redden the check). Oracle-less entries sort LAST in
 # _ordered_names so the sampled prefix stays 100% hash-checkable.
 
-_GATE_EVIDENCE_MAX_ROUND = 16
+_GATE_EVIDENCE_MAX_ROUND = 17
 
 _GATE_CHANGED: list[str] = [
-    "embedding_cosine_topk",
-    "dedup_ngram_jaccard",
-    "dedup_substring_windows",
-    "customer_view",
-    "streaming_corpus_curation",
-    "semantic_dedup_lsh",
-    "semantic_dedup_keep",
-    "customer_view_twophase",
-    "customer_view_prefilter",
     "streaming_hourly_metrics",
     "streaming_hourly_bounded",
-    "embedding_norm_outliers",
 ]
 
 _GATE_PREFIX = [
-    "embedding_cosine_topk",
-    "dedup_ngram_jaccard",
-    "dedup_substring_windows",
-    "customer_view",
-    "streaming_corpus_curation",
-    "semantic_dedup_lsh",
-    "semantic_dedup_keep",
-    "customer_view_twophase",
-    "customer_view_prefilter",
     "streaming_hourly_metrics",
     "streaming_hourly_bounded",
-    "embedding_norm_outliers",
-    "brand_quantity_revenue",
-    "changelog_compaction",
-    "collocation_pmi",
-    "consumption_payment_regression",
-    "copurchase_pairs",
-    "corpus_curation_pipeline",
-    "cross_source_contamination",
-    "cross_source_dup_matrix",
-    "customer_rfm_scores",
-    "data_outage_report",
-    "dedup_ngram_containment",
-    "distinct_channels",
-    "dup_rate_by_source",
-    "embedding_dim_profile",
-    "events_profile",
-    "funnel_conversion_latency",
-    "hour_of_week_seasonality",
-    "hourly_business_metrics_twophase",
-    "inter_event_gap_profile",
-    "k_anonymity_audit",
-    "kfold_assignment",
-    "lang_id_confusion",
-    "last_touch_attribution",
-    "line_dedup_audit",
-    "load_duration_curve",
-    "markov_stationary_distribution",
-    "mixture_temperature_sample",
-    "ngram_novelty_curve",
-    "ops_events_rate",
-    "ops_latency_p95",
-    "range_join_tariff_periods",
-    "revenue_pareto_concentration",
-    "revenue_reconciliation",
-    "seasonal_anomaly_zscore",
-    "session_type_cooccurrence",
-    "streaming_asof_enrichment",
-    "streaming_user_sessions",
-    "streaming_wau_growth",
+    "tariff_migration_matrix",
+    "tariff_revenue_attribution",
+    "unigram_surprisal_filter",
+    "vintage_drift_psi",
+    "weekly_active_users_growth",
+    "weighted_reservoir_sample",
+    "ab_test_segments",
+    "ann_ivf_incremental",
+    "approx_distinct_profile",
+    "boilerplate_windows",
+    "bpe_merge_induction",
+    "customer_order_distribution",
+    "dedup_exact",
+    "dedup_minhash_lsh_audit",
+    "dedup_simhash_audit",
+    "doc_chunk_audit",
+    "doc_fingerprints",
+    "dominant_part_suppliers",
+    "embedding_gram_matrix",
+    "embedding_quantization_audit",
+    "embedding_similar_pairs",
+    "event_grouping_sets",
+    "forecast_revenue_change",
+    "greedy_sequence_packing",
+    "hard_negative_mining",
+    "hourly_event_pivot",
+    "important_parts_value_share",
+    "key_skew_profile",
+    "label_centroids",
+    "lang_id",
+    "lapsed_buyers_except",
+    "large_volume_customers",
+    "linestatus_priority_counts",
+    "local_supplier_volume",
+    "market_share",
+    "multimodal_phash_dedup",
+    "nation_product_profit",
+    "nation_revenue_share",
+    "ngram_decontamination",
+    "order_priority_check",
+    "parts_never_ordered",
+    "pii_redaction_audit",
+    "price_bucket_histogram",
+    "pricing_summary",
+    "promo_revenue",
+    "regional_cheapest_supplier",
+    "repetition_profile",
+    "retained_buyers_intersect",
 ]
 
 

@@ -405,25 +405,23 @@ def main() -> None:
             "queries": ladder,
         }
 
-        # Streaming replay rung (round-11 verdict item 3): the bounded-
-        # state exact hourly twin replayed over FIXED ascending event-time
+        # Streaming replay rung (round-11 verdict item 3): the bounded
+        # exact hourly stream replayed over FIXED ascending event-time
         # chunks at 10x density with availableNow, at the engine's hours-
         # class state partitioning (SCALE.md §4.3). Runs HERE — after the
         # 10x rung whose data it reuses, BEFORE ladder100 — because the
         # 100x rung's heap/GC hangover inflated the replay ~2x when it ran
         # afterwards (measured r12: 20.1 s after ladder100 vs 11.3 s
-        # before, both at 8 state partitions). Chunk-file generation is
-        # excluded; the timed span is the streaming query itself (8 data
-        # micro-batches + the sentinel flush batch).
-        # SPARK_GRAFT_STREAM_REPLAY=0 skips.
+        # before). Chunk-file generation is excluded; the timed span is the
+        # streaming query itself (8 data micro-batches + the sentinel flush
+        # batch). SPARK_GRAFT_STREAM_REPLAY=0 skips.
         if os.environ.get("SPARK_GRAFT_STREAM_REPLAY", "1") != "0":
             from energy_data_stream_processing_spark.streaming.runner import (
                 HOURS_STATE_PARTITIONS,
                 append_watermark_sentinel,
                 ascending_time_chunks,
                 energy_events_stream,
-                hourly_metrics_stateful_bounded_stream,
-                run_stream_to_table,
+                run_hourly_stream,
             )
 
             replay_chunks = 8
@@ -433,18 +431,10 @@ def main() -> None:
                 spark, ladder_dir, source_dir=src, max_files_per_trigger=1
             )
             t0 = time.perf_counter()
-            run_stream_to_table(
-                spark,
-                hourly_metrics_stateful_bounded_stream(stream_ev, horizon="2 hours"),
-                mode="append",
-                # round-12: the engine sizes state partitions to the key-
-                # cardinality class (hours => 8); SCALE.md §4.3 measured the
-                # 32-partition session default wasting 1.45-1.67x wall here
-                state_partitions=HOURS_STATE_PARTITIONS,
-            )
+            run_hourly_stream(spark, stream_ev, horizon="2 hours")
             result["streaming_replay_sec"] = round(time.perf_counter() - t0, 3)
             result["streaming_replay"] = {
-                "variant": "bounded",
+                "variant": "native_append",
                 "chunks": replay_chunks,
                 "scale_x": 10,
                 "state_partitions": HOURS_STATE_PARTITIONS,
@@ -453,191 +443,6 @@ def main() -> None:
             import shutil
 
             shutil.rmtree(src, ignore_errors=True)
-
-            # Sharded-arm turnkey rung (round-13 verdict item 4): the
-            # dispatched pipeline's HOT-HOUR path — planted single-hour
-            # density (hot_hour_shard_probe.py's layout: every event folded
-            # into one event-time hour, sub-hour offsets preserved), driven
-            # through run_hourly_pipeline_dispatched with the REAL durable
-            # sinks (batch-id staging + touched-hour re-merge + watermark
-            # retention), so a regression in the staged flush shows up in
-            # the tracked numbers, not only in tests. The variant is pinned
-            # 'sharded' because the rung tracks the sharded PHYSICAL path:
-            # the gate corpus peaks at ~1.5k distinct customers/hour, far
-            # under the 50k auto-dispatch threshold, so auto would
-            # (correctly) pick bounded here — the dispatch decision itself
-            # is oracle-gated in tests/test_round13_ops.py. Base-sf events
-            # (not the 10x ladder) keep the rung's wall bounded; the hot
-            # fold, not raw volume, is what the sharded arm exists for.
-            # Generation time excluded. SPARK_GRAFT_STREAM_REPLAY=0 skips.
-            import tempfile
-
-            from energy_data_stream_processing_spark.sources.adapter import (
-                normalize_event_ts,
-            )
-            from energy_data_stream_processing_spark.streaming.runner import (
-                run_hourly_pipeline_dispatched,
-            )
-
-            hot_epoch_us = 1_699_999_200 * 1_000_000  # hour-aligned anchor
-            hot_dir = _scaled_dir(sf_dir, "events")
-            (
-                normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-                .withColumn(
-                    "ts",
-                    F.timestamp_micros(
-                        F.lit(hot_epoch_us)
-                        + F.unix_micros("ts") % F.lit(3_600_000_000)
-                    ),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{hot_dir}/events.parquet")
-            )
-            hot_src = ascending_time_chunks(spark, hot_dir, replay_chunks)
-            append_watermark_sentinel(spark, hot_dir, hot_src)
-            hot_ev = energy_events_stream(
-                spark, hot_dir, source_dir=hot_src, max_files_per_trigger=1
-            )
-            work = tempfile.mkdtemp(prefix="bench-sharded-replay-")
-            _TMP_DIRS.append(work)
-            t0 = time.perf_counter()
-            run_hourly_pipeline_dispatched(
-                spark,
-                hot_ev,
-                metrics_path=f"{work}/hours",
-                checkpoint=f"{work}/ckpt",
-                variant="sharded",
-                shards=32,
-                horizon="2 hours",
-            )
-            result["streaming_replay_sharded_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            result["streaming_replay_sharded"] = {
-                "variant": "sharded",
-                "layout": "hot_hour",
-                "chunks": replay_chunks,
-                "shards": 32,
-                "scale_x": 1,
-                "see": "SCALE.md §4.4, sinks.foreach_batch_sharded_flush",
-            }
-            shutil.rmtree(hot_src, ignore_errors=True)
-
-            # Sharding-WINS rung (round-14 verdict item 3): the rung above
-            # tracks the sharded arm's COST at a density where sharding is
-            # pure overhead (~1.5k distinct customers/hour — the regression
-            # tripwire for the staged flush); this one pins the arm's
-            # BENEFIT, the crossover the 50k dispatch threshold is built
-            # on. 10x-replicated events folded into the same single hour,
-            # customer cardinality remapped past the threshold with an
-            # xxhash64 remap of event_id onto 120k buckets (~all occupied
-            # at 10x sf0.1's 1M events — the adapter's 4-char id pad caps
-            # REAL ids at 10k, far under any genuinely hot hour). BOTH
-            # variants run the full durable pipeline on identical input.
-            # Why 10x: the bounded arm's cost driver is ONE python worker
-            # absorbing the hot key's whole micro-batch (plus its MB-class
-            # state row) serially — sharding divides exactly that — but at
-            # base sf the batches are small enough (12.5k rows) that the
-            # sharded arm's staged flush (staging write + re-merge per
-            # batch) eats the win: measured bounded/sharded 0.98 at 100k
-            # events vs a clear win at 1M. The crossover is density-real,
-            # not an artifact of the rung. shards left to the engine's own
-            # sizing rule via peak_hour_distinct (8 per 100k ids, floor 8).
-            hot10_dir = _scaled_dir(sf_dir, "events")
-            (
-                normalize_event_ts(
-                    spark.read.parquet(f"{sf_dir}/events.parquet")
-                )
-                .crossJoin(spark.range(10).withColumnRenamed("id", "_rep"))
-                .withColumn("event_id", F.col("event_id") * 10 + F.col("_rep"))
-                .drop("_rep")
-                .withColumn(
-                    "ts",
-                    F.timestamp_micros(
-                        F.lit(hot_epoch_us)
-                        + F.unix_micros("ts") % F.lit(3_600_000_000)
-                    ),
-                )
-                .repartition(32)
-                .write.mode("overwrite")
-                .parquet(f"{hot10_dir}/events.parquet")
-            )
-            hot10_src = ascending_time_chunks(spark, hot10_dir, replay_chunks)
-            append_watermark_sentinel(spark, hot10_dir, hot10_src)
-            # Medians of 3 INTERLEAVED reps per arm: the sharded arm's
-            # wall is the noisiest number in the bench (checkpoint +
-            # staging fsync on a contended VM disk — single shots of the
-            # SAME code read 20.7 vs 28.9 s an hour apart), and a
-            # single-shot ratio that can dip under 1.0 on a bad draw would
-            # false-alarm the exact signal this rung exists to pin.
-            hot_reps: dict[str, list[float]] = {"sharded": [], "bounded": []}
-            for _hot_rep in range(3):
-                for hot_variant in ("sharded", "bounded"):
-                    hot_ev_dense = energy_events_stream(
-                        spark,
-                        hot10_dir,
-                        source_dir=hot10_src,
-                        max_files_per_trigger=1,
-                    ).withColumn(
-                        "customer_id",
-                        F.concat(
-                            F.lit("C"),
-                            F.pmod(
-                                F.xxhash64("event_id"), F.lit(120_000)
-                            ).cast("string"),
-                        ),
-                    )
-                    hot_work = tempfile.mkdtemp(
-                        prefix=f"bench-hot-{hot_variant}-"
-                    )
-                    _TMP_DIRS.append(hot_work)
-                    t0 = time.perf_counter()
-                    run_hourly_pipeline_dispatched(
-                        spark,
-                        hot_ev_dense,
-                        metrics_path=f"{hot_work}/hours",
-                        checkpoint=f"{hot_work}/ckpt",
-                        variant=hot_variant,
-                        peak_hour_distinct=120_000,
-                        horizon="2 hours",
-                    )
-                    hot_reps[hot_variant].append(
-                        round(time.perf_counter() - t0, 3)
-                    )
-            hot_med = {
-                k: sorted(v)[len(v) // 2] for k, v in hot_reps.items()
-            }
-            # what the batch-aware auto rule (round-16) would pick at each
-            # measured pole — recorded so a rule/threshold drift that
-            # stops matching the measured crossover is visible in the
-            # sidecar next to the numbers it must predict
-            from energy_data_stream_processing_spark.streaming.runner import (
-                decide_hourly_variant,
-            )
-
-            result["replay_sharded_hot"] = {
-                "layout": "hot_hour_remapped_ids",
-                "id_buckets": 120_000,
-                "scale_x": 10,
-                "chunks": replay_chunks,
-                "auto_rule_base_sf": decide_hourly_variant(
-                    peak_hour_distinct=68_000,
-                    expected_rows_per_trigger=12_500,
-                )["variant"],
-                "auto_rule_hot10": decide_hourly_variant(
-                    peak_hour_distinct=120_000,
-                    expected_rows_per_trigger=125_000,
-                )["variant"],
-                "sharded_sec": hot_med["sharded"],
-                "bounded_sec": hot_med["bounded"],
-                "reps": hot_reps,
-                "stat": "median_of_3_interleaved",
-                "bounded_over_sharded": round(
-                    hot_med["bounded"] / hot_med["sharded"], 3
-                ),
-                "see": "SCALE.md §4.4 crossover",
-            }
-            shutil.rmtree(hot10_src, ignore_errors=True)
 
         # 100x density rung (round-8 verdict item 3): the three
         # customer_view plans head-to-head at sf10-equivalent per-customer

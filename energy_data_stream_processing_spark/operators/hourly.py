@@ -47,12 +47,16 @@ METRIC_COLUMNS = [
 ]
 
 
-def _build_hourly_columns() -> tuple:
+def _build_hourly_columns(distinct=F.count_distinct) -> tuple:
     """(group_key, agg_columns, derived_columns) — constructed once per JVM
     via ``gateway_columns`` (round 16, guide §7.3): the 15-aggregate tree is
     ~60 py4j round trips ≈ 0.2-0.4 s of pure driver latency, and was paid by
     EVERY caller (the hourly entry itself, rolling_24h, business_kpis_growth,
-    daily_energy_summary, the streaming twins)."""
+    daily_energy_summary, the streaming twins).
+
+    ``distinct`` builds the two exact distinct counts; the streaming twin
+    passes a ``size(collect_set(..))`` form because streaming aggregation
+    rejects ``count(DISTINCT ..)``."""
     t = F.col("event_type")
     pay = F.col("payment_amount")
     energy = F.col("energy_consumed")
@@ -67,8 +71,8 @@ def _build_hourly_columns() -> tuple:
         F.count(F.when(t == "incentive_claim", 1)).alias("incentive_claims"),
         dsum(F.when(t == "incentive_claim", pay)).alias("total_incentive_payouts"),
         F.count(F.when(t == "user_login", 1)).alias("total_logins"),
-        F.count_distinct(F.when(t == "user_login", F.col("session_id"))).alias("new_sessions"),
-        F.count_distinct(F.col("customer_id")).alias("active_customers"),
+        distinct(F.when(t == "user_login", F.col("session_id"))).alias("new_sessions"),
+        distinct(F.col("customer_id")).alias("active_customers"),
         dsum(F.when(t == "energy_consumed", energy)).alias("total_energy_consumed"),
         F.coalesce(F.max(F.when(t == "energy_consumed", energy)).cast("double"), F.lit(0.0)).alias(
             "peak_hour_usage"

@@ -67,7 +67,7 @@ def overwrite_partitions(
     micro-batch. The writer-level option is scoped to this one write and
     touches no shared state. Also the single home for the idempotent
     replay-key mechanic (withColumn(lit id) + overwrite own partitions)
-    that the raw append, the sharded staging landing, and the incremental
+    that the raw append, the streaming dead letter and the incremental
     refresh all share."""
     (
         df.write.mode("overwrite")
@@ -526,7 +526,7 @@ def foreach_batch_statement_upsert(
     ``postgres_final`` (INSERT ... ON CONFLICT DO NOTHING) has the MIRROR
     hazard (round-10 advice): it is correct only for streams that emit each
     hour EXACTLY ONCE with its final aggregates (append-mode final-only
-    emission, e.g. ``hourly_metrics_stateful_bounded_stream``). Fed an
+    emission, e.g. ``hourly_metrics_stream`` with a horizon). Fed an
     update-mode partial-emitting stream, DO NOTHING silently freezes every
     hour at its first partial. The sink cannot see the upstream output
     mode, so the caller must acknowledge the pairing with
@@ -543,7 +543,7 @@ def foreach_batch_statement_upsert(
             "postgres_final (INSERT .. ON CONFLICT DO NOTHING) silently "
             "freezes each hour at its FIRST emission, so it is only correct "
             "for append-mode final-only streams (e.g. "
-            "hourly_metrics_stateful_bounded_stream); pass final_only=True "
+            "hourly_metrics_stream with a horizon); pass final_only=True "
             "to acknowledge the stream emits each hour exactly once with "
             "final values, or use dialect='postgres' (full-row replacement) "
             "for update-mode partial emissions"
@@ -594,250 +594,6 @@ def collect_hour_bound_rows(metrics: DataFrame) -> list[tuple]:
     ]
 
 
-def foreach_batch_sharded_flush(
-    staging_path: str,
-    table: str | None = None,
-    execute_many=None,
-    metrics_path: str | None = None,
-    two_stage_sessions: bool = False,
-    prune_closed: bool = False,
-):
-    """foreachBatch body completing the sharded hot-hour pipeline (round-12
-    verdict item 1): per-(hour, shard) raw partials from
-    ``hourly_metrics_stateful_sharded_stream`` land idempotently in a
-    parquet STAGING store, then every hour the batch touched is re-merged
-    from the full staging set (``merge_sharded_hourly_partials``) and
-    flushed as a complete row through the idempotent full-row sinks —
-    the parquet hour upsert (``metrics_path``) and/or the generated
-    ``postgres`` statement via an injected ``execute_many`` (``table``).
-
-    Why stage instead of merging the batch directly: one hour's shard
-    partials are NOT guaranteed to evict in the same micro-batch — each
-    (hour, shard) state row times out at ``max(hour_end,
-    watermark-at-last-update + 1)``, so a shard last touched in an earlier
-    batch can fire a batch before its siblings. Merging only the current
-    batch would flush an incomplete hour and full-row replacement would
-    REGRESS the stored row. Re-merging the touched hours from everything
-    staged so far makes every flush complete w.r.t. all partials seen;
-    when an hour's last shard arrives, its flushed row becomes final.
-
-    Replay safety (crash between flush and checkpoint commit): the staging
-    landing is a dynamic-partition OVERWRITE keyed by ``_batch_id`` — a
-    replayed micro-batch rewrites exactly its own files (same mechanics as
-    ``foreach_batch_raw_append``), so staging contents are idempotent; the
-    re-merge then recomputes identical rows and both flush backends are
-    full-row replacement. This is also why ``postgres_final`` (DO NOTHING)
-    is deliberately NOT offered here: an hour legitimately flushes
-    multiple times as its shards straddle batches, and DO NOTHING would
-    freeze it at its first — possibly incomplete — merge.
-
-    Scale: every frame touched here is aggregate-sized — a batch carries
-    at most touched-hours x shards partial rows, staging holds one row per
-    (hour, shard) ever evicted, and the merge groups hours-cardinality
-    keys. Staging is partitioned by ``(_batch_id, hour_epoch_ms)``: the
-    batch-id level keeps the replay overwrite exact (a retried batch
-    rewrites exactly its own (batch, hour) partitions), and the hour level
-    lets the touched-hours re-read PARTITION-PRUNE (plan-gated) — per-batch
-    flush cost is O(touched hours' partials), not O(everything staged), so
-    a long-running stream stays linear instead of re-scanning its whole
-    history every trigger. Retention: staged partials for a CLOSED hour
-    are dead weight — two complementary prune paths keep staging bounded
-    at ≈ open hours × shards rows. (1) ``prune_closed=True`` — OPT-IN on
-    this standalone function (default False: in-batch pruning silently
-    DELETES mid-hour partials when a harness replays synthetic partials
-    out of real eviction order, and silent data deletion must not be the
-    default posture of a public seam); the turnkey
-    ``run_hourly_pipeline_dispatched`` passes True, where the input
-    stream's eviction-order guarantee is structural. When enabled it
-    prunes IN-BATCH after each flush: every touched hour proves the batch
-    executed with watermark past its end, so any staged hour ending at or
-    before the NEWEST touched end either evicted in an earlier committed
-    batch (final, flushed, unreachable) or would itself be in this batch's
-    touched set — except the batch's own touched hours, which a
-    crash-replay of this batch still re-merges and therefore must be kept
-    (``keep_hours``). This is what bounds a CONTINUOUS stream, whose run
-    never "completes". The rule assumes batches arrive in REAL EVICTION
-    ORDER — guaranteed when the input is
-    ``hourly_metrics_stateful_sharded_stream`` (the watermark fires all of
-    an hour's due timeouts in one batch and late-filters everything
-    after) — so a harness replaying synthetic partials out of that order
-    must keep the False default or earlier straddle partials get
-    pruned mid-hour. (2) The turnkey pipeline additionally runs
-    ``prune_sharded_staging`` with the final committed watermark after
-    each availableNow invocation, catching the tail the in-batch rule's
-    touched-derived threshold cannot see. For hot-hour session sets
-    ≥~10^5 ids pass ``two_stage_sessions=True`` (see
-    ``merge_sharded_hourly_partials``)."""
-    if (table is None) != (execute_many is None):
-        raise ValueError("table and execute_many must be passed together")
-    if metrics_path is None and table is None:
-        raise ValueError("need at least one sink: metrics_path and/or table")
-    sql = jdbc_upsert_statement(table, dialect="postgres") if table else None
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        # lazy: runner imports sinks, so sinks cannot import runner at top
-        from ..streaming.runner import merge_sharded_hourly_partials
-
-        spark = batch_df.sparkSession
-        # two actions over a stateful micro-batch output (touched-hour
-        # probe + staging write) — persist so the state plan runs once
-        batch_df.persist()
-        try:
-            # Probe FIRST, and skip the staging write on an empty batch
-            # (round 17, guide §1/§6): most micro-batches of an open hot
-            # hour evict NOTHING (state holds until the watermark passes
-            # the hour end), yet the old order paid a full
-            # dynamic-partition-overwrite commit per batch to write zero
-            # rows (measured 0.3-0.6 s/batch of pure commit overhead,
-            # plans/r17/replay_profile.json). The probe is count()-shaped
-            # (a distinct over EVERY state partition), so the stateful
-            # plan still executes all partitions and commits its state
-            # exactly as the write did — an action that short-circuits
-            # (isEmpty/limit) would be WRONG here, it could leave state
-            # partitions unexecuted. Replay safety is unchanged: an empty
-            # batch writes nothing under both orders, and a replayed
-            # non-empty batch still rewrites exactly its own
-            # (_batch_id, hour) partitions.
-            touched = [
-                r["hour_epoch_ms"]
-                for r in batch_df.select("hour_epoch_ms").distinct().collect()
-            ]
-            if touched:
-                overwrite_partitions(
-                    batch_df.withColumn("_batch_id", F.lit(batch_id)),
-                    staging_path,
-                    "_batch_id",
-                    "hour_epoch_ms",
-                )
-        finally:
-            batch_df.unpersist()
-        if not touched:
-            return
-        staged = spark.read.parquet(staging_path).where(
-            F.col("hour_epoch_ms").isin(touched)
-        )
-        merged = merge_sharded_hourly_partials(
-            staged, two_stage_sessions=two_stage_sessions
-        )
-        if metrics_path is not None:
-            upsert_hourly_metrics_parquet(spark, merged, metrics_path)
-        if sql is not None:
-            rows = collect_hour_bound_rows(merged)
-            if rows:
-                execute_many(sql, rows)
-        if prune_closed:
-            # every touched hour T proves this batch executed with
-            # watermark > hour_end(T); see the docstring's closure rule
-            prune_sharded_staging(
-                staging_path,
-                max(touched) + 3_600_000,
-                keep_hours=set(touched),
-            )
-
-    return fn
-
-
-def staging_prune_watermark_ms(progress) -> int:
-    """Prune threshold from a completed run's FINAL progress: the
-    watermark that (committed) batch EXECUTED with.
-
-    Progress reports are emitted for completed — hence committed — batches
-    only, and ``eventTime.watermark`` carries the watermark the trigger
-    ran with (captured at trigger start), not the value the batch's data
-    advanced it to. That distinction is load-bearing for the prune rule
-    (see ``prune_sharded_staging``) and is pinned measured, not assumed:
-    tests/test_round13_ops.py::test_staging_prune_progress_invariant_measured
-    checks every (progress, staged-partial) pair of a real multi-batch
-    sharded run. Accepts a dict or a ``StreamingQueryProgress``; returns 0
-    (prune no-op) when there is no progress or no watermark yet."""
-    from datetime import datetime, timezone
-
-    if progress is None:
-        return 0
-    et = getattr(progress, "eventTime", None)
-    if et is None and isinstance(progress, dict):
-        et = progress.get("eventTime")
-    wm = (et or {}).get("watermark")
-    if not wm:
-        return 0
-    for fmt in ("%Y-%m-%dT%H:%M:%S.%fZ", "%Y-%m-%dT%H:%M:%SZ"):
-        try:
-            dt = datetime.strptime(wm, fmt).replace(tzinfo=timezone.utc)
-            return int(dt.timestamp() * 1000)
-        except ValueError:
-            continue
-    return 0
-
-
-def prune_sharded_staging(
-    staging_path: str,
-    closed_before_ms: int,
-    keep_hours: set[int] | None = None,
-) -> list[str]:
-    """Retention for the sharded flush's staging store: delete the
-    ``(_batch_id, hour_epoch_ms)`` partials of every hour that can never
-    be touched again, so a long-running stream's staging footprint tracks
-    the OPEN hours (≈ horizon × shards rows), not its whole history.
-
-    The safe-prune rule is derived from the eviction mechanics, not a TTL
-    guess. A ``(hour, shard)`` state row's event-time timeout is always
-    exactly the hour end: the watermark late-filter bounds every update's
-    current watermark strictly below ``hour_end``, so
-    ``max(hour_end, watermark+1ms)`` (runner.py's timeout line) collapses
-    to ``hour_end``. Spark fires event-time timeouts in the first batch
-    EXECUTED with watermark strictly past them. Therefore once any batch
-    has COMMITTED having run with watermark ``W``, every hour with
-    ``hour_end < W`` has (a) evicted ALL its shards into staging no later
-    than that batch, (b) had its final re-merge flushed durably by that
-    batch's ``foreach_batch_sharded_flush``, and (c) — because any later
-    event for it would be watermark-late-filtered and any pending timeout
-    would already have fired — no future batch that can touch it. Its
-    staged partials are unreachable; deleting them cannot change any
-    future merge. Hours at or past ``W`` keep every partial: their
-    remaining shards may evict in a later batch (or a later catch-up
-    invocation — timeouts deferred past an un-run trailing no-data batch
-    fire after the next run's first in-run watermark advance), and that
-    batch's re-merge must still see the early shards.
-
-    Pass the RUN watermark of a committed batch — in practice
-    ``staging_prune_watermark_ms()`` of the final progress returned by
-    ``run_stream_foreach_batch`` (the turnkey pipeline does this
-    automatically). ``keep_hours`` exempts specific hours regardless of
-    the threshold — the in-batch prune path uses it for the current
-    batch's own touched hours, whose partials a crash-replay of that
-    (not-yet-committed) batch still re-merges. The deletion itself is
-    hour-partition ``rmtree`` on the local filesystem (the same
-    local-checkpoint assumption the pipeline documents); emptied
-    ``_batch_id=`` directories are removed too. Returns the deleted
-    partition paths (relative), for logs/tests."""
-    import shutil
-
-    removed: list[str] = []
-    if closed_before_ms <= 0 or not os.path.isdir(staging_path):
-        return removed
-    for bdir in sorted(os.listdir(staging_path)):
-        bpath = os.path.join(staging_path, bdir)
-        if not (bdir.startswith("_batch_id=") and os.path.isdir(bpath)):
-            continue
-        for hdir in sorted(os.listdir(bpath)):
-            if not hdir.startswith("hour_epoch_ms="):
-                continue
-            try:
-                hour_ms = int(hdir.split("=", 1)[1])
-            except ValueError:
-                continue
-            # strict: an hour whose end EQUALS the watermark has not fired
-            # (timeouts fire strictly past), so it stays
-            if hour_ms + 3_600_000 < closed_before_ms and (
-                keep_hours is None or hour_ms not in keep_hours
-            ):
-                shutil.rmtree(os.path.join(bpath, hdir))
-                removed.append(f"{bdir}/{hdir}")
-        if not any(e.startswith("hour_epoch_ms=") for e in os.listdir(bpath)):
-            shutil.rmtree(bpath)
-    return removed
-
-
 def jdbc_upsert_statement(
     table: str, dialect: str = "postgres", source_table: str | None = None
 ) -> str:
@@ -851,8 +607,8 @@ def jdbc_upsert_statement(
     ``dialect="postgres"`` emits ``ON CONFLICT`` with ``%s`` placeholders
     (the reference's target database); ``dialect="merge"`` emits standard
     SQL:2003 ``MERGE`` with ``?`` placeholders. With ``source_table`` the
-    MERGE reads from a staging base table instead of inline VALUES — the
-    per-micro-batch shape (Spark JDBC-appends the batch to staging, one
+    MERGE reads from a landing base table instead of inline VALUES — the
+    per-micro-batch shape (Spark JDBC-appends the batch to that table, one
     MERGE folds it in), and the only source form Derby accepts (42XAL) —
     executed against embedded Derby in tests/test_jdbc_optional.py to prove
     twice-applied idempotence.

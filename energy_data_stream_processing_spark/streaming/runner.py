@@ -6,124 +6,51 @@ SQL upsert (consumer/consumer.py:240-415). Spark-first, that is:
 
 - ``readStream`` file/Kafka source -> the same adapter/validation transforms
   as batch (transforms are source-agnostic DataFrames);
-- **native path**: event-time window + watermark aggregation — counters and
-  sums exact, distinct counts via ``approx_count_distinct`` (Spark's
-  streaming agg does not allow exact distincts; documented divergence);
-- **stateful path**: ``applyInPandasWithState`` keyed by hour holding
-  exact distinct sets + counters — the faithful ``HourlyStats`` machine,
-  with the reference's merge bugs fixed (true distincts across flushes,
-  GREATEST peak instead of last-write-wins; SURVEY.md §2.3 fidelity
-  warnings). Money stays exact: cents/milli-units integers in state, one
-  correctly-rounded double conversion on emit — bit-identical to the batch
-  DECIMAL path, so the streaming query shares the batch oracle SQL.
+- **exact hourly stream** (``hourly_metrics_stream``): Spark's built-in
+  event-time window aggregation over the SAME 15-metric column tree as the
+  batch ``hourly_business_metrics``. Streaming aggregation rejects
+  ``count(DISTINCT ..)``, so the two distincts are ``size(collect_set(..))``
+  — still exact, the sets live in the built-in state store. Money stays
+  exact (DECIMAL sums, one double conversion), so the streaming entries
+  share the batch oracle SQL, and the reference's merge bugs stay fixed
+  (true distincts across flushes, GREATEST peak instead of
+  last-write-wins; SURVEY.md §2.3 fidelity warnings). It runs two ways:
+  append mode under a watermark (each hour emitted once, state bounded by
+  the lateness horizon) or update mode without one (any lateness, one
+  state row per hour);
+- **approximate path** (``hourly_metrics_native_stream``): the same window
+  with HLL distincts — a documented divergence with its own catalog entry.
 
-The catalog entry runs the stateful query with ``availableNow`` into a
-memory sink and returns the final per-hour rows: the batch==streaming
-equivalence the reference can only approximate is an actual differential
-gate here.
+The catalog entries run with ``availableNow`` into a memory sink and return
+the final per-hour rows: the batch==streaming equivalence the reference can
+only approximate is an actual differential gate here.
 
-Scale notes: state is one row per (hour) group — tiny; the distinct sets
-bound memory by |customers-per-hour| (at 100 TB: swap the sets for HLL
-sketches or pre-aggregate by (hour, customer), and keep RocksDB state
-store). Watermark 24 h mirrors the reference's eviction horizon
+Scale notes: state is one row per open hour; the distinct sets bound its
+size by |customers-per-hour| (at 100 TB: swap the sets for HLL sketches or
+pre-aggregate by (hour, customer), and keep RocksDB state store). The
+approximate path's 24 h watermark mirrors the reference's eviction horizon
 (consumer/consumer.py:377-381).
 """
 
 from __future__ import annotations
 
-import math
 import os
 import tempfile
 import uuid
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import LongType, StructField, StructType
 
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from ..operators.hourly import METRIC_COLUMNS
+from ..functions.columns import gateway_columns
+from ..operators.hourly import METRIC_COLUMNS, _build_hourly_columns
+from ..sources import sinks
 from ..sources.adapter import ENERGY_EVENTS_SQL, normalize_event_ts
 from ..sources.sinks import _conf_override, overwrite_partitions
 from ..plans.catalog import register
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("hour", TimestampType(), False),
-        # True epoch ms of the hour start, carried through the group key.
-        # The naive session-tz `hour` label is LOSSY on a DST fall-back
-        # (two epoch hours share one wall label); this column is the
-        # tz-proof identity the stream builders reconstruct `hour` from
-        # (and which sinks can key on). Round-11 advice fix.
-        StructField("hour_epoch_ms", LongType(), False),
-        StructField("update_seq", LongType(), False),
-    ]
-    + [
-        StructField(c, LongType() if c in {
-            "tariff_switches", "incentive_claims", "green_tariff_switches",
-            "active_customers", "new_sessions", "total_logins", "payment_events",
-        } else DoubleType(), False)
-        for c in METRIC_COLUMNS
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("tariff_switches", LongType(), False),
-        StructField("switch_revenue_cents", LongType(), False),
-        StructField("incentive_claims", LongType(), False),
-        StructField("incentive_cents", LongType(), False),
-        StructField("green_switches", LongType(), False),
-        StructField("total_logins", LongType(), False),
-        StructField("energy_milli", LongType(), False),
-        StructField("peak_milli", LongType(), False),
-        StructField("payment_cents", LongType(), False),
-        StructField("payment_events", LongType(), False),
-        StructField("customers", ArrayType(StringType()), False),
-        StructField("sessions", ArrayType(LongType()), False),
-        StructField("update_seq", LongType(), False),
-    ]
-)
-
-# Per-(hour, shard) PARTIAL emitted by the sharded hot-hour variant
-# (round-11 verdict item 6): raw integer accumulators — the same
-# quantized representation the state carries — plus the shard's exact
-# distinct-customer COUNT (shards are customer-hash-disjoint, so counts
-# add) and its exact session ID SET (sessions are only customer-scoped
-# by convention, not by schema, so cross-shard exactness needs the set;
-# the merge dedups across shards). Emitted ONCE per (hour, shard) at
-# eviction, never rewritten.
-SHARD_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("hour", TimestampType(), False),
-        StructField("hour_epoch_ms", LongType(), False),
-        StructField("shard", LongType(), False),
-        StructField("update_seq", LongType(), False),
-        StructField("tariff_switches", LongType(), False),
-        StructField("switch_revenue_cents", LongType(), False),
-        StructField("incentive_claims", LongType(), False),
-        StructField("incentive_cents", LongType(), False),
-        StructField("green_switches", LongType(), False),
-        StructField("total_logins", LongType(), False),
-        StructField("energy_milli", LongType(), False),
-        StructField("peak_milli", LongType(), False),
-        StructField("payment_cents", LongType(), False),
-        StructField("payment_events", LongType(), False),
-        StructField("n_customers", LongType(), False),
-        StructField("sessions", ArrayType(LongType()), False),
-    ]
-)
 
 
 def stream_raw_events(
@@ -223,8 +150,9 @@ def hourly_metrics_native_stream(
 
 
 def collapse_native_updates(out: DataFrame) -> DataFrame:
-    """Collapse the native stream's update-mode memory sink to one FINAL row
-    per hour, ordered by the ``_rows_total`` emission ordinal.
+    """Collapse an update-mode hourly memory sink (the approximate native
+    stream, or ``hourly_metrics_stream`` without a horizon) to one FINAL
+    row per hour, ordered by the ``_rows_total`` emission ordinal.
 
     Each update-mode re-emission of a window is CUMULATIVE, and a window
     re-emits only when new rows folded into it, so its cumulative row count
@@ -232,8 +160,8 @@ def collapse_native_updates(out: DataFrame) -> DataFrame:
     emission WHOLESALE. The round-14 collapse took per-column ``max()`` on
     the stated ground that every column is non-decreasing; that holds for
     counters and HLL register maxima but NOT for sums once a negative
-    value (meter corrections / exports — the ``PEAK_NONE_MILLI`` rationale)
-    arrives in a later micro-batch: the cumulative sum DECREASES and
+    value (meter corrections / exports) arrives in a later micro-batch:
+    the cumulative sum DECREASES and
     ``max()`` keeps the stale earlier partial, under exactly the
     multi-batch split the dedup exists to defend against (r14 verdict
     item 2; regression pinned in tests/test_round15_ops.py::
@@ -250,475 +178,55 @@ def collapse_native_updates(out: DataFrame) -> DataFrame:
     )
 
 
-#: State sentinel for "no energy rows seen yet". The batch oracle's
-#: coalesce(max(energy), 0) floors ONLY when no energy rows exist; a
-#: 0-seeded max() would also floor a genuinely negative peak (meter
-#: corrections / exports), silently diverging from the oracle. The
-#: sentinel loses max() to any real milli value and renders as 0.0 at
-#: emission; it flows through shard partials so the downstream merge
-#: keeps the same rule.
-PEAK_NONE_MILLI = -(1 << 62)
+def _exact_distinct(c):
+    # streaming aggregation rejects count(DISTINCT); the set form is exact
+    return F.size(F.collect_set(c)).cast("long")
 
 
-def _stateful_update_fn(final_only: bool = False, shard_partial: bool = False):
-    """Closure (pickled by value — workers never import this package).
-
-    ``final_only=True`` is the bounded-state flavor: merge batches emit
-    NOTHING; the hour's single final row emits when its event-time timeout
-    fires (the watermark passed the hour end), after which the state row is
-    REMOVED. Requires ``outputMode="append"`` +
-    ``GroupStateTimeout.EventTimeTimeout`` at the call site.
-
-    ``shard_partial=True`` (implies ``final_only``) is the hot-hour
-    sharded flavor: the key is ``(hour, hour_epoch_ms, shard)`` and the
-    eviction emits a RAW PARTIAL (``SHARD_PARTIAL_SCHEMA``) instead of
-    derived metrics — ``merge_sharded_hourly_partials`` folds the shards
-    back into the exact hourly row downstream of the state function.
-
-    Keyed by ``(hour, hour_epoch_ms)``: the naive session-tz ``hour``
-    label arrives lossy (a DST fall-back maps TWO epoch hours onto one
-    wall label, and ``getCurrentWatermarkMs``/``setTimeoutTimestamp``
-    speak true epoch), so the JVM side computes the hour start's epoch ms
-    (``cast(hour as long) * 1000`` — tz-independent: Spark timestamps are
-    internal epoch micros) and carries it in the key. ``key[1]`` makes the
-    timeout arithmetic exact and the output rows tz-proof with no
-    ambiguous re-localization anywhere (round-10/11 advice)."""
-    if shard_partial and not final_only:
-        raise ValueError(
-            "shard_partial emits once per (hour, shard) at eviction — it "
-            "requires final_only=True (append-mode EventTimeTimeout)"
-        )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def f64(series: pd.Series):
-            """DECIMAL/object column -> float64 array with NaN for nulls.
-
-            Arrow hands DECIMAL columns to the state function as
-            object-dtype ``decimal.Decimal`` cells; ``pd.to_numeric``
-            converts them one object at a time over the WHOLE column
-            (measured 30 ms per 100k-row chunk at the real 23% non-null
-            payment density). Converting only the non-null cells through
-            numpy's C loop is ~5x faster (6 ms), value-identical — and a
-            cheap passthrough when the column already arrives numeric.
-            (Defined inside the closure: the update fn is pickled by
-            value; workers never import this package.)"""
-            a = series.to_numpy()
-            if a.dtype != object:
-                return a.astype(np.float64, copy=False)
-            out = np.full(len(a), np.nan)
-            m = pd.notna(a)
-            out[m] = a[m].astype(np.float64)
-            return out
-        def final_row(ts, src, ic, icc, gs, tl, em, pk, pc, pe, n_cust, n_sess, seq):
-            def r2(x: float) -> float:
-                return math.floor(x * 100.0 + 0.5) / 100.0
-
-            switch_rev = src / 100.0
-            incentive = icc / 100.0
-            energy_total = em / 1000.0
-            payments = pc / 100.0
-            return pd.DataFrame(
-                [
-                    {
-                        "hour": key[0],
-                        "hour_epoch_ms": int(key[1]),
-                        "update_seq": seq,
-                        "tariff_switches": ts,
-                        "total_switch_revenue": switch_rev,
-                        "avg_switch_value": r2(switch_rev / ts) if ts else 0.0,
-                        "incentive_claims": ic,
-                        "total_incentive_payouts": incentive,
-                        "green_tariff_switches": gs,
-                        "active_customers": n_cust,
-                        "new_sessions": n_sess,
-                        "total_logins": tl,
-                        "total_energy_consumed": energy_total,
-                        "avg_consumption_per_customer": r2(energy_total / n_cust) if n_cust else 0.0,
-                        "peak_hour_usage": (
-                            pk / 1000.0 if pk != PEAK_NONE_MILLI else 0.0
-                        ),
-                        "total_payments": payments,
-                        "payment_events": pe,
-                        "avg_payment_amount": r2(payments / pe) if pe else 0.0,
-                    }
-                ]
-            )
-
-        def partial_row(ts, src, ic, icc, gs, tl, em, pk, pc, pe, customers, sessions, seq):
-            return pd.DataFrame(
-                [
-                    {
-                        "hour": key[0],
-                        "hour_epoch_ms": int(key[1]),
-                        "shard": int(key[2]),
-                        "update_seq": seq,
-                        "tariff_switches": ts,
-                        "switch_revenue_cents": src,
-                        "incentive_claims": ic,
-                        "incentive_cents": icc,
-                        "green_switches": gs,
-                        "total_logins": tl,
-                        "energy_milli": em,
-                        "peak_milli": pk,
-                        "payment_cents": pc,
-                        "payment_events": pe,
-                        "n_customers": len(customers),
-                        "sessions": sorted(sessions),
-                    }
-                ]
-            )
-
-        if final_only and state.hasTimedOut:
-            (ts, src, ic, icc, gs, tl, em, pk, pc, pe, customers, sessions, seq) = state.get
-            state.remove()
-            if shard_partial:
-                yield partial_row(
-                    ts, src, ic, icc, gs, tl, em, pk, pc, pe,
-                    customers, sessions, seq,
-                )
-            else:
-                yield final_row(
-                    ts, src, ic, icc, gs, tl, em, pk, pc, pe,
-                    len(customers), len(sessions), seq,
-                )
-            return
-
-        if state.exists:
-            (ts, src, ic, icc, gs, tl, em, pk, pc, pe, customers, sessions, seq) = state.get
-            cust, sess = set(customers), set(sessions)
-        else:
-            ts = src = ic = icc = gs = tl = em = pc = pe = seq = 0
-            pk = PEAK_NONE_MILLI
-            cust, sess = set(), set()
-        seq += 1
-
-        for pdf in pdfs:
-            # Vectorized per Arrow chunk (round 10): pandas masks +
-            # int64 sums replace the former per-event Python loop — the
-            # last interpreted per-row path any catalog entry crossed
-            # (reference twin consumer/consumer.py:240-293). Quantization
-            # is bit-identical to the scalar form it replaced: DECIMAL ->
-            # float64, * 100 (or * 1000), half-even rounding per element
-            # (np.round == Python round on float64 — both round-half-even,
-            # and DECIMAL(10,2)*100 never lands on an exact .5 anyway),
-            # then exact int64 accumulation.
-            # one factorize pass replaces five object-string equality scans
-            # (measured 3 ms vs 21.5 ms per 100k-row chunk)
-            codes, uniques = pd.factorize(pdf["event_type"])
-            code_of = {v: i for i, v in enumerate(uniques)}
-
-            def m(name: str):
-                return codes == code_of.get(name, -2)
-
-            pay_cents = np.round(f64(pdf["payment_amount"]) * 100.0)
-            # NaN marks absent payment
-            has_pay = ~np.isnan(pay_cents)
-            is_switch = m("tariff_switch")
-            is_claim = m("incentive_claim")
-            is_login = m("user_login")
-            is_energy = m("energy_consumed")
-            is_bill = m("bill_payment")
-
-            ts += int(is_switch.sum())
-            src += int(pay_cents[is_switch & has_pay].astype(np.int64).sum())
-            gs += int((is_switch & (pdf["tariff_type"] == "green").to_numpy()).sum())
-            ic += int(is_claim.sum())
-            icc += int(pay_cents[is_claim & has_pay].astype(np.int64).sum())
-            tl += int(is_login.sum())
-            # unique() first: the C hash pass collapses the chunk before
-            # the Python set sees it (chunk rows >> distincts per hour)
-            sess.update(
-                int(s) for s in pdf.loc[is_login, "session_id"].dropna().unique()
-            )
-            en = f64(pdf["energy_consumed"])
-            en_milli = np.round(en[is_energy & ~np.isnan(en)] * 1000.0).astype(np.int64)
-            em += int(en_milli.sum())
-            if en_milli.size:
-                pk = max(pk, int(en_milli.max()))  # GREATEST merge (reference bug fixed)
-            paid = is_bill & has_pay
-            pc += int(pay_cents[paid].astype(np.int64).sum())
-            pe += int(paid.sum())
-            cust.update(pdf["customer_id"].dropna().unique())
-
-        state.update((ts, src, ic, icc, gs, tl, em, pk, pc, pe, sorted(cust), sorted(sess), seq))
-
-        if final_only:
-            # Evict as soon as the watermark passes the hour end: lateness
-            # tolerance = the withWatermark delay, state held no longer than
-            # (hour + delay). An hour already below the watermark (late rows
-            # re-opened it) times out at the next batch boundary. key[1] is
-            # the hour start's TRUE epoch ms (computed JVM-side before the
-            # groupBy), so the hour-end arithmetic is exact in every
-            # session tz — including the DST fall-back wall hour, whose two
-            # occurrences arrive as two distinct keys here (pinned in
-            # test_stateful_bounded_hourly_dst_fall_back).
-            hour_end_ms = int(key[1]) + 3_600_000
-            state.setTimeoutTimestamp(max(hour_end_ms, state.getCurrentWatermarkMs() + 1))
-            return
-
-        yield final_row(
-            ts, src, ic, icc, gs, tl, em, pk, pc, pe, len(cust), len(sess), seq
-        )
-
-    return update
-
-
-#: Exactly the columns ``_stateful_update_fn`` reads (plus ``event_time``,
-#: which carries the watermark). Projected BEFORE the stateful groupBy so
-#: the per-batch shuffle and the Arrow transfer into the Python state
-#: function ship only what the function needs (guide §4.1: Spark cannot
-#: see inside the UDF, so unused columns — event_id, channel — would
-#: otherwise cross the boundary on every micro-batch; round 17).
-_STATE_INPUT_COLS = (
-    "event_time",
-    "event_type",
-    "payment_amount",
-    "energy_consumed",
-    "session_id",
-    "customer_id",
-    "tariff_type",
-)
-
-
-def _hour_keyed(events: DataFrame) -> DataFrame:
-    """hour (naive label) + hour_epoch_ms (tz-proof identity) group keys.
-
-    ``cast(hour as long)`` reads the internal epoch micros — session-tz
-    independent — so the pair keeps the two occurrences of a DST
-    fall-back wall hour distinct all the way through the Python state
-    function and back."""
-    return events.withColumn(
-        "hour", F.date_trunc("hour", F.col("event_time"))
-    ).withColumn("hour_epoch_ms", F.col("hour").cast("long") * F.lit(1000))
-
-
-def _epoch_hour_restored(out: DataFrame) -> DataFrame:
-    """Rebuild ``hour`` from the tz-proof epoch key and drop the helper.
-
-    The pandas->Spark conversion of the NAIVE hour label re-localizes
-    through the session tz, which on a DST fall-back collapses the two
-    ambiguous rows onto one instant; ``timestamp_millis(hour_epoch_ms)``
-    restores each row's true instant WITHIN Spark, so the two fall-back
-    rows stay distinct TimestampType values (round-10 advice). That alone
-    does not cover a transport that re-renders the instant through a
-    local tz: ``foreach_batch_statement_upsert`` therefore binds ``hour``
-    as an epoch-derived NAIVE UTC WALL TIME (sinks.py — naive on purpose:
-    an aware datetime adapts to ``timestamptz`` and PostgreSQL's
-    assignment cast to a naive TIMESTAMP column re-renders through the
-    session tz, re-colliding the two instants), so the statement
-    dialects' ``hour`` PK never collides either (round-11 verdict
-    item 2)."""
-    return out.withColumn(
-        "hour", F.timestamp_millis(F.col("hour_epoch_ms"))
-    ).drop("hour_epoch_ms")
-
-
-def hourly_metrics_stateful_stream(events: DataFrame) -> DataFrame:
-    """Exact HourlyStats as a custom stateful operator
-    (applyInPandasWithState keyed by event-time hour)."""
-    return _epoch_hour_restored(
-        _hour_keyed(
-            events.select(*_STATE_INPUT_COLS).withWatermark(
-                "event_time", "24 hours"
-            )
-        )
-        .groupBy("hour", "hour_epoch_ms")
-        .applyInPandasWithState(
-            _stateful_update_fn(),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def hourly_metrics_stateful_bounded_stream(
-    events: DataFrame, horizon: str = "2 hours"
+def hourly_metrics_stream(
+    events: DataFrame, horizon: str | None = "2 hours"
 ) -> DataFrame:
-    """Exact HourlyStats with BOUNDED state: the snapshot-and-trim variant.
+    """Exact hourly metrics as Spark's built-in streaming window aggregation.
 
-    Same merge logic and EXACT distincts as ``hourly_metrics_stateful_stream``
-    (the reference's additive flush, consumer.py:341-356), but each hour's
-    state self-evicts by event-time timeout once the watermark passes the
-    hour end — ``horizon`` is the lateness tolerance AND the state-retention
-    bound. Merge batches emit nothing; the single final row per hour emits
-    at eviction (append mode), so downstream sinks never see retractions.
+    The 15 metrics are the batch ``hourly_business_metrics`` column tree
+    (``_build_hourly_columns``); only the two distincts take the
+    ``size(collect_set(..))`` form. ``hour`` is ``window.start``: windows
+    are keyed on the epoch, so the two instants of a DST fall-back wall
+    hour stay two rows. Whole-hour session-tz offsets align with the batch
+    ``date_trunc('hour')`` key; a zone with a half-hour offset would not.
 
-    The trade, measured in tests/test_state_accounting.py: the unbounded
-    twin holds hours-cardinality state forever; this plateaus at the open
-    horizon. Rows arriving LATER than the horizon are DROPPED before they
-    reach the state function — Spark filters watermark-late input whenever
-    event-time timeouts are active (FlatMapGroupsWithStateExec; measured in
-    test_stateful_bounded_hourly_drops_beyond_horizon_rows: the late batch
-    reports zero state updates) — so the semantics match the native
-    windowed aggregation's lateness contract, with exact distincts instead
-    of HLL. Pick by lateness regime: bounded when the replay horizon is
-    known, unbounded (NoTimeout twin, which Spark does NOT late-filter)
-    when any-lateness exactness is worth hours-cardinality state
-    (8,760 rows/year — trivially small either way)."""
-    return _epoch_hour_restored(
-        _hour_keyed(
-            events.select(*_STATE_INPUT_COLS).withWatermark(
-                "event_time", horizon
-            )
-        )
-        .groupBy("hour", "hour_epoch_ms")
-        .applyInPandasWithState(
-            _stateful_update_fn(final_only=True),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    - ``horizon`` set (run in APPEND mode): the watermark trails the newest
+      event by ``horizon``; each hour is emitted once, when the watermark
+      passes its end, and its state is dropped. A row is dropped as late
+      only when its whole hour was already emitted.
+    - ``horizon=None`` (run in UPDATE mode): no watermark, any lateness is
+      merged and every hour keeps its state row. Each trigger re-emits the
+      hours it touched with the ``_rows_total`` ordinal, which
+      ``collapse_native_updates`` uses to keep each hour's final row.
+    """
+    _, agg_cols, derived = gateway_columns(
+        "hourly_metrics_stream",
+        lambda: _build_hourly_columns(distinct=_exact_distinct),
     )
-
-
-def hourly_metrics_stateful_sharded_stream(
-    events: DataFrame, horizon: str = "2 hours", shards: int = 8
-) -> DataFrame:
-    """Hot-hour-bounded variant of the exact bounded stream (round-11
-    verdict item 6, SCALE.md §5.1's top 1000x hazard): the exact distinct
-    ID sets live INSIDE each hour's state row, so one hot hour at 100 TB
-    is a multi-MB row re-serialized by a single task on every touched
-    micro-batch. This variant salts the state key to
-    ``(hour, hour_epoch_ms, shard)`` with ``shard =
-    pmod(xxhash64(customer_id), shards)``: each state row holds ~1/shards
-    of the hot hour's sets (measured in scripts/hot_hour_shard_probe.py),
-    and the per-batch state rewrite parallelizes across state partitions
-    instead of serializing on one.
-
-    Exactness is preserved by construction, not assumption: customers are
-    hash-DISJOINT across shards (counts add); sessions are NOT provably
-    disjoint (a session_id could span customers), so each shard emits its
-    exact session SET and ``merge_sharded_hourly_partials`` dedups across
-    shards — the merged row is bit-identical to the unsharded twin's (and
-    the batch oracle's) for any input. Emission stays final-only
-    append-mode: one raw partial per (hour, shard) at eviction, merged
-    DOWNSTREAM of the state function (post-collect or foreachBatch), so
-    the merge itself holds no streaming state."""
-    keyed = _hour_keyed(
-        events.select(*_STATE_INPUT_COLS).withWatermark("event_time", horizon)
-    ).withColumn(
-        "shard", F.pmod(F.xxhash64(F.col("customer_id")), F.lit(shards))
-    )
-    return keyed.groupBy("hour", "hour_epoch_ms", "shard").applyInPandasWithState(
-        _stateful_update_fn(final_only=True, shard_partial=True),
-        outputStructType=SHARD_PARTIAL_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def merge_sharded_hourly_partials(
-    partials: DataFrame, two_stage_sessions: bool = False
-) -> DataFrame:
-    """Fold per-(hour, shard) raw partials into the exact hourly metrics.
-
-    Numeric identity with ``final_row`` (and hence the batch oracle): the
-    accumulators arrive in the state's quantized integer units (cents /
-    milli), sums stay exact int64, the three ratio metrics re-derive with
-    the same ``floor(x*100 + 0.5)/100`` half-up rounding on float64, and
-    ``peak`` is a max — all order- and shard-count-independent.
-    ``n_customers`` ADDS (shards partition the customer hash space);
-    sessions dedup across shards via array union, exact regardless of
-    whether session ids are customer-scoped.
-
-    Merge-side memory bound (round-12 advice): the default session dedup
-    (``collect_list`` + ``flatten`` + ``array_distinct``) reassembles each
-    hour's FULL session set in ONE aggregation buffer — sharding moved the
-    multi-MB hot-hour payload off the state row, but this merge form moves
-    it onto the merge task. Fine through ~10^5 distinct ids per hour
-    (single-digit MB); for hotter hours pass ``two_stage_sessions=True``:
-    the session count then computes via ``explode`` + ``count_distinct``,
-    which Spark plans as distributed two-phase partial dedup (no
-    whole-set buffer anywhere), joined back to the hours-sized accumulator
-    frame. Both forms are value-identical on any input
-    (tests/test_round13_ops.py); the two-stage form costs one extra
-    hours-sized shuffle+join, so it is opt-in, not the default."""
-    r2 = lambda c: F.floor(c * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)  # noqa: E731
-    sums = [
-        F.sum("tariff_switches").alias("ts"),
-        F.sum("switch_revenue_cents").alias("src"),
-        F.sum("incentive_claims").alias("ic"),
-        F.sum("incentive_cents").alias("icc"),
-        F.sum("green_switches").alias("gs"),
-        F.sum("total_logins").alias("tl"),
-        F.sum("energy_milli").alias("em"),
-        F.max("peak_milli").alias("pk"),
-        F.sum("payment_cents").alias("pc"),
-        F.sum("payment_events").alias("pe"),
-        F.sum("n_customers").alias("n_cust"),
-    ]
-    if two_stage_sessions:
-        # renamed key: both branches share the partials lineage, and a
-        # same-name join on a self-derived frame trips attribute-conflict
-        # analysis
-        sess = (
-            partials.select(
-                F.col("hour_epoch_ms").alias("_sess_h"),
-                F.explode_outer("sessions").alias("_sid"),
-            )
-            .groupBy("_sess_h")
-            .agg(F.count_distinct("_sid").alias("n_sess"))
-        )
-        agg = (
-            partials.groupBy("hour_epoch_ms")
-            .agg(*sums)
-            .join(sess, F.col("hour_epoch_ms") == F.col("_sess_h"), "left")
-            .drop("_sess_h")
-            .withColumn("n_sess", F.coalesce(F.col("n_sess"), F.lit(0)))
-        )
-    else:
-        agg = partials.groupBy("hour_epoch_ms").agg(
-            *sums,
-            F.size(
-                F.array_distinct(F.flatten(F.collect_list("sessions")))
-            ).alias("n_sess"),
-        )
-    switch_rev = F.col("src") / F.lit(100.0)
-    energy_total = F.col("em") / F.lit(1000.0)
-    payments = F.col("pc") / F.lit(100.0)
-    return agg.select(
-        F.timestamp_millis(F.col("hour_epoch_ms")).alias("hour"),
-        F.col("ts").alias("tariff_switches"),
-        switch_rev.alias("total_switch_revenue"),
-        F.when(F.col("ts") > 0, r2(switch_rev / F.col("ts")))
-        .otherwise(F.lit(0.0))
-        .alias("avg_switch_value"),
-        F.col("ic").alias("incentive_claims"),
-        (F.col("icc") / F.lit(100.0)).alias("total_incentive_payouts"),
-        F.col("gs").alias("green_tariff_switches"),
-        F.col("n_cust").alias("active_customers"),
-        F.col("n_sess").cast("long").alias("new_sessions"),
-        F.col("tl").alias("total_logins"),
-        energy_total.alias("total_energy_consumed"),
-        F.when(F.col("n_cust") > 0, r2(energy_total / F.col("n_cust")))
-        .otherwise(F.lit(0.0))
-        .alias("avg_consumption_per_customer"),
-        F.when(F.col("pk") != F.lit(PEAK_NONE_MILLI), F.col("pk") / F.lit(1000.0))
-        .otherwise(F.lit(0.0))
-        .alias("peak_hour_usage"),
-        payments.alias("total_payments"),
-        F.col("pe").alias("payment_events"),
-        F.when(F.col("pe") > 0, r2(payments / F.col("pe")))
-        .otherwise(F.lit(0.0))
-        .alias("avg_payment_amount"),
+    if horizon:
+        events = events.withWatermark("event_time", horizon)
+    ordinal = [] if horizon else ["_rows_total"]
+    return (
+        events.groupBy(F.window("event_time", "1 hour"))
+        .agg(*agg_cols, *[F.count(F.lit(1)).alias(c) for c in ordinal])
+        .withColumns(derived)
+        .select(F.col("window.start").alias("hour"), *METRIC_COLUMNS, *ordinal)
     )
 
 
 #: Engine default for HOURS-keyed stateful streams (round-11 verdict item 1).
 #:
-#: ``applyInPandasWithState`` pays one Arrow/Python state-function round per
-#: STATE PARTITION per micro-batch — near-empty partitions included — so a
-#: stream whose live-key count is far below ``spark.sql.shuffle.partitions``
-#: burns fixed dispatch cost proportional to the partition count, not the
-#: data (SCALE.md §4.3: the 10x bounded hourly replay reads 21.1 s at the
-#: 32-partition session default vs 14.6 s at 8, ~100 live hour keys;
-#: reproducible via scripts/streaming_replay_partition_probe.py). Hour keys
+#: A stateful operator loads, updates and commits one state store per STATE
+#: PARTITION per micro-batch — near-empty partitions included — so a stream
+#: whose live-key count is far below ``spark.sql.shuffle.partitions`` pays
+#: fixed per-task cost proportional to the partition count, not the data
+#: (SCALE.md §4.3: the 10x bounded hourly replay read 21.1 s at the
+#: 32-partition session default vs 14.6 s at 8, ~100 live hour keys). Hour keys
 #: live at most (watermark horizon + open hour) at a time — single-to-low
 #: double digits — so 8 keeps every partition busy while still spreading the
 #: state store. USER-keyed streams (sessionization, SCD2, dedup, running
@@ -783,59 +291,28 @@ def run_stream_to_table(
     return spark.table(name)
 
 
-#: Per-hour distinct-customer count at/above which the dispatcher takes
-#: the SHARDED exact variant (round-12 verdict item 2: SCALE.md §4.4's
-#: measured decision table made engine behavior). The measured poles: at
-#: a planted hot hour (~60k distinct ids folded into ONE event-time hour)
-#: sharding reads 9.1 s vs 13.1 s unsharded with the per-row
-#: serialization unit divided ~10.5x; at normal density (sf0.1 spread
-#: over its real hours, ~hundreds of ids/hour) sharding is 2.7x SLOWER
-#: with 4.7x the state — pure per-key dispatch tax. 50k sits below the
-#: measured hot-hour win and orders of magnitude above every normal-hours
-#: reading: the point where the single state row (~ids x ~20 B) enters
-#: the MB class whose per-batch single-task rewrite the variant exists to
-#: break up.
-HOT_HOUR_SHARD_THRESHOLD = 50_000
-
-#: Batch-aware crossover for the TURNKEY pipeline (round-15 verdict item
-#: 4): the bounded arm's cost driver is one python worker absorbing the
-#: hot key's whole micro-batch serially plus its cardinality-sized state
-#: row, so the win sharding buys scales with rows-per-trigger ×
-#: cardinality — a PRODUCT, not cardinality alone. Measured poles at
-#: sf0.1 (SCALE.md §4.4, medians of 3 interleaved reps per arm): the
-#: arms TIE (bounded/sharded 0.98) at ~68k ids × 12.5k rows/trigger
-#: (product 8.5e8 — the sharded arm's staged flush eats the state win at
-#: small batches) and sharding WINS 1.47× at 120k ids × 125k
-#: rows/trigger (product 1.5e10). 4e9 is the geometric midpoint of the
-#: two measured products, rounded. The rule applies only when the caller
-#: can state expected rows-per-trigger; with it unknown the dispatch
-#: falls back to the cardinality-only rule (the pre-r16 behavior — at
-#: ≥50k ids sharding is never the measured-loss arm, only sometimes a
-#: tie, so cardinality-only stays the safe default).
-HOT_HOUR_SHARD_MIN_PRODUCT = 4_000_000_000
-
-#: Shard sizing rule (SCALE.md §4.4 rule of thumb, quantized): 8 shards
-#: per 100k hot-hour distinct ids — floor 8 so every HOURS state
-#: partition owns work, cap 64 (= 8 partitions x 8) past which the §4.3
-#: per-key dispatch tax outgrows the serialization win at any measured
-#: density.
-SHARD_IDS_BUDGET = 100_000
-
-
-def shard_count_for(peak_hour_distinct: int) -> int:
-    return min(64, max(8, 8 * math.ceil(peak_hour_distinct / SHARD_IDS_BUDGET)))
+def run_hourly_stream(
+    spark: SparkSession, events: DataFrame, horizon: str | None = "2 hours"
+) -> DataFrame:
+    """Final rows of ``hourly_metrics_stream`` through the memory sink:
+    append mode when ``horizon`` is set, update mode collapsed to the last
+    emission per hour when it is None."""
+    out = run_stream_to_table(
+        spark,
+        hourly_metrics_stream(events, horizon),
+        mode="append" if horizon else "update",
+        state_partitions=HOURS_STATE_PARTITIONS,
+    )
+    return out if horizon else collapse_native_updates(out)
 
 
 def estimate_peak_hour_distinct_customers(events: DataFrame) -> int:
-    """Cheap density probe for the stateful dispatch — the streaming twin
-    of ``estimate_events_per_customer`` (customer_view_dispatch): per-hour
-    approx-distinct customers, maxed over hours. One narrow two-column job
-    (at 100 TB it reads only the event_time/customer_id pages; HLL's ±2%
-    is irrelevant against a threshold set orders of magnitude from both
-    measured poles). Must run on a BATCH frame — a backfill slice or
-    yesterday's landing of the SAME feed — because a streaming frame
-    cannot be eagerly aggregated; callers that already know their density
-    pass ``peak_hour_distinct`` instead."""
+    """Cheap per-hour key-density probe: approx-distinct customers per
+    hour, maxed over hours. One narrow two-column job (at 100 TB it reads
+    only the event_time/customer_id pages). Must run on a BATCH frame — a
+    backfill slice or yesterday's landing of the SAME feed — because a
+    streaming frame cannot be eagerly aggregated. The hourly stream needs
+    no such input; the benchmark's hourly workload still reports it."""
     row = (
         events.groupBy(F.date_trunc("hour", F.col("event_time")).alias("_h"))
         .agg(F.approx_count_distinct("customer_id").alias("_c"))
@@ -843,155 +320,6 @@ def estimate_peak_hour_distinct_customers(events: DataFrame) -> int:
         .first()
     )
     return int(row["_m"] or 0)
-
-
-#: Decision record of the last ``run_hourly_stream_dispatched`` call
-#: ({"variant", "shards", "peak_hour_distinct", "state_partitions",
-#: "two_stage_sessions"}). Same SEQUENTIAL-ONLY contract as
-#: ``LAST_STREAM_PROGRESS`` above.
-LAST_HOURLY_DISPATCH: dict | None = None
-
-
-def run_hourly_stream_dispatched(
-    spark: SparkSession,
-    events: DataFrame,
-    variant: str = "auto",
-    horizon: str = "2 hours",
-    peak_hour_distinct: int | None = None,
-    probe_df: DataFrame | None = None,
-    shards: int | None = None,
-    two_stage_sessions: bool | None = None,
-    expected_rows_per_trigger: int | None = None,
-) -> DataFrame:
-    """Density-dispatched exact bounded hourly stream (round-12 verdict
-    item 2): run the BOUNDED twin at normal per-hour key density, the
-    SHARDED hot-hour variant (+ downstream merge) when one hour's distinct
-    customer set would make a single state row the serialization
-    bottleneck — the stateful analogue of ``customer_view_dispatch``'s
-    density probe. All paths share the batch oracle; the dispatch only
-    picks the physical strategy.
-
-    - ``variant="auto"`` decides from ``peak_hour_distinct`` (pass it when
-      known) or probes ``probe_df`` — a BATCH slice of the same feed —
-      via ``estimate_peak_hour_distinct_customers``; ≥
-      ``HOT_HOUR_SHARD_THRESHOLD`` takes sharded with
-      ``shard_count_for(peak)`` shards (override with ``shards``).
-      When ``expected_rows_per_trigger`` is also given, the rule is
-      batch-aware: sharding additionally requires the cardinality ×
-      rows-per-trigger product to clear ``HOT_HOUR_SHARD_MIN_PRODUCT``
-      (below it the measured arms tie and bounded is cheaper to operate
-      — see the constant's docstring and SCALE.md §4.4).
-    - ``variant="bounded"`` / ``"sharded"`` are the explicit opt-outs.
-    - sharded state partitions scale with the live-key multiplication
-      (hours x shards; §4.3's sizing rule), bounded keeps
-      ``HOURS_STATE_PARTITIONS``.
-    - ``two_stage_sessions`` defaults to True when the decided/declared
-      density reaches ~10^5 ids (the merge-side buffer bound documented on
-      ``merge_sharded_hourly_partials``).
-
-    Returns final hourly rows (merged when sharded, ``update_seq``
-    dropped when bounded); the decision is recorded in
-    ``LAST_HOURLY_DISPATCH`` for tests/observability."""
-    global LAST_HOURLY_DISPATCH
-    LAST_HOURLY_DISPATCH = None
-    decision = decide_hourly_variant(
-        variant=variant,
-        peak_hour_distinct=peak_hour_distinct,
-        probe_df=probe_df,
-        shards=shards,
-        two_stage_sessions=two_stage_sessions,
-        expected_rows_per_trigger=expected_rows_per_trigger,
-    )
-    if decision["variant"] == "sharded":
-        out = run_stream_to_table(
-            spark,
-            hourly_metrics_stateful_sharded_stream(
-                events, horizon=horizon, shards=decision["shards"]
-            ),
-            mode="append",
-            state_partitions=decision["state_partitions"],
-        )
-        result = merge_sharded_hourly_partials(
-            out, two_stage_sessions=decision["two_stage_sessions"]
-        )
-    else:
-        out = run_stream_to_table(
-            spark,
-            hourly_metrics_stateful_bounded_stream(events, horizon=horizon),
-            mode="append",
-            state_partitions=decision["state_partitions"],
-        )
-        result = out.drop("update_seq")
-    LAST_HOURLY_DISPATCH = decision
-    return result
-
-
-def decide_hourly_variant(
-    variant: str = "auto",
-    peak_hour_distinct: int | None = None,
-    probe_df: DataFrame | None = None,
-    shards: int | None = None,
-    two_stage_sessions: bool | None = None,
-    expected_rows_per_trigger: int | None = None,
-) -> dict:
-    """The dispatch DECISION, factored out so the memory-sink runner and
-    the durable pipeline share one rule (see run_hourly_stream_dispatched
-    for the semantics). Returns {variant, peak_hour_distinct, shards,
-    state_partitions, two_stage_sessions, expected_rows_per_trigger}.
-
-    ``expected_rows_per_trigger`` makes the auto rule BATCH-AWARE
-    (round-15 verdict item 4): at hot cardinality, sharding is taken only
-    when ``peak_hour_distinct × expected_rows_per_trigger`` clears
-    ``HOT_HOUR_SHARD_MIN_PRODUCT`` — below it the staged flush eats the
-    state win and the measured arms tie, so bounded (no staging store, no
-    re-merge) is the cheaper-to-operate choice. Pass the feed's typical
-    rows per micro-batch (file sources: rows per file ×
-    maxFilesPerTrigger; rate/kafka: rows-per-second × trigger interval);
-    omit it to keep the cardinality-only rule."""
-    if variant == "auto":
-        if peak_hour_distinct is None:
-            if probe_df is None:
-                raise ValueError(
-                    "variant='auto' needs peak_hour_distinct or probe_df (a "
-                    "batch slice of the feed) — a streaming frame cannot be "
-                    "probed eagerly"
-                )
-            peak_hour_distinct = estimate_peak_hour_distinct_customers(probe_df)
-        hot = peak_hour_distinct >= HOT_HOUR_SHARD_THRESHOLD
-        if hot and expected_rows_per_trigger is not None:
-            hot = (
-                peak_hour_distinct * expected_rows_per_trigger
-                >= HOT_HOUR_SHARD_MIN_PRODUCT
-            )
-        variant = "sharded" if hot else "bounded"
-    if variant not in ("bounded", "sharded"):
-        raise ValueError(f"unknown variant: {variant}")
-    decision: dict = {
-        "variant": variant,
-        "peak_hour_distinct": peak_hour_distinct,
-        "expected_rows_per_trigger": expected_rows_per_trigger,
-    }
-    if variant == "sharded":
-        n_shards = shards if shards is not None else shard_count_for(
-            peak_hour_distinct or 0
-        )
-        if two_stage_sessions is None:
-            two_stage_sessions = bool(
-                peak_hour_distinct and peak_hour_distinct >= SHARD_IDS_BUDGET
-            )
-        decision.update(
-            shards=n_shards,
-            # live keys multiply by the shard count — re-apply §4.3's sizing
-            state_partitions=min(32, max(HOURS_STATE_PARTITIONS, n_shards)),
-            two_stage_sessions=two_stage_sessions,
-        )
-    else:
-        decision.update(
-            shards=None,
-            state_partitions=HOURS_STATE_PARTITIONS,
-            two_stage_sessions=False,
-        )
-    return decision
 
 
 def run_stream_foreach_batch(
@@ -1028,23 +356,36 @@ def run_stream_foreach_batch(
     return LAST_STREAM_PROGRESS
 
 
-def _write_dispatch_pin(pin_path: str, decision: dict) -> None:
-    """Atomic pin write: a crash mid-write must not leave a truncated
-    dispatch.json that breaks every later invocation — stage to a temp
-    name in the same directory and os.replace (atomic on POSIX)."""
-    import json as _json
+def run_hourly_pipeline(
+    spark: SparkSession,
+    events: DataFrame,
+    metrics_path: str,
+    checkpoint: str,
+    horizon: str = "2 hours",
+) -> dict | None:
+    """The durable hourly pipeline: the exact append-mode stream
+    (``hourly_metrics_stream``) into the idempotent parquet hour store
+    (``sinks.foreach_batch_upsert``) under a REAL checkpoint, so a
+    kill-and-resume lands the same store. Returns the final progress.
 
-    tmp = pin_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(decision, f)
-    os.replace(tmp, pin_path)
-
-
-#: Relative staging partitions deleted by the last
-#: ``run_hourly_pipeline_dispatched`` call's post-run retention pass
-#: (None before any call / when pruning was skipped; [] when nothing was
-#: closed). Same SEQUENTIAL-ONLY contract as ``LAST_STREAM_PROGRESS``.
-LAST_STAGING_PRUNED: list | None = None
+    Catch-up contract for repeated ``availableNow`` invocations: each
+    invocation lands every hour whose end the watermark has passed, and
+    the watermark lives in the checkpoint, so the next invocation continues
+    from it. Source files must arrive in event-time order within
+    ``horizon``: a row whose hour was already emitted is dropped by the
+    lateness contract. For a batch catch-up that must end complete,
+    use the batch path (``sinks.refresh_hourly_incremental`` /
+    ``backfill_hourly_range``)."""
+    return run_stream_foreach_batch(
+        spark,
+        hourly_metrics_stream(events, horizon),
+        # looked up at call time so a wrapped sinks.foreach_batch_upsert
+        # (the benchmark's tracer) is the one used
+        sinks.foreach_batch_upsert(metrics_path),
+        checkpoint=checkpoint,
+        mode="append",
+        state_partitions=HOURS_STATE_PARTITIONS,
+    )
 
 
 def run_hourly_pipeline_dispatched(
@@ -1052,171 +393,14 @@ def run_hourly_pipeline_dispatched(
     events: DataFrame,
     metrics_path: str,
     checkpoint: str,
-    staging_path: str | None = None,
-    variant: str = "auto",
     horizon: str = "2 hours",
     peak_hour_distinct: int | None = None,
-    probe_df: DataFrame | None = None,
-    shards: int | None = None,
-    two_stage_sessions: bool | None = None,
-    expected_rows_per_trigger: int | None = None,
-    prune_staging: bool = True,
 ) -> dict:
-    """The full turnkey pipeline: density dispatch -> exact bounded/sharded
-    stateful stream -> DURABLE idempotent parquet hour store, one call.
-    ``run_hourly_stream_dispatched`` ends in a memory sink (the
-    test/oracle form); this composes the same decision with the real
-    sinks under a real checkpoint, so kill-and-resume lands the same
-    store contents (both sink bodies are replay-idempotent:
-    ``foreach_batch_upsert`` is full-aggregate dynamic overwrite,
-    ``foreach_batch_sharded_flush`` stages by batch id and re-merges).
-
-    ``staging_path`` holds the sharded variant's partial store (defaults
-    to ``<metrics_path>_staging``); unused — and not created — on the
-    bounded arm. After a completed sharded invocation the staging store is
-    auto-PRUNED (``prune_staging=True``): partials of hours strictly
-    behind the final committed batch's executed watermark are deleted
-    under ``sinks.prune_sharded_staging``'s provably-safe closure rule, so
-    staging tracks the open hours instead of the stream's history (the
-    deleted paths land in ``LAST_STAGING_PRUNED``). Returns the decision
-    dict (also in ``LAST_HOURLY_DISPATCH``).
-
-    The decision is PINNED in the checkpoint (``<checkpoint>/dispatch.json``,
-    written on first run, loaded on every later run): Spark already pins
-    the state-partition count at first query start, and a variant or
-    shard-count flip on an existing checkpoint would fail with an opaque
-    state-schema/distribution error — so repeated scheduled invocations
-    (the availableNow catch-up pattern) keep the first run's physical
-    strategy and skip re-probing; retire the checkpoint to re-decide.
-    (Local-filesystem checkpoints assumed, as everywhere in this repo;
-    a remote checkpoint store would pin through its own fs API.)
-
-    Catch-up COMPLETENESS CONTRACT (measured, not assumed — the probe
-    runs are in round-13's test/dev notes): with repeated availableNow
-    invocations, an invocation durably lands every hour whose end fell
-    behind the watermark built from the PREVIOUS batches of the SAME
-    run — pending event-time timeouts do NOT fire in a restart's first
-    batch (they fire only after an in-run watermark advance), and the
-    trailing no-data micro-batch that would flush the final tail is
-    scheduling-dependent under availableNow. Net effect: store
-    completeness lags the stream head by the lateness horizon plus up to
-    one batch, and the lag drains on the NEXT invocation that brings
-    newer data — identical to a live stream's steady state, where
-    no-data triggers keep firing and no lag survives. Two operational
-    corollaries: (1) a far-future sentinel file closes out the tail only
-    within a single run that processes data batches AFTER it advanced
-    the watermark — it is a test fixture, not a restart tool; for batch
-    catch-up that must end complete, use the batch path
-    (``sinks.refresh_hourly_incremental`` / ``backfill_hourly_range``);
-    (2) source files must arrive in event-time order within the horizon
-    — a file landing after a later-event-time file is watermark-late and
-    the bounded variants DROP it by the documented lateness contract
-    (the unbounded twin accepts any lateness)."""
-    import json as _json
-
-    from ..sources.sinks import foreach_batch_sharded_flush, foreach_batch_upsert
-
-    global LAST_HOURLY_DISPATCH
-    LAST_HOURLY_DISPATCH = None
-    pin_path = os.path.join(checkpoint, "dispatch.json")
-    if os.path.exists(pin_path):
-        try:
-            with open(pin_path) as f:
-                decision = _json.load(f)
-            required = {"variant", "state_partitions"}
-            if isinstance(decision, dict) and decision.get("variant") == "sharded":
-                required |= {"shards", "two_stage_sessions"}
-            if not isinstance(decision, dict) or required - set(decision):
-                raise ValueError(f"not a full decision dict: {decision!r:.80}")
-        except ValueError as e:
-            raise ValueError(
-                f"corrupt dispatch pin at {pin_path} ({e}); the checkpoint's "
-                "state layout is unknown — restore the file from the first "
-                "run's decision, or retire the whole checkpoint to re-decide"
-            ) from e
-        # explicit STATE-BOUND arguments must not silently lose to the pin:
-        # a variant or shard-count flip on an existing checkpoint would
-        # fail later with an opaque state-schema error, so refuse here
-        # with the real story instead. ``shards`` is only state-bound on
-        # the sharded arm — on a bounded pin it is as meaningless as it
-        # was on the first (deciding) run, so repeating the ORIGINAL
-        # arguments (e.g. variant='auto' + shards=16 that decided
-        # bounded) must not start raising on invocation two
-        conflicts = [
-            (k, v, decision.get(k))
-            for k, v in (("variant", variant), ("shards", shards))
-            if v not in (None, "auto")
-            and v != decision.get(k)
-            and not (k == "shards" and decision.get("variant") != "sharded")
-        ]
-        if conflicts:
-            raise ValueError(
-                "dispatch is pinned in the checkpoint and the explicit "
-                f"arguments conflict with it: {conflicts} (requested vs "
-                "pinned). Spark pins the state layout at first query start "
-                "— retire the checkpoint (and staging) to re-decide."
-            )
-        if (
-            two_stage_sessions is not None
-            and decision["variant"] == "sharded"
-            and two_stage_sessions != decision.get("two_stage_sessions")
-        ):
-            # merge-layout knob only (value-identical forms, not
-            # state-bound) — honor the override and re-pin it
-            decision["two_stage_sessions"] = two_stage_sessions
-            _write_dispatch_pin(pin_path, decision)
-    else:
-        decision = decide_hourly_variant(
-            variant=variant,
-            peak_hour_distinct=peak_hour_distinct,
-            probe_df=probe_df,
-            shards=shards,
-            two_stage_sessions=two_stage_sessions,
-            expected_rows_per_trigger=expected_rows_per_trigger,
-        )
-        os.makedirs(checkpoint, exist_ok=True)
-        _write_dispatch_pin(pin_path, decision)
-    staging = staging_path or f"{metrics_path}_staging"
-    if decision["variant"] == "sharded":
-        stream = hourly_metrics_stateful_sharded_stream(
-            events, horizon=horizon, shards=decision["shards"]
-        )
-        fn = foreach_batch_sharded_flush(
-            staging,
-            metrics_path=metrics_path,
-            two_stage_sessions=decision["two_stage_sessions"],
-            # in-batch retention is safe HERE because the input is the
-            # sharded stateful stream, whose eviction order is structural;
-            # the standalone seam defaults to False (silent mid-hour
-            # deletion must be opted into, not stumbled into)
-            prune_closed=True,
-        )
-    else:
-        stream = hourly_metrics_stateful_bounded_stream(
-            events, horizon=horizon
-        ).drop("update_seq")
-        fn = foreach_batch_upsert(metrics_path)
-    progress = run_stream_foreach_batch(
-        spark,
-        stream,
-        fn,
-        checkpoint=checkpoint,
-        mode="append",
-        state_partitions=decision["state_partitions"],
-    )
-    global LAST_STAGING_PRUNED
-    LAST_STAGING_PRUNED = None
-    if decision["variant"] == "sharded" and prune_staging:
-        from ..sources.sinks import (
-            prune_sharded_staging,
-            staging_prune_watermark_ms,
-        )
-
-        LAST_STAGING_PRUNED = prune_sharded_staging(
-            staging, staging_prune_watermark_ms(progress)
-        )
-    LAST_HOURLY_DISPATCH = decision
-    return decision
+    """Deprecated alias of ``run_hourly_pipeline`` kept for the frozen
+    ``perfbench`` hourly workload; remove it in the next benchmark change.
+    ``peak_hour_distinct`` is ignored: there is one hourly path."""
+    run_hourly_pipeline(spark, events, metrics_path, checkpoint, horizon=horizon)
+    return {"variant": "native"}
 
 
 # --------------------------------------------------------------------------
@@ -1235,27 +419,14 @@ def _hourly_oracle() -> str:
 @register(
     "streaming_hourly_metrics",
     oracle=_hourly_oracle(),
-    doc="Stateful streaming (applyInPandasWithState) hourly metrics, run "
-    "with availableNow — shares the BATCH oracle, i.e. batch==streaming "
-    "equivalence is differential-checked, not asserted.",
+    doc="Exact hourly metrics as Spark's built-in streaming window "
+    "aggregation in update mode without a watermark (any lateness), run "
+    "with availableNow and collapsed to each hour's last emission — shares "
+    "the BATCH oracle, i.e. batch==streaming equivalence is "
+    "differential-checked, not asserted.",
 )
 def q_streaming_hourly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = energy_events_stream(spark, sf_dir)
-    out = run_stream_to_table(
-        spark,
-        hourly_metrics_stateful_stream(ev),
-        state_partitions=HOURS_STATE_PARTITIONS,
-    )
-    # availableNow on one file = one micro-batch => one row per hour already;
-    # dedup defensively in case the source ever splits batches.
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("hour").orderBy(F.col("update_seq").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "update_seq")
-    )
+    return run_hourly_stream(spark, energy_events_stream(spark, sf_dir), horizon=None)
 
 
 @register(
@@ -1269,7 +440,7 @@ def _native_hourly_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink to one FINAL row per hour. The single-file availableNow source
     emits each hour once, but a multi-batch split (maxFilesPerTrigger, a
     multi-file dir) re-emits touched windows per batch with stale partial
-    counts — the same defensive dedup the exact stateful twin applies.
+    counts — the same collapse the exact update-mode twin applies.
     The collapse keeps each hour's LAST emission via the ``_rows_total``
     ordinal (``collapse_native_updates``); the earlier per-column ``max()``
     silently assumed monotone sums, which negative values break."""
@@ -1378,22 +549,17 @@ def append_watermark_sentinel(spark: SparkSession, sf_dir: str, src: str):
 @register(
     "streaming_hourly_bounded",
     oracle=_hourly_oracle(),
-    doc="Bounded-state exact hourly metrics: same merge logic and EXACT "
-    "distincts as streaming_hourly_metrics, but each hour self-evicts by "
-    "event-time timeout (applyInPandasWithState + EventTimeTimeout) once "
-    "the watermark passes it, emitting its single final row append-mode — "
-    "the snapshot-and-trim pattern. Three ascending time-chunk "
-    "micro-batches force hours to close while later data still arrives; a "
-    "far-future sentinel flushes the tail; the result must equal the BATCH "
-    "oracle on every hour including the two exact distincts. Scale: state "
-    "plateaus at the open lateness horizon (measured 96 rows vs 720 hours "
-    "at sf0.01, tests/test_state_accounting.py) where the unbounded twin "
-    "holds hours-cardinality — pick by lateness regime: rows later than "
-    "the horizon are DROPPED (Spark late-filters stateful input under "
-    "event-time timeouts — measured, zero state updates in the late "
-    "batch), the native windowed aggregation's lateness contract with "
-    "exact distincts instead of HLL; any-lateness exactness needs the "
-    "unbounded twin.",
+    doc="Bounded-state exact hourly metrics: the same built-in window "
+    "aggregation as streaming_hourly_metrics under a 2-hour watermark in "
+    "append mode — each hour emits its single final row once the "
+    "watermark passes it, and its state is dropped. Three ascending "
+    "time-chunk micro-batches force hours to close while later data still "
+    "arrives; a far-future sentinel flushes the tail; the result must "
+    "equal the BATCH oracle on every hour including the two exact "
+    "distincts. Scale: state plateaus at the open lateness horizon where "
+    "the update-mode twin holds hours-cardinality — rows of an hour "
+    "already emitted are dropped, so any-lateness exactness needs the "
+    "update-mode twin.",
 )
 def q_streaming_hourly_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import timedelta
@@ -1401,13 +567,8 @@ def q_streaming_hourly_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = ascending_time_chunks(spark, sf_dir, 3)
     mx = append_watermark_sentinel(spark, sf_dir, src)
     ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    out = run_stream_to_table(
-        spark,
-        hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours"),
-        mode="append",
-        state_partitions=HOURS_STATE_PARTITIONS,
-    )
-    return out.where(F.col("hour") < mx + timedelta(days=30)).drop("update_seq")
+    out = run_hourly_stream(spark, ev, horizon="2 hours")
+    return out.where(F.col("hour") < mx + timedelta(days=30))
 
 
 def dedup_summary_stream(raw_events: DataFrame) -> DataFrame:
@@ -1505,9 +666,9 @@ def running_user_totals_stream(raw_events: DataFrame) -> DataFrame:
 
     This is the engine-managed replacement for the reference's locked
     in-memory dict (consumer/consumer.py:81-99) in its most general form —
-    typed per-key state, Arrow-batched updates, shardable with the shuffle
-    and checkpointable, where applyInPandasWithState (hourly metrics) shows
-    the older GroupState flavor.
+    typed per-key state, Arrow-batched updates, partitioned by the shuffle
+    and checkpointable, where ``running_user_totals_stream_groupstate``
+    shows the older GroupState flavor.
     """
     import pandas as pd  # noqa: F401 (imported for the processor closure)
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
@@ -1649,7 +810,7 @@ FROM events GROUP BY user_id
     "identical GroupState flavor (applyInPandasWithState) — same state, "
     "same output, same oracle. Counts/cents are exact integers, so the "
     "cross-batch merge is order-independent. Scale: state is two longs "
-    "per user, sharded by the user_id shuffle, RocksDB-backed and "
+    "per user, partitioned by the user_id shuffle, RocksDB-backed and "
     "checkpointed on a cluster.",
 )
 def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1775,7 +936,7 @@ GROUP BY 1
     "fixture's span so replay loses nothing; production sets the real "
     "lateness budget, and the interval predicate is what lets the engine "
     "evict both sides' state. Scale: join state is bounded by "
-    "|events in watermark horizon| per side, sharded by the user_id "
+    "|events in watermark horizon| per side, partitioned by the user_id "
     "shuffle; RocksDB state store + per-key range scans on a cluster.",
 )
 def q_streaming_view_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2208,7 +1369,6 @@ def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFram
         .select("lang", "rank", "doc_id", "n_tokens")
         .orderBy("lang", "rank")
     )
-
 
 
 from ..plans.training_queries import _NGRAM_PAIRS_CTES  # noqa: E402

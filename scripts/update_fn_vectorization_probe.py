@@ -1,50 +1,28 @@
-"""Measured before/after for round 10's `_stateful_update_fn` vectorization.
+"""Measured before/after for round 10's session update fn vectorization.
 
-The round-9 verdict flagged the per-event Python loop inside
-``applyInPandasWithState`` as the last interpreted per-row path any catalog
-entry crossed (reference twin: consumer/consumer.py:240-293). This probe
+The timeout sessionization's gap-split loop built a one-row DataFrame per
+CLOSED session — quadratic pain on a session-dense hot user. This probe
 re-runs the RETIRED loop (inlined below as the reference implementation)
-and the shipped vectorized update fn on the same chunk, in the realistic
-Arrow shape (DECIMAL columns as object-dtype ``decimal.Decimal`` cells —
-what the state function actually receives), asserts state-tuple identity,
-and prints per-chunk wall time + rows/s for both.
+and the shipped vectorized ``_session_update_fn`` on the same synthetic
+100k-event hot-user chunk (~20k closed sessions), asserts identical output
+and state, and prints per-chunk wall time for both. Round-10 measurement:
+old ~9,100 ms -> vectorized ~26 ms (~350x); the differential property test
+for the rewrite is tests/test_round10_ops.py::
+test_vectorized_sessionize_matches_sequential_reference, which uses
+``old_session_update_fn`` below as its reference.
 
-Round-10 measurement (100k-row chunk, sf0.1 event mix, 23% non-null
-payments): old loop ~86 ms/chunk (1.2 M rows/s) -> vectorized ~30 ms/chunk
-(3.3 M rows/s), ~2.8x. The wins, itemized (see SCALE.md §4.1): one
-``pd.factorize`` pass replaces five object-string equality scans
-(3 ms vs 21.5 ms), masked non-null-only Decimal->float conversion replaces
-``pd.to_numeric`` (6 ms vs 30 ms), and int64 mask-sums replace the
-interpreted branch ladder.
-
-Part 2 probes the OTHER per-row path retired in round 10: the timeout
-sessionization's gap-split loop, which also built a one-row DataFrame per
-CLOSED session — quadratic pain on a session-dense hot user. On a
-synthetic 100k-event hot-user chunk (~20k closed sessions): old
-~9,100 ms -> vectorized ~26 ms (~350x); the differential property test for
-the rewrite is tests/test_round10_ops.py::
-test_vectorized_sessionize_matches_sequential_reference.
-
-Usage: python scripts/update_fn_vectorization_probe.py [sf_dir]
+Usage: python scripts/update_fn_vectorization_probe.py
 """
 
 from __future__ import annotations
 
-import datetime
-import math
 import os
 import sys
 import time
-from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-import numpy as np  # noqa: F401  (parity with the shipped fn's imports)
 import pandas as pd
-
-from energy_data_stream_processing_spark.sources.adapter import ENERGY_EVENTS_SQL
-from energy_data_stream_processing_spark.streaming.runner import _stateful_update_fn
 
 
 class FakeState:
@@ -68,56 +46,6 @@ class FakeState:
 
     def setTimeoutTimestamp(self, ms):
         self.timeout_ms = ms
-
-
-def run_old(pdf):
-    """The retired round-9 per-row loop, verbatim (reference implementation
-    for the differential check)."""
-    ts = src = ic = icc = gs = tl = em = pk = pc = pe = 0
-    cust, sess = set(), set()
-
-    def cents(v):
-        return int(round(float(v) * 100))
-
-    def milli(v):
-        return int(round(float(v) * 1000))
-
-    for et, payment, energy, cid, sid, tariff in zip(
-        pdf["event_type"], pdf["payment_amount"], pdf["energy_consumed"],
-        pdf["customer_id"], pdf["session_id"], pdf["tariff_type"],
-    ):
-        has_pay = payment is not None and not (
-            isinstance(payment, float) and math.isnan(payment)
-        )
-        has_energy = energy is not None and not (
-            isinstance(energy, float) and math.isnan(energy)
-        )
-        if et == "tariff_switch":
-            ts += 1
-            if has_pay:
-                src += cents(payment)
-            if tariff == "green":
-                gs += 1
-        elif et == "incentive_claim":
-            ic += 1
-            if has_pay:
-                icc += cents(payment)
-        elif et == "user_login":
-            tl += 1
-            if sid is not None:
-                sess.add(int(sid))
-        elif et == "energy_consumed":
-            if has_energy:
-                m = milli(energy)
-                em += m
-                pk = max(pk, m)
-        elif et == "bill_payment":
-            if has_pay:
-                pc += cents(payment)
-                pe += 1
-        if cid is not None:
-            cust.add(cid)
-    return (ts, src, ic, icc, gs, tl, em, pk, pc, pe, len(cust), len(sess))
 
 
 def old_session_update_fn(gap_sec):
@@ -207,43 +135,6 @@ def session_probe() -> None:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    sql = ENERGY_EVENTS_SQL.replace("FROM events", f"FROM '{sf_dir}/events.parquet'")
-    pdf = duckdb.sql(sql).df()[
-        ["event_type", "payment_amount", "energy_consumed",
-         "customer_id", "session_id", "tariff_type"]
-    ]
-
-    # realistic Arrow shape: DECIMAL columns arrive as object-dtype Decimals
-    def dec(x, q):
-        return None if pd.isna(x) else Decimal(f"{x:.{q}f}")
-
-    pdf["payment_amount"] = pdf["payment_amount"].map(lambda x: dec(x, 2))
-    pdf["energy_consumed"] = pdf["energy_consumed"].map(lambda x: dec(x, 3))
-
-    key = (
-        datetime.datetime(2024, 1, 1, 0, 0, 0),
-        int(datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc).timestamp() * 1000),
-    )  # (naive hour label, epoch ms) — round-11 tz-proof key shape
-    fn = _stateful_update_fn()
-
-    def run_shipped(pdf):
-        st = FakeState()
-        list(fn(key, iter([pdf]), st))
-        s = st.get
-        return (*s[:10], len(s[10]), len(s[11]))
-
-    a, b = run_old(pdf), run_shipped(pdf)
-    assert a == b, (a, b)
-    print(f"rows: {len(pdf)}  state identical: {a}")
-    for name, f in [("old_loop", run_old), ("shipped_vectorized", run_shipped)]:
-        f(pdf)  # warm
-        t0 = time.perf_counter()
-        n = 10
-        for _ in range(n):
-            f(pdf)
-        dt = (time.perf_counter() - t0) / n
-        print(f"{name:<20} {dt * 1000:6.1f} ms/chunk  {len(pdf) / dt / 1e6:.2f} M rows/s")
     session_probe()
 
 

@@ -251,7 +251,7 @@ def test_late_data_and_idempotence_matrix(spark, sf_dir, tmp_path, backend):
 
 
 def test_streaming_foreach_batch_lake_merge(spark, sf_dir, tmp_path):
-    """The stateful hourly stream flushing through foreach_batch_lake_merge
+    """The exact hourly stream (update mode) flushing through foreach_batch_lake_merge
     (batchId = txn id) must land the batch-equal final state with atomic
     per-batch commits."""
     from energy_data_stream_processing_spark.operators.hourly import (
@@ -260,13 +260,13 @@ def test_streaming_foreach_batch_lake_merge(spark, sf_dir, tmp_path):
     from energy_data_stream_processing_spark.sources.adapter import energy_events
     from energy_data_stream_processing_spark.streaming.runner import (
         energy_events_stream,
-        hourly_metrics_stateful_stream,
+        hourly_metrics_stream,
     )
 
     store = str(tmp_path / "lake")
     q = (
-        hourly_metrics_stateful_stream(energy_events_stream(spark, sf_dir))
-        .drop("update_seq")
+        hourly_metrics_stream(energy_events_stream(spark, sf_dir), horizon=None)
+        .drop("_rows_total")
         .writeStream.foreachBatch(
             foreach_batch_lake_merge(store, txn_app_id="hourly-metrics-q1")
         )

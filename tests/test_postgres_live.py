@@ -348,8 +348,8 @@ def test_spark_partial_flushes_roundtrip_live(pg, spark, sf_dir):
 
 def test_streaming_flush_to_live_postgres(pg, spark, sf_dir, tmp_path):
     """The reference pipeline end-to-end on its actual database: streamed
-    events -> exact stateful hourly aggregation (applyInPandasWithState,
-    update mode) -> foreachBatch flush through the engine-generated
+    events -> exact hourly window aggregation (update mode, no
+    watermark) -> foreachBatch flush through the engine-generated
     ``ON CONFLICT (hour) DO UPDATE`` into a LIVE PostgreSQL 15 — then the
     table must equal the batch aggregate bit-for-bit. Update-mode state rows
     carry COMPLETE per-hour aggregates, so the full-row-replacement dialect
@@ -364,7 +364,7 @@ def test_streaming_flush_to_live_postgres(pg, spark, sf_dir, tmp_path):
     )
     from energy_data_stream_processing_spark.streaming.runner import (
         energy_events_stream,
-        hourly_metrics_stateful_stream,
+        hourly_metrics_stream,
     )
 
     pg.sql(_reference_ddl("stream_flush"))
@@ -374,8 +374,8 @@ def test_streaming_flush_to_live_postgres(pg, spark, sf_dir, tmp_path):
         dialect="postgres",
     )
     q = (
-        hourly_metrics_stateful_stream(energy_events_stream(spark, sf_dir))
-        .drop("update_seq")
+        hourly_metrics_stream(energy_events_stream(spark, sf_dir), horizon=None)
+        .drop("_rows_total")
         .writeStream.foreachBatch(flush)
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -404,7 +404,7 @@ def test_streaming_flush_to_live_postgres(pg, spark, sf_dir, tmp_path):
 
 def test_streaming_flush_kill_and_resume_live(pg, spark, sf_dir, tmp_path):
     """Crash-and-restart on the live sink: run ONE paced micro-batch of the
-    stateful hourly stream into PostgreSQL, stop the query (a crash in the
+    exact hourly stream into PostgreSQL, stop the query (a crash in the
     window after some flushes committed), restart from the same checkpoint
     to drain the rest — the final table must STILL equal the batch
     aggregate. This is the replay/idempotence story the full-row dialect
@@ -423,7 +423,7 @@ def test_streaming_flush_kill_and_resume_live(pg, spark, sf_dir, tmp_path):
     )
     from energy_data_stream_processing_spark.streaming.runner import (
         energy_events_stream,
-        hourly_metrics_stateful_stream,
+        hourly_metrics_stream,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -443,13 +443,14 @@ def test_streaming_flush_kill_and_resume_live(pg, spark, sf_dir, tmp_path):
             or (lambda sql, rows: pg.sql(_prepared(sql, rows))),
         )
         return (
-            hourly_metrics_stateful_stream(
+            hourly_metrics_stream(
                 energy_events_stream(
                     spark, sf_dir, source_dir=src,
                     max_files_per_trigger=1 if paced else None,
-                )
+                ),
+                horizon=None,
             )
-            .drop("update_seq")
+            .drop("_rows_total")
             .writeStream.foreachBatch(flush)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -584,7 +585,7 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
     """The reference's literal sample run, on its actual database: the
     220-event ``data/events.jsonl`` (the exact file producer/producer.py:41
     replays) streamed through JSONL envelope parse -> dead-letter split ->
-    exact stateful hourly aggregation -> engine-generated
+    exact hourly stream aggregation -> engine-generated
     ``ON CONFLICT (hour) DO UPDATE`` into a LIVE PostgreSQL 15 carrying the
     reference's schema — metrics AND the dead-letter line the reference's
     own ``data/bad_events.log`` records. Final table must equal the batch
@@ -610,7 +611,7 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
         foreach_batch_statement_upsert,
     )
     from energy_data_stream_processing_spark.streaming.runner import (
-        hourly_metrics_stateful_stream,
+        hourly_metrics_stream,
     )
 
     ref_sample = "/root/reference/data/events.jsonl"
@@ -638,8 +639,8 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
         "sample_run", execute_many=lambda sql, rows: pg.sql(_prepared(sql, rows))
     )
     q_metrics = (
-        hourly_metrics_stateful_stream(valid_stream)
-        .drop("update_seq")
+        hourly_metrics_stream(valid_stream, horizon=None)
+        .drop("_rows_total")
         .writeStream.foreachBatch(flush)
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt_metrics"))
@@ -723,7 +724,7 @@ def test_bounded_stream_final_insert_flush_live(pg, spark, sf_dir, tmp_path):
         append_watermark_sentinel,
         ascending_time_chunks,
         energy_events_stream,
-        hourly_metrics_stateful_bounded_stream,
+        hourly_metrics_stream,
     )
 
     pg.sql(_reference_ddl("bounded_flush"))
@@ -741,8 +742,7 @@ def test_bounded_stream_final_insert_flush_live(pg, spark, sf_dir, tmp_path):
     )
     ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
     q = (
-        hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours")
-        .drop("update_seq")
+        hourly_metrics_stream(ev, horizon="2 hours")
         .writeStream.foreachBatch(flush)
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt_bounded"))
@@ -861,18 +861,16 @@ def test_dst_fall_back_flushes_two_rows_live(pg, spark):
     ]
 
 
-def test_sharded_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
-    """Round-12 verdict item 1's 'done' bar, on the real database: the
-    sharded hot-hour stream drives ``foreach_batch_sharded_flush`` (stage
-    -> re-merge touched hours -> full-row upsert) into live PostgreSQL
-    through an injected crash AFTER a flush but BEFORE its checkpoint
-    commit, then resumes — under America/New_York session+driver+server
-    tz with the corpus folded around the 2023 DST fall-back. The final
-    table must equal the batch aggregate on every hour and all 15 metrics,
-    with the two wall-"01:00" instants present as TWO rows; the replayed
-    batch exercises both idempotence layers (the staging _batch_id
-    overwrite and the ON CONFLICT full-row replacement), and any
-    cross-batch shard straddle is healed by the re-merge from staging."""
+def test_stream_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
+    """The append-mode exact hourly stream drives
+    ``foreach_batch_statement_upsert`` (full-row ``ON CONFLICT`` upsert)
+    into live PostgreSQL through an injected crash AFTER a flush but
+    BEFORE its checkpoint commit, then resumes — under America/New_York
+    session+driver+server tz with the corpus folded around the 2023 DST
+    fall-back. The final table must equal the batch aggregate on every
+    hour and all 15 metrics, with the two wall-"01:00" instants present as
+    TWO rows; the replayed batch re-flushes the same final rows, which the
+    full-row replacement absorbs."""
     import time as _time
 
     from pyspark.sql import functions as F
@@ -885,16 +883,16 @@ def test_sharded_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
         normalize_event_ts,
     )
     from energy_data_stream_processing_spark.sources.sinks import (
-        foreach_batch_sharded_flush,
+        foreach_batch_statement_upsert,
     )
     from energy_data_stream_processing_spark.streaming.runner import (
         append_watermark_sentinel,
         ascending_time_chunks,
         energy_events_stream,
-        hourly_metrics_stateful_sharded_stream,
+        hourly_metrics_stream,
     )
 
-    pg.sql(_reference_ddl("sharded_flush"))
+    pg.sql(_reference_ddl("dst_resume_flush"))
 
     prior_tz = spark.conf.get("spark.sql.session.timeZone")
     prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
@@ -931,10 +929,8 @@ def test_sharded_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
         src = ascending_time_chunks(spark, str(d), 3)
         append_watermark_sentinel(spark, str(d), src)
         ckpt = str(tmp_path / "ckpt")
-        inner = foreach_batch_sharded_flush(
-            str(tmp_path / "staging"),
-            prune_closed=True,
-            table="sharded_flush",
+        inner = foreach_batch_statement_upsert(
+            "dst_resume_flush",
             execute_many=lambda sql, rows: pg.sql(
                 "SET TIME ZONE 'America/New_York';\n" + _prepared(sql, rows)
             ),
@@ -953,9 +949,7 @@ def test_sharded_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
                 spark, str(d), source_dir=src, max_files_per_trigger=1
             )
             return (
-                hourly_metrics_stateful_sharded_stream(
-                    ev, horizon="2 hours", shards=8
-                )
+                hourly_metrics_stream(ev, horizon="2 hours")
                 .writeStream.foreachBatch(flush)
                 .outputMode("append")
                 .option("checkpointLocation", ckpt)
@@ -967,9 +961,9 @@ def test_sharded_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
         with pytest.raises(Exception):
             q.awaitTermination(300)
         q2 = start(crash_after=None)
-        assert q2.awaitTermination(300), "resumed sharded flush did not finish"
+        assert q2.awaitTermination(300), "resumed flush did not finish"
 
-        view = "dst_sharded_flush_events"
+        view = "dst_resume_flush_events"
         folded.createOrReplaceTempView(view)
         batch_df = hourly_business_metrics(
             spark.sql(ENERGY_EVENTS_SQL.replace("FROM events", f"FROM {view}"))
@@ -986,7 +980,7 @@ def test_sharded_flush_kill_and_resume_dst_live(pg, spark, tmp_path):
                 "SET extra_float_digits = 3;"
                 "SELECT extract(epoch from hour)::bigint, "
                 + ", ".join(METRIC_COLUMNS)
-                + " FROM sharded_flush;"
+                + " FROM dst_resume_flush;"
             )
         }
         assert set(got) == set(want) and len(want) > 0

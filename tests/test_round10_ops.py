@@ -4,14 +4,11 @@
   ``CORRECTNESS_r*.json`` artifacts beyond the committed
   ``_GATE_EVIDENCE_MAX_ROUND``, so the driver dropping this round's artifact
   after our last commit cannot redden the suite;
-- vectorized ``_stateful_update_fn`` (verdict item 2): the pandas-mask
-  arithmetic must be value-identical to the per-row loop it replaced —
-  pinned directly on a hand-made chunk with every null/NaN/rounding edge;
 - density-dispatched ``customer_view`` (verdict item 3): ``variant='auto'``
   must measure per-customer density and pick the ladder-measured plan;
-- round-10 advice: DST fall-back hour keys must not kill the bounded
-  stream (AmbiguousTimeError) — the repeated wall hour's two epoch
-  occurrences stay DISTINCT state groups, each emitting its own
+- round-10 advice: DST fall-back hour keys must not break the bounded
+  stream — the repeated wall hour's two epoch occurrences stay DISTINCT
+  state groups, each emitting its own
   batch-equal row; ``postgres_final`` needs an explicit
   ``final_only=True`` acknowledgment; truncated ``recentProgress`` series
   must raise instead of silently corrupting state-accounting shapes.
@@ -98,11 +95,11 @@ def test_committed_horizon_covers_all_tracked_artifacts():
 
 
 # ---------------------------------------------------------------------------
-# Vectorized stateful update fn: value-identity on a hand-made chunk
+# GroupState stand-in for the session update fn's merge paths
 # ---------------------------------------------------------------------------
 class _FakeGroupState:
     """Just enough GroupState surface for the merge paths of
-    ``_stateful_update_fn`` / ``_session_update_fn``."""
+    ``_session_update_fn``."""
 
     def __init__(self, state=None):
         self._state = state
@@ -124,92 +121,6 @@ class _FakeGroupState:
 
     def setTimeoutTimestamp(self, ms):
         self.timeout_ms = ms
-
-
-def _chunk(rows):
-    import pandas as pd
-
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "event_type", "payment_amount", "energy_consumed",
-            "customer_id", "session_id", "tariff_type",
-        ],
-    )
-
-
-def test_vectorized_update_fn_matches_hand_computed_state():
-    """Every edge the old per-row loop handled, on one chunk: None and NaN
-    payments, DECIMAL-ish cents rounding (0.29 * 100 = 28.999...), green
-    vs non-green switches, session/customer null handling, GREATEST peak
-    merge across rows AND across chunks, and exact int accumulation."""
-    from decimal import Decimal
-
-    from energy_data_stream_processing_spark.streaming.runner import (
-        _stateful_update_fn,
-    )
-
-    fn = _stateful_update_fn()
-    state = _FakeGroupState()
-    import datetime
-
-    # (naive hour label, true epoch ms of the hour start) — the round-11
-    # tz-proof group key shape
-    key = (
-        datetime.datetime(2024, 1, 1, 10, 0, 0),
-        int(
-            datetime.datetime(
-                2024, 1, 1, 10, 0, 0, tzinfo=datetime.timezone.utc
-            ).timestamp()
-            * 1000
-        ),
-    )
-    chunk1 = _chunk(
-        [
-            ("tariff_switch", Decimal("0.29"), None, "c1", 7, "green"),
-            ("tariff_switch", None, None, "c2", None, "standard"),
-            ("incentive_claim", Decimal("10.01"), None, "c1", 7, None),
-            ("user_login", None, None, "c3", 8, None),
-            ("user_login", None, None, "c3", None, None),  # null session
-            ("energy_consumed", None, 2.5, "c1", 7, None),
-            ("energy_consumed", None, 0.004, None, None, None),  # null customer
-            ("bill_payment", Decimal("99.99"), None, "c4", 9, None),
-            ("bill_payment", float("nan"), None, "c4", 9, None),  # NaN payment
-            ("unknown_event", Decimal("5.00"), 1.0, "c5", 10, None),
-        ]
-    )
-    out1 = list(fn(key, iter([chunk1]), state))
-    assert len(out1) == 1
-    # second chunk exercises cross-chunk merge + GREATEST peak
-    chunk2 = _chunk(
-        [
-            ("energy_consumed", None, 9.999, "c1", 7, None),
-            ("tariff_switch", Decimal("1.00"), None, "c1", 7, "green"),
-        ]
-    )
-    out2 = list(fn(key, iter([chunk2]), state))
-    row = out2[0].iloc[0]
-
-    assert row["tariff_switches"] == 3
-    assert row["total_switch_revenue"] == pytest.approx(1.29)
-    assert row["avg_switch_value"] == pytest.approx(0.43)
-    assert row["incentive_claims"] == 1
-    assert row["total_incentive_payouts"] == pytest.approx(10.01)
-    assert row["green_tariff_switches"] == 2
-    # distinct customers: c1 c2 c3 c4 c5 (the null-customer row adds none)
-    assert row["active_customers"] == 5
-    # distinct login sessions: only 8 (nulls skipped; 7/9/10 not logins)
-    assert row["new_sessions"] == 1
-    assert row["total_logins"] == 2
-    assert row["total_energy_consumed"] == pytest.approx(12.503)
-    assert row["peak_hour_usage"] == pytest.approx(9.999)  # GREATEST, not last
-    # bill payments: NaN row contributes neither sum nor count
-    assert row["total_payments"] == pytest.approx(99.99)
-    assert row["payment_events"] == 1
-    assert row["avg_payment_amount"] == pytest.approx(99.99)
-    assert row["update_seq"] == 2
-    # state money stays exact integer cents — 29 + 100, not float drift
-    assert state.get[1] == 129
 
 
 # ---------------------------------------------------------------------------
@@ -434,16 +345,12 @@ def test_stateful_bounded_hourly_dst_fall_back(spark, sf_dir, tmp_path):
     wall hour occurs twice. date_trunc keeps the two occurrences as
     DISTINCT epoch keys (05:00Z EDT and 06:00Z EST) that share the naive
     label "01:00" — batch emits one row per EPOCH hour (9 for this
-    window) and the stream holds two separate state groups. Round 11
-    carries the hour start's TRUE epoch ms through the group key
-    (``hour_epoch_ms``, computed JVM-side), so (a) the event-time timeout
-    is exact epoch arithmetic with no ambiguous re-localization for
-    EITHER group, and (b) the output ``hour`` is rebuilt from the epoch
-    key after the state function, so the two fall-back rows keep DISTINCT
-    correct instants all the way to the sink (the round-10 residual —
-    output labels collapsing onto one epoch, which silently violated the
-    ``postgres_final`` one-row-per-key upsert contract — is gone). The
-    whole 9-hour window must now match batch EXACTLY per epoch hour."""
+    window). The append-mode stream keys its ``window`` on the epoch, so
+    it holds two separate state groups, closes each when the watermark
+    passes its epoch end, and emits each with its own correct instant —
+    the two fall-back rows never collapse onto one ``hour`` (which would
+    violate the ``postgres_final`` one-row-per-key upsert contract). The
+    whole 9-hour window must match batch EXACTLY per epoch hour."""
     from datetime import datetime, timezone
 
     from energy_data_stream_processing_spark.operators.hourly import (
@@ -455,8 +362,7 @@ def test_stateful_bounded_hourly_dst_fall_back(spark, sf_dir, tmp_path):
     )
     from energy_data_stream_processing_spark.streaming.runner import (
         energy_events_stream,
-        hourly_metrics_stateful_bounded_stream,
-        run_stream_to_table,
+        run_hourly_stream,
     )
 
     prior = spark.conf.get("spark.sql.session.timeZone")
@@ -506,11 +412,7 @@ def test_stateful_bounded_hourly_dst_fall_back(spark, sf_dir, tmp_path):
         ev = energy_events_stream(
             spark, sf_dir, source_dir=str(src), max_files_per_trigger=1
         )
-        out = run_stream_to_table(
-            spark,
-            hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours"),
-            mode="append",
-        )
+        out = run_hourly_stream(spark, ev, horizon="2 hours")
 
         # compare on tz-proof epoch-hour numbers, not collected datetimes
         def by_epoch_hour(df, metric_cols):
@@ -539,7 +441,7 @@ def test_stateful_bounded_hourly_dst_fall_back(spark, sf_dir, tmp_path):
 
         got = [
             (h, v)
-            for h, v in by_epoch_hour(out.drop("update_seq"), metric_cols)
+            for h, v in by_epoch_hour(out, metric_cols)
             if h in window_hours  # drops the far-future sentinel's rows
         ]
         assert len(got) == 9, sorted(h for h, _ in got)  # each group emitted once

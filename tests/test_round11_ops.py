@@ -218,14 +218,14 @@ def test_footer_bound_never_exceeds_true_density(ids, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# DST fall-back: the UNBOUNDED twin's output labels (the bounded variant is
-# pinned in test_round10_ops; round 11 changed BOTH streams' group key)
+# DST fall-back: the UPDATE-MODE twin's output labels (the append-mode
+# stream is pinned in test_round10_ops)
 # ---------------------------------------------------------------------------
 def test_stateful_unbounded_hourly_dst_fall_back_output_labels(spark, tmp_path):
-    """Under America/New_York the NoTimeout exact twin must also emit the
-    two wall-"01:00" fall-back hours as DISTINCT, CORRECT epoch instants
-    (the round-11 ``hour_epoch_ms`` key restores them after the
-    pandas->Spark boundary) with batch-equal values for every hour."""
+    """Under America/New_York the update-mode exact twin (no watermark)
+    must also emit the two wall-"01:00" fall-back hours as DISTINCT,
+    CORRECT epoch instants (its ``window`` is keyed on the epoch) with
+    batch-equal values for every hour."""
     from datetime import datetime, timezone
 
     from pyspark.sql import functions as F

@@ -1,5 +1,4 @@
-"""Round-12 pins: state-partition sizing as engine default, DST-safe
-statement transport, and the sharded hot-hour state variant."""
+"""Round-12 pins: state-partition sizing as engine default."""
 
 from __future__ import annotations
 
@@ -18,7 +17,7 @@ from energy_data_stream_processing_spark.plans.catalog import all_queries
 # to key cardinality (SCALE.md §4.3), regardless of the session default.
 # ---------------------------------------------------------------------------
 def test_hourly_streams_pin_state_partitions_to_hours_class(spark, sf_dir):
-    """Both exact hourly twins must run their stateful operator with
+    """Both exact hourly entries must run their stateful operator with
     HOURS_STATE_PARTITIONS state stores even when the session default is
     higher, and must RESTORE the session conf afterwards — the engine
     scopes spark.sql.shuffle.partitions for the query lifetime because a
@@ -62,387 +61,3 @@ def test_run_stream_to_table_restores_conf_on_failure(spark):
         run_stream_to_table(spark, batch_df, state_partitions=2)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
 
-
-# ---------------------------------------------------------------------------
-# Verdict item 6: sharded hot-hour state variant — oracle identity
-# ---------------------------------------------------------------------------
-def test_sharded_hourly_stream_matches_batch_exactly(spark, sf_dir):
-    """The (hour, customer-shard)-keyed bounded stream, merged downstream
-    by merge_sharded_hourly_partials, must be VALUE-IDENTICAL to the batch
-    aggregate on every hour and all 15 metrics — the sharding is a state-
-    layout change, not a semantic one. Also pins the shape claims: >1
-    shard actually materialized, and every (hour, shard) partial emitted
-    exactly once (append-mode final-only)."""
-    from datetime import timedelta
-
-    from pyspark.sql import functions as F
-
-    from energy_data_stream_processing_spark.operators.hourly import (
-        METRIC_COLUMNS,
-        hourly_business_metrics,
-    )
-    from energy_data_stream_processing_spark.sources.adapter import energy_events
-    from energy_data_stream_processing_spark.streaming.runner import (
-        append_watermark_sentinel,
-        ascending_time_chunks,
-        energy_events_stream,
-        hourly_metrics_stateful_sharded_stream,
-        merge_sharded_hourly_partials,
-        run_stream_to_table,
-    )
-
-    src = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, src)
-    ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    partials = run_stream_to_table(
-        spark,
-        hourly_metrics_stateful_sharded_stream(ev, horizon="2 hours", shards=8),
-        mode="append",
-        state_partitions=8,
-    ).where(F.col("hour") < mx + timedelta(days=30))
-
-    # shape: multiple shards in play, one emission per (hour, shard)
-    assert partials.select("shard").distinct().count() > 1
-    dup = (
-        partials.groupBy("hour_epoch_ms", "shard")
-        .count()
-        .where(F.col("count") > 1)
-        .count()
-    )
-    assert dup == 0
-
-    got = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in merge_sharded_hourly_partials(partials).collect()
-    }
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    assert set(got) == set(want) and len(want) > 0
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c, row[c], want[h][c])
-
-
-def test_shard_partial_requires_final_only():
-    """shard_partial emits once per (hour, shard) at eviction; constructing
-    it without final_only (update-mode) must be a hard error, mirroring the
-    postgres_final pairing ack."""
-    from energy_data_stream_processing_spark.streaming.runner import (
-        _stateful_update_fn,
-    )
-
-    with pytest.raises(ValueError, match="final_only"):
-        _stateful_update_fn(shard_partial=True)
-    assert callable(_stateful_update_fn(final_only=True, shard_partial=True))
-
-
-def test_sharded_merge_dedups_sessions_across_shards_and_keeps_dst_hours(spark):
-    """Two exactness seams the real testdata never exercises: (a) a session
-    id that appears in TWO shards (possible whenever session ids are not
-    customer-scoped) must count ONCE in new_sessions — the merge unions
-    session SETS rather than summing per-shard counts; (b) partials from
-    the two DST fall-back epoch hours (same naive wall label) must merge
-    into TWO output rows because the merge keys on hour_epoch_ms."""
-    from datetime import datetime, timezone
-
-    from energy_data_stream_processing_spark.streaming.runner import (
-        SHARD_PARTIAL_SCHEMA,
-        merge_sharded_hourly_partials,
-    )
-
-    h1 = int(datetime(2023, 11, 5, 5, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    h2 = h1 + 3_600_000  # the second wall-"01:00" occurrence in America/New_York
-    naive = datetime(2023, 11, 5, 1, 0)  # lossy label, same for both
-
-    def partial(hour_ms, shard, n_cust, sessions, logins):
-        return (
-            naive, hour_ms, shard, 1,
-            0, 0, 0, 0, 0, logins, 0, 0, 0, 0,
-            n_cust, sessions,
-        )
-
-    partials = spark.createDataFrame(
-        [
-            # hour 1: session 77 spans shards 0 and 1 -> must count once
-            partial(h1, 0, 2, [77, 101], 3),
-            partial(h1, 1, 1, [77], 2),
-            # hour 2 (same wall label): disjoint sessions
-            partial(h2, 0, 1, [55], 1),
-        ],
-        schema=SHARD_PARTIAL_SCHEMA,
-    )
-    rows = {
-        int(r["hour"].timestamp() * 1000): r
-        for r in merge_sharded_hourly_partials(partials).collect()
-    }
-    assert set(rows) == {h1, h2}  # DST fall-back hours stay distinct
-    assert rows[h1]["new_sessions"] == 2  # {77, 101}, NOT 3
-    assert rows[h1]["active_customers"] == 3  # shard-disjoint counts add
-    assert rows[h1]["total_logins"] == 5
-    assert rows[h2]["new_sessions"] == 1
-
-
-def test_sharded_stream_kill_and_resume_under_rocksdb(spark, sf_dir, tmp_path):
-    """Operational story for the sharded variant: crash after the SECOND
-    flushed micro-batch (crash_after=2 — some but not all state flushed)
-    and resume from the checkpoint under the RocksDB
-    state-store provider (the 100 TB default) — the deduped partials,
-    merged, must still equal the batch aggregate on every hour and metric.
-    foreachBatch is at-least-once across the crash, so the collector
-    overwrites by (hour_epoch_ms, shard): exactly the idempotence the
-    partials' once-per-key-final emission is designed to give a sink."""
-    from datetime import timedelta
-
-    from pyspark.sql import functions as F
-
-    from energy_data_stream_processing_spark.operators.hourly import (
-        METRIC_COLUMNS,
-        hourly_business_metrics,
-    )
-    from energy_data_stream_processing_spark.sources.adapter import energy_events
-    from energy_data_stream_processing_spark.sources.sinks import _conf_override
-    from energy_data_stream_processing_spark.streaming.runner import (
-        SHARD_PARTIAL_SCHEMA,
-        append_watermark_sentinel,
-        ascending_time_chunks,
-        energy_events_stream,
-        hourly_metrics_stateful_sharded_stream,
-        merge_sharded_hourly_partials,
-    )
-
-    src = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, src)
-    ckpt = str(tmp_path / "ckpt")
-    collected: dict[tuple, tuple] = {}
-
-    def start(crash_after: int | None):
-        calls: list[int] = []
-
-        def flush(batch_df, batch_id):
-            for r in batch_df.collect():
-                collected[(r["hour_epoch_ms"], r["shard"])] = tuple(r)
-            calls.append(batch_id)
-            if crash_after is not None and len(calls) >= crash_after:
-                raise RuntimeError("injected crash after first flush")
-
-        ev = energy_events_stream(
-            spark, sf_dir, source_dir=src, max_files_per_trigger=1
-        )
-        return (
-            hourly_metrics_stateful_sharded_stream(ev, horizon="2 hours", shards=8)
-            .writeStream.foreachBatch(flush)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    with _conf_override(
-        spark,
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    ):
-        q = start(crash_after=2)
-        with pytest.raises(Exception):
-            q.awaitTermination(300)
-        q2 = start(crash_after=None)
-        assert q2.awaitTermination(300), "resumed sharded stream did not finish"
-
-    partials = spark.createDataFrame(
-        list(collected.values()), schema=SHARD_PARTIAL_SCHEMA
-    )
-    merged = merge_sharded_hourly_partials(partials).where(
-        F.col("hour") < mx + timedelta(days=30)
-    )
-    got = {int(r["hour"].timestamp()): r.asDict() for r in merged.collect()}
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    assert set(got) == set(want) and len(want) > 0
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c)
-
-
-def test_sharded_merge_arithmetic_matches_reference_on_random_partials(spark):
-    """Shard-invariance soundness, divorced from real data: for randomly
-    generated per-hour accumulators randomly SPLIT across shards, the Spark
-    merge must equal a pure-Python reference that computes the metrics the
-    way the state function's final_row does (same quantized integer units,
-    same floor(x*100+0.5)/100 half-up rounding on float64). Random values
-    include rounding-boundary amounts (exact .005 cents cases arise
-    naturally from integer cents), many hours, varying shard counts, and
-    cross-shard session overlap."""
-    import math
-    import random
-    from datetime import datetime, timezone
-
-    from energy_data_stream_processing_spark.streaming.runner import (
-        SHARD_PARTIAL_SCHEMA,
-        merge_sharded_hourly_partials,
-    )
-
-    rng = random.Random(0xC0FFEE)
-    base_ms = int(
-        datetime(2024, 3, 1, tzinfo=timezone.utc).timestamp() * 1000
-    )
-    naive = datetime(2024, 3, 1)
-    rows, want = [], {}
-    for h in range(60):  # 60 hours, 1-6 shards each
-        hour_ms = base_ms + h * 3_600_000
-        n_shards = rng.randint(1, 6)
-        tot = [0] * 10
-        all_cust = 0
-        all_sessions: set[int] = set()
-        session_pool = list(range(h * 50, h * 50 + 30))
-        for s in range(n_shards):
-            acc = [rng.randint(0, 10_000) for _ in range(10)]
-            # force rounding-boundary cases: odd cents with tiny divisors
-            if s == 0:
-                acc[0] = rng.choice([1, 2, 3])          # tariff_switches
-                acc[1] = acc[0] * 100 + 50               # .5-cent avg boundary
-            n_cust = rng.randint(0, 40)
-            sess = sorted(rng.sample(session_pool, rng.randint(0, 10)))
-            rows.append(
-                (naive, hour_ms, s, 1, *acc, n_cust, sess)
-            )
-            tot = [a + b for a, b in zip(tot, acc)]
-            tot[7] = max(r[11] for r in rows if r[1] == hour_ms)  # peak = max
-            all_cust += n_cust
-            all_sessions.update(sess)
-
-        def r2(x: float) -> float:
-            return math.floor(x * 100.0 + 0.5) / 100.0
-
-        ts, src, ic, icc, gs, tl, em, pk, pc, pe = tot
-        switch_rev, energy_total, payments = src / 100.0, em / 1000.0, pc / 100.0
-        want[hour_ms] = {
-            "tariff_switches": ts,
-            "total_switch_revenue": switch_rev,
-            "avg_switch_value": r2(switch_rev / ts) if ts else 0.0,
-            "incentive_claims": ic,
-            "total_incentive_payouts": icc / 100.0,
-            "green_tariff_switches": gs,
-            "active_customers": all_cust,
-            "new_sessions": len(all_sessions),
-            "total_logins": tl,
-            "total_energy_consumed": energy_total,
-            "avg_consumption_per_customer": r2(energy_total / all_cust)
-            if all_cust
-            else 0.0,
-            "peak_hour_usage": pk / 1000.0,
-            "total_payments": payments,
-            "payment_events": pe,
-            "avg_payment_amount": r2(payments / pe) if pe else 0.0,
-        }
-
-    merged = merge_sharded_hourly_partials(
-        spark.createDataFrame(rows, schema=SHARD_PARTIAL_SCHEMA)
-    )
-    got = {
-        int(r["hour"].timestamp() * 1000): r.asDict() for r in merged.collect()
-    }
-    assert set(got) == set(want)
-    for hour_ms, exp in want.items():
-        for c, v in exp.items():
-            assert float(got[hour_ms][c]) == float(v), (hour_ms, c, got[hour_ms][c], v)
-
-
-def test_sharded_stream_dst_fall_back_end_to_end(spark, tmp_path):
-    """The sharded variant end-to-end under America/New_York with the
-    corpus folded around the 2023 DST fall-back: the merged output must
-    carry BOTH wall-"01:00" epoch hours as distinct rows with batch-equal
-    values — the (hour_epoch_ms, shard) key and the epoch-keyed merge
-    must not re-introduce the ambiguity anywhere in the chain."""
-    from datetime import datetime, timedelta, timezone
-
-    from pyspark.sql import functions as F
-
-    from energy_data_stream_processing_spark.operators.hourly import (
-        hourly_business_metrics,
-    )
-    from energy_data_stream_processing_spark.sources.adapter import (
-        ENERGY_EVENTS_SQL,
-        normalize_event_ts,
-    )
-    from energy_data_stream_processing_spark.streaming.runner import (
-        append_watermark_sentinel,
-        ascending_time_chunks,
-        energy_events_stream,
-        hourly_metrics_stateful_sharded_stream,
-        merge_sharded_hourly_partials,
-        run_stream_to_table,
-    )
-
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        raw = normalize_event_ts(
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        )
-        target_us = int(
-            datetime(2023, 11, 5, 1, 30, tzinfo=timezone.utc).timestamp()
-            * 1_000_000
-        )
-        win_us = 8 * 3600 * 1_000_000
-        mn_us = raw.select(F.min(F.unix_micros("ts")).alias("m")).first()["m"]
-        folded = raw.withColumn(
-            "ts",
-            F.timestamp_micros(
-                F.lit(target_us) + (F.unix_micros("ts") - F.lit(mn_us)) % F.lit(win_us)
-            ),
-        )
-        d = tmp_path / "sf"
-        d.mkdir()
-        stage = str(tmp_path / "stage")
-        folded.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        os.rename(f"{stage}/{part}", str(d / "events.parquet"))
-
-        src = ascending_time_chunks(spark, str(d), 3)
-        mx = append_watermark_sentinel(spark, str(d), src)
-        ev = energy_events_stream(
-            spark, str(d), source_dir=src, max_files_per_trigger=1
-        )
-        partials = run_stream_to_table(
-            spark,
-            hourly_metrics_stateful_sharded_stream(ev, horizon="2 hours", shards=8),
-            mode="append",
-            state_partitions=8,
-        ).where(F.col("hour") < mx + timedelta(days=30))
-        out = merge_sharded_hourly_partials(partials)
-
-        view = "dst_sharded_events"
-        folded.createOrReplaceTempView(view)
-        batch_df = hourly_business_metrics(
-            spark.sql(ENERGY_EVENTS_SQL.replace("FROM events", f"FROM {view}"))
-        )
-        metric_cols = [c for c in batch_df.columns if c != "hour"]
-
-        def by_epoch_hour(df):
-            return sorted(
-                (
-                    r["_eh"],
-                    tuple(round(float(r[c]), 6) for c in metric_cols),
-                )
-                for r in df.withColumn(
-                    "_eh", (F.unix_micros("hour") / F.lit(3_600_000_000.0))
-                ).collect()
-            )
-
-        want = by_epoch_hour(batch_df)
-        got = by_epoch_hour(out)
-        h0 = target_us // 3_600_000_000
-        assert {h0 + 4, h0 + 5} <= {h for h, _ in want}  # both 01:00 epochs
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)

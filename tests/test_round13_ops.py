@@ -1,6 +1,6 @@
-"""Round-13 pins: the sharded hot-hour flush shipped end-to-end
-(foreach_batch_sharded_flush), density auto-dispatch bounded-vs-sharded,
-the two-stage session merge, and the injective tz-proof parquet hour key."""
+"""Round-13 pins: the durable hourly pipeline (``run_hourly_pipeline``)
+through a crash and through scheduled catch-up invocations, the per-hour
+density probe, and the injective tz-proof parquet hour key."""
 
 from __future__ import annotations
 
@@ -19,201 +19,81 @@ from energy_data_stream_processing_spark.operators.hourly import (
 )
 from energy_data_stream_processing_spark.sources.adapter import energy_events
 from energy_data_stream_processing_spark.sources.sinks import (
-    foreach_batch_sharded_flush,
+    _conf_override,
     read_hourly_metrics_parquet,
     upsert_hourly_metrics_parquet,
 )
 from energy_data_stream_processing_spark.streaming.runner import (
-    SHARD_PARTIAL_SCHEMA,
     append_watermark_sentinel,
     ascending_time_chunks,
     energy_events_stream,
-    merge_sharded_hourly_partials,
 )
 
 
-def _partial(hour_ms, shard, n_cust, sessions, logins, energy_milli=0):
-    """SHARD_PARTIAL_SCHEMA row with only the fields under test non-zero."""
-    naive = datetime.fromtimestamp(hour_ms / 1000, tz=timezone.utc).replace(
-        tzinfo=None
-    )
-    return (
-        naive, hour_ms, shard, 1,
-        0, 0, 0, 0, 0, logins, energy_milli, 0, 0, 0,
-        n_cust, sessions,
-    )
-
-
 # ---------------------------------------------------------------------------
-# Two-stage session merge (round-12 advice: merge-side memory bound)
+# End-to-end: hourly stream -> parquet hour store, with a crash
 # ---------------------------------------------------------------------------
-def test_two_stage_merge_matches_default_everywhere(spark):
-    """The explode+count_distinct session merge must be value-identical to
-    the single-buffer collect_list form on cross-shard session overlap,
-    DST twin hours, empty session arrays, and random accumulators — it is
-    a memory-layout change (no whole-set aggregation buffer), not a
-    semantic one."""
-    import random
+@pytest.mark.parametrize(
+    "provider",
+    [
+        None,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ],
+    ids=["hdfs", "rocksdb"],
+)
+def test_hourly_pipeline_kill_and_resume_equals_batch(
+    spark, sf_dir, tmp_path, monkeypatch, provider
+):
+    """The durable pipeline's at-least-once story: ``run_hourly_pipeline``
+    crashes AFTER its second store write but BEFORE that batch's
+    checkpoint commit (the replay window), is invoked again on the same
+    checkpoint, and the parquet store must equal the batch aggregate on
+    every hour and all 15 metrics — under the default state store and
+    under RocksDB (the 100 TB default). The replayed batch re-emits the
+    same final hours, and the hour upsert overwrites them in place."""
+    from contextlib import nullcontext
 
-    rng = random.Random(13)
-    base = int(datetime(2023, 11, 5, 5, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    rows = [
-        # cross-shard overlap: 77 in shards 0 and 1 of hour 0
-        _partial(base, 0, 2, [77, 101], 3),
-        _partial(base, 1, 1, [77], 2),
-        # DST twin hour (same wall label under NY): distinct output row
-        _partial(base + 3_600_000, 0, 1, [55], 1),
-        # an hour whose every shard has an EMPTY session set -> n_sess 0
-        _partial(base + 7_200_000, 0, 1, [], 4),
-        _partial(base + 7_200_000, 3, 2, [], 1),
-    ]
-    pool = list(range(1000))
-    for h in range(40):
-        hms = base + (h + 3) * 3_600_000
-        for s in range(rng.randint(1, 5)):
-            rows.append(
-                _partial(
-                    hms, s, rng.randint(0, 30),
-                    sorted(rng.sample(pool, rng.randint(0, 12))),
-                    rng.randint(0, 9), rng.randint(0, 10_000),
-                )
-            )
-    partials = spark.createDataFrame(rows, schema=SHARD_PARTIAL_SCHEMA)
-
-    def snap(df):
-        return sorted(
-            (int(r["hour"].timestamp()), *(float(r[c]) for c in METRIC_COLUMNS))
-            for r in df.collect()
-        )
-
-    one = snap(merge_sharded_hourly_partials(partials))
-    two = snap(merge_sharded_hourly_partials(partials, two_stage_sessions=True))
-    assert one == two and len(one) >= 40
-    # the empty-session hour really exercised the left-join null path
-    empty_hour = next(r for r in one if r[0] == (base + 7_200_000) // 1000)
-    assert empty_hour[METRIC_COLUMNS.index("new_sessions") + 1] == 0.0
-
-
-# ---------------------------------------------------------------------------
-# foreach_batch_sharded_flush: cross-batch shard straddle + replay
-# ---------------------------------------------------------------------------
-def test_sharded_flush_cross_batch_straddle_and_replay(spark, tmp_path):
-    """The seam the staging store exists for: one hour's shard partials
-    evicting in DIFFERENT micro-batches (each (hour, shard) state row
-    times out independently). Batch 0 carries only shard 0 of hour H; the
-    flush lands a complete-so-far row; batch 1 brings shard 1 and the
-    re-merge UPGRADES the stored row to the full-hour value. Then a
-    foreachBatch REPLAY of batch 0 (the crash-between-flush-and-commit
-    window) must change nothing: the staging overwrite rewrites exactly
-    its own files and full-row replacement re-lands identical values —
-    never regressing the hour to its batch-0 partial."""
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "metrics")
-    pg_table: dict = {}
-    statements: list = []
-
-    def execute_many(sql, rows):
-        statements.append(sql)
-        for r in rows:
-            pg_table[r[0]] = dict(zip(METRIC_COLUMNS, r[1:]))  # full-row replace
-
-    flush = foreach_batch_sharded_flush(
-        staging, table="m", execute_many=execute_many, metrics_path=store,
-        prune_closed=True,
-    )
-    h = int(datetime(2024, 5, 1, 7, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    b0 = spark.createDataFrame(
-        [_partial(h, 0, 2, [1, 2], 3, energy_milli=1500)],
-        schema=SHARD_PARTIAL_SCHEMA,
-    )
-    b1 = spark.createDataFrame(
-        [_partial(h, 1, 1, [2, 9], 4, energy_milli=500)],
-        schema=SHARD_PARTIAL_SCHEMA,
-    )
-    key = datetime(2024, 5, 1, 7, 0)  # naive UTC wall binding
-
-    flush(b0, 0)
-    assert pg_table[key]["total_logins"] == 3
-    assert pg_table[key]["active_customers"] == 2
-    assert pg_table[key]["new_sessions"] == 2
-
-    flush(b1, 1)  # straddling shard arrives -> row upgrades in place
-    full = {
-        "total_logins": 7, "active_customers": 3, "new_sessions": 3,
-        "total_energy_consumed": 2.0,
-        "avg_consumption_per_customer": 0.67,  # floor(2/3*100+0.5)/100
-    }
-    for k, v in full.items():
-        assert pg_table[key][k] == v, (k, pg_table[key][k])
-
-    flush(b0, 0)  # replayed batch: idempotent, must NOT regress to partial
-    for k, v in full.items():
-        assert pg_table[key][k] == v, ("after replay", k, pg_table[key][k])
-    assert "ON CONFLICT (hour) DO UPDATE" in statements[0]
-
-    got = read_hourly_metrics_parquet(spark, store).collect()
-    assert len(got) == 1
-    for k, v in full.items():
-        assert float(got[0][k]) == v, ("parquet", k)
-
-
-def test_sharded_flush_argument_contract():
-    with pytest.raises(ValueError, match="at least one sink"):
-        foreach_batch_sharded_flush("/tmp/x")
-    with pytest.raises(ValueError, match="together"):
-        foreach_batch_sharded_flush("/tmp/x", table="m")
-    with pytest.raises(ValueError, match="together"):
-        foreach_batch_sharded_flush("/tmp/x", execute_many=lambda s, r: None)
-
-
-# ---------------------------------------------------------------------------
-# End-to-end: sharded stream -> staged flush -> parquet store, with a crash
-# ---------------------------------------------------------------------------
-def test_sharded_flush_kill_and_resume_equals_batch(spark, sf_dir, tmp_path):
-    """Round-12 verdict item 1's 'done' bar, engine-native sink: the
-    sharded stream drives foreach_batch_sharded_flush through a crash
-    injected AFTER the second flush but BEFORE its checkpoint commit (the
-    at-least-once replay window), resumes, and the metrics parquet store
-    must equal the batch aggregate on every hour and all 15 metrics."""
-    from energy_data_stream_processing_spark.streaming.runner import (
-        hourly_metrics_stateful_sharded_stream,
-    )
+    from energy_data_stream_processing_spark.sources import sinks
+    from energy_data_stream_processing_spark.streaming import runner
 
     src = ascending_time_chunks(spark, sf_dir, 3)
     mx = append_watermark_sentinel(spark, sf_dir, src)
-    staging = str(tmp_path / "staging")
     store = str(tmp_path / "metrics")
     ckpt = str(tmp_path / "ckpt")
-    inner = foreach_batch_sharded_flush(
-        staging, metrics_path=store, prune_closed=True
-    )
+    real_upsert = sinks.foreach_batch_upsert
+    writes: list[int] = []
 
-    def start(crash_after: int | None):
-        calls: list[int] = []
+    def crashing_upsert(path):
+        inner = real_upsert(path)
 
-        def flush(batch_df, batch_id):
+        def fn(batch_df, batch_id):
             inner(batch_df, batch_id)
-            calls.append(batch_id)
-            if crash_after is not None and len(calls) >= crash_after:
-                raise RuntimeError("injected crash after flush, before commit")
+            writes.append(batch_id)
+            if len(writes) == 2:
+                raise RuntimeError("injected crash after write, before commit")
 
+        return fn
+
+    def run():
         ev = energy_events_stream(
             spark, sf_dir, source_dir=src, max_files_per_trigger=1
         )
-        return (
-            hourly_metrics_stateful_sharded_stream(ev, horizon="2 hours", shards=8)
-            .writeStream.foreachBatch(flush)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return runner.run_hourly_pipeline(spark, ev, store, ckpt)
 
-    q = start(crash_after=2)
-    with pytest.raises(Exception):
-        q.awaitTermination(300)
-    q2 = start(crash_after=None)
-    assert q2.awaitTermination(300), "resumed sharded flush did not finish"
+    ctx = (
+        _conf_override(
+            spark, "spark.sql.streaming.stateStore.providerClass", provider
+        )
+        if provider
+        else nullcontext()
+    )
+    with ctx:
+        monkeypatch.setattr(sinks, "foreach_batch_upsert", crashing_upsert)
+        with pytest.raises(Exception):
+            run()
+        assert len(writes) == 2
+        run()  # resumes: re-runs the uncommitted batch, then the rest
+    assert writes.count(writes[1]) == 2, writes  # the crashed batch replayed
 
     got = {
         int(r["hour"].timestamp()): r.asDict()
@@ -232,19 +112,8 @@ def test_sharded_flush_kill_and_resume_equals_batch(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Density auto-dispatch: bounded vs sharded (round-12 verdict item 2)
+# Per-hour density probe (reported by the benchmark's hourly workload)
 # ---------------------------------------------------------------------------
-def test_shard_count_rule():
-    from energy_data_stream_processing_spark.streaming.runner import (
-        shard_count_for,
-    )
-
-    assert shard_count_for(0) == 8          # floor: hours state partitions
-    assert shard_count_for(100_000) == 8
-    assert shard_count_for(150_000) == 16
-    assert shard_count_for(400_000) == 32
-    assert shard_count_for(10_000_000) == 64  # cap
-
 def test_peak_hour_density_probe(spark, sf_dir, tmp_path):
     """The probe reads per-hour distinct customers (max over hours) from a
     BATCH slice; folding every event into ONE hour must raise the peak to
@@ -268,84 +137,6 @@ def test_peak_hour_density_probe(spark, sf_dir, tmp_path):
     )
     hot_peak = estimate_peak_hour_distinct_customers(folded)
     assert hot_peak >= total * 0.9  # the whole corpus now shares one hour
-
-
-def test_dispatch_picks_bounded_at_normal_density(spark, sf_dir):
-    """variant='auto' with a normal-density probe frame must take the
-    BOUNDED twin (sharding at normal density is the measured 2.7x loss,
-    SCALE.md §4.4) and the result must equal the batch aggregate."""
-    from energy_data_stream_processing_spark.streaming import runner
-
-    src = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, src)
-    ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    out = runner.run_hourly_stream_dispatched(
-        spark, ev, probe_df=energy_events(spark, sf_dir)
-    ).where(F.col("hour") < mx + timedelta(days=30))
-
-    d = runner.LAST_HOURLY_DISPATCH
-    assert d is not None and d["variant"] == "bounded"
-    assert d["peak_hour_distinct"] < runner.HOT_HOUR_SHARD_THRESHOLD
-    assert d["state_partitions"] == runner.HOURS_STATE_PARTITIONS
-
-    got = {int(r["hour"].timestamp()): r.asDict() for r in out.collect()}
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    assert set(got) == set(want) and len(want) > 0
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c)
-
-
-def test_dispatch_picks_sharded_at_hot_density(spark, sf_dir):
-    """variant='auto' with a PLANTED hot-hour probe (150k distinct
-    customers in one event-time hour — the batch slice a deployment would
-    probe) must take the SHARDED variant with the rule's shard count and
-    the two-stage session merge, and still equal the batch aggregate —
-    the dispatch changes state layout only."""
-    from energy_data_stream_processing_spark.streaming import runner
-
-    hot_probe = spark.range(150_000).select(
-        F.lit("2024-07-01 12:00:00").cast("timestamp").alias("event_time"),
-        F.col("id").cast("string").alias("customer_id"),
-    )
-
-    src = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, src)
-    ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    out = runner.run_hourly_stream_dispatched(spark, ev, probe_df=hot_probe).where(
-        F.col("hour") < mx + timedelta(days=30)
-    )
-
-    d = runner.LAST_HOURLY_DISPATCH
-    assert d is not None and d["variant"] == "sharded"
-    assert 0.95 * 150_000 <= d["peak_hour_distinct"] <= 1.05 * 150_000  # HLL
-    assert d["shards"] == runner.shard_count_for(d["peak_hour_distinct"]) == 16
-    assert d["two_stage_sessions"] is True
-    assert d["state_partitions"] == 16
-
-    got = {int(r["hour"].timestamp()): r.asDict() for r in out.collect()}
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    assert set(got) == set(want) and len(want) > 0
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c)
-
-
-def test_dispatch_explicit_optout_and_probe_contract(spark):
-    from energy_data_stream_processing_spark.streaming import runner
-
-    with pytest.raises(ValueError, match="probe_df"):
-        runner.run_hourly_stream_dispatched(spark, spark.range(1))
-    with pytest.raises(ValueError, match="unknown variant"):
-        runner.run_hourly_stream_dispatched(
-            spark, spark.range(1), variant="native"
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -413,120 +204,22 @@ def test_bench_baseline_reader_is_sf_scoped():
         assert all(v > 0 for v in ratios.values())
 
 
-def test_two_stage_merge_plans_distributed_distinct(spark):
-    """Plan gate for the memory claim: the default merge materializes each
-    hour's full session set in one collect_list aggregation buffer; the
-    two-stage form must plan WITHOUT any collect_list — its session count
-    goes through explode + count_distinct, which Spark executes as
-    distributed two-phase partial dedup (partial_count(distinct ...))."""
-    partials = spark.createDataFrame(
-        [_partial(1_700_000_000_000, 0, 1, [1, 2], 1)],
-        schema=SHARD_PARTIAL_SCHEMA,
-    )
-    default_plan = (
-        merge_sharded_hourly_partials(partials)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    two_stage_plan = (
-        merge_sharded_hourly_partials(partials, two_stage_sessions=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "collect_list" in default_plan
-    assert "collect_list" not in two_stage_plan
-    assert "count(distinct" in two_stage_plan.lower()
-
-
 # ---------------------------------------------------------------------------
-# Composed turnkey pipeline: dispatch -> stream -> durable store, one call
+# Durable pipeline: scheduled catch-up invocations on one checkpoint
 # ---------------------------------------------------------------------------
-def test_pipeline_dispatched_bounded_arm_lands_batch_equal_store(
+def test_hourly_pipeline_catchup_invocations_land_exact_hours(
     spark, sf_dir, tmp_path
 ):
-    """run_hourly_pipeline_dispatched at normal density: picks bounded,
-    streams under a real checkpoint into the parquet hour store, and the
-    store equals the batch aggregate on every hour and metric."""
-    from energy_data_stream_processing_spark.streaming import runner
-
-    src = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, src)
-    ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    store = str(tmp_path / "metrics")
-    decision = runner.run_hourly_pipeline_dispatched(
-        spark, ev, metrics_path=store, checkpoint=str(tmp_path / "ckpt"),
-        probe_df=energy_events(spark, sf_dir),
-    )
-    assert decision["variant"] == "bounded"
-    assert not os.path.exists(f"{store}_staging")  # sharded staging untouched
-
-    got = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in read_hourly_metrics_parquet(spark, store)
-        .where(F.col("hour") < mx + timedelta(days=30))
-        .collect()
-    }
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    assert set(got) == set(want) and len(want) > 0
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c)
-
-
-def test_pipeline_dispatched_sharded_arm_lands_batch_equal_store(
-    spark, sf_dir, tmp_path
-):
-    """Same one-call pipeline with a declared hot peak: picks sharded,
-    flushes through the staged re-merge, and the store STILL equals the
-    batch aggregate — the turnkey path is layout-transparent."""
-    from energy_data_stream_processing_spark.streaming import runner
-
-    src = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, src)
-    ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    store = str(tmp_path / "metrics")
-    decision = runner.run_hourly_pipeline_dispatched(
-        spark, ev, metrics_path=store, checkpoint=str(tmp_path / "ckpt"),
-        peak_hour_distinct=150_000, shards=8,
-    )
-    assert decision["variant"] == "sharded"
-    assert decision["two_stage_sessions"] is True
-    assert os.path.exists(f"{store}_staging")  # partials staged by batch id
-
-    got = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in read_hourly_metrics_parquet(spark, store)
-        .where(F.col("hour") < mx + timedelta(days=30))
-        .collect()
-    }
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    assert set(got) == set(want) and len(want) > 0
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c)
-
-
-def test_pipeline_dispatched_catchup_invocations_pin_decision(
-    spark, sf_dir, tmp_path
-):
-    """The scheduled-catch-up pattern and its measured completeness
-    contract (pipeline docstring): invoke the one-call pipeline, add more
-    source files with ASCENDING mtimes (ordered arrival — the bounded
-    lateness contract drops out-of-order-beyond-horizon files by design),
-    invoke AGAIN with the same checkpoint. The second run must (a) reuse
-    the PINNED decision without any probe (dispatch.json in the
-    checkpoint — a variant flip on live state would fail with an opaque
-    state-schema error), (b) land AT LEAST every hour that fell behind
-    the watermark the run built before its last data batch (completeness
-    lags the head by horizon + up to one batch; timeouts don't fire in a
-    restart's first batch and the trailing no-data batch is
-    scheduling-dependent under availableNow), and (c) everything landed
-    must be batch-exact — partial values never reach the store, an hour
-    flushes once, final, at eviction."""
+    """The scheduled-catch-up pattern and its completeness contract
+    (``run_hourly_pipeline`` docstring): invoke the pipeline, add more
+    source files with ASCENDING mtimes (ordered arrival — the lateness
+    contract drops rows of already-emitted hours by design), invoke AGAIN
+    with the same checkpoint. The second run must (a) land AT LEAST every
+    hour that fell behind the watermark built before its last data batch,
+    and (b) everything landed must be batch-exact — partial values never
+    reach the store, an hour lands once, final. The second invocation goes
+    through the deprecated ``run_hourly_pipeline_dispatched`` alias the
+    benchmark still calls."""
     import shutil
 
     from energy_data_stream_processing_spark.streaming import runner
@@ -550,21 +243,16 @@ def test_pipeline_dispatched_catchup_invocations_pin_decision(
     arrive("chunk_0.parquet", "chunk_1.parquet")
     store, ckpt = str(tmp_path / "metrics"), str(tmp_path / "ckpt")
     ev1 = energy_events_stream(spark, sf_dir, source_dir=live, max_files_per_trigger=1)
-    d1 = runner.run_hourly_pipeline_dispatched(
-        spark, ev1, metrics_path=store, checkpoint=ckpt,
-        probe_df=energy_events(spark, sf_dir),
-    )
-    assert d1["variant"] == "bounded"
+    runner.run_hourly_pipeline(spark, ev1, metrics_path=store, checkpoint=ckpt)
     partial_hours = read_hourly_metrics_parquet(spark, store).count()
 
-    # catch-up invocation: two more files, SAME checkpoint, NO probe —
-    # the pinned decision must load instead of raising the probe error
+    # catch-up invocation: two more files, SAME checkpoint
     arrive("chunk_2.parquet", "chunk_z_sentinel.parquet")
     ev2 = energy_events_stream(spark, sf_dir, source_dir=live, max_files_per_trigger=1)
     d2 = runner.run_hourly_pipeline_dispatched(
-        spark, ev2, metrics_path=store, checkpoint=ckpt
+        spark, ev2, metrics_path=store, checkpoint=ckpt, peak_hour_distinct=10**6
     )
-    assert d2 == d1  # pinned, not re-decided
+    assert d2 == {"variant": "native"}
 
     got = {
         int(r["hour"].timestamp()): r.asDict()
@@ -602,289 +290,8 @@ def test_pipeline_dispatched_catchup_invocations_pin_decision(
             assert float(row[c]) == float(want[h][c]), (h, c)
 
 
-def test_sharded_flush_staging_read_partition_prunes(spark, tmp_path):
-    """100 TB gate for the staging re-read: staging is partitioned by
-    (_batch_id, hour_epoch_ms), so the touched-hours filter must reach the
-    scan as a PARTITION filter — per-batch flush cost is O(touched hours'
-    partials), never a rescan of everything staged."""
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "metrics")
-    flush = foreach_batch_sharded_flush(
-        staging, metrics_path=store, prune_closed=True
-    )
-    h1 = int(datetime(2024, 5, 1, 7, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    h2 = h1 + 3_600_000
-    flush(
-        spark.createDataFrame(
-            [_partial(h1, 0, 1, [1], 1), _partial(h2, 0, 1, [2], 1)],
-            schema=SHARD_PARTIAL_SCHEMA,
-        ),
-        0,
-    )
-    plan = (
-        spark.read.parquet(staging)
-        .where(F.col("hour_epoch_ms").isin([h1]))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    m = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert m and "hour_epoch_ms" in m[0], plan[:1500]
-
-
 # ---------------------------------------------------------------------------
-# Staging retention: prune_sharded_staging + the measured watermark rule
-# ---------------------------------------------------------------------------
-def test_prune_sharded_staging_rule(spark, tmp_path):
-    """Unit rule: hours STRICTLY behind the threshold are deleted across
-    every batch directory, the boundary hour (hour_end == threshold —
-    Spark fires event-time timeouts strictly past the watermark, so it has
-    NOT fired) and open hours keep every partial, emptied _batch_id dirs
-    are removed, and the surviving store still reads and re-merges exactly
-    what it did before the prune."""
-    from energy_data_stream_processing_spark.sources.sinks import (
-        prune_sharded_staging,
-    )
-
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "metrics")
-    # prune_closed off: this test drives prune_sharded_staging EXPLICITLY
-    # over synthetic batches (whose touched sets don't follow real
-    # eviction order, so the in-batch rule would fire early)
-    flush = foreach_batch_sharded_flush(
-        staging, metrics_path=store, prune_closed=False
-    )
-    h1 = int(datetime(2024, 5, 1, 7, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    h2, h3 = h1 + 3_600_000, h1 + 7_200_000
-    _df = lambda rows: spark.createDataFrame(rows, schema=SHARD_PARTIAL_SCHEMA)
-    flush(_df([_partial(h1, 0, 2, [1, 2], 3), _partial(h2, 0, 1, [5], 1)]), 0)
-    flush(_df([_partial(h1, 1, 1, [9], 2), _partial(h3, 0, 1, [7], 4)]), 1)
-    flush(_df([_partial(h1, 2, 1, [4], 1)]), 2)  # a batch touching ONLY h1
-
-    def merged_snapshot():
-        live = spark.read.parquet(staging).where(
-            F.col("hour_epoch_ms").isin([h2, h3])
-        )
-        return sorted(
-            (int(r["hour"].timestamp()), *(float(r[c]) for c in METRIC_COLUMNS))
-            for r in merge_sharded_hourly_partials(live).collect()
-        )
-
-    before = merged_snapshot()
-
-    # threshold = h2's hour END: h1 is strictly closed, h2 is the boundary
-    removed = prune_sharded_staging(staging, h2 + 3_600_000)
-    assert sorted(removed) == [
-        "_batch_id=0/hour_epoch_ms=%d" % h1,
-        "_batch_id=1/hour_epoch_ms=%d" % h1,
-        "_batch_id=2/hour_epoch_ms=%d" % h1,
-    ]
-    assert not os.path.exists(f"{staging}/_batch_id=2")  # emptied dir gone
-    left = spark.read.parquet(staging)
-    assert {r["hour_epoch_ms"] for r in left.select("hour_epoch_ms").collect()} == {
-        h2,
-        h3,
-    }
-    assert merged_snapshot() == before  # retained hours re-merge unchanged
-
-    # no-ops: zero threshold, missing dir, nothing newly closed
-    assert prune_sharded_staging(staging, 0) == []
-    assert prune_sharded_staging(str(tmp_path / "nope"), 10**15) == []
-    assert prune_sharded_staging(staging, h2 + 3_600_000) == []
-
-
-def test_staging_prune_watermark_ms_parsing():
-    from energy_data_stream_processing_spark.sources.sinks import (
-        staging_prune_watermark_ms,
-    )
-
-    assert staging_prune_watermark_ms(None) == 0
-    assert staging_prune_watermark_ms({}) == 0
-    assert staging_prune_watermark_ms({"eventTime": {}}) == 0
-    p = {"eventTime": {"watermark": "2024-05-01T09:30:00.250Z"}}
-    want = int(
-        datetime(2024, 5, 1, 9, 30, 0, 250000, tzinfo=timezone.utc).timestamp()
-        * 1000
-    )
-    assert staging_prune_watermark_ms(p) == want
-    p2 = {"eventTime": {"watermark": "2024-05-01T09:30:00Z"}}
-    assert staging_prune_watermark_ms(p2) == want - 250
-    # epoch start (no watermark yet) maps to 0 -> prune no-op
-    assert (
-        staging_prune_watermark_ms(
-            {"eventTime": {"watermark": "1970-01-01T00:00:00.000Z"}}
-        )
-        == 0
-    )
-
-
-def test_staging_prune_progress_invariant_measured(spark, sf_dir, tmp_path):
-    """The prune rule's load-bearing assumption, MEASURED on a real
-    multi-batch sharded run: a committed batch's reported
-    ``eventTime.watermark`` is the watermark that batch EXECUTED with, so
-    every hour strictly behind it has already evicted ALL its shards —
-    no staged partial for such an hour may carry a LATER batch id. If
-    Spark instead reported the post-batch (advanced) watermark, the
-    straddling evictions that fire one batch later would violate this on
-    exactly the chunked replay below, and the prune rule would be unsafe."""
-    from energy_data_stream_processing_spark.sources.sinks import (
-        staging_prune_watermark_ms,
-    )
-    from energy_data_stream_processing_spark.streaming.runner import (
-        hourly_metrics_stateful_sharded_stream,
-    )
-
-    src = ascending_time_chunks(spark, sf_dir, 4)
-    append_watermark_sentinel(spark, sf_dir, src)
-    ev = energy_events_stream(
-        spark, sf_dir, source_dir=src, max_files_per_trigger=1
-    )
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "metrics")
-    q = (
-        hourly_metrics_stateful_sharded_stream(ev, shards=4)
-        .writeStream.foreachBatch(
-            # prune_closed off: the invariant must see the FULL staged
-            # history — every (batch, hour) pair ever written
-            foreach_batch_sharded_flush(
-                staging, metrics_path=store, prune_closed=False
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progresses = [
-        (p["batchId"], staging_prune_watermark_ms(p)) for p in q.recentProgress
-    ]
-    staged = (
-        spark.read.parquet(staging)
-        .select("_batch_id", "hour_epoch_ms")
-        .distinct()
-        .collect()
-    )
-    assert len(progresses) >= 4 and staged
-    violations = [
-        (int(r["_batch_id"]), r["hour_epoch_ms"], pb, wm)
-        for (pb, wm) in progresses
-        for r in staged
-        if r["hour_epoch_ms"] + 3_600_000 < wm and int(r["_batch_id"]) > pb
-    ]
-    assert violations == [], violations[:5]
-    # the rule really bites on this corpus: the final executed watermark
-    # (sentinel-advanced) strictly closes staged hours
-    final_wm = max(wm for _, wm in progresses)
-    assert any(r["hour_epoch_ms"] + 3_600_000 < final_wm for r in staged)
-
-
-def test_pipeline_sharded_prune_keeps_cross_invocation_merge_exact(
-    spark, sf_dir, tmp_path
-):
-    """Auto-prune (the pipeline default) across catch-up invocations must
-    never break the straddle re-merge: invocation 1 lands its hours and
-    prunes the strictly-closed ones; invocation 2 brings newer files with
-    the same checkpoint, fires any deferred evictions (whose re-merge
-    needs the RETAINED partials), and the durable store still equals the
-    batch aggregate on every hour and metric. Afterwards no staged hour
-    behind the final executed watermark survives."""
-    import shutil
-
-    from energy_data_stream_processing_spark.streaming import runner
-
-    full = ascending_time_chunks(spark, sf_dir, 3)
-    mx = append_watermark_sentinel(spark, sf_dir, full)
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    t0 = 1_000_000_000
-    for i, f in enumerate(
-        (
-            "chunk_0.parquet",
-            "chunk_1.parquet",
-            "chunk_2.parquet",
-            "chunk_z_sentinel.parquet",
-        )
-    ):
-        shutil.copy(f"{full}/{f}", f"{tmp_path}/{f}")
-        os.utime(f"{tmp_path}/{f}", (t0 + i, t0 + i))
-
-    def arrive(*names):
-        for f in names:
-            shutil.move(f"{tmp_path}/{f}", f"{live}/{f}")
-
-    arrive("chunk_0.parquet", "chunk_1.parquet")
-    store, ckpt = str(tmp_path / "metrics"), str(tmp_path / "ckpt")
-    staging = f"{store}_staging"
-    ev1 = energy_events_stream(
-        spark, sf_dir, source_dir=live, max_files_per_trigger=1
-    )
-    d1 = runner.run_hourly_pipeline_dispatched(
-        spark, ev1, metrics_path=store, checkpoint=ckpt,
-        peak_hour_distinct=150_000, shards=8,
-    )
-    assert d1["variant"] == "sharded"
-    pruned1 = list(runner.LAST_STAGING_PRUNED or [])
-
-    arrive("chunk_2.parquet", "chunk_z_sentinel.parquet")
-    ev2 = energy_events_stream(
-        spark, sf_dir, source_dir=live, max_files_per_trigger=1
-    )
-    d2 = runner.run_hourly_pipeline_dispatched(
-        spark, ev2, metrics_path=store, checkpoint=ckpt
-    )
-    assert d2 == d1  # pinned decision, prune changes nothing about it
-    pruned2 = list(runner.LAST_STAGING_PRUNED or [])
-    assert pruned1 or pruned2  # retention actually fired somewhere
-
-    got = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in read_hourly_metrics_parquet(spark, store)
-        .where(F.col("hour") < mx + timedelta(days=30))
-        .collect()
-    }
-    want = {
-        int(r["hour"].timestamp()): r.asDict()
-        for r in hourly_business_metrics(energy_events(spark, sf_dir)).collect()
-    }
-    # completeness floor (same contract as the bounded catch-up test):
-    # every hour behind the watermark built from chunk_2 must have landed
-    from energy_data_stream_processing_spark.sources.adapter import (
-        normalize_event_ts,
-    )
-
-    c2_max = (
-        normalize_event_ts(spark.read.parquet(f"{live}/chunk_2.parquet"))
-        .select(F.max("ts"))
-        .first()[0]
-    )
-    wm_floor = int(c2_max.timestamp()) - 2 * 3600
-    required = {h for h in want if h + 3600 <= wm_floor}
-    assert required and required <= set(got) <= set(want)
-    for h, row in got.items():
-        for c in METRIC_COLUMNS:
-            assert float(row[c]) == float(want[h][c]), (h, c)
-
-    # nothing strictly behind the final executed watermark survives staging
-    from energy_data_stream_processing_spark.sources.sinks import (
-        staging_prune_watermark_ms,
-    )
-
-    final_wm = staging_prune_watermark_ms(runner.LAST_STREAM_PROGRESS)
-    assert final_wm > 0
-    survivors = [
-        (b, h)
-        for b in os.listdir(staging)
-        if b.startswith("_batch_id=")
-        for h in os.listdir(os.path.join(staging, b))
-        if h.startswith("hour_epoch_ms=")
-        and int(h.split("=", 1)[1]) + 3_600_000 < final_wm
-    ]
-    assert survivors == []
-
-
-# ---------------------------------------------------------------------------
-# Review fixes: legacy hour_key guard/migration, pin conflicts, bench math
+# Review fixes: legacy hour_key guard/migration, bench math
 # ---------------------------------------------------------------------------
 def test_legacy_hour_key_guard_and_migration(spark, tmp_path):
     """A store written under the pre-injective label-only hour_key must be
@@ -965,90 +372,6 @@ def test_lake_merge_refuses_legacy_hour_keys(spark, tmp_path):
     assert LakeTable(path2).read(spark).count() == 1
 
 
-def test_dispatch_pin_conflicts_and_atomic_write(spark, tmp_path):
-    """Explicit state-bound arguments must not silently lose to the pinned
-    decision (a variant/shard flip on live state would fail later with an
-    opaque state-schema error — refuse up front with the real story), a
-    truncated pin must fail with a clear message instead of a bare
-    JSONDecodeError, and the merge-side two_stage_sessions knob (value-
-    identical forms, not state-bound) is honored and re-pinned."""
-    import json
-
-    from energy_data_stream_processing_spark.streaming import runner
-
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    pin = {
-        "variant": "sharded", "peak_hour_distinct": 150_000,
-        "shards": 16, "state_partitions": 16, "two_stage_sessions": True,
-    }
-    with open(f"{ckpt}/dispatch.json", "w") as f:
-        json.dump(pin, f)
-
-    with pytest.raises(ValueError, match="pinned"):
-        runner.run_hourly_pipeline_dispatched(
-            spark, None, metrics_path=str(tmp_path / "m"),
-            checkpoint=ckpt, variant="bounded",
-        )
-    with pytest.raises(ValueError, match="pinned"):
-        runner.run_hourly_pipeline_dispatched(
-            spark, None, metrics_path=str(tmp_path / "m"),
-            checkpoint=ckpt, shards=32,
-        )
-
-    # repeating the ORIGINAL arguments against a BOUNDED pin must not
-    # conflict: shards is meaningless on the bounded arm (exactly as it
-    # was on the first, deciding run) — the scheduled catch-up pattern
-    # re-sends the same call every time
-    ckpt_b = str(tmp_path / "ckpt_bounded")
-    os.makedirs(ckpt_b)
-    with open(f"{ckpt_b}/dispatch.json", "w") as f:
-        json.dump(
-            {"variant": "bounded", "peak_hour_distinct": 100, "shards": None,
-             "state_partitions": 8, "two_stage_sessions": False}, f,
-        )
-    with pytest.raises(AttributeError):  # reaches streaming: no conflict
-        runner.run_hourly_pipeline_dispatched(
-            spark, None, metrics_path=str(tmp_path / "m"),
-            checkpoint=ckpt_b, peak_hour_distinct=100, shards=16,
-        )
-
-    # valid-JSON wrong-shape pins get the curated message, not a bare
-    # AttributeError/KeyError
-    for bad_shape in ("[]", "{}", '"sharded"'):
-        with open(f"{ckpt_b}/dispatch.json", "w") as f:
-            f.write(bad_shape)
-        with pytest.raises(ValueError, match="corrupt dispatch pin"):
-            runner.run_hourly_pipeline_dispatched(
-                spark, None, metrics_path=str(tmp_path / "m"),
-                checkpoint=ckpt_b,
-            )
-
-    # two_stage_sessions is merge-side only: the override re-pins, and the
-    # streaming run proceeds (it fails below only because events=None —
-    # the pin on disk must already carry the new value by then)
-    with pytest.raises(AttributeError):
-        runner.run_hourly_pipeline_dispatched(
-            spark, None, metrics_path=str(tmp_path / "m"),
-            checkpoint=ckpt, two_stage_sessions=False,
-        )
-    with open(f"{ckpt}/dispatch.json") as f:
-        assert json.load(f)["two_stage_sessions"] is False
-
-    with open(f"{ckpt}/dispatch.json", "w") as f:
-        f.write('{"variant": "shar')  # crash-truncated pin
-    with pytest.raises(ValueError, match="corrupt dispatch pin"):
-        runner.run_hourly_pipeline_dispatched(
-            spark, None, metrics_path=str(tmp_path / "m"), checkpoint=ckpt
-        )
-
-    # atomic writer: no .tmp residue, loadable json
-    runner._write_dispatch_pin(f"{ckpt}/dispatch.json", pin)
-    assert not os.path.exists(f"{ckpt}/dispatch.json.tmp")
-    with open(f"{ckpt}/dispatch.json") as f:
-        assert json.load(f) == pin
-
-
 def test_bench_gate_median_and_baseline_robustness(tmp_path, monkeypatch):
     """The renormalization divisor is a true median (even-count sets
     average the two middles — the upper-middle pick skewed every norm and
@@ -1077,69 +400,6 @@ def test_bench_gate_median_and_baseline_robustness(tmp_path, monkeypatch):
         else:
             with open(p, "w") as f:
                 f.write(orig)
-
-
-def test_in_batch_prune_bounds_continuous_staging(spark, tmp_path):
-    """The continuous-stream retention path (prune_closed=True, the
-    default): each flush prunes staged hours STRICTLY older than the
-    batch's newest touched hour — every touched hour proves the batch
-    executed with watermark past its end, so an older untouched hour
-    evicted fully in an earlier committed batch — while KEEPING the
-    batch's own touched hours (a crash-replay of the uncommitted batch
-    still re-merges them). Straddling partials from pruned-around batches
-    must still produce exact full-hour rows, and replaying the pruning
-    batch is idempotent."""
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "metrics")
-    flush = foreach_batch_sharded_flush(
-        staging, metrics_path=store, prune_closed=True
-    )
-    h1 = int(datetime(2024, 5, 1, 7, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    h2, h3, h4 = (h1 + k * 3_600_000 for k in (1, 2, 3))
-    _df = lambda rows: spark.createDataFrame(rows, schema=SHARD_PARTIAL_SCHEMA)
-
-    def staged_hours():
-        out = set()
-        for b in os.listdir(staging):
-            if b.startswith("_batch_id="):
-                for h in os.listdir(os.path.join(staging, b)):
-                    if h.startswith("hour_epoch_ms="):
-                        out.add(int(h.split("=", 1)[1]))
-        return out
-
-    # batch 0: h1 fully evicts; h2's shard 0 evicts early (straddle start)
-    flush(_df([_partial(h1, 0, 1, [1], 5), _partial(h2, 0, 1, [2], 3)]), 0)
-    assert staged_hours() == {h1, h2}  # nothing older than max touched
-
-    # batch 1: h2's last shard + h3 -> h1 (older, untouched) pruned;
-    # h2 kept although older than h3 (touched THIS batch)
-    flush(_df([_partial(h2, 1, 2, [7, 8], 4), _partial(h3, 0, 1, [9], 1)]), 1)
-    assert staged_hours() == {h2, h3}
-    # the straddle re-merge saw batch 0's h2 partial (pre-prune-keep)
-    rows = {
-        int(r["hour"].timestamp()) * 1000: r
-        for r in read_hourly_metrics_parquet(spark, store).collect()
-    }
-    assert rows[h2]["total_logins"] == 7 and rows[h2]["active_customers"] == 3
-    assert rows[h1]["total_logins"] == 5  # pruned hour's flushed row persists
-
-    # replay of the pruning batch: idempotent, store and staging unchanged
-    flush(_df([_partial(h2, 1, 2, [7, 8], 4), _partial(h3, 0, 1, [9], 1)]), 1)
-    assert staged_hours() == {h2, h3}
-    rows2 = {
-        int(r["hour"].timestamp()) * 1000: r
-        for r in read_hourly_metrics_parquet(spark, store).collect()
-    }
-    assert rows2[h2]["total_logins"] == 7 and rows2[h1]["total_logins"] == 5
-
-    # batch 2: h4 alone -> h2 and h3 both age out; staging tracks the head
-    flush(_df([_partial(h4, 0, 1, [4], 2)]), 2)
-    assert staged_hours() == {h4}
-    final = {
-        int(r["hour"].timestamp()) * 1000: r["total_logins"]
-        for r in read_hourly_metrics_parquet(spark, store).collect()
-    }
-    assert final == {h1: 5, h2: 7, h3: 1, h4: 2}
 
 
 def test_migration_refuses_crashed_swap_and_duplicated_hours(spark, tmp_path):
@@ -1206,35 +466,3 @@ def test_bench_baseline_reader_drops_non_numeric_ratios(tmp_path):
             with open(p, "w") as f:
                 f.write(orig)
 
-
-def test_dispatch_pin_requires_full_decision_shape(spark, tmp_path):
-    """A hand-restored pin holding only {'variant': 'sharded'} must get the
-    curated corrupt-pin message up front, not a bare KeyError when the
-    sharded arm later reads shards/state_partitions/two_stage_sessions."""
-    import json
-
-    from energy_data_stream_processing_spark.streaming import runner
-
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    for partial_pin in (
-        {"variant": "sharded"},
-        {"variant": "sharded", "shards": 8},
-        {"variant": "bounded"},
-    ):
-        with open(f"{ckpt}/dispatch.json", "w") as f:
-            json.dump(partial_pin, f)
-        with pytest.raises(ValueError, match="corrupt dispatch pin"):
-            runner.run_hourly_pipeline_dispatched(
-                spark, None, metrics_path=str(tmp_path / "m"), checkpoint=ckpt
-            )
-    # a COMPLETE bounded pin still loads (fails later only on events=None)
-    with open(f"{ckpt}/dispatch.json", "w") as f:
-        json.dump(
-            {"variant": "bounded", "peak_hour_distinct": 1, "shards": None,
-             "state_partitions": 8, "two_stage_sessions": False}, f,
-        )
-    with pytest.raises(AttributeError):
-        runner.run_hourly_pipeline_dispatched(
-            spark, None, metrics_path=str(tmp_path / "m"), checkpoint=ckpt
-        )

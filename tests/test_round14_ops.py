@@ -167,7 +167,7 @@ def test_ann_audit_catches_recall_collapse(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Round-14 advisory hardening: store-guard locality, migration swap
-# diagnosis, prune_closed opt-in, lake legacy-scan marker
+# diagnosis, lake legacy-scan marker
 # --------------------------------------------------------------------------
 def test_store_guards_refuse_scheme_qualified_paths(spark):
     """The legacy-key / crashed-migration guards inspect stores with local
@@ -217,46 +217,6 @@ def test_migration_refusal_distinguishes_completed_from_mid_swap(spark, tmp_path
     os.makedirs(store)
     with pytest.raises(RuntimeError, match="stale pre-migration copy"):
         migrate_hour_store_keys(spark, store)
-
-
-def test_sharded_flush_default_keeps_staged_partials(spark, tmp_path):
-    """prune_closed now defaults to False on the standalone seam: a
-    harness replaying synthetic partials out of eviction order must not
-    lose mid-hour staging silently. The turnkey pipeline opts in
-    explicitly (runner passes prune_closed=True)."""
-    import inspect
-    import os
-    from datetime import datetime, timezone
-
-    from energy_data_stream_processing_spark.sources.sinks import (
-        foreach_batch_sharded_flush,
-    )
-    from tests.test_round13_ops import SHARD_PARTIAL_SCHEMA, _partial
-
-    sig = inspect.signature(foreach_batch_sharded_flush)
-    assert sig.parameters["prune_closed"].default is False
-
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "metrics")
-    flush = foreach_batch_sharded_flush(staging, metrics_path=store)
-    h1 = int(datetime(2024, 5, 1, 7, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    h2 = h1 + 3_600_000
-    flush(
-        spark.createDataFrame([_partial(h1, 0, 1, [1], 1)], schema=SHARD_PARTIAL_SCHEMA),
-        0,
-    )
-    flush(
-        spark.createDataFrame([_partial(h2, 0, 1, [2], 1)], schema=SHARD_PARTIAL_SCHEMA),
-        1,
-    )
-    staged = {
-        int(d.split("=")[1])
-        for b in os.listdir(staging)
-        if b.startswith("_batch_id=")
-        for d in os.listdir(os.path.join(staging, b))
-        if d.startswith("hour_epoch_ms=")
-    }
-    assert staged == {h1, h2}, "default must keep the closed hour staged"
 
 
 def test_lake_merge_persists_legacy_scan_marker(spark, tmp_path):
@@ -586,52 +546,63 @@ def test_sessionize_stream_is_session_tz_invariant(spark, sf_dir):
     assert len(base) > 0
 
 
-def test_peak_hour_usage_not_floored_for_negative_energy(spark):
+def test_peak_hour_usage_not_floored_for_negative_energy(spark, tmp_path):
     """An hour whose energy events are all negative (corrections/exports)
     must report the true negative max, matching the batch oracle's
-    coalesce(max(energy), 0) which floors ONLY when no energy rows exist
-    — the 0-seeded state max silently clamped it before round 14."""
-    from datetime import datetime, timezone
+    coalesce(max(energy), 0) which floors ONLY when no energy rows exist.
+    Pinned through the exact hourly stream over two micro-batches, so the
+    max also merges across state updates; an hour with no energy rows
+    still renders 0.0."""
+    import os
+    from datetime import datetime
+    from decimal import Decimal
 
-    from tests.test_round13_ops import SHARD_PARTIAL_SCHEMA, _partial
-    from energy_data_stream_processing_spark.streaming.runner import (
-        PEAK_NONE_MILLI,
-        _stateful_update_fn,
-        merge_sharded_hourly_partials,
+    from energy_data_stream_processing_spark.operators.hourly import (
+        hourly_business_metrics,
     )
-    from tests.test_round10_ops import _FakeGroupState, _chunk
+    from energy_data_stream_processing_spark.streaming.runner import (
+        run_hourly_stream,
+    )
 
-    # state-fn level: one negative energy event
-    fn = _stateful_update_fn()
-    state = _FakeGroupState(None)
-    pdf = _chunk([("energy_consumed", None, -1.5, 1, None, None)])
-    out = list(fn((datetime(2024, 5, 1, 7), 1714546800000), iter([pdf]), state))
-    assert out[0].iloc[0]["peak_hour_usage"] == -1.5
-
-    # no-energy hour still renders 0.0 (the oracle's coalesce arm)
-    state2 = _FakeGroupState(None)
-    pdf2 = _chunk([("user_login", None, None, 2, 5, None)])
-    out2 = list(fn((datetime(2024, 5, 1, 8), 1714550400000), iter([pdf2]), state2))
-    assert out2[0].iloc[0]["peak_hour_usage"] == 0.0
-
-    # merge level: sentinel partial + negative-peak partial
-    h = int(datetime(2024, 5, 1, 7, 0, tzinfo=timezone.utc).timestamp() * 1000)
-    rows = [
-        list(_partial(h, 0, 1, [1], 1)),
-        list(_partial(h, 1, 1, [2], 1)),
+    schema = (
+        "event_time timestamp, event_type string, "
+        "payment_amount decimal(10,2), energy_consumed decimal(10,3), "
+        "customer_id string, session_id int, tariff_type string"
+    )
+    batches = [
+        [
+            (datetime(2024, 5, 1, 7, 10), "energy_consumed", None,
+             Decimal("-2.500"), "C1", None, None),
+            (datetime(2024, 5, 1, 8, 5), "user_login", None, None, "C2", 5, None),
+        ],
+        [
+            (datetime(2024, 5, 1, 7, 40), "energy_consumed", None,
+             Decimal("-1.500"), "C1", None, None),
+        ],
     ]
-    rows[0][11] = PEAK_NONE_MILLI  # shard with no energy rows
-    rows[1][11] = -1500            # shard whose max energy is -1.5
-    merged = merge_sharded_hourly_partials(
-        spark.createDataFrame([tuple(r) for r in rows], schema=SHARD_PARTIAL_SCHEMA)
-    ).collect()[0]
-    assert merged["peak_hour_usage"] == -1.5
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        stage = str(tmp_path / f"stage{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
+        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+        os.rename(f"{stage}/{part}", str(src / f"b{i}.parquet"))
 
-    rows[1][11] = PEAK_NONE_MILLI  # both shards energy-free -> oracle's 0.0
-    merged2 = merge_sharded_hourly_partials(
-        spark.createDataFrame([tuple(r) for r in rows], schema=SHARD_PARTIAL_SCHEMA)
-    ).collect()[0]
-    assert merged2["peak_hour_usage"] == 0.0
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    got = {r["hour"]: r for r in run_hourly_stream(spark, stream, horizon=None).collect()}
+    want = {
+        r["hour"]: r
+        for r in hourly_business_metrics(
+            spark.createDataFrame(batches[0] + batches[1], schema)
+        ).collect()
+    }
+    assert got == want
+    assert got[datetime(2024, 5, 1, 7)]["peak_hour_usage"] == -1.5
+    assert got[datetime(2024, 5, 1, 8)]["peak_hour_usage"] == 0.0
 
 
 def test_running_totals_skip_null_values(spark):

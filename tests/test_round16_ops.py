@@ -10,11 +10,6 @@
 3. ``laketable.migrate_lake_hour_keys`` — the lake twin of
    ``migrate_hour_store_keys``: one committed version rewriting every
    legacy/mismatched key canonically from ``hour``.
-4. The hot-hour dispatch is batch-aware: sharding is taken when the
-   measured rows-per-trigger x cardinality product clears the crossover,
-   not on cardinality alone (SCALE.md §4.4 — the arms TIE at 68k ids
-   with 12.5k-row batches and sharding wins 1.47x only at 125k-row
-   batches).
 """
 
 from __future__ import annotations
@@ -265,93 +260,6 @@ def test_refusal_messages_point_at_lake_migration(spark, tmp_path):
     fn = foreach_batch_lake_merge(path, key_col="hour_key")
     with pytest.raises(ValueError, match="migrate_lake_hour_keys"):
         fn(_metrics_df(spark).drop("hour_key"), 0)
-
-
-# --------------------------------------------------------------------------
-# 4. batch-aware hot-hour dispatch (r15 verdict item 4)
-# --------------------------------------------------------------------------
-def test_dispatch_batch_aware_product_rule():
-    """The rule must reproduce the bench's measured poles (SCALE.md §4.4):
-    at ~68k ids x 12.5k rows/trigger the arms TIE (0.98) — bounded is the
-    cheaper-to-operate pick; at 120k ids x 125k rows/trigger sharding
-    wins 1.47x — sharded. With rows-per-trigger unknown, the pre-r16
-    cardinality-only rule stands (conservative, never the measured-loss
-    arm at >=50k ids), and the 50k cardinality floor still gates
-    everything (the only sub-50k measurement shows sharding LOSING
-    1.1-1.35x regardless of batch size)."""
-    from energy_data_stream_processing_spark.streaming.runner import (
-        HOT_HOUR_SHARD_MIN_PRODUCT,
-        HOT_HOUR_SHARD_THRESHOLD,
-        decide_hourly_variant,
-    )
-
-    # the two measured bench poles (replay_sharded_hot)
-    tie = decide_hourly_variant(
-        peak_hour_distinct=68_000, expected_rows_per_trigger=12_500
-    )
-    assert tie["variant"] == "bounded"
-    assert tie["expected_rows_per_trigger"] == 12_500
-    win = decide_hourly_variant(
-        peak_hour_distinct=120_000, expected_rows_per_trigger=125_000
-    )
-    assert win["variant"] == "sharded"
-    # rows-per-trigger unknown: cardinality-only fallback unchanged
-    assert (
-        decide_hourly_variant(peak_hour_distinct=68_000)["variant"]
-        == "sharded"
-    )
-    # cardinality floor holds even at huge batches (measured loss <50k)
-    assert (
-        decide_hourly_variant(
-            peak_hour_distinct=1_500, expected_rows_per_trigger=10_000_000
-        )["variant"]
-        == "bounded"
-    )
-    # the threshold really sits between the measured products
-    assert 68_000 * 12_500 < HOT_HOUR_SHARD_MIN_PRODUCT < 120_000 * 125_000
-    assert 68_000 >= HOT_HOUR_SHARD_THRESHOLD
-
-
-def test_dispatch_pin_roundtrips_batch_awareness(spark, tmp_path, sf_dir):
-    """The pipeline pins the batch-aware decision: invocation 1 decides
-    bounded AT hot cardinality because the product is under the
-    crossover; invocation 2 (same checkpoint, no probe args) loads the
-    identical decision instead of re-deciding or raising."""
-    from energy_data_stream_processing_spark.sources.adapter import (
-        energy_events,
-    )
-    from energy_data_stream_processing_spark.streaming import runner
-    from energy_data_stream_processing_spark.streaming.runner import (
-        ascending_time_chunks,
-        energy_events_stream,
-    )
-
-    src = ascending_time_chunks(spark, sf_dir, 2)
-    store, ckpt = str(tmp_path / "metrics"), str(tmp_path / "ckpt")
-    ev1 = energy_events_stream(
-        spark, sf_dir, source_dir=src, max_files_per_trigger=1
-    )
-    d1 = runner.run_hourly_pipeline_dispatched(
-        spark,
-        ev1,
-        metrics_path=store,
-        checkpoint=ckpt,
-        peak_hour_distinct=68_000,
-        expected_rows_per_trigger=12_500,
-    )
-    assert d1["variant"] == "bounded"
-    assert d1["expected_rows_per_trigger"] == 12_500
-
-    ev2 = energy_events_stream(
-        spark, sf_dir, source_dir=src, max_files_per_trigger=1
-    )
-    d2 = runner.run_hourly_pipeline_dispatched(
-        spark, ev2, metrics_path=store, checkpoint=ckpt
-    )
-    assert d2 == d1
-    import shutil
-
-    shutil.rmtree(src, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

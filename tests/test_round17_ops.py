@@ -3,14 +3,12 @@
 Focused tests for the operator internals this round changed (round rules:
 an optimization that changes an operator's internals gets its own test):
 
-- empty-micro-batch skip in the durable sinks (foreach_batch_upsert /
-  foreach_batch_sharded_flush) — store contents and replay idempotence
-  unchanged, only the per-trigger write-commit overhead goes;
+- empty-micro-batch skip in the durable hour sink (foreach_batch_upsert)
+  — store contents and replay idempotence unchanged, only the per-trigger
+  write-commit overhead goes;
 - the reliable-checkpoint swap for the curation pipeline (r16 verdict
   item 8 — a tested code path, not prose);
 - the per-JVM parse memo for the unrolled similarity expressions;
-- the stateful streams' input projection (only the columns the state
-  function reads cross the Python boundary);
 - the round-16 advice regression: two frames built from the SAME memoized
   gateway-column list composed into ONE plan (shared Alias exprIds must
   not mis-bind or fail analysis).
@@ -23,7 +21,6 @@ import os
 from pyspark.sql import functions as F
 
 from energy_data_stream_processing_spark.sources.sinks import (
-    foreach_batch_sharded_flush,
     foreach_batch_upsert,
 )
 
@@ -49,22 +46,6 @@ def test_upsert_sink_skips_empty_batch(spark, tmp_path):
     before = sorted(os.listdir(store))
     fn(hours.where(F.lit(False)), 2)
     assert sorted(os.listdir(store)) == before
-
-
-def test_sharded_flush_skips_empty_batch(spark, tmp_path):
-    """The sharded staged flush must not create staging (nor run its
-    dynamic-overwrite commit) for a batch with zero evicted partials."""
-    staging = str(tmp_path / "staging")
-    store = str(tmp_path / "hours")
-    fn = foreach_batch_sharded_flush(staging, metrics_path=store)
-
-    from energy_data_stream_processing_spark.streaming.runner import (
-        SHARD_PARTIAL_SCHEMA,
-    )
-
-    empty = spark.createDataFrame([], SHARD_PARTIAL_SCHEMA)
-    fn(empty, 0)
-    assert not os.path.exists(staging) and not os.path.exists(store)
 
 
 def test_curation_reliable_checkpoint_result_identical(spark, sf_dir, tmp_path):
@@ -122,44 +103,6 @@ def test_parsed_expr_memoizes_per_gateway(spark):
     got = [r[0] for r in df.select(parsed_expr(sql)).collect()]
     want = [r[0] for r in df.select(F.expr(sql)).collect()]
     assert got == want
-
-
-def test_stateful_input_projection_matches_state_fn(spark):
-    """_STATE_INPUT_COLS must cover exactly what _stateful_update_fn reads
-    (plus the watermark column): the bounded stream built over a frame
-    carrying EXTRA columns (event_id, channel) must not reference them
-    above the source in its analyzed plan."""
-    from energy_data_stream_processing_spark.streaming.runner import (
-        _STATE_INPUT_COLS,
-        hourly_metrics_stateful_bounded_stream,
-    )
-
-    src = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr(
-            "value AS event_id",
-            "timestamp AS event_time",
-            "'click' AS event_type",
-            "cast(null AS decimal(10,2)) AS payment_amount",
-            "cast(null AS decimal(10,3)) AS energy_consumed",
-            "cast(value % 10 AS int) AS session_id",
-            "concat('CUST', value % 5) AS customer_id",
-            "cast(null AS string) AS tariff_type",
-            "'web_portal' AS channel",
-        )
-    )
-    out = hourly_metrics_stateful_bounded_stream(src)
-    plan = out._jdf.queryExecution().analyzed().toString()
-    # everything ABOVE the watermark (the state operator and its keyed
-    # projections) must not mention the pruned columns; they may of course
-    # appear in the user projection below it
-    above_watermark = plan.split("EventTimeWatermark", 1)[0]
-    assert "event_id" not in above_watermark, above_watermark
-    assert "channel" not in above_watermark, above_watermark
-    assert set(_STATE_INPUT_COLS) == {
-        "event_time", "event_type", "payment_amount", "energy_consumed",
-        "session_id", "customer_id", "tariff_type",
-    }
 
 
 def test_gateway_columns_two_frames_one_plan(spark):

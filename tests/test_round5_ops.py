@@ -167,8 +167,8 @@ def test_streaming_stateful_under_rocksdb_state_store(spark, sf_dir):
     state round-trip through RocksDB."""
     from energy_data_stream_processing_spark.plans.catalog import all_queries
 
-    # streaming_hourly_bounded adds timer (EventTimeTimeout) state to the
-    # round-trip: eviction timestamps must also commit/restore via RocksDB
+    # streaming_hourly_bounded adds watermark eviction to the round-trip:
+    # evicted hours must also commit/restore via RocksDB
     for name in ("streaming_hourly_metrics", "streaming_hourly_bounded"):
         q = all_queries()[name]
         base = sorted(map(tuple, q.builder(spark, sf_dir).collect()))

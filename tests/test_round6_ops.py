@@ -230,7 +230,7 @@ def test_kafka_fake_two_restart_floor(tmp_path):
 def test_stateful_hourly_checkpoint_restart(spark, sf_dir, tmp_path, provider):
     """Mid-stream kill-and-resume for the STATEFUL hourly-metrics stream
     (the one streaming family that previously had no explicit restart
-    test): run the applyInPandasWithState aggregation over the first half
+    test): run the update-mode exact hourly stream over the first half
     of the time-ordered chunks through the parquet upsert sink, stop, add
     the second half, restart from the SAME checkpoint. The resumed query
     must read ONLY the new chunks (offsets recovered) and the final store
@@ -256,7 +256,7 @@ def test_stateful_hourly_checkpoint_restart(spark, sf_dir, tmp_path, provider):
     )
     from energy_data_stream_processing_spark.streaming.runner import (
         energy_events_stream,
-        hourly_metrics_stateful_stream,
+        hourly_metrics_stream,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -292,8 +292,8 @@ def test_stateful_hourly_checkpoint_restart(spark, sf_dir, tmp_path, provider):
             spark, sf_dir, source_dir=str(src), max_files_per_trigger=1
         )
         q = (
-            hourly_metrics_stateful_stream(ev)
-            .drop("update_seq")
+            hourly_metrics_stream(ev, horizon=None)
+            .drop("_rows_total")
             .writeStream.foreachBatch(foreach_batch_upsert(store))
             .outputMode("update")
             .option("checkpointLocation", ckpt)

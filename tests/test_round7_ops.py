@@ -371,7 +371,7 @@ def test_gate_prefix_names_all_resolve():
 
 def test_streaming_lake_merge_through_coordinator(spark, sf_dir, tmp_path):
     """foreach_batch_lake_merge with an injected CoordinatedLogStore: the
-    stateful hourly stream's flush commits through the object-store
+    exact hourly stream's flush commits through the object-store
     coordinator and lands the batch-equal final state (the
     test_laketable.py streaming test's twin on the other LogStore)."""
     from energy_data_stream_processing_spark.operators.hourly import (
@@ -383,14 +383,14 @@ def test_streaming_lake_merge_through_coordinator(spark, sf_dir, tmp_path):
     )
     from energy_data_stream_processing_spark.streaming.runner import (
         energy_events_stream,
-        hourly_metrics_stateful_stream,
+        hourly_metrics_stream,
     )
 
     store = CoordinatedLogStore()
     path = str(tmp_path / "lake")
     q = (
-        hourly_metrics_stateful_stream(energy_events_stream(spark, sf_dir))
-        .drop("update_seq")
+        hourly_metrics_stream(energy_events_stream(spark, sf_dir), horizon=None)
+        .drop("_rows_total")
         .writeStream.foreachBatch(
             foreach_batch_lake_merge(path, txn_app_id="q-coord", log_store=store)
         )

@@ -15,7 +15,7 @@ exact stateful hourly aggregation — and the result is pinned three ways:
   split, bucket count) computed from the sample file itself;
 - Spark batch vs DuckDB running the SAME oracle SQL over the flattened
   valid rows (engine-independent value check);
-- streaming (applyInPandasWithState over a paced 2-file JSONL stream) vs
+- streaming (the exact hourly stream over a paced 2-file JSONL stream) vs
   batch, the standard differential.
 
 The live-PostgreSQL leg of the same replay (metrics + dead letters flushed
@@ -135,8 +135,6 @@ def test_reference_sample_hourly_batch_vs_duckdb(spark, ingest_dir, tmp_path):
 
 @needs_ref_sample
 def test_reference_sample_stream_matches_batch(spark, ingest_dir):
-    from pyspark.sql.window import Window
-
     from energy_data_stream_processing_spark.operators.hourly import (
         hourly_business_metrics,
     )
@@ -148,8 +146,7 @@ def test_reference_sample_stream_matches_batch(spark, ingest_dir):
         ENVELOPE_SCHEMA,
     )
     from energy_data_stream_processing_spark.streaming.runner import (
-        hourly_metrics_stateful_stream,
-        run_stream_to_table,
+        run_hourly_stream,
     )
 
     raw = (
@@ -160,15 +157,7 @@ def test_reference_sample_stream_matches_batch(spark, ingest_dir):
         .json(ingest_dir)
     )
     valid_stream, _ = split_events(raw)
-    out = run_stream_to_table(
-        spark, hourly_metrics_stateful_stream(valid_stream)
-    )
-    w = Window.partitionBy("hour").orderBy(F.col("update_seq").desc())
-    final = (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "update_seq")
-    )
+    final = run_hourly_stream(spark, valid_stream, horizon=None)
 
     valid_batch, _ = _split_sample(spark, ingest_dir)
     want = {
@@ -258,8 +247,8 @@ def test_shuffle_volume_and_spill_gates(spark, name, bound):
 @needs_ref_sample
 def test_reference_sample_bounded_stream_matches_batch(spark, ingest_dir):
     """The bounded-state variant over the reference's OWN corpus: the same
-    220-event sample through hourly_metrics_stateful_bounded_stream —
-    eviction by event-time timeout, final-only append emission, a valid
+    220-event sample through the append-mode hourly stream — eviction
+    once the watermark passes each hour, final-only emission, a valid
     far-future sentinel event flushing the tail — must reproduce the batch
     aggregation on every one of the 125 sample hours, all 15 metrics
     including both exact distincts. Fidelity x capability cross-check: the
@@ -278,13 +267,12 @@ def test_reference_sample_bounded_stream_matches_batch(spark, ingest_dir):
         ENVELOPE_SCHEMA,
     )
     from energy_data_stream_processing_spark.streaming.runner import (
-        hourly_metrics_stateful_bounded_stream,
-        run_stream_to_table,
+        run_hourly_stream,
     )
 
     # sentinel: a VALID far-future event (first sample line, timestamp
     # moved to 2035) in its own file — the final micro-batch pushes the
-    # watermark past every real hour's timeout
+    # watermark past every real hour's end
     with open(REF_SAMPLE) as f:
         ev = json.loads(f.readline())
     ev["event_time"] = "2035-01-01T00:00:00.000000"
@@ -299,11 +287,7 @@ def test_reference_sample_bounded_stream_matches_batch(spark, ingest_dir):
         .json(ingest_dir)
     )
     valid_stream, _ = split_events(raw)
-    out = run_stream_to_table(
-        spark,
-        hourly_metrics_stateful_bounded_stream(valid_stream, horizon="2 hours"),
-        mode="append",
-    )
+    out = run_hourly_stream(spark, valid_stream, horizon="2 hours")
     import datetime
 
     cut = datetime.datetime(2030, 1, 1)
@@ -319,7 +303,7 @@ def test_reference_sample_bounded_stream_matches_batch(spark, ingest_dir):
     assert set(got) == set(want) and len(got) == SAMPLE_HOURS
     for hour, row in got.items():
         for c in want[hour]:
-            if c in ("hour", "update_seq"):
+            if c == "hour":
                 continue
             assert float(row[c]) == pytest.approx(
                 float(want[hour][c]), abs=1e-9

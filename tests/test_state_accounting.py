@@ -34,7 +34,7 @@ from energy_data_stream_processing_spark.streaming.runner import (
     ascending_time_chunks,
     energy_events_stream,
     hourly_metrics_native_stream,
-    hourly_metrics_stateful_stream,
+    hourly_metrics_stream,
     stream_raw_events,
 )
 
@@ -165,18 +165,17 @@ def test_plain_dedup_state_grows_with_keys(spark, sf_dir, chunk_src, corpus_stat
 
 
 def test_stateful_bounded_hourly_exact_and_evicting(spark, sf_dir, corpus_stats, tmp_path):
-    """The best-of-both variant, measured: hourly_metrics_stateful_bounded_
-    stream keeps the EXACT distincts of the applyInPandasWithState twin but
-    self-evicts each hour by event-time timeout once the watermark passes
-    it. A far-future sentinel event flushes the tail, so EVERY real hour
-    must emit exactly once with ALL 15 metrics — including the two exact
-    distincts — equal to the batch aggregation, while state plateaus at the
-    open horizon instead of growing to hours-cardinality."""
+    """The best-of-both stream, measured: the append-mode
+    hourly_metrics_stream keeps EXACT distincts (size(collect_set)) and
+    evicts each hour once the watermark passes it. A far-future sentinel
+    event flushes the tail, so EVERY real hour must emit exactly once with
+    ALL 15 metrics — including the two exact distincts — equal to the
+    batch aggregation, while state plateaus at the open horizon instead of
+    growing to hours-cardinality."""
     from datetime import timedelta
 
     from energy_data_stream_processing_spark.streaming.runner import (
         append_watermark_sentinel,
-        hourly_metrics_stateful_bounded_stream,
     )
 
     src = ascending_time_chunks(spark, sf_dir, N_CHUNKS)
@@ -184,7 +183,7 @@ def test_stateful_bounded_hourly_exact_and_evicting(spark, sf_dir, corpus_stats,
 
     ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
     out, batches = run_stream_with_state_metrics(
-        spark, hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours"), mode="append"
+        spark, hourly_metrics_stream(ev, horizon="2 hours"), mode="append"
     )
     series = state_rows_series(batches)
     hours = corpus_stats["hours"]
@@ -215,14 +214,13 @@ def test_stateful_bounded_hourly_survives_restart(spark, sf_dir, corpus_stats, t
     EVICT); the query terminates; a third chunk plus the watermark sentinel
     arrive; run 2 resumes from the checkpoint. Recovery must restore BOTH
     the aggregation state (straddling hours finish exact, distincts
-    included) and the timer/watermark state (already-evicted hours must NOT
+    included) and the watermark (already-evicted hours must NOT
     re-emit) — the union of the two runs' outputs is every hour exactly
     once, batch-equal on all 15 metrics."""
     import os
 
     from energy_data_stream_processing_spark.streaming.runner import (
         append_watermark_sentinel,
-        hourly_metrics_stateful_bounded_stream,
         normalize_event_ts,
     )
 
@@ -253,7 +251,7 @@ def test_stateful_bounded_hourly_survives_restart(spark, sf_dir, corpus_stats, t
             spark, sf_dir, source_dir=str(src), max_files_per_trigger=1
         )
         return (
-            hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours")
+            hourly_metrics_stream(ev, horizon="2 hours")
             .writeStream.format("parquet")
             .option("path", out_dir)
             .outputMode("append")
@@ -430,19 +428,17 @@ def test_session_window_state_evicts_closed_sessions(spark, sf_dir):
 
 
 def test_stateful_bounded_hourly_non_utc_session_tz(spark, sf_dir, corpus_stats):
-    """Timer-epoch regression guard: the group key reaches the state
-    function tz-NAIVE in session wall-clock, while setTimeoutTimestamp and
-    getCurrentWatermarkMs speak true epoch — an unlocalized conversion
-    makes hour-end timestamps 4-5 h early under America/New_York, firing
-    timeouts while on-time rows still arrive (premature eviction, then a
-    duplicate partial when the hour re-opens). Under a non-UTC session the
-    bounded stream must still emit every hour exactly once, batch-equal."""
+    """Session-tz regression guard: the watermark and the window speak
+    true epoch while the batch twin truncates hours in session wall-clock
+    — any tz slip between them would evict hours 4-5 h early under
+    America/New_York, while on-time rows still arrive (premature eviction,
+    then dropped or duplicated rows). Under a non-UTC session the bounded
+    stream must still emit every hour exactly once, batch-equal."""
     from datetime import timedelta
 
     from energy_data_stream_processing_spark.streaming.runner import (
         append_watermark_sentinel,
-        hourly_metrics_stateful_bounded_stream,
-        run_stream_to_table,
+        run_hourly_stream,
     )
 
     prior = spark.conf.get("spark.sql.session.timeZone")
@@ -451,11 +447,7 @@ def test_stateful_bounded_hourly_non_utc_session_tz(spark, sf_dir, corpus_stats)
         src = ascending_time_chunks(spark, sf_dir, 3)
         mx = append_watermark_sentinel(spark, sf_dir, src)
         ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-        out = run_stream_to_table(
-            spark,
-            hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours"),
-            mode="append",
-        )
+        out = run_hourly_stream(spark, ev, horizon="2 hours")
         rows = [r for r in out.collect() if r["hour"] < mx + timedelta(days=30)]
         hours = [r["hour"] for r in rows]
         assert len(hours) == len(set(hours)), "premature eviction duplicated an hour"
@@ -477,22 +469,22 @@ def test_stateful_bounded_hourly_non_utc_session_tz(spark, sf_dir, corpus_stats)
 
 
 def test_stateful_bounded_hourly_drops_beyond_horizon_rows(spark, sf_dir, tmp_path):
-    """The documented beyond-horizon divergence, executed: Spark
-    late-filters stateful input whenever event-time timeouts are active
-    (FlatMapGroupsWithStateExec), so stragglers arriving after their hour's
-    eviction are DROPPED — they neither re-open the hour nor corrupt it.
-    Measured three ways: the late batch reports ZERO state updates, every
-    hour still emits exactly once, and each emitted hour equals the batch
-    aggregation over the ON-TIME subset on all 15 metrics. (The NoTimeout
-    unbounded twin is the documented contrast: Spark does NOT late-filter
-    it, which test_stateful_streaming_late_arrivals_equal_batch exploits
-    for any-lateness exactness.)"""
+    """The documented beyond-horizon divergence, executed: the
+    watermarked window aggregation drops a row whose hour window already
+    closed (window end <= watermark), so stragglers arriving after their
+    hour's eviction are DROPPED — they neither re-open the hour nor
+    corrupt it. Measured three ways: the late batch reports ZERO state
+    updates, every hour still emits exactly once, and each emitted hour
+    equals the batch aggregation over the ON-TIME subset on all 15
+    metrics. (The update-mode twin without a watermark is the documented
+    contrast: nothing is late there, which
+    test_stateful_streaming_late_arrivals_equal_batch exploits for
+    any-lateness exactness.)"""
     import os
     from datetime import timedelta
 
     from energy_data_stream_processing_spark.streaming.runner import (
         append_watermark_sentinel,
-        hourly_metrics_stateful_bounded_stream,
         normalize_event_ts,
     )
 
@@ -517,10 +509,10 @@ def test_stateful_bounded_hourly_drops_beyond_horizon_rows(spark, sf_dir, tmp_pa
 
     ev = energy_events_stream(spark, sf_dir, source_dir=str(src), max_files_per_trigger=1)
     out, batches = run_stream_with_state_metrics(
-        spark, hourly_metrics_stateful_bounded_stream(ev, horizon="2 hours"), mode="append"
+        spark, hourly_metrics_stream(ev, horizon="2 hours"), mode="append"
     )
     # the late chunk's micro-batch delivered rows but updated NO state —
-    # the measured form of "Spark late-filters under event-time timeouts"
+    # the measured form of "rows of a closed window are dropped"
     late_batch = batches[2]
     assert late_batch["input_rows"] > 0
     assert sum(o["rows_updated"] for o in late_batch["operators"]) == 0, late_batch
@@ -555,18 +547,18 @@ def test_stateful_bounded_hourly_drops_beyond_horizon_rows(spark, sf_dir, tmp_pa
 
 
 def test_stateful_hourly_state_tracks_hours_cardinality(spark, sf_dir, chunk_src, corpus_stats):
-    """The exact stateful twin (applyInPandasWithState) INTENTIONALLY holds
-    one state row per hour forever — that is the unbounded-lateness
-    capability the reference's additive flush implies (consumer.py:341-356:
-    any hour can be re-opened by a late event). Measured: state grows to
-    exactly hours-cardinality, nothing is evicted. The shipped
-    snapshot-and-trim alternative (hourly_metrics_stateful_bounded_stream,
-    tested above) trades bounded-horizon lateness for a plateau; this test
-    pins the measured cost of any-lateness exactness so the trade is a
-    recorded number, not an opinion."""
+    """The update-mode exact stream (no watermark) INTENTIONALLY holds one
+    state row per hour forever — that is the unbounded-lateness capability
+    the reference's additive flush implies (consumer.py:341-356: any hour
+    can be re-opened by a late event). Measured: state grows to exactly
+    hours-cardinality, nothing is evicted. The append-mode alternative
+    (hourly_metrics_stream with a horizon, tested above) trades
+    bounded-horizon lateness for a plateau; this test pins the measured
+    cost of any-lateness exactness so the trade is a recorded number, not
+    an opinion."""
     ev = energy_events_stream(spark, sf_dir, source_dir=chunk_src, max_files_per_trigger=1)
     _, batches = run_stream_with_state_metrics(
-        spark, hourly_metrics_stateful_stream(ev), mode="update"
+        spark, hourly_metrics_stream(ev, horizon=None), mode="update"
     )
     series = state_rows_series(batches)
     removed = sum(sum(o["rows_removed"] for o in b["operators"]) for b in batches)
@@ -574,3 +566,64 @@ def test_stateful_hourly_state_tracks_hours_cardinality(spark, sf_dir, chunk_src
     assert all(a <= b for a, b in zip(series, series[1:])), series
     assert series[-1] == corpus_stats["hours"], (series, corpus_stats)
     assert removed == 0
+
+
+def test_hourly_pipeline_runs_state_plan_once_per_trigger(spark, sf_dir, tmp_path):
+    """One execution of the state plan per trigger. ``foreach_batch_upsert``
+    runs two actions on a non-empty micro-batch — the ``count()`` probe and
+    the hour-store write — and persists the batch so that only the first
+    executes the stateful plan; without the persist the write would
+    recompute it, loading and committing every state store twice. Spark
+    reports that per trigger: ``numStateStoreInstances`` counts the state
+    stores the batch loaded and committed, i.e. ``numShufflePartitions``
+    times the executions. (A job count cannot tell the two apart: the
+    write's stage lists the state store in its lineage whether it
+    recomputes it or reads the cached batch.) Driven through
+    ``run_hourly_pipeline`` over the 3-chunk replay + sentinel; batches
+    that evicted — hence wrote — hours are required, so the two-action
+    path is really exercised."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from energy_data_stream_processing_spark.streaming import runner
+    from energy_data_stream_processing_spark.streaming.runner import (
+        append_watermark_sentinel,
+    )
+
+    seen: list[tuple] = []
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            seen.extend(
+                (p.batchId, s.numStateStoreInstances, s.numShufflePartitions,
+                 s.numRowsRemoved)
+                for s in p.stateOperators
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    src = ascending_time_chunks(spark, sf_dir, 3)
+    append_watermark_sentinel(spark, sf_dir, src)
+    ev = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        runner.run_hourly_pipeline(
+            spark, ev, str(tmp_path / "store"), str(tmp_path / "ckpt")
+        )
+        spark._jsc.sc().listenerBus().waitUntilEmpty(15_000)
+    finally:
+        spark.streams.removeListener(listener)
+
+    assert len({b for b, *_ in seen}) >= 4, seen  # 3 chunks + sentinel
+    assert sum(1 for *_, removed in seen if removed > 0) >= 2, seen
+    for batch_id, instances, partitions, _ in seen:
+        assert partitions == runner.HOURS_STATE_PARTITIONS
+        assert instances == partitions, (batch_id, instances, partitions)

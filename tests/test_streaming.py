@@ -2,8 +2,8 @@
 
 The critical case is MULTI-micro-batch: the reference's additive flush
 double-counts distincts across flush intervals (consumer.py:341-342); the
-stateful operator here must NOT — final streaming state over 4 micro-batches
-must equal the one-pass batch aggregation exactly.
+exact hourly stream here must NOT — final streaming state over 4
+micro-batches must equal the one-pass batch aggregation exactly.
 """
 
 from __future__ import annotations
@@ -13,22 +13,25 @@ from pyspark.sql import functions as F
 from energy_data_stream_processing_spark.operators.hourly import hourly_business_metrics
 from energy_data_stream_processing_spark.sources.adapter import energy_events, normalize_event_ts
 from energy_data_stream_processing_spark.streaming.runner import (
+    collapse_native_updates,
     energy_events_stream,
     hourly_metrics_native_stream,
-    hourly_metrics_stateful_stream,
+    hourly_metrics_stream,
     run_stream_to_table,
 )
 
 
-def _final_rows(out):
-    from pyspark.sql.window import Window
+def _update_mode_rows(spark, ev_stream):
+    """(all update-mode emissions, final row per hour) of the exact
+    any-lateness stream."""
+    out = run_stream_to_table(spark, hourly_metrics_stream(ev_stream, horizon=None))
+    return out, collapse_native_updates(out)
 
-    w = Window.partitionBy("hour").orderBy(F.col("update_seq").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "update_seq")
-    )
+
+def _reemitted_hours(out) -> int:
+    """Hours emitted by more than one micro-batch: > 0 proves the replay
+    really merged state across batches."""
+    return out.groupBy("hour").count().where(F.col("count") > 1).count()
 
 
 def test_stateful_streaming_multibatch_equals_batch(spark, sf_dir, tmp_path):
@@ -46,10 +49,10 @@ def test_stateful_streaming_multibatch_equals_batch(spark, sf_dir, tmp_path):
     assert len(glob.glob(f"{src}/part-*.parquet")) >= 2
 
     ev_stream = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    out = run_stream_to_table(spark, hourly_metrics_stateful_stream(ev_stream))
-    assert out.select(F.max("update_seq")).collect()[0][0] >= 2  # really incremental
+    out, final = _update_mode_rows(spark, ev_stream)
+    assert _reemitted_hours(out) > 0  # really incremental
 
-    streaming_rows = sorted(map(tuple, _final_rows(out).collect()))
+    streaming_rows = sorted(map(tuple, final.collect()))
     batch_rows = sorted(map(tuple, hourly_business_metrics(energy_events(spark, sf_dir)).collect()))
     assert streaming_rows == batch_rows
 
@@ -72,13 +75,12 @@ def test_native_streaming_exact_columns_match_batch(spark, sf_dir):
 
 def test_stateful_streaming_late_arrivals_equal_batch(spark, sf_dir, tmp_path):
     """Adversarial arrival order: batches partitioned by event-time quartile
-    so micro-batches deliver late events for hours already aggregated. For
-    applyInPandasWithState the watermark drives timeouts/state eviction but
-    does NOT auto-drop late input rows, so the engine merges arbitrarily
-    late rows into existing hour state — the same unbounded-lateness
-    capability as the reference's additive flush, WITHOUT its distinct
-    double-count (consumer.py:341-342): final state must equal the one-pass
-    batch aggregation exactly."""
+    so micro-batches deliver late events for hours already aggregated. The
+    update-mode stream has no watermark, so nothing is ever late: the
+    engine merges arbitrarily late rows into existing hour state — the same
+    unbounded-lateness capability as the reference's additive flush,
+    WITHOUT its distinct double-count (consumer.py:341-342): final state
+    must equal the one-pass batch aggregation exactly."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     src = str(tmp_path / "late_chunks")
@@ -99,10 +101,10 @@ def test_stateful_streaming_late_arrivals_equal_batch(spark, sf_dir, tmp_path):
     ).parquet(src)
 
     ev_stream = energy_events_stream(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
-    out = run_stream_to_table(spark, hourly_metrics_stateful_stream(ev_stream))
-    assert out.select(F.max("update_seq")).collect()[0][0] >= 2
+    out, final = _update_mode_rows(spark, ev_stream)
+    assert _reemitted_hours(out) > 0
 
-    streaming_rows = sorted(map(tuple, _final_rows(out).collect()))
+    streaming_rows = sorted(map(tuple, final.collect()))
     batch_rows = sorted(map(tuple, hourly_business_metrics(energy_events(spark, sf_dir)).collect()))
     assert streaming_rows == batch_rows
 
