@@ -13,14 +13,19 @@ pipeline against this repo directly (see MIGRATION.md for the full map).
 semantic validation with a dead-letter quarantine, partitioned raw event
 store, hourly business metrics table, and an ingest-metrics summary on
 stdout (the reference's Prometheus counters, engine-side). ``--streaming``
-replays the file through the custom jsonl_replay source in paced
-micro-batches with checkpointed upserts — the Kafka-consumer form. Each
-micro-batch (``fold``) reads its source once: it tags every row with its
-reason and persists that, then runs only the jobs that write output (the
-dead letter, whose write also observes the valid/invalid counts; the raw
-landing, whose write observes the touched hours; the touched-hour
-recompute). The batch form takes its summary counts from observations on
-its writes too.
+is the producer/consumer form: the driver stages the file once as
+verdict-tagged segments, one per ``--lines-per-batch`` lines, under
+``<output>/_replay/`` (``replay_source.stage_replay``), and Spark's built-in
+file stream source replays them one segment per micro-batch with
+checkpointed upserts, so no Python source process runs per batch. A re-run
+into the same output stages only lines the input gained and resumes from
+the checkpoint; a shrunk input or a changed ``--lines-per-batch`` is
+refused. Each micro-batch (``fold``) reads its source once: it tags every
+row with its reason and persists that, then runs only the jobs that write
+output (the dead letter, whose write also observes the valid/invalid
+counts; the raw landing, whose write observes the touched hours; the
+touched-hour recompute). The batch form takes its summary counts from
+observations on its writes too.
 """
 
 from __future__ import annotations
@@ -146,6 +151,13 @@ def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
     return {"valid": n["events_valid"], "invalid": n["events_failed"]}
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def _counted(df):
     """``df`` with a row count observed on whatever action runs it."""
     from pyspark.sql import Observation
@@ -166,14 +178,16 @@ def cmd_pipeline(args) -> int:
     spark = _spark()
     out = args.output.rstrip("/")
     if args.streaming:
-        from .sources.replay_source import JsonlReplayDataSource
+        from .sources.replay_source import REPLAY_SCHEMA, stage_replay
 
-        spark.dataSource.register(JsonlReplayDataSource)
+        # producer: verdict-tagged segments, one per micro-batch; consumer:
+        # Spark's file stream source, one segment per trigger
+        seg_dir = f"{out}/_replay"
+        stage_replay(args.input, seg_dir, args.lines_per_batch)
         stream = (
-            spark.readStream.format("jsonl_replay")
-            .option("path", args.input)
-            .option("lines_per_batch", str(args.lines_per_batch))
-            .load()
+            spark.readStream.schema(REPLAY_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .json(seg_dir)
         )
         counts = {"valid": 0, "invalid": 0, "batches": 0}
 
@@ -182,17 +196,15 @@ def cmd_pipeline(args) -> int:
                 counts[k] += v
             counts["batches"] += 1
 
-        # NOT availableNow: that trigger snapshots latestOffset once, but
-        # this source paces by advancing the offset lines_per_batch per
-        # trigger — processAllAvailable() drives triggers until the file is
-        # drained, preserving the multi-micro-batch replay.
-        q = (
+        # every segment is staged before start, so availableNow drains them
+        # all, still one file per trigger, and then ends the query
+        (
             stream.writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", f"{out}/_checkpoint")
+            .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.processAllAvailable()
-        q.stop()
         print(json.dumps({"mode": "streaming", **counts, "output": out}))
     else:
         raw = read_events_jsonl(spark, args.input)
@@ -244,7 +256,7 @@ def main(argv: list[str] | None = None) -> int:
     pl.add_argument("--input", required=True)
     pl.add_argument("--output", required=True)
     pl.add_argument("--streaming", action="store_true")
-    pl.add_argument("--lines-per-batch", type=int, default=100)
+    pl.add_argument("--lines-per-batch", type=_positive_int, default=100)
     pl.set_defaults(fn=cmd_pipeline)
 
     args = p.parse_args(argv)

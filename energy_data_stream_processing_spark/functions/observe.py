@@ -55,6 +55,7 @@ class ProgressCapture:
                         # ISO-8601 wall-clock stamp — the alert rule's rate
                         # window derives from the first->last batch span.
                         "timestamp": p.timestamp,
+                        "sources": [s.description for s in p.sources],
                         # state memory feeds the state_store_bytes gauge
                         # (process_gauges); empty for stateless queries
                         "stateOperators": [

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from collections import Counter
 
 import pytest
@@ -108,9 +109,10 @@ def _dead_letter_reasons(path):
 
 
 def test_cli_streaming_reads_each_line_once(spark, mixed_file, tmp_path, capsys):
-    """The replay source is scanned once per micro-batch: the rows the
-    queries report read equal the file's lines, while the summary and the
-    dead letter stay what validation makes of the file."""
+    """The staged segments are scanned once per micro-batch, by Spark's file
+    stream source: the rows the queries report read equal the file's lines,
+    while the summary and the dead letter stay what validation makes of the
+    file."""
     from energy_data_stream_processing_spark.functions.observe import ProgressCapture
 
     with open(mixed_file) as f:
@@ -125,6 +127,8 @@ def test_cli_streaming_reads_each_line_once(spark, mixed_file, tmp_path, capsys)
         capture.close()
     assert rc == 0
     assert sum(b["numInputRows"] for b in capture.batches) == n_lines == 124
+    assert [len(b["sources"]) for b in capture.batches] == [1] * len(capture.batches)
+    assert all(b["sources"][0].startswith("FileStreamSource[") for b in capture.batches)
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) == {
         "mode": "streaming", "valid": 96, "invalid": 28, "batches": 4, "output": out,
     }
@@ -148,3 +152,99 @@ def test_fold_rerun_of_a_batch_is_idempotent(spark, mixed_file, tmp_path):
     assert _dead_letter_reasons(f"{out}/dead_letter") == _REASONS
     assert spark.read.parquet(f"{out}/raw_events").count() == 96
     assert sorted(map(tuple, spark.read.parquet(f"{out}/hourly_metrics").collect())) == hours
+
+
+@pytest.mark.parametrize("lpb", ["0", "-5"])
+def test_lines_per_batch_below_one_is_rejected(events_file, tmp_path, lpb):
+    out = tmp_path / "s"
+    with pytest.raises(SystemExit) as exc:
+        main(["pipeline", "--input", events_file, "--output", str(out),
+              "--streaming", "--lines-per-batch", lpb])
+    assert exc.value.code == 2
+    assert not out.exists()
+
+
+def _hours(spark, out, cols=("*",)):
+    return sorted(map(tuple, spark.read.parquet(f"{out}/hourly_metrics").select(*cols).collect()))
+
+
+def test_redrain_paces_every_fresh_output_and_adds_nothing_to_a_drained_one(
+        spark, mixed_file, tmp_path, capsys):
+    """Three drains of one input into fresh outputs each run one batch per
+    ``lines_per_batch`` lines; a fourth into a drained output runs none and
+    leaves its stores as they were. Nothing is written beside the input."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    mixed = in_dir / "events.jsonl"
+    with open(mixed_file) as f:
+        mixed.write_text(f.read())
+    before = sorted(os.listdir(in_dir))
+
+    def drain(out):
+        assert main(["pipeline", "--input", str(mixed), "--output", out,
+                     "--streaming", "--lines-per-batch", "50"]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    outs = [str(tmp_path / f"o{i}") for i in range(3)]
+    for out in outs:
+        assert drain(out)["batches"] == 3  # ceil(124 / 50)
+    hours = _hours(spark, outs[0])
+    assert drain(outs[0]) == {"mode": "streaming", "valid": 0, "invalid": 0,
+                              "batches": 0, "output": outs[0]}
+    assert _dead_letter_reasons(f"{outs[0]}/dead_letter") == _REASONS
+    assert spark.read.parquet(f"{outs[0]}/raw_events").count() == 96
+    assert _hours(spark, outs[0]) == hours
+    assert sorted(os.listdir(in_dir)) == before
+
+
+def test_cli_kill_and_resume(spark, events_file, tmp_path, capsys, monkeypatch):
+    """A drain killed after batch 3's writes, before its commit, and rerun
+    with the same command ends with the stores of one clean drain; the two
+    runs' batches cover every segment once. A grown input then lands only
+    its new lines, and a shrunk input or a changed batch size is refused."""
+    from pyspark.errors import StreamingQueryException
+
+    import energy_data_stream_processing_spark.__main__ as cli
+
+    real_fold, done, killed = cli.fold, [], []
+
+    def killed_once(out, batch_df, batch_id):
+        result = real_fold(out, batch_df, batch_id)
+        if batch_id == 3 and not killed:
+            killed.append(batch_id)
+            raise RuntimeError("killed after the writes of batch 3")
+        done.append(batch_id)
+        return result
+
+    monkeypatch.setattr(cli, "fold", killed_once)
+    out = str(tmp_path / "s")
+    cmd = ["pipeline", "--input", events_file, "--output", out,
+           "--streaming", "--lines-per-batch", "20"]
+    with pytest.raises(StreamingQueryException, match="killed after the writes of batch 3"):
+        main(cmd)
+    assert done == [0, 1, 2]
+    assert main(cmd) == 0
+    resumed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert resumed["batches"] == 4 and done == list(range(7))  # ceil(122 / 20) segments
+
+    # the file grows by the two semantically invalid events: one more batch
+    with open(events_file, "a") as f:
+        f.writelines(json.dumps(e) + "\n" for e in _SEMANTIC_BAD)
+    assert main(cmd) == 0
+    grown = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (grown["batches"], grown["valid"], grown["invalid"]) == (1, 0, 2)
+    assert _dead_letter_reasons(f"{out}/dead_letter") == _REASONS
+    assert spark.read.parquet(f"{out}/raw_events").count() == 96
+    batch = str(tmp_path / "b")
+    assert main(["pipeline", "--input", events_file, "--output", batch]) == 0
+    cols = spark.read.parquet(f"{batch}/hourly_metrics").columns
+    assert _hours(spark, out, cols) == _hours(spark, batch)
+
+    with pytest.raises(ValueError, match=re.escape(f"{out}/_replay holds segments of 20 lines")):
+        main(cmd[:-1] + ["30"])
+    with open(events_file) as f:
+        head = f.readlines()[:100]
+    with open(events_file, "w") as f:
+        f.writelines(head)
+    with pytest.raises(ValueError, match="the input shrank"):
+        main(cmd)

@@ -186,3 +186,64 @@ def test_range_reads_match_full_file_reads(tmp_path, seed):
         fresh = _ReplayStreamReader(opts)
         (part,) = fresh.partitions({"line": start}, {"line": end})
         assert list(fresh.read(part)) == _rows_by_full_read(path, seed, start, end)
+
+
+def test_staged_rows_equal_jsonl_replay_rows(registered, tmp_path):
+    """``stage_replay`` segments read back by Spark's JSON reader give the
+    jsonl_replay rows, for every envelope verdict and non-ASCII text."""
+    from energy_data_stream_processing_spark.sources.replay_source import (
+        REPLAY_SCHEMA,
+        stage_replay,
+    )
+
+    p = tmp_path / "verdicts.jsonl"
+    non_ascii = json.dumps({"event_type": "user_login", "event_time": "2024-01-01T02:00:00",
+                            "payload": {"customer_id": "Zoë-東京"}}, ensure_ascii=False)
+    p.write_text("\n".join([*LINES, non_ascii, "{ünparseable"]) + "\n", encoding="utf-8")
+    seg_dir = str(tmp_path / "_replay")
+    assert stage_replay(str(p), seg_dir, 4) == 3
+    staged = registered.read.schema(REPLAY_SCHEMA).json(seg_dir)
+    replay = registered.read.format("jsonl_replay").option("path", str(p)).load()
+    assert staged.columns == replay.columns
+    rows = sorted(map(tuple, staged.collect()))
+    assert rows == sorted(map(tuple, replay.collect()))
+    assert len(rows) == 9 and rows[7][-1] == non_ascii
+    assert {r[2] for r in rows} == {
+        "", "Malformed JSON", "Event is not a dictionary",
+        "Missing required keys: ['event_time']", "event_type or payload is empty",
+    }
+
+
+def test_stage_replay_extends_a_grown_input_and_refuses_a_mismatch(tmp_path):
+    """A re-run keeps staged segments and stages only lines past the last
+    staged end, in later mtimes; a shrunk input or a different batch size
+    is refused, naming the segment directory or the input."""
+    import os
+    import re
+
+    from energy_data_stream_processing_spark.sources.replay_source import stage_replay
+
+    p = tmp_path / "events.jsonl"
+    p.write_text("\n".join(LINES) + "\n")
+    seg_dir = str(tmp_path / "out" / "_replay")
+
+    def segments():
+        names = [n for n in os.listdir(seg_dir) if not n.startswith(".")]
+        return sorted(names, key=lambda n: os.stat(os.path.join(seg_dir, n)).st_mtime_ns)
+
+    assert stage_replay(str(p), seg_dir, 3) == 3
+    assert segments() == ["seg-0-3.jsonl", "seg-3-6.jsonl", "seg-6-7.jsonl"]
+    assert stage_replay(str(p), seg_dir, 3) == 0
+    with open(p, "a") as f:
+        f.write("\n".join(LINES[:4]) + "\n")
+    assert stage_replay(str(p), seg_dir, 3) == 2
+    assert segments()[3:] == ["seg-7-10.jsonl", "seg-10-11.jsonl"]
+    with open(os.path.join(seg_dir, "seg-7-10.jsonl")) as f:
+        assert [json.loads(line)["line_no"] for line in f] == [7, 8, 9]
+    assert not [n for n in os.listdir(seg_dir) if n.startswith(".seg-")]
+
+    with pytest.raises(ValueError, match=rf"{re.escape(seg_dir)}.*3 lines per batch, not 4"):
+        stage_replay(str(p), seg_dir, 4)
+    p.write_text("\n".join(LINES) + "\n")
+    with pytest.raises(ValueError, match=rf"{re.escape(str(p))}.*11 lines.*shrank"):
+        stage_replay(str(p), seg_dir, 3)
