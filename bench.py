@@ -612,8 +612,6 @@ def compact_line(result: dict) -> str:
             ("ladder", "ladder"),
             ("ladder100", "ladder100"),
             ("replay", "streaming_replay_sec"),
-            ("replay_sharded", "streaming_replay_sharded_sec"),
-            ("replay_hot", "replay_sharded_hot"),
             ("curation", "curation_pipeline_sec"),
             ("curation_ladder", "curation_ladder_sec"),
         )
@@ -622,15 +620,6 @@ def compact_line(result: dict) -> str:
     for short in ("ladder", "ladder100"):
         if short in rungs_sec:
             rungs_sec[short] = rungs_sec[short]["value"]
-    hot_win = None
-    if "replay_hot" in rungs_sec:
-        # compact line carries the sharded arm's seconds (canary-comparable
-        # across rounds) plus ONE ratio — bounded/sharded on identical
-        # input, >1 means sharding WINS; the full two-arm dict is in the
-        # sidecar under replay_sharded_hot.
-        hot = rungs_sec["replay_hot"]
-        rungs_sec["replay_hot"] = hot["sharded_sec"]
-        hot_win = hot["bounded_over_sharded"]
     cw = canary["warm"]
     gate = result.get("canary_ratio_alerts", {})
     # Compact-line alert shape (round 15): a noisy run can trip 5+ alerts,
@@ -682,8 +671,6 @@ def compact_line(result: dict) -> str:
         },
         "detail": "BENCH_DETAIL.json",
     }
-    if hot_win is not None:
-        compact["hot_win"] = hot_win
     line = json.dumps(compact, separators=(",", ":"))
     # Fit guard: shed the least essential layers until the line is safely
     # inside the driver's tail window (never expected to trigger at the

@@ -15,23 +15,25 @@ store, hourly business metrics table, and an ingest-metrics summary on
 stdout (the reference's Prometheus counters, engine-side). ``--streaming``
 is the producer/consumer form: the driver stages the file once as
 verdict-tagged segments, one per ``--lines-per-batch`` lines, under
-``<output>/_replay/`` (``replay_source.stage_replay``), and Spark's built-in
-file stream source replays them one segment per micro-batch with
-checkpointed upserts, so no Python source process runs per batch. A re-run
-into the same output stages only lines the input gained and resumes from
-the checkpoint; a shrunk input or a changed ``--lines-per-batch`` is
-refused. Each micro-batch (``fold``) reads its source once: it tags every
-row with its reason and persists that, then runs only the jobs that write
-output (the dead letter, whose write also observes the valid/invalid
-counts; the raw landing, whose write observes the touched hours; the
-touched-hour recompute). The batch form takes its summary counts from
-observations on its writes too.
+``<output>/_replay/``, and Spark's built-in file stream source replays them
+one segment per micro-batch with checkpointed upserts
+(``replay_source.replay_stream``), so no Python source process runs per
+batch. A re-run into the same output stages only lines the input gained and
+resumes from the checkpoint; a shrunk input, a changed
+``--lines-per-batch``, or an output whose checkpoint predates segment
+staging is refused. Each micro-batch (``fold``) reads its source once: it
+tags every row with its reason and persists that, then runs only the jobs
+that write output (the dead letter, whose write also observes the
+valid/invalid counts; the raw landing, whose write observes the touched
+hours; the touched-hour recompute). The batch form takes its summary
+counts from observations on its writes too.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -178,17 +180,21 @@ def cmd_pipeline(args) -> int:
     spark = _spark()
     out = args.output.rstrip("/")
     if args.streaming:
-        from .sources.replay_source import REPLAY_SCHEMA, stage_replay
+        from .sources.replay_source import replay_stream
 
+        # staging precedes the query's first checkpoint write, so a
+        # checkpoint without segments belongs to a CLI that read the input
+        # through a Python stream source; its offsets cannot drive the file
+        # source
+        seg_dir = f"{out}/_replay"
+        if os.path.exists(f"{out}/_checkpoint") and not os.path.isdir(seg_dir):
+            raise ValueError(
+                f"{out} holds a streaming checkpoint with no staged segments: "
+                "it was written before segment staging; use a fresh output"
+            )
         # producer: verdict-tagged segments, one per micro-batch; consumer:
         # Spark's file stream source, one segment per trigger
-        seg_dir = f"{out}/_replay"
-        stage_replay(args.input, seg_dir, args.lines_per_batch)
-        stream = (
-            spark.readStream.schema(REPLAY_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(seg_dir)
-        )
+        stream = replay_stream(spark, args.input, seg_dir, args.lines_per_batch)
         counts = {"valid": 0, "invalid": 0, "batches": 0}
 
         def on_batch(batch_df, batch_id):

@@ -60,6 +60,7 @@ import base64
 import json
 import os
 import re
+import threading
 import uuid
 import zlib
 from collections.abc import Iterator, Sequence
@@ -315,9 +316,32 @@ def _pack(pm: dict[str, int], partitioned: bool):
 
 
 # ---------------------------------------------------------------------------
-# durable committed-offset floor sidecars (same mechanism as the jsonl
-# replay source; value is int for legacy topics, a partition map otherwise)
+# durable committed-offset floor sidecars (value is int for legacy topics, a
+# partition map otherwise)
 # ---------------------------------------------------------------------------
+_WATERMARK_LOCK = threading.Lock()
+
+
+def _write_watermark_unlocked(sidecar: str, key: str, value) -> bool:
+    """Atomic best-effort sidecar write (unique temp name + os.replace).
+    Caller must hold ``_WATERMARK_LOCK``. Best-effort: a read-only broker
+    directory must not fail the query — returns False when the write could
+    not be persisted so callers that NEED durability (data-loss rebases)
+    can warn instead of silently losing the floor."""
+    tmp = f"{sidecar}.tmp.{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            json.dump({key: value}, f)
+        os.replace(tmp, sidecar)
+        return True
+    except OSError:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        return False
+
+
 def _load_floor_value(sidecar: str):
     """Raw sidecar value: int | partition map | None (absent/corrupt)."""
     try:
@@ -332,9 +356,10 @@ def _load_floor_value(sidecar: str):
 
 def _store_floor(sidecar: str, pm_new: dict[str, int], partitioned: bool) -> None:
     """Monotone-per-partition sidecar update (read-max-replace under the
-    process lock) — the partition-map twin of replay_source._store_watermark."""
-    from .replay_source import _WATERMARK_LOCK, _write_watermark_unlocked
-
+    process lock): two driver-side readers in one process can never
+    interleave a lower value over a higher one. Readers in DIFFERENT
+    processes sharing one broker should isolate their floors with the
+    ``commit_id`` option instead of relying on this lock."""
     with _WATERMARK_LOCK:
         cur = _pm(_load_floor_value(sidecar))
         changed = False
@@ -352,8 +377,6 @@ def _force_floor(sidecar: str, pid: str, value: int, partitioned: bool) -> bool:
     from 'never written'. Returns False when the write failed (read-only
     source dir) — the caller must warn, because a restarted reader will
     then re-detect the loss and may permanently swallow post-loss appends."""
-    from .replay_source import _WATERMARK_LOCK, _write_watermark_unlocked
-
     with _WATERMARK_LOCK:
         cur = _pm(_load_floor_value(sidecar))
         cur[pid] = int(value)
@@ -361,13 +384,23 @@ def _force_floor(sidecar: str, pid: str, value: int, partitioned: bool) -> bool:
 
 
 def _clear_floor(sidecar: str) -> None:
-    from .replay_source import _clear_watermark
-
-    _clear_watermark(sidecar)
+    """Best-effort sidecar removal — a FRESH query (empty offset log)
+    starts a new delivery lineage, and an inherited floor from a previous
+    lineage would defeat paced first batches (and, for a path-keyed
+    sidecar, leak another query's progress into this one)."""
+    with _WATERMARK_LOCK:
+        try:
+            os.unlink(sidecar)
+        except OSError:
+            pass
 
 
 def _warn_floor_reset(sidecar: str, namespaced: bool) -> None:
-    """Partition-map-aware twin of replay_source._warn_unnamespaced_reset."""
+    """Warn when a fresh query is about to clear a shared (un-namespaced)
+    sidecar that holds another lineage's durable floor — the reset silently
+    downgrades that other query to the single-restart offset-log-clip
+    guarantee. Namespaced (commit_id) sidecars are per-lineage by
+    construction, so no warning there."""
     if namespaced:
         return
     val = _load_floor_value(sidecar)
@@ -522,11 +555,11 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
         self.fail_on_data_loss = (
             str(options.get("failOnDataLoss", "true")).lower() != "false"
         )
-        # Durable committed-offset floor — same two-restart hazard and same
-        # sidecar mechanism as the jsonl replay source (replay_source.py::
-        # _load_watermark): a paced reader's in-memory cursor regresses on
+        # Durable committed-offset floor (``<topic>.kafka_commit``
+        # sidecar): a paced reader's in-memory cursor regresses on
         # restart, and only a persisted committed end keeps latestOffset
-        # from ever reporting (and Spark from ever logging) a regressed one.
+        # from ever reporting (and Spark from ever logging) a regressed
+        # one, across any number of restarts.
         # One sidecar PER TOPIC (pattern subscription discovers topics
         # dynamically; each holds that topic's per-partition floor map).
         cid = options.get("commit_id")
@@ -609,9 +642,11 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
         return _pm(d[t]) if t in d else {}
 
     def initialOffset(self) -> dict:
-        # fresh query (no offset log) = new delivery lineage: drop any
-        # inherited floor — see replay_source initialOffset for rationale
-        # (including the un-namespaced shared-sidecar reset warning)
+        # Called only for a fresh query (no offset log) = new delivery
+        # lineage: drop any inherited floor, which would otherwise collapse
+        # the previously-consumed range into one unpaced first batch. An
+        # un-namespaced sidecar may hold a concurrent query's floor, so
+        # clearing one warns (_warn_floor_reset); use commit_id per query.
         offsets: dict = {}
         root = self.options.get("kafka.bootstrap.servers")
         for d in self._topic_dirs():
@@ -850,8 +885,8 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
                     if val is not None and _pm(val).get(p) == e:
                         self._loss_reset[(t, p)] = e
                         s = e
-                # same restart-safe high-watermark clip as the jsonl replay
-                # source: `start` is committed, never re-emit below it
+                # restart-safe high-watermark clip: `start` comes from the
+                # offset log, so it is committed; never re-emit below it
                 hw = max(hwpm.get(p, 0), s)
                 eff_start, eff_end = hw, max(e, hw)
                 hwpm[p] = eff_end

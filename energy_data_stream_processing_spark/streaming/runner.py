@@ -37,6 +37,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from contextlib import nullcontext
 
 import numpy as np
 import pandas as pd
@@ -246,6 +247,13 @@ HOURS_STATE_PARTITIONS = 8
 LAST_STREAM_PROGRESS: dict | None = None
 
 
+def _state_partitions(spark: SparkSession, n: int | None):
+    """``spark.sql.shuffle.partitions`` scoped to ``n`` (no-op when None)."""
+    if n is None:
+        return nullcontext()
+    return _conf_override(spark, "spark.sql.shuffle.partitions", str(n))
+
+
 def run_stream_to_table(
     spark: SparkSession,
     streaming_df: DataFrame,
@@ -272,10 +280,7 @@ def run_stream_to_table(
     # query's progress behind for a caller to mis-validate against
     LAST_STREAM_PROGRESS = None
     name = f"sink_{uuid.uuid4().hex[:8]}"
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with _state_partitions(spark, state_partitions):
         q = (
             streaming_df.writeStream.format("memory")
             .queryName(name)
@@ -285,9 +290,6 @@ def run_stream_to_table(
         )
         q.awaitTermination()
         LAST_STREAM_PROGRESS = q.lastProgress
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
     return spark.table(name)
 
 
@@ -337,10 +339,7 @@ def run_stream_foreach_batch(
     ``LAST_STREAM_PROGRESS`` behavior; returns the final progress."""
     global LAST_STREAM_PROGRESS
     LAST_STREAM_PROGRESS = None
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with _state_partitions(spark, state_partitions):
         q = (
             streaming_df.writeStream.foreachBatch(fn)
             .outputMode(mode)
@@ -350,9 +349,6 @@ def run_stream_foreach_batch(
         )
         q.awaitTermination()
         LAST_STREAM_PROGRESS = q.lastProgress
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
     return LAST_STREAM_PROGRESS
 
 

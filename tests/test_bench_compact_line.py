@@ -45,12 +45,6 @@ def _synthetic_result(n_alerts: int = 5, extra_queries: int = 0) -> dict:
         "ladder": {"value": 14.5},
         "ladder100": {"value": 31.2},
         "streaming_replay_sec": 12.3,
-        "streaming_replay_sharded_sec": 15.6,
-        "replay_sharded_hot": {
-            "sharded_sec": 14.3,
-            "bounded_sec": 21.0,
-            "bounded_over_sharded": 1.47,
-        },
         "curation_pipeline_sec": 3.21,
         "curation_ladder_sec": 9.87,
     }
@@ -73,9 +67,6 @@ def test_budget_holds_with_max_alerts():
     assert c["gate"]["alerts_more"] == 2
     # inline alerts are the triage number only, not the full payload
     assert all(isinstance(v, float) for v in c["gate"]["alerts"].values())
-    # the hot rung collapses to one comparable number + one ratio
-    assert c["rungs_sec"]["replay_hot"] == 14.3
-    assert c["hot_win"] == 1.47
     # every rung is also canary-normalized (cross-round comparisons)
     assert set(c["rungs_per_canary"]) == set(c["rungs_sec"])
 

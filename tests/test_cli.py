@@ -248,3 +248,39 @@ def test_cli_kill_and_resume(spark, events_file, tmp_path, capsys, monkeypatch):
         f.writelines(head)
     with pytest.raises(ValueError, match="the input shrank"):
         main(cmd)
+
+
+def _tree(root):
+    """Every file under ``root`` with its bytes."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+    return out
+
+
+def test_output_of_the_pre_staging_cli_is_refused(events_file, tmp_path):
+    """An output whose checkpoint was written by the CLI that streamed the
+    input through a Python source (line offsets, no ``_replay/`` segments)
+    is refused with a ``ValueError`` naming the output, before anything is
+    staged or written; its files stay as they were. A genuine killed drain
+    (checkpoint and staged segments) still resumes: test_cli_kill_and_resume."""
+    out = tmp_path / "old"
+    ckpt = out / "_checkpoint"
+    for sub in ("offsets", "commits"):
+        (ckpt / sub).mkdir(parents=True)
+    (ckpt / "metadata").write_text('{"id":"b7dfe3c1-4002-4bb8-947c-21a99c6c22af"}')
+    (ckpt / "offsets" / "0").write_text(
+        'v1\n{"batchWatermarkMs":0,"batchTimestampMs":1792287625280,"conf":{}}\n{"line": 20}')
+    (ckpt / "commits" / "0").write_text('v1\n{"nextBatchWatermarkMs":0}')
+    (out / "dead_letter" / "_batch_id=0").mkdir(parents=True)
+    (out / "dead_letter" / "_batch_id=0" / "part-00000.json").write_text(
+        '{"raw":"{broken json","reason":"Malformed JSON"}\n')
+    before = _tree(out)
+
+    with pytest.raises(ValueError, match=rf"{re.escape(str(out))} holds a streaming checkpoint"):
+        main(["pipeline", "--input", events_file, "--output", str(out),
+              "--streaming", "--lines-per-batch", "20"])
+    assert _tree(out) == before
+    assert not (out / "_replay").exists()

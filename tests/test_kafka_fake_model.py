@@ -220,130 +220,6 @@ def test_truncation_with_fail_on_data_loss_true_raises(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# The SAME law for the jsonl replay source: separate code path (line-offset
-# protocol, paced batches, its own partitions/latestOffset), same offset-WAL
-# contract. The harness adapts over the offset-dict shape.
-# ---------------------------------------------------------------------------
-class _ReplayHarness:
-    """Driver twin for `_ReplayStreamReader` (offsets {'line': n}); records
-    are jsonl events whose payload carries the global id. The file only
-    GROWS (the replay source models a fixed file read line-by-line, so
-    'produce' = append lines)."""
-
-    def __init__(self, root: str, per_batch: int = 3):
-        from energy_data_stream_processing_spark.sources.replay_source import (
-            _ReplayStreamReader,
-        )
-
-        self._cls = _ReplayStreamReader
-        self.path = os.path.join(root, "events.jsonl")
-        open(self.path, "w").close()
-        self.opts = {"path": self.path, "lines_per_batch": str(per_batch)}
-        self.produced = 0
-        self.log: list[int] = [0]
-        self.committed_idx = 0
-        self.deliveries: list[tuple[int, list[int]]] = []
-        self.reader = self._cls(self.opts)
-        self.reader.initialOffset()
-
-    def produce(self, k: int) -> None:
-        with open(self.path, "a") as f:
-            for _ in range(k):
-                f.write(
-                    json.dumps(
-                        {
-                            "event_type": "t",
-                            "event_time": "2024-01-01",
-                            "payload": {"id": self.produced},
-                        }
-                    )
-                    + "\n"
-                )
-                self.produced += 1
-
-    def _ids(self, parts) -> list[int]:
-        out = []
-        for p in parts:
-            for row in self.reader.read(p):
-                # row: (line_no, valid, reason, event_type, event_time,
-                #       payload_json, raw)
-                out.append(json.loads(row[5])["id"])
-        return out
-
-    def _run_batch(self, log_idx: int) -> None:
-        parts = self.reader.partitions(
-            {"line": self.log[log_idx - 1]}, {"line": self.log[log_idx]}
-        )
-        self.deliveries.append((log_idx, self._ids(parts)))
-        self.reader.commit({"line": self.log[log_idx]})
-        self.committed_idx = log_idx
-
-    def trigger(self) -> None:
-        for i in range(self.committed_idx + 1, len(self.log)):
-            self._run_batch(i)
-        end = int(self.reader.latestOffset()["line"])
-        if end != self.log[-1]:
-            self.log.append(end)
-            self._run_batch(len(self.log) - 1)
-
-    def crash_after_wal(self) -> None:
-        end = int(self.reader.latestOffset()["line"])
-        if end != self.log[-1]:
-            self.log.append(end)
-            parts = self.reader.partitions(
-                {"line": self.log[-2]}, {"line": end}
-            )
-            self.deliveries.append((len(self.log) - 1, self._ids(parts)))
-        self.reader = self._cls(self.opts)
-
-    def restart(self) -> None:
-        self.reader = self._cls(self.opts)
-
-    def drain(self) -> None:
-        # the replay source reads a FIXED file (total cached at reader
-        # construction); growth becomes visible on restart — the source's
-        # documented append-then-restart pattern — so drain restarts first
-        self.restart()
-        for _ in range(64):
-            before = (self.committed_idx, self.log[-1])
-            self.trigger()
-            if (self.committed_idx, self.log[-1]) == before:
-                break
-
-
-@settings(max_examples=120, deadline=None)
-@given(ops=st.lists(OP, min_size=1, max_size=14))
-def test_replay_source_exactly_once_tiling(ops, tmp_path_factory):
-    """Identical law over the jsonl replay source's line-offset protocol."""
-    h = _ReplayHarness(str(tmp_path_factory.mktemp("replay")))
-    for op in ops:
-        if op.startswith("p"):
-            h.produce(int(op[1]))
-        elif op == "trigger":
-            h.trigger()
-        elif op == "crash":
-            h.crash_after_wal()
-        else:
-            h.restart()
-    h.drain()
-
-    assert h.log == sorted(h.log), h.log
-    per_batch: dict[int, list[list[int]]] = {}
-    for idx, ids in h.deliveries:
-        want = list(range(h.log[idx - 1], h.log[idx]))
-        assert ids == want, f"batch {idx}: delivered {ids}, WAL range {want}"
-        per_batch.setdefault(idx, []).append(ids)
-    for idx, runs in per_batch.items():
-        assert all(r == runs[0] for r in runs), f"batch {idx} replay diverged"
-    covered = [
-        i
-        for idx in range(1, h.committed_idx + 1)
-        for i in range(h.log[idx - 1], h.log[idx])
-    ]
-    assert covered == list(range(h.produced))
-
-
-# ---------------------------------------------------------------------------
 # Round 8: the SAME law over a PARTITIONED topic (N=3) — the real
 # connector's offset shape. A topic is N independent offset sequences; the
 # WAL entries are per-partition maps, and the exactly-once tiling must hold

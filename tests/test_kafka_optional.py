@@ -249,7 +249,7 @@ def test_fake_kafka_stream_checkpoint_restart_no_duplicates(fake_broker, sf_dir,
     broker: drain once with maxOffsetsPerTrigger pacing, stop, restart a
     second query on the SAME checkpoint (fresh reader — pacing cursor
     resets). Zero rows may re-emit: the high-watermark clip must hold for
-    the kafka-contract reader exactly as it does for jsonl_replay."""
+    the kafka-contract reader."""
     from energy_data_stream_processing_spark.sources.kafka import (
         kafka_stream_source,
         write_kafka_batch,
@@ -735,9 +735,6 @@ def test_fake_kafka_foreign_unnamespaced_sidecar_does_not_brick(
     from energy_data_stream_processing_spark.sources.kafka_fake import (
         _FakeKafkaStreamReader,
     )
-    from energy_data_stream_processing_spark.sources.replay_source import (
-        _store_watermark,
-    )
 
     root = tmp_path / "broker"
     (root / "ev-one").mkdir(parents=True)
@@ -745,7 +742,7 @@ def test_fake_kafka_foreign_unnamespaced_sidecar_does_not_brick(
         _json.dumps({"key": None, "value": "dGVzdA=="}) + "\n"
     )
     # another lineage's un-namespaced sidecar for a long-gone topic
-    _store_watermark(str(root / "ev-tmp.kafka_commit"), "offset", 5)
+    (root / "ev-tmp.kafka_commit").write_text(_json.dumps({"offset": 5}))
 
     opts = {"kafka.bootstrap.servers": str(root), "subscribePattern": "ev-.*"}
     r = _FakeKafkaStreamReader(opts)  # failOnDataLoss defaults to true

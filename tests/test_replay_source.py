@@ -1,5 +1,6 @@
-"""Custom Python DataSource (jsonl_replay): producer-parity verdicts,
-stream≡batch law, deterministic shuffle, checkpoint-resumable pacing."""
+"""Paced JSONL replay: producer-parity verdicts of the ``jsonl_replay``
+batch source, stream≡batch law and checkpoint-resumable pacing of
+``replay_stream``, deterministic shuffle, segment staging."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 
 from energy_data_stream_processing_spark.sources.replay_source import (
     JsonlReplayDataSource,
+    replay_stream,
 )
 
 LINES = [
@@ -55,8 +57,9 @@ def test_batch_verdicts_match_producer_semantics(registered, fixture_path):
 
 
 def test_stream_equals_batch_and_paces(registered, fixture_path, tmp_path):
-    """Drained stream == batch scan (same rows), delivered across multiple
-    paced micro-batches of lines_per_batch lines."""
+    """Drained stream == batch scan (same rows), delivered in paced
+    micro-batches of lines_per_batch lines: 7 lines at 3 per batch are 3
+    batches."""
     batch = sorted(
         map(
             tuple,
@@ -74,10 +77,7 @@ def test_stream_equals_batch_and_paces(registered, fixture_path, tmp_path):
             seen_batches.append(sorted(map(tuple, rows)))
 
     q = (
-        registered.readStream.format("jsonl_replay")
-        .option("path", fixture_path)
-        .option("lines_per_batch", "3")
-        .load()
+        replay_stream(registered, fixture_path, str(tmp_path / "_replay"), 3)
         .writeStream.foreachBatch(fold)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -88,8 +88,7 @@ def test_stream_equals_batch_and_paces(registered, fixture_path, tmp_path):
         q.stop()
     streamed = sorted(t for b in seen_batches for t in b)
     assert streamed == batch
-    assert len(seen_batches) >= 3  # 7 lines at 3/batch => at least 3 batches
-    assert all(len(b) <= 3 for b in seen_batches)
+    assert [len(b) for b in seen_batches] == [3, 3, 1]
 
 
 def test_shuffle_is_deterministic_and_complete(registered, fixture_path):
@@ -106,12 +105,10 @@ def test_shuffle_is_deterministic_and_complete(registered, fixture_path):
 
 
 def test_stream_checkpoint_restart_no_duplicates(registered, fixture_path, tmp_path):
-    """END-TO-END restart through Spark's own offset log: drain the stream
-    once against a checkpoint, stop, then start a SECOND query on the SAME
-    checkpoint (fresh reader instance — the in-memory pacing cursor resets
-    to 0). The restarted query must emit ZERO rows: everything was
-    committed, and the high-watermark clip must prevent the stale cursor
-    from re-emitting committed lines as duplicates."""
+    """END-TO-END restart through Spark's own checkpoint: drain the stream
+    once, stop, then start a SECOND query on the SAME checkpoint and
+    segment directory. The restarted query must emit ZERO rows: every
+    segment is in the seen-files log, so none is read again."""
     ckpt = str(tmp_path / "ckpt")
     seen: list[tuple] = []
 
@@ -120,10 +117,7 @@ def test_stream_checkpoint_restart_no_duplicates(registered, fixture_path, tmp_p
 
     def run_once():
         q = (
-            registered.readStream.format("jsonl_replay")
-            .option("path", fixture_path)
-            .option("lines_per_batch", "2")
-            .load()
+            replay_stream(registered, fixture_path, str(tmp_path / "_replay"), 2)
             .writeStream.foreachBatch(fold)
             .option("checkpointLocation", ckpt)
             .start()
@@ -136,14 +130,14 @@ def test_stream_checkpoint_restart_no_duplicates(registered, fixture_path, tmp_p
     run_once()
     n_first = len(seen)
     assert n_first == 7  # full file drained
-    run_once()  # restart from the same checkpoint with a fresh reader
+    run_once()  # restart from the same checkpoint
     assert len(seen) == n_first, (
         f"restart re-emitted {len(seen) - n_first} committed lines"
     )
 
 
-def _rows_by_full_read(path, seed, start, end):
-    """Reference read: the whole file and the full md5 order per call."""
+def _rows_by_full_read(path, seed):
+    """Reference read: the whole file in the full md5 order."""
     import hashlib
 
     from energy_data_stream_processing_spark.sources.replay_source import _parse_line
@@ -153,39 +147,26 @@ def _rows_by_full_read(path, seed, start, end):
     order = list(range(len(lines)))
     if seed is not None:
         order.sort(key=lambda i: hashlib.md5(f"{seed}:{i}".encode()).hexdigest())
-    return [_parse_line(pos, lines[order[pos]]) for pos in range(start, end)]
+    return [_parse_line(pos, lines[i]) for pos, i in enumerate(order)]
 
 
 @pytest.mark.parametrize("seed", [None, "s1"])
 def test_range_reads_match_full_file_reads(tmp_path, seed):
-    """Readers plan the line order once and read only up to the last line a
-    range needs; every range still yields the rows a full read gives."""
+    """The batch reader yields, in replay order, the rows a reference read
+    of the whole file in md5(seed:line_no) order gives."""
     from energy_data_stream_processing_spark.sources.replay_source import (
         _ReplayBatchReader,
-        _ReplayStreamReader,
     )
 
     path = str(tmp_path / "events.jsonl")
     with open(path, "w") as f:
         for i in range(40):
             f.write(LINES[i % len(LINES)].replace("C1", f"C{i}") + "\n")
-    opts = {"path": path, "lines_per_batch": "7"}
+    opts = {"path": path}
     if seed is not None:
         opts["shuffle_seed"] = seed
 
-    (whole,) = _ReplayBatchReader(opts).partitions()
-    assert list(_ReplayBatchReader(opts).read(whole)) == _rows_by_full_read(path, seed, 0, 40)
-
-    # contiguous batches from one reader, then resumed ranges on fresh ones
-    stream = _ReplayStreamReader(opts)
-    stream.initialOffset()
-    for start, end in [(0, 7), (7, 14), (14, 15), (15, 40)]:
-        (part,) = stream.partitions({"line": start}, {"line": end})
-        assert list(stream.read(part)) == _rows_by_full_read(path, seed, start, end)
-    for start, end in [(3, 9), (21, 40), (39, 40), (12, 12)]:
-        fresh = _ReplayStreamReader(opts)
-        (part,) = fresh.partitions({"line": start}, {"line": end})
-        assert list(fresh.read(part)) == _rows_by_full_read(path, seed, start, end)
+    assert list(_ReplayBatchReader(opts).read(None)) == _rows_by_full_read(path, seed)
 
 
 def test_staged_rows_equal_jsonl_replay_rows(registered, tmp_path):
@@ -247,3 +228,16 @@ def test_stage_replay_extends_a_grown_input_and_refuses_a_mismatch(tmp_path):
     p.write_text("\n".join(LINES) + "\n")
     with pytest.raises(ValueError, match=rf"{re.escape(str(p))}.*11 lines.*shrank"):
         stage_replay(str(p), seg_dir, 3)
+
+
+def test_streaming_schema_resolves_for_the_batch_source(registered, fixture_path):
+    """A streaming load of ``jsonl_replay`` still resolves the source's
+    schema through its Python planner, with no stream reader: the
+    benchmark's ingest set-up registers the source and asks for it."""
+    from pyspark.sql.types import StructType
+
+    from energy_data_stream_processing_spark.sources.replay_source import REPLAY_SCHEMA
+
+    frame = registered.readStream.format("jsonl_replay").option("path", fixture_path).load()
+    assert frame.isStreaming
+    assert frame.schema == StructType.fromDDL(REPLAY_SCHEMA)

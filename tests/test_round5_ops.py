@@ -1,53 +1,12 @@
 """Round-5 hardening: SCD2 replay idempotence (at-least-once delivery),
-replay-source restart without duplicate emission, candidate-verification
-broadcast-size guard, IVF hash-mod training-sample determinism."""
+candidate-verification broadcast-size guard, IVF hash-mod training-sample
+determinism."""
 
 from __future__ import annotations
 
-import json
-
-import pytest
 from pyspark.sql import functions as F
 
 from energy_data_stream_processing_spark.sources.sinks import _conf_override
-
-_N_LINES = 9
-
-
-@pytest.fixture()
-def replay_fixture(tmp_path):
-    p = tmp_path / "events.jsonl"
-    lines = [
-        json.dumps(
-            {
-                "event_type": "user_login",
-                "event_time": f"2024-01-01T00:00:{i:02d}",
-                "payload": {"customer_id": f"C{i}"},
-            }
-        )
-        for i in range(_N_LINES)
-    ]
-    p.write_text("\n".join(lines) + "\n")
-    return str(p)
-
-
-@pytest.fixture()
-def fixture_len(replay_fixture):
-    return _N_LINES
-
-
-@pytest.fixture()
-def make_reader(replay_fixture):
-    from energy_data_stream_processing_spark.sources.replay_source import (
-        _ReplayStreamReader,
-    )
-
-    def make(per_batch: int):
-        return _ReplayStreamReader(
-            {"path": replay_fixture, "lines_per_batch": str(per_batch)}
-        )
-
-    return make
 
 
 def _scd2_state(spark, store):
@@ -82,51 +41,6 @@ def test_scd2_increment_replay_idempotent(spark, sf_dir, tmp_path):
     cols = ["customer_id", "tariff_type", "valid_from", "valid_to", "version", "is_current"]
     want = sorted(map(tuple, scd2_build(sw).select(*cols).collect()))
     assert twice == once == want
-
-
-def test_replay_stream_restart_emits_no_duplicates(fixture_len, make_reader):
-    """Checkpoint-restart simulation: the in-memory pacing cursor resets to
-    0, so the first latestOffset after restart can fall BEHIND the committed
-    offset. The reader must (a) emit nothing for the stale range Spark plans
-    from the offset log, and (b) resume emission exactly at the committed
-    line — no duplicates, no gaps — once pacing catches up."""
-    total = fixture_len
-    per_batch = 2
-    committed = 4  # a prior run committed lines [0, 4)
-    assert committed < total
-
-    r = make_reader(per_batch)
-    emitted = []
-    prev_end = committed
-    # Restart: Spark calls latestOffset() on the fresh reader FIRST — the
-    # stale cursor yields an offset behind the committed one.
-    stale = r.latestOffset()
-    assert stale["line"] <= committed
-    for _ in range(20):
-        part = r.partitions({"line": prev_end}, stale)[0]
-        emitted.extend(row[0] for row in r.read(part))
-        prev_end = stale["line"]
-        if stale["line"] >= total and part.start >= part.end:
-            break
-        stale = r.latestOffset()
-    # every line from the committed offset onward exactly once, none before
-    assert sorted(emitted) == list(range(committed, total))
-    assert len(emitted) == len(set(emitted))
-
-
-def test_replay_stream_fresh_run_unaffected(fixture_len, make_reader):
-    """The restart guard must not change a normal fresh run: all lines
-    emitted exactly once in paced batches."""
-    r = make_reader(3)
-    emitted, prev = [], 0
-    for _ in range(20):
-        end = r.latestOffset()
-        part = r.partitions({"line": prev}, end)[0]
-        emitted.extend(row[0] for row in r.read(part))
-        if end["line"] == prev:
-            break
-        prev = end["line"]
-    assert sorted(emitted) == list(range(fixture_len))
 
 
 def test_lsh_broadcast_guard_fallback_engages(spark):

@@ -1,6 +1,7 @@
-"""Round-6 hardening: durable commit watermark across TWO restarts (replay
-source + fake broker), per-session staging isolation, composed
-LSH-candidate semantic dedup, single-corpus-scan BPE plan."""
+"""Round-6 hardening: replay restart after the input grew, durable commit
+watermark across TWO restarts (fake broker), per-session staging
+isolation, composed LSH-candidate semantic dedup, single-corpus-scan BPE
+plan."""
 
 from __future__ import annotations
 
@@ -28,122 +29,17 @@ def replay_fixture(tmp_path):
     return str(p)
 
 
-def _make_replay_reader(path, per_batch):
-    from energy_data_stream_processing_spark.sources.replay_source import (
-        _ReplayStreamReader,
-    )
-
-    return _ReplayStreamReader({"path": path, "lines_per_batch": str(per_batch)})
-
-
-def test_replay_two_restart_exactly_once(replay_fixture):
-    """The double-restart hazard the in-run clip alone cannot close: run 1
-    commits [0, 4); restart #1's fresh reader has a regressed in-memory
-    cursor, and WITHOUT a durable floor it reports latestOffset=2, Spark
-    logs that as a batch end, and restart #2 then plans from offset 2 and
-    re-emits committed lines 2..4. With the sidecar floor, no reader
-    incarnation can ever report an offset below a committed one, so the
-    offset log stays monotone across ANY number of restarts."""
-    per_batch = 2
-    emitted = []
-
-    # run 1: two paced batches, committed through line 4
-    r1 = _make_replay_reader(replay_fixture, per_batch)
-    prev = 0
-    for _ in range(2):
-        end = r1.latestOffset()
-        part = r1.partitions({"line": prev}, end)[0]
-        emitted.extend(row[0] for row in r1.read(part))
-        r1.commit(end)
-        prev = end["line"]
-    assert prev == 4 and sorted(emitted) == list(range(4))
-
-    # restart #1: fresh reader (cursor regressed to 0). THE FIX: the durable
-    # floor keeps the first reported offset at-or-above the committed end.
-    r2 = _make_replay_reader(replay_fixture, per_batch)
-    first = r2.latestOffset()
-    assert first["line"] >= 4, (
-        f"regressed offset {first['line']} reported after restart — "
-        "would enter the offset log and replay on the next restart"
-    )
-    prev = 4  # Spark plans from the committed offset-log entry
-    end = first
-    for _ in range(20):
-        part = r2.partitions({"line": prev}, end)[0]
-        emitted.extend(row[0] for row in r2.read(part))
-        r2.commit(end)
-        prev = end["line"]
-        if prev >= _N_LINES:
-            break
-        end = r2.latestOffset()
-    assert sorted(emitted) == list(range(_N_LINES))
-
-    # restart #2: everything is committed — a third incarnation must report
-    # >= total and emit nothing from the (total, latest) range.
-    r3 = _make_replay_reader(replay_fixture, per_batch)
-    latest = r3.latestOffset()
-    assert latest["line"] >= _N_LINES
-    part = r3.partitions({"line": _N_LINES}, latest)[0]
-    assert list(r3.read(part)) == []
-    assert len(emitted) == len(set(emitted)) == _N_LINES
-
-
-def test_replay_commit_unwritable_sidecar_degrades_gracefully(replay_fixture):
-    """An unwritable sidecar location must not fail commit(): the write is
-    best-effort — the reader degrades to the in-run clip instead of
-    erroring the query. (chmod can't model this under root, so point the
-    sidecar at a path that cannot exist: a directory under /dev/null.)"""
-    r = _make_replay_reader(replay_fixture, 2)
-    r.sidecar = "/dev/null/cannot/exist.json"
-    end = r.latestOffset()
-    r.commit(end)  # must not raise despite the OSError inside
-    assert r._floor == end["line"]  # in-memory floor still advances
-
-
-def test_replay_fresh_query_resets_floor_and_paces(replay_fixture):
-    """A FRESH query (Spark calls initialOffset only when the offset log is
-    empty) is a new delivery lineage: the inherited sidecar floor must be
-    dropped so the replay is paced from line 0 again, not collapsed into
-    one giant first batch."""
-    import os
-
-    r1 = _make_replay_reader(replay_fixture, 2)
-    r1.commit({"line": _N_LINES})  # prior query fully drained the file
-
-    r2 = _make_replay_reader(replay_fixture, 2)
-    assert r2._floor == _N_LINES  # restart incarnation would keep the floor
-    # ...but a FRESH query resets the lineage — and (round 7) warns, since
-    # an un-namespaced sidecar might belong to a concurrent query
-    with pytest.warns(RuntimeWarning, match="un-namespaced commit sidecar"):
-        first = r2.initialOffset()
-    assert first == {"line": 0}
-    assert r2.latestOffset()["line"] == 2  # paced again
-    assert not os.path.exists(r2.sidecar)
-
-
-def test_replay_commit_sidecar_is_monotone(replay_fixture):
-    """A late commit of an older (regressed) batch end must not move the
-    durable floor backwards."""
-    r = _make_replay_reader(replay_fixture, 3)
-    r.commit({"line": 6})
-    r.commit({"line": 2})  # stale/out-of-order commit
-    r2 = _make_replay_reader(replay_fixture, 3)
-    assert r2.latestOffset()["line"] >= 6
-
-
 def test_replay_restart_with_file_growth_e2e(spark, replay_fixture, tmp_path):
-    """END-TO-END through Spark's own offset log: drain the replay stream,
-    stop, APPEND new lines to the file, restart from the same checkpoint.
-    The fresh reader's pacing cursor is reset to 0, so without the durable
-    committed floor its latestOffset would regress below the committed
-    offset and the appended lines would be invisible (or, across two
-    restarts, old lines re-emitted). With the floor the restarted query
-    must emit EXACTLY the appended lines, once, immediately."""
+    """END-TO-END through Spark's own checkpoint: drain the replay stream,
+    stop, APPEND new lines to the file, restart from the same checkpoint
+    and segment directory. The restart stages only the appended lines as
+    new segments, and the seen-files log skips the drained ones, so the
+    restarted query must emit EXACTLY the appended lines, once; a third
+    run with nothing new must emit nothing."""
     from energy_data_stream_processing_spark.sources.replay_source import (
-        JsonlReplayDataSource,
+        replay_stream,
     )
 
-    spark.dataSource.register(JsonlReplayDataSource)
     ckpt = str(tmp_path / "ckpt")
     seen: list = []
 
@@ -152,10 +48,7 @@ def test_replay_restart_with_file_growth_e2e(spark, replay_fixture, tmp_path):
 
     def run_once():
         q = (
-            spark.readStream.format("jsonl_replay")
-            .option("path", replay_fixture)
-            .option("lines_per_batch", "2")
-            .load()
+            replay_stream(spark, replay_fixture, str(tmp_path / "_replay"), 2)
             .writeStream.foreachBatch(fold)
             .option("checkpointLocation", ckpt)
             .start()

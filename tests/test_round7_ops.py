@@ -5,8 +5,7 @@ Covers the round-6 verdict items and ADVICE findings:
   row of round 6 — pandas sort_values cannot canonicalize array cells);
 - the self-gate's new driver-semantics canonicalization check (red on a
   deliberately array-outputting result, green on scalars);
-- replay/kafka-fake un-namespaced sidecar reset warning (ADVICE 1);
-- `_load_watermark` degrading to 0 on wrong-shape JSON (ADVICE 2);
+- kafka-fake un-namespaced sidecar reset warning (ADVICE 1);
 - LakeTable bounded per-app-id txn map, Delta txnAppId/txnVersion
   semantics + legacy list-snapshot compat (ADVICE 3);
 - `CoordinatedLogStore` (object-store commit protocol) conflict and
@@ -18,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import warnings
 
 import pytest
 
@@ -26,11 +24,6 @@ from energy_data_stream_processing_spark.sources.laketable import (
     CommitConflict,
     CoordinatedLogStore,
     LakeTable,
-)
-from energy_data_stream_processing_spark.sources.replay_source import (
-    _load_watermark,
-    _ReplayStreamReader,
-    _store_watermark,
 )
 
 
@@ -108,67 +101,16 @@ def test_self_gate_behavior_pass_catches_unhashable_rows():
 
 
 # ---------------------------------------------------------------------------
-# replay source: sidecar lineage warning + wrong-shape watermark JSON
+# fake broker: sidecar lineage warning
 # ---------------------------------------------------------------------------
-def test_load_watermark_degrades_on_wrong_shape_json(tmp_path):
-    """'0 when absent/corrupt' must include VALID JSON of the wrong shape:
-    null value (int(None) TypeError), top-level list (.get AttributeError),
-    scalar, and non-numeric string — none may raise out of the reader."""
-    side = str(tmp_path / "wm.json")
-    for content in ['{"line": null}', "[1, 2, 3]", "42", '"zap"', '{"line": "x"}']:
-        with open(side, "w") as f:
-            f.write(content)
-        assert _load_watermark(side, "line") == 0, content
-    with open(side, "w") as f:
-        f.write('{"line": 7}')
-    assert _load_watermark(side, "line") == 7
-
-
-def _replay_file(tmp_path, n=10):
-    p = str(tmp_path / "events.jsonl")
-    with open(p, "w") as f:
-        for i in range(n):
-            f.write(
-                json.dumps(
-                    {"event_type": "t", "event_time": "2024-01-01", "payload": {"i": i}}
-                )
-                + "\n"
-            )
-    return p
-
-
-def test_unnamespaced_sidecar_reset_warns(tmp_path):
-    """A fresh query resetting another lineage's un-namespaced durable
-    floor must warn (ADVICE 1) — silent downgrade to the single-restart
-    guarantee was the hazard."""
-    path = _replay_file(tmp_path)
-    _store_watermark(f"{path}.replay_commit", "line", 5)  # prior lineage's floor
-    reader = _ReplayStreamReader({"path": path})
-    with pytest.warns(RuntimeWarning, match="un-namespaced commit sidecar"):
-        assert reader.initialOffset() == {"line": 0}
-    # the reset itself still happens (fresh lineage semantics unchanged)
-    assert _load_watermark(f"{path}.replay_commit", "line") == 0
-
-
-def test_namespaced_or_floorless_reset_does_not_warn(tmp_path):
-    path = _replay_file(tmp_path)
-    # commit_id namespacing: per-lineage sidecar, reset is private -> quiet
-    _store_watermark(f"{path}.replay_commit.q1", "line", 5)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        _ReplayStreamReader({"path": path, "commit_id": "q1"}).initialOffset()
-        # no sidecar at all -> nothing to clobber -> quiet
-        _ReplayStreamReader({"path": path}).initialOffset()
-
-
 def test_kafka_fake_unnamespaced_reset_warns(tmp_path):
     from energy_data_stream_processing_spark.sources.kafka_fake import (
         _FakeKafkaStreamReader,
     )
 
     (tmp_path / "broker" / "topic").mkdir(parents=True)
-    sidecar = str(tmp_path / "broker" / "topic.kafka_commit")
-    _store_watermark(sidecar, "offset", 3)
+    with open(tmp_path / "broker" / "topic.kafka_commit", "w") as f:
+        json.dump({"offset": 3}, f)  # prior lineage's floor
     reader = _FakeKafkaStreamReader(
         {"kafka.bootstrap.servers": str(tmp_path / "broker"), "subscribe": "topic"}
     )
