@@ -389,12 +389,7 @@ def main() -> None:
         ladder: dict[str, float] = {}
         for name in ladder_queries:
             t0 = time.perf_counter()
-            # customer_view auto-dispatches on measured density since round
-            # 10; the ladder's job is to measure the NAMED plans, so pin the
-            # single-shuffle variant explicitly (auto itself is tested in
-            # tests/test_round10_ops.py, not timed here).
-            kw = {"variant": "single"} if name == "customer_view" else {}
-            catalog[name].builder(spark, ladder_dir, **kw).write.format("noop").mode(
+            catalog[name].builder(spark, ladder_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             ladder[name] = round(time.perf_counter() - t0, 3)
@@ -478,8 +473,7 @@ def main() -> None:
             for _rep in range(5):
                 for name in l100_names:
                     t0 = time.perf_counter()
-                    kw = {"variant": "single"} if name == "customer_view" else {}
-                    catalog[name].builder(spark, ladder100_dir, **kw).write.format(
+                    catalog[name].builder(spark, ladder100_dir).write.format(
                         "noop"
                     ).mode("overwrite").save()
                     l100_reps[name].append(round(time.perf_counter() - t0, 3))

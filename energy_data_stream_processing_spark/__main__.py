@@ -21,12 +21,13 @@ one segment per micro-batch with checkpointed upserts
 batch. A re-run into the same output stages only lines the input gained and
 resumes from the checkpoint; a shrunk input, a changed
 ``--lines-per-batch``, or an output whose checkpoint predates segment
-staging is refused. Each micro-batch (``fold``) reads its source once: it
-tags every row with its reason and persists that, then runs only the jobs
-that write output (the dead letter, whose write also observes the
-valid/invalid counts; the raw landing, whose write observes the touched
-hours; the touched-hour recompute). The batch form takes its summary
-counts from observations on its writes too.
+staging is refused, and so is an output written by the other mode. Each
+micro-batch (``fold``) reads its source once: it tags every row with its
+reason and persists that, then runs only the jobs that write output (the
+dead letter, whose write also observes the valid/invalid counts; the raw
+landing, whose write observes the touched hours; the touched-hour
+recompute). The batch form takes its summary counts from observations on
+its writes too.
 """
 
 from __future__ import annotations
@@ -177,21 +178,40 @@ def cmd_pipeline(args) -> int:
     from .sources.jsonl import read_events_jsonl
     from .sources.sinks import write_quarantine, write_raw_events_parquet
 
-    spark = _spark()
     out = args.output.rstrip("/")
+    seg_dir = f"{out}/_replay"
+    # the two modes lay the stores out differently (streaming keys them by
+    # micro-batch: _increment_id=, _batch_id=, hour_key=), and a store
+    # mixing both layouts cannot be read, so each mode refuses the other's
+    # output before writing anything
+    streamed = os.path.exists(seg_dir) or os.path.exists(f"{out}/_checkpoint")
     if args.streaming:
-        from .sources.replay_source import replay_stream
-
         # staging precedes the query's first checkpoint write, so a
         # checkpoint without segments belongs to a CLI that read the input
         # through a Python stream source; its offsets cannot drive the file
         # source
-        seg_dir = f"{out}/_replay"
         if os.path.exists(f"{out}/_checkpoint") and not os.path.isdir(seg_dir):
             raise ValueError(
                 f"{out} holds a streaming checkpoint with no staged segments: "
                 "it was written before segment staging; use a fresh output"
             )
+        if not streamed and any(
+            os.path.exists(f"{out}/{d}") for d in ("raw_events", "dead_letter", "hourly_metrics")
+        ):
+            raise ValueError(
+                f"{out} was written by pipeline without --streaming: its "
+                "stores are not keyed by micro-batch; use a fresh output"
+            )
+    elif streamed:
+        raise ValueError(
+            f"{out} was written by pipeline --streaming: its stores are "
+            "keyed by micro-batch; use a fresh output"
+        )
+
+    spark = _spark()
+    if args.streaming:
+        from .sources.replay_source import replay_stream
+
         # producer: verdict-tagged segments, one per micro-batch; consumer:
         # Spark's file stream source, one segment per trigger
         stream = replay_stream(spark, args.input, seg_dir, args.lines_per_batch)

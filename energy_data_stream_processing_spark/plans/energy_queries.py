@@ -17,8 +17,6 @@ Scale notes are attached per query where the plan shape matters at 100 TB
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -272,240 +270,23 @@ FROM base b LEFT JOIN switch_top s USING (customer_id)
     "LIMIT 1 [OFFSET 1] subqueries are rewritten as one row_number window "
     "(Spark cannot express correlated LIMIT; semantics identical incl. NULLs "
     "when <2 switches). ARRAY_AGG DISTINCT becomes a sorted joined string for "
-    "deterministic cross-engine comparison. Scale swaps (both oracle-"
-    "identical, both on the bench ladder): customer_view_twophase — the "
-    "replicated high-density AND cardinality-skew winner (round-11 A/B, "
-    "SCALE.md §6) — and customer_view_prefilter, the explicit "
-    "second-scan swap. Since round 10 this entry dispatches on MEASURED "
-    "density (variant='auto'); since round 11 the probe answers from "
-    "Parquet footer metadata when decisive and the high-density pick is "
-    "twophase.",
+    "deterministic cross-engine comparison. One scan, one wide groupBy. Two "
+    "oracle-identical swaps are their own entries, both on the bench ladder: "
+    "customer_view_twophase, the measured winner at 10x and 100x "
+    "events-per-customer density and under customer cardinality skew "
+    "(round-11 A/B, SCALE.md §6), and customer_view_prefilter, the explicit "
+    "second-scan swap.",
 )
-def q_customer_view(
-    spark: SparkSession,
-    sf_dir: str,
-    variant: str = "auto",
-    events_per_customer: float | None = None,
-) -> DataFrame:
-    ev = energy_events(spark, sf_dir)
-    if variant == "auto" and events_per_customer is None:
-        # Memoized per dataset SNAPSHOT: the scan probe is an EAGER job,
-        # and this builder is called from plan-shape tests and the bench's
-        # cold+warm loop — without the cache every plan construction would
-        # re-pay it. Keyed on (realpath, events-file fingerprint) so a
-        # dataset rewritten in place (reused tmp dirs, growing fixtures)
-        # re-probes instead of dispatching on stale density (round-10
-        # advice). Common path first: the Parquet-footer lower bound
-        # answers WITHOUT any Spark job whenever it is decisive — exactly
-        # the high-density regime where a 100 TB caller cares about probe
-        # cost; the one-column scan+HLL job runs only when footers can't
-        # decide.
-        key = (os.path.realpath(sf_dir), _events_fingerprint(sf_dir))
-        if key not in _DENSITY_CACHE:
-            lb = events_per_customer_footer_lower_bound(sf_dir)
-            if lb is not None and lb >= CUSTOMER_VIEW_DENSITY_CROSSOVER:
-                _DENSITY_CACHE[key] = lb
-            else:
-                _DENSITY_CACHE[key] = estimate_events_per_customer(ev)
-        events_per_customer = _DENSITY_CACHE[key]
-    # Resolve the physical variant HERE (same rule as customer_view_dispatch)
-    # so the scan choice can follow it: the single/twophase plans run their
-    # wide collect_list/collect_set partials in the scan stage, which a
-    # single-row-group local layout serializes onto one task — the round-17
+def q_customer_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # rebalance: the single and twophase plans run their wide
+    # collect_list/collect_set partials in the scan stage, which a
+    # single-row-group local layout serializes onto one task; the round-17
     # interleaved A/B (5 reps, results asserted identical) measured the
     # layout-adaptive rebalance at 0.79x (single) / 0.88x (twophase), while
     # prefilter (two pruned scans, light partials) measured 1.08x and stays
     # plain. At production layouts (row groups >= cores) the rebalance
-    # prices to a no-op — see adapter._maybe_parallelize_scan.
-    resolved = variant
-    if resolved == "auto":
-        resolved = (
-            "twophase"
-            if events_per_customer >= CUSTOMER_VIEW_DENSITY_CROSSOVER
-            else "single"
-        )
-    if resolved in ("single", "twophase"):
-        ev = energy_events(spark, sf_dir, rebalance=True)
-    return customer_view_dispatch(
-        ev,
-        variant=resolved,
-        events_per_customer=events_per_customer,
-    )
-
-
-#: per-dataset-snapshot memo for the auto-dispatch density probe
-#: ((realpath(sf_dir), events fingerprint) -> events/customer); bounded by
-#: the number of distinct dataset snapshots a process touches.
-_DENSITY_CACHE: dict[tuple, float] = {}
-
-
-def clear_density_cache() -> None:
-    """Drop all memoized density probes (tests / long-lived sessions that
-    rewrite datasets in place and want an immediate re-probe without
-    relying on the mtime fingerprint)."""
-    _DENSITY_CACHE.clear()
-
-
-def _events_fingerprint(sf_dir: str):
-    """Cheap snapshot id for the events source: (name, size, mtime_ns) of
-    every parquet part. A driver-local listing — no Spark job; on a real
-    cluster the equivalent is the table's snapshot/commit id."""
-    p = os.path.join(sf_dir, "events.parquet")
-    try:
-        if os.path.isdir(p):
-            return tuple(
-                (f, s.st_size, s.st_mtime_ns)
-                for f in sorted(os.listdir(p))
-                if f.endswith(".parquet")
-                for s in (os.stat(os.path.join(p, f)),)
-            )
-        s = os.stat(p)
-        return (s.st_size, s.st_mtime_ns)
-    except OSError:
-        return None
-
-
-def _parquet_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return [
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        ]
-    return [path]
-
-
-def events_per_customer_footer_lower_bound(sf_dir: str) -> float | None:
-    """Metadata-only density LOWER bound: no Spark job, no data pages.
-
-    Numerator: exact row count from the Parquet footers (the energy-events
-    adapter is a pure projection — ENERGY_EVENTS_SQL filters nothing — so
-    footer rows == frame rows). Denominator: an UPPER bound on distinct
-    customers from the integer ``user_id`` column's footer min/max range
-    (the adapter's ``lpad(user_id, 4, '0')`` is 1:1 for ids up to 4
-    digits; a >=5-digit id TRUNCATES, collapsing distinct user_ids into
-    one customer_id — which only LOWERS distinct customers, i.e. RAISES
-    true density, so the bound stays a valid lower bound, merely less
-    tight there); ids denser than their range make the bound tight,
-    sparse ids only make it lower. Therefore
-    ``rows / (max-min+1) <= true events-per-customer`` always: when the
-    bound already clears ``CUSTOMER_VIEW_DENSITY_CROSSOVER`` the
-    high-density pick is certain from metadata alone (the 100 TB path — a
-    footer read beats even one narrow column scan); below the line the
-    true density may still be higher, so the caller falls back to the
-    scan+HLL probe. Returns None when footers can't answer (missing
-    stats, non-parquet source), never guesses.
-
-    On a cluster the same numbers come from the catalog's table stats
-    (ANALYZE / snapshot metadata); here the files are local, so pyarrow
-    reads the footers directly."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # metadata path is best-effort by contract
-        return None
-    path = os.path.join(sf_dir, "events.parquet")
-    rows, lo, hi = 0, None, None
-    try:
-        files = _parquet_files(path)
-        if not files:
-            return None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            rows += md.num_rows
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if "user_id" not in idx:
-                return None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx["user_id"]).statistics
-                if st is None or st.min is None or st.max is None:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-    except (OSError, ValueError, TypeError):
-        return None
-    if not rows or lo is None or not isinstance(lo, int):
-        return None
-    return rows / float(max(1, hi - lo + 1))
-
-
-#: events-per-customer density above which the TWO-PHASE plan is the
-#: replicated winner (round-11 A/B, scripts/customer_view_ladder_ab.py:
-#: N=5 interleaved reps per variant on an idle machine, medians — at ~670
-#: ev/cust twophase 2.21 s vs single 2.62 / prefilter 2.77; at ~6,700
-#: twophase 13.78 s vs prefilter 15.99 / single 16.47; at the base ~67
-#: single and twophase tie within noise, 1.21 vs 1.14). Geometric midpoint
-#: of the tie rung (~67) and the first clear-win rung (~670); full table
-#: in SCALE.md §6.
-CUSTOMER_VIEW_DENSITY_CROSSOVER = 200.0
-
-
-def estimate_events_per_customer(ev: DataFrame) -> float:
-    """Cheap density probe for the auto dispatch: one narrow job over the
-    pruned ``customer_id`` column (count + approx_count_distinct — at 100 TB
-    this reads a single column's pages, and the ±2% HLL error is irrelevant
-    against a 10x-wide crossover band)."""
-    row = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct("customer_id").alias("c"),
-    ).first()
-    return float(row["n"]) / float(max(1, row["c"]))
-
-
-def customer_view_dispatch(
-    ev: DataFrame,
-    variant: str = "auto",
-    events_per_customer: float | None = None,
-) -> DataFrame:
-    """Density-dispatched customer_view (round 10, SCALE.md §6).
-
-    All variants are result-identical (they share ONE DuckDB oracle);
-    ``variant`` picks the physical plan:
-
-    - ``"single"`` — one wide groupBy (simplest; ties twophase at base
-      density, the default below the crossover);
-    - ``"twophase"`` — (customer, session) pre-agg, then fold per
-      customer. The replicated round-11 A/B (N=5 interleaved reps,
-      medians, SCALE.md §6) has it WINNING at 10x and 100x density —
-      phase 1 combines map-side on keys whose cardinality does not grow
-      with density, so its shuffle volume is density-capped while the
-      other two plans ship (and single additionally Expands) every raw
-      event. The round-8 "array partials bend super-linearly at 100x"
-      reading never reproduced and is retired. Also still the
-      cardinality-skew swap (hot customers collapse per session before
-      the wide shuffle);
-    - ``"prefilter"`` — switch structs from a tariff_switch-only slice,
-      joined back. Beats single at 100x (15.99 vs 16.47 median) but
-      loses to twophase everywhere measured; kept as the explicit swap
-      for workloads where the switch-row fraction is tiny and a second
-      scan is cheap (columnar pruned);
-    - ``"auto"`` — measure ``events_per_customer`` (unless the caller
-      already knows it and passes it) and take twophase above
-      ``CUSTOMER_VIEW_DENSITY_CROSSOVER``, single below. The probe is
-      an EAGER job at plan-BUILD time unless Parquet footers already
-      decide it (see ``events_per_customer_footer_lower_bound``) — the
-      catalog entry memoizes it per dataset snapshot; callers handing a
-      raw frame should pass ``events_per_customer`` themselves if they
-      build plans repeatedly.
-    """
-    if variant == "auto":
-        if events_per_customer is None:
-            events_per_customer = estimate_events_per_customer(ev)
-        variant = (
-            "twophase"
-            if events_per_customer >= CUSTOMER_VIEW_DENSITY_CROSSOVER
-            else "single"
-        )
-    builders = {
-        "single": customer_view_from_events,
-        "twophase": customer_view_two_phase,
-        "prefilter": customer_view_prefiltered,
-    }
-    if variant not in builders:
-        raise ValueError(
-            f"unknown customer_view variant {variant!r}; "
-            f"expected one of {sorted(builders)} or 'auto'"
-        )
-    return builders[variant](ev)
+    # prices to a no-op; see adapter._maybe_parallelize_scan.
+    return customer_view_from_events(energy_events(spark, sf_dir, rebalance=True))
 
 
 def _switch_struct_derivations() -> dict:
@@ -591,12 +372,12 @@ def customer_view_from_events(ev: DataFrame) -> DataFrame:
     "Round-11 replicated A/B (N=5 interleaved reps, SCALE.md §6): it WINS "
     "at both 10x and 100x density (medians 2.21 / 13.78 s vs single "
     "2.62 / 16.47 and prefilter 2.77 / 15.99) and ties single at base "
-    "density — so since round 11 it IS the auto dispatch's high-density "
-    "pick; the round-8 'array partials bend super-linearly' reading "
-    "(33.9 s) never reproduced and is retired.",
+    "density, so it is the plan to draw by name for dense data; the "
+    "round-8 'array partials bend super-linearly' reading (33.9 s) never "
+    "reproduced and is retired.",
 )
 def q_customer_view_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # rebalance: see q_customer_view's resolved-variant note (0.88x measured)
+    # rebalance: see q_customer_view (0.88x measured)
     return customer_view_two_phase(energy_events(spark, sf_dir, rebalance=True))
 
 

@@ -116,8 +116,7 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 #: applicationIds are 'local-<millis>' and can collide across processes/
 #: restarts) plus the dataset's file fingerprint (name, size, mtime_ns),
 #: so a dataset rewritten in place re-resolves instead of serving a stale
-#: schema — the same invalidation contract as the customer_view density
-#: probe's _DENSITY_CACHE (round 10).
+#: schema — the same invalidation contract as the catalog's plan memo.
 _FRAME_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -129,8 +128,8 @@ def clear_frame_cache() -> None:
 
 def _table_fingerprint(sf_dir: str, name: str):
     """(file, size, mtime_ns) snapshot id of one parquet table — a
-    driver-local listing, no Spark job (mirrors energy_queries.
-    _events_fingerprint; on a cluster this is the table's snapshot id)."""
+    driver-local listing, no Spark job (on a cluster this is the table's
+    snapshot id)."""
     p = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(p):

@@ -484,7 +484,7 @@ def foreach_batch_upsert(path: str):
     state partitions uncommitted — and a zero-row dynamic overwrite never
     touched any store partition anyway, so store contents and replay
     idempotence are unchanged; only the per-trigger write-commit overhead
-    goes (round 17, measured in plans/r17/replay_profile.json)."""
+    goes (round 17)."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()

@@ -655,68 +655,6 @@ def q_streaming_hourly_type_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.select("hour", "event_type", "n", rk.alias("rk")).where(F.col("rk") <= 3)
 
 
-def running_user_totals_stream(raw_events: DataFrame) -> DataFrame:
-    """Arbitrary stateful streaming with the Spark 4 ``StatefulProcessor``
-    API (`transformWithStateInPandas`): per-user running event count and
-    exact cents total kept in a ValueState, updated each micro-batch.
-
-    This is the engine-managed replacement for the reference's locked
-    in-memory dict (consumer/consumer.py:81-99) in its most general form —
-    typed per-key state, Arrow-batched updates, partitioned by the shuffle
-    and checkpointable, where ``running_user_totals_stream_groupstate``
-    shows the older GroupState flavor.
-    """
-    import pandas as pd  # noqa: F401 (imported for the processor closure)
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType(), True),
-            StructField("n_events", LongType(), True),
-            StructField("total_cents", LongType(), True),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            schema = StructType(
-                [
-                    StructField("n", LongType(), True),
-                    StructField("cents", LongType(), True),
-                ]
-            )
-            self._state = handle.getValueState("totals", schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, cents = (self._state.get() if self._state.exists() else (0, 0))
-            for pdf in rows:
-                n += len(pdf)
-                # values are exact 2-decimal doubles -> cents are exact ints
-                # dropna BEFORE the int cast: a null value is a legal
-                # nullable-double row the oracle's sum() skips; NaN would
-                # crash astype(int64)
-                v = (pdf["value"] * 100).round().dropna()
-                cents += int(v.astype("int64").sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        raw_events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(), outputStructType=out_schema, outputMode="Update", timeMode="None"
-        )
-    )
-
-
 def _running_totals_update_fn():
     """Module-level factory for the GroupState running-totals update fn
     (closure pickled by value), so tests can drive the PRODUCTION merge
@@ -730,8 +668,10 @@ def _running_totals_update_fn():
         n, cents = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            # values are exact 2-decimal doubles -> cents are exact ints
-            # dropna BEFORE the int cast: see the transformWithState twin
+            # values are exact 2-decimal doubles -> cents are exact ints;
+            # dropna BEFORE the int cast: a null value is a legal
+            # nullable-double row the oracle's sum() skips, and NaN would
+            # crash astype(int64)
             v = (pdf["value"] * 100).round().dropna()
             cents += int(v.astype("int64").sum())
         state.update((n, cents))
@@ -743,13 +683,13 @@ def _running_totals_update_fn():
 
 
 def running_user_totals_stream_groupstate(raw_events: DataFrame) -> DataFrame:
-    """Protobuf-free twin of ``running_user_totals_stream``: identical
-    per-user running (count, cents) state kept through the older GroupState
-    flavor (``applyInPandasWithState``), which rides the plain Arrow channel
-    — no state-server protobuf — so the operator stays ACTIVE in containers
-    without ``google.protobuf``. Exact integer merge, update-mode emission,
-    same output schema; the catalog entry picks whichever flavor the
-    environment supports and gates both against the same batch oracle."""
+    """Arbitrary stateful streaming: per-user running event count and exact
+    cents total kept in GroupState (``applyInPandasWithState``) and updated
+    each micro-batch, with update-mode emission. This is the engine-managed
+    replacement for the reference's locked in-memory dict
+    (consumer/consumer.py:81-99): typed per-key state, Arrow-batched
+    updates, partitioned by the shuffle and checkpointable. It rides the
+    plain Arrow channel, so it runs on every install."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     out_schema = StructType(
@@ -779,18 +719,6 @@ def running_user_totals_stream_groupstate(raw_events: DataFrame) -> DataFrame:
     )
 
 
-def _has_protobuf() -> bool:
-    # transformWithStateInPandas speaks protobuf to the state server; the
-    # driver container may not ship google.protobuf (import-try, per the
-    # no-new-deps rule). Where absent, the GroupState twin carries the entry.
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 @register(
     "streaming_running_totals",
     oracle="""
@@ -800,35 +728,19 @@ FROM events GROUP BY user_id
 """,
     doc="Arbitrary stateful streaming: per-user running totals, each "
     "micro-batch merging into typed per-key state; converged state is "
-    "gated against the one-pass batch aggregation. Uses the Spark 4 "
-    "StatefulProcessor (transformWithStateInPandas + ValueState) where "
-    "the environment ships its protobuf dependency, else the semantically "
-    "identical GroupState flavor (applyInPandasWithState) — same state, "
-    "same output, same oracle. Counts/cents are exact integers, so the "
-    "cross-batch merge is order-independent. Scale: state is two longs "
-    "per user, partitioned by the user_id shuffle, RocksDB-backed and "
-    "checkpointed on a cluster.",
+    "gated against the one-pass batch aggregation. The state is a "
+    "GroupState (applyInPandasWithState) per user. Counts/cents are exact "
+    "integers, so the cross-batch merge is order-independent. Scale: state "
+    "is two longs per user, partitioned by the user_id shuffle, "
+    "RocksDB-backed and checkpointed on a cluster.",
 )
 def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     raw = stream_raw_events(spark, sf_dir)
-    if _has_protobuf():
-        # transformWithState requires the RocksDB state store provider (the
-        # default HDFS-backed store does not implement it); scope the
-        # override so later streams on the shared session keep the default.
-        with _conf_override(
-            spark,
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        ):
-            out = run_stream_to_table(
-                spark, running_user_totals_stream(raw), mode="update"
-            )
-    else:
-        out = run_stream_to_table(
-            spark, running_user_totals_stream_groupstate(raw), mode="update"
-        )
+    out = run_stream_to_table(
+        spark, running_user_totals_stream_groupstate(raw), mode="update"
+    )
     # availableNow on one file = one batch; dedup defensively (n is monotone)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (

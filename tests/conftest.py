@@ -31,9 +31,8 @@ def _fresh_plan_memo():
     returns the same Dataset object on a warm build; once some test has
     executed it, later plan-shape assertions would read its finalized
     adaptive plan (isFinalPlan=true renders Exchanges inside query
-    stages), and dispatch tests expecting a probe would be served the
-    memoized plan instead. Within-test memo behavior (what the memo
-    tests pin) is unaffected."""
+    stages). Within-test memo behavior (what the memo tests pin) is
+    unaffected."""
     from energy_data_stream_processing_spark.plans.catalog import clear_plan_memo
 
     clear_plan_memo()

@@ -284,3 +284,29 @@ def test_output_of_the_pre_staging_cli_is_refused(events_file, tmp_path):
               "--streaming", "--lines-per-batch", "20"])
     assert _tree(out) == before
     assert not (out / "_replay").exists()
+
+
+def test_batch_into_a_streaming_output_is_refused(spark, events_file, tmp_path, capsys):
+    """A batch run into an output written by ``--streaming`` would append
+    plain ``event_date=`` partitions beside the ``_increment_id=`` ones and
+    leave the raw store unreadable; it is refused before anything is
+    written."""
+    out = str(tmp_path / "s")
+    assert main(["pipeline", "--input", events_file, "--output", out,
+                 "--streaming", "--lines-per-batch", "60"]) == 0
+    before = _tree(out)
+    with pytest.raises(ValueError, match=rf"{re.escape(out)} was written by pipeline --streaming"):
+        main(["pipeline", "--input", events_file, "--output", out])
+    assert _tree(out) == before
+
+
+def test_streaming_into_a_batch_output_is_refused(spark, events_file, tmp_path, capsys):
+    """A streaming run into an output written without ``--streaming`` is
+    refused before it stages segments or writes a checkpoint."""
+    out = str(tmp_path / "b")
+    assert main(["pipeline", "--input", events_file, "--output", out]) == 0
+    before = _tree(out)
+    with pytest.raises(ValueError, match=rf"{re.escape(out)} was written by pipeline without --streaming"):
+        main(["pipeline", "--input", events_file, "--output", out,
+              "--streaming", "--lines-per-batch", "60"])
+    assert _tree(out) == before

@@ -153,43 +153,6 @@ def test_streaming_topk_replay_spans_batches(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, batch.collect()))
 
 
-def test_transform_with_state_running_totals(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas running totals == batch groupBy.
-    Skips where google.protobuf (the state-server wire format) is absent."""
-    import pytest
-
-    from energy_data_stream_processing_spark.streaming.runner import (
-        _has_protobuf,
-        run_stream_to_table,
-        running_user_totals_stream,
-        stream_raw_events,
-    )
-
-    if not _has_protobuf():
-        pytest.skip("google.protobuf not available in this environment")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    raw_stream = stream_raw_events(spark, sf_dir)
-    out = run_stream_to_table(spark, running_user_totals_stream(raw_stream), mode="update")
-    final = out.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"), F.max("total_cents").alias("total_cents")
-    )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long")).alias(
-                "total_cents"
-            ),
-        )
-    )
-    assert sorted(map(tuple, final.collect())) == sorted(map(tuple, batch.collect()))
-
-
 def test_checkpoint_restart_resumes_without_loss_or_duplication(spark, sf_dir, tmp_path):
     """Crash-recovery exactly-once: run a checkpointed streaming aggregation
     over the first half of the data, stop, add the second half, RESTART from
@@ -321,10 +284,9 @@ def test_nanos_vintage_chunk_stream(spark, tmp_path):
 
 
 def test_groupstate_running_totals_multibatch_equals_batch(spark, sf_dir, tmp_path):
-    """Protobuf-free running-totals twin (applyInPandasWithState): per-user
-    state merged across 3 replayed micro-batches must equal the one-pass
-    batch aggregation exactly — this flavor carries the catalog entry in
-    environments without google.protobuf, so it is gated unconditionally."""
+    """Running totals (applyInPandasWithState): per-user state merged
+    across 3 replayed micro-batches must equal the one-pass batch
+    aggregation exactly."""
     from energy_data_stream_processing_spark.streaming.runner import (
         ascending_time_chunks,
         run_stream_to_table,
