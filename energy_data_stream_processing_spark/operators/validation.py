@@ -115,9 +115,17 @@ def _build_validation_reason() -> Column:
 
 def flatten_events(df: DataFrame) -> DataFrame:
     """F4 projection + F3 numeric coercion: the engine-native raw events
-    table (database/schema.sql:12-23 minus the serial id / created_at)."""
+    table (database/schema.sql:12-23 minus the serial id / created_at).
+
+    The projection is built once per JVM (``gateway_columns``), like
+    ``validation_reason``; its aliases pin their exprIds, which Spark
+    re-keys when two flattened frames meet in one plan."""
+    return df.select(*gateway_columns("flatten_events", _build_flatten_columns))
+
+
+def _build_flatten_columns() -> list[Column]:
     nonneg = lambda c: F.when(c >= 0, c)  # noqa: E731
-    return df.select(
+    return [
         F.col("payload").getField("customer_id").alias("customer_id"),
         F.col("event_type"),
         parsed_event_time().alias("event_time"),
@@ -130,7 +138,7 @@ def flatten_events(df: DataFrame) -> DataFrame:
         F.col("payload").getField("session_id").try_cast("int").alias("session_id"),
         F.col("payload").getField("tariff_type").alias("tariff_type"),
         F.col("payload").getField("channel").alias("channel"),
-    )
+    ]
 
 
 def split_events(df: DataFrame) -> tuple[DataFrame, DataFrame]:

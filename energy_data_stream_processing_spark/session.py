@@ -11,7 +11,22 @@ same settings are what we would ship as cluster defaults:
   so 100 TB shuffles can split finer than the default 200;
 - UTC session timezone so event-time bucketing is deterministic and matches
   the DuckDB oracle (naive timestamps);
-- Arrow enabled for the few Pandas-UDF paths (multimodal plumbing).
+- Arrow enabled for the few Pandas-UDF paths (multimodal plumbing);
+- local writes that start no process. Without the ``libhadoop`` native
+  library, Hadoop's local filesystem runs ``chmod`` for every file,
+  ``.crc`` sidecar and directory it creates, and the default FileContext
+  streaming-checkpoint manager runs ``readlink`` for every rename: about
+  74 and 28 forks per 300-line ``pipeline --streaming`` micro-batch, each
+  3-4 ms of CPU. ``fs.file.impl`` is therefore ``LOCAL_FS_CLASS`` (from
+  ``LOCAL_FS_JAR`` on the driver class path), a ``LocalFileSystem`` whose
+  raw layer sets the same modes through ``java.nio``, checksums kept; and
+  the checkpoint manager is Spark's FileSystem-based one, whose rename is
+  a POSIX rename, atomic on a local disk. The class stands in for Hive's
+  ``ProxyLocalFileSystem``, which ``hive-exec`` registers for ``file://``
+  and whose one change, a rename that refuses an existing file, would
+  make that manager skip the overwrites it asks for (it checks for an
+  existing file itself when it must not overwrite). A vanilla session
+  (the ``__spark_entry__`` driver contract) keeps the defaults.
 """
 
 from __future__ import annotations
@@ -21,32 +36,51 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Hadoop's local filesystem with a java.nio chmod, built from
+#: jvm/ForkFreeLocalFileSystem.java (its header has the build command).
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "edsp-localfs.jar")
+LOCAL_FS_CLASS = "edsp.fs.ForkFreeLocalFileSystem"
+
+
+def _spark_default(key: str) -> str:
+    """``key``'s value in the deployment's ``spark-defaults.conf``
+    (resolved via ``$SPARK_CONF_DIR`` / ``$SPARK_HOME/conf``), else ''."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or (
+        os.path.join(os.environ["SPARK_HOME"], "conf")
+        if os.environ.get("SPARK_HOME")
+        else None
+    )
+    value = ""
+    if conf_dir:
+        try:
+            with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+                for line in f:
+                    parts = line.strip().split(None, 1)
+                    if len(parts) == 2 and parts[0] == key:
+                        value = parts[1].strip()
+        except OSError:
+            pass
+    return value
+
+
+def _driver_class_path() -> str:
+    """``LOCAL_FS_JAR`` APPENDED to the deployment's
+    ``spark.driver.extraClassPath``, once."""
+    entries = [e for e in _spark_default("spark.driver.extraClassPath").split(os.pathsep) if e]
+    if LOCAL_FS_JAR not in entries:
+        entries.append(LOCAL_FS_JAR)
+    return os.pathsep.join(entries)
+
+
 def _driver_java_options(run_dir: str) -> str:
     """The Derby-home flag APPENDED to any pre-existing driver Java options
     rather than replacing them: a deployment that sets
-    ``spark.driver.extraJavaOptions`` in ``spark-defaults.conf`` (resolved
-    via ``$SPARK_CONF_DIR`` / ``$SPARK_HOME/conf``) or through the
-    ``SPARK_DRIVER_EXTRA_JAVA_OPTIONS`` environment variable keeps those
-    flags; ours is added once (never duplicated on re-entry)."""
+    ``spark.driver.extraJavaOptions`` in ``spark-defaults.conf`` or through
+    the ``SPARK_DRIVER_EXTRA_JAVA_OPTIONS`` environment variable keeps
+    those flags; ours is added once (never duplicated on re-entry)."""
     base = os.environ.get("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "").strip()
     if not base:
-        conf_dir = os.environ.get("SPARK_CONF_DIR") or (
-            os.path.join(os.environ["SPARK_HOME"], "conf")
-            if os.environ.get("SPARK_HOME")
-            else None
-        )
-        if conf_dir:
-            try:
-                with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
-                    for line in f:
-                        parts = line.strip().split(None, 1)
-                        if (
-                            len(parts) == 2
-                            and parts[0] == "spark.driver.extraJavaOptions"
-                        ):
-                            base = parts[1].strip()
-            except OSError:
-                pass
+        base = _spark_default("spark.driver.extraJavaOptions")
     flags = [f"-Dderby.system.home={run_dir}"]
     # Round 16 (guide §4.1/§7): HotSpot refuses to JIT-compile methods over
     # 8,000 bytecode bytes (DontCompileHugeMethods, on by default), and the
@@ -119,5 +153,14 @@ def get_spark(app_name: str = "energy-spark", shuffle_partitions: int | None = N
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.path.join(run_dir, "warehouse"))
         .config("spark.driver.extraJavaOptions", _driver_java_options(run_dir))
+        # in local mode the driver is the executor; on a cluster put the
+        # jar on spark.executor.extraClassPath too
+        .config("spark.driver.extraClassPath", _driver_class_path())
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .getOrCreate()
     )

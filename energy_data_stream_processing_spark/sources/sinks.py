@@ -32,6 +32,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.columns import gateway_columns
 from ..operators.hourly import METRIC_COLUMNS
 
 
@@ -173,7 +174,14 @@ def hour_partition_key():
     as ``normalize_event_ts``). Pinned across session tzs on the ambiguous
     overlap instant itself in
     tests/test_round15_ops.py::test_hour_key_canonical_on_dst_overlap_instant.
+
+    The key expression is built once per JVM (``gateway_columns``): every
+    hour upsert would otherwise rebuild it through py4j.
     """
+    return gateway_columns("hour_partition_key", _build_hour_partition_key)
+
+
+def _build_hour_partition_key():
     epoch = F.col("hour").cast("long")
     return F.when(
         epoch < 0,
@@ -864,6 +872,7 @@ def refresh_hourly_incremental(
     from datetime import datetime
 
     from pyspark.sql import Observation
+    from pyspark.sql.types import DateType, StringType, StructField, StructType
 
     from ..operators.hourly import hourly_business_metrics
 
@@ -888,7 +897,17 @@ def refresh_hourly_incremental(
     epochs = sorted(seen["hours"])
     if not epochs:
         return []
-    raw = spark.read.parquet(raw_path).where(F.col("event_date").isin(sorted(seen["days"])))
+    # the store's schema is the increment's plus the partition columns the
+    # landing set: given, the read runs no schema-inference job
+    keys = [StructField("event_date", DateType())]
+    if increment_id is not None:
+        keys.insert(0, StructField("_increment_id", StringType()))
+    data = [f for f in increment.schema.fields if f.name not in {k.name for k in keys}]
+    raw = (
+        spark.read.schema(StructType(data + keys))
+        .parquet(raw_path)
+        .where(F.col("event_date").isin(sorted(seen["days"])))
+    )
     recomputed = hourly_business_metrics(raw).where(
         F.unix_seconds("hour").isin(epochs)
     )

@@ -6,6 +6,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import subprocess
+import sys
 from collections import Counter
 
 import pytest
@@ -152,6 +155,26 @@ def test_fold_rerun_of_a_batch_is_idempotent(spark, mixed_file, tmp_path):
     assert _dead_letter_reasons(f"{out}/dead_letter") == _REASONS
     assert spark.read.parquet(f"{out}/raw_events").count() == 96
     assert sorted(map(tuple, spark.read.parquet(f"{out}/hourly_metrics").collect())) == hours
+
+
+def test_fold_runs_five_spark_jobs(spark, mixed_file, tmp_path):
+    """A warm micro-batch runs five Spark jobs: the dead-letter write, the
+    raw landing, and the touched-hour recompute's three (a batch frame read
+    through the replay source stands in for a segment). The raw store is
+    read back with the increment's schema, so no job infers it."""
+    from energy_data_stream_processing_spark.sources.replay_source import (
+        JsonlReplayDataSource,
+    )
+
+    from tests.test_round10_ops import _last_job_id
+
+    spark.dataSource.register(JsonlReplayDataSource)
+    batch = spark.read.format("jsonl_replay").option("path", mixed_file).load()
+    out = str(tmp_path / "out")
+    fold(out, batch, 0)
+    before = _last_job_id(spark)
+    assert fold(out, batch, 1) == {"valid": 96, "invalid": 28}
+    assert _last_job_id(spark) - before - 1 == 5
 
 
 @pytest.mark.parametrize("lpb", ["0", "-5"])
@@ -310,3 +333,65 @@ def test_streaming_into_a_batch_output_is_refused(spark, events_file, tmp_path, 
         main(["pipeline", "--input", events_file, "--output", out,
               "--streaming", "--lines-per-batch", "60"])
     assert _tree(out) == before
+
+
+def _shim(bin_dir, name, log):
+    """``name`` first on PATH: logs its argv when a JVM started it, then
+    runs the real binary."""
+    real = shutil.which(name)
+    path = bin_dir / name
+    path.write_text(
+        "#!/bin/sh\n"
+        f'if [ "$(cat /proc/$PPID/comm 2>/dev/null)" = java ]; then echo "{name} $*" >> {log}; fi\n'
+        f'exec {real} "$@"\n'
+    )
+    path.chmod(0o755)
+
+
+def _stores(spark, out):
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    return (
+        rows(f"{out}/raw_events"),
+        rows(f"{out}/hourly_metrics"),
+        _dead_letter_reasons(f"{out}/dead_letter"),
+    )
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/self/comm"), reason="needs /proc")
+def test_streaming_drain_forks_no_chmod_or_readlink(spark, mixed_file, tmp_path, capsys):
+    """A ``pipeline --streaming`` drain in its own JVM, with ``chmod`` and
+    ``readlink`` shims first on PATH, starts neither of them from the JVM
+    (Hadoop's local filesystem without libhadoop runs ``chmod`` for every
+    file and directory it creates, and the FileContext checkpoint manager
+    ``readlink`` for every rename), and its stores equal a drain's in this
+    session."""
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    log = tmp_path / "forks.log"
+    for name in ("chmod", "readlink"):
+        _shim(bin_dir, name, log)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+        PYTHONPATH=os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+        SPARK_GRAFT_SCRATCH=str(tmp_path),
+    )
+    cmd = ["pipeline", "--input", mixed_file, "--streaming", "--lines-per-batch", "40"]
+    out = str(tmp_path / "shimmed")
+    run = subprocess.run(
+        [sys.executable, "-m", "energy_data_stream_processing_spark", *cmd, "--output", out],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert json.loads(run.stdout.strip().splitlines()[-1])["batches"] == 4
+    forks = log.read_text().splitlines() if log.exists() else []
+    assert forks == [], f"{len(forks)} forks from the JVM, first: {forks[:5]}"
+
+    here = str(tmp_path / "here")
+    assert main([*cmd, "--output", here]) == 0
+    assert _stores(spark, out) == _stores(spark, here)

@@ -367,6 +367,12 @@ def test_incremental_rollup_refresh_equals_batch(spark, sf_dir, tmp_path):
     replayed = sorted(map(tuple, read_hourly_metrics_parquet(spark, store).collect()))
     assert replayed == batch
 
+    # so does a replay whose rows already carry the store's partition
+    # columns, as rows read back from a raw store do
+    keyed = inc2.withColumns({"_increment_id": F.lit(2), "event_date": F.to_date("event_time")})
+    assert sorted(refresh_hourly_incremental(spark, raw_path, store, keyed, increment_id=2)) == sorted(t2)
+    assert sorted(map(tuple, read_hourly_metrics_parquet(spark, store).collect())) == batch
+
 
 def test_histogram_p95_matches_promql_reference(spark):
     """The Spark histogram_quantile stage must agree with an independent
