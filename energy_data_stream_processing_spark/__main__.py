@@ -27,7 +27,7 @@ reason and persists that, then runs only the jobs that write output (the
 dead letter, whose write also observes the valid/invalid counts; the raw
 landing, whose write observes the touched hours; the touched-hour
 recompute). The batch form takes its summary counts from observations on
-its writes too.
+its writes too, and a re-run replaces its three stores.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 
 
@@ -211,6 +212,7 @@ def cmd_pipeline(args) -> int:
     spark = _spark()
     if args.streaming:
         from .sources.replay_source import replay_stream
+        from .streaming.runner import run_stream_foreach_batch
 
         # producer: verdict-tagged segments, one per micro-batch; consumer:
         # Spark's file stream source, one segment per trigger
@@ -224,17 +226,15 @@ def cmd_pipeline(args) -> int:
 
         # every segment is staged before start, so availableNow drains them
         # all, still one file per trigger, and then ends the query
-        (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", f"{out}/_checkpoint")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        run_stream_foreach_batch(spark, stream, on_batch, f"{out}/_checkpoint")
         print(json.dumps({"mode": "streaming", **counts, "output": out}))
     else:
         raw = read_events_jsonl(spark, args.input)
         valid, invalid = split_events(raw)
+        # a batch run replaces its output, as the hourly store's overwrite
+        # does: a re-run of one input leaves what one run leaves
+        for store in ("raw_events", "dead_letter"):
+            shutil.rmtree(f"{out}/{store}", ignore_errors=True)
         landed, n_valid = _counted(valid)
         write_raw_events_parquet(landed, f"{out}/raw_events")
         quarantined, n_invalid = _counted(invalid)

@@ -66,16 +66,32 @@ def overwrite_partitions(
     'dynamic' → leak) or, worse, race a mode('overwrite') write into STATIC
     mode — a full-table overwrite that deletes every partition not in that
     micro-batch. The writer-level option is scoped to this one write and
-    touches no shared state. Also the single home for the idempotent
-    replay-key mechanic (withColumn(lit id) + overwrite own partitions)
-    that the raw append, the streaming dead letter and the incremental
-    refresh all share."""
+    touches no shared state. Every replay-keyed write runs through it:
+    ``write_batch_partition`` and the incremental refresh's
+    ``_increment_id`` landing."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*cols)
         .format(fmt)
         .save(path)
+    )
+
+
+def write_batch_partition(
+    df: DataFrame, path: str, batch_id: int, fmt: str = "parquet"
+) -> None:
+    """Land ``df`` in the ``_batch_id=<batch_id>`` partition of ``path``,
+    replacing whatever a previous run of that micro-batch left there.
+
+    A plain append from foreachBatch is at-least-once: a batch retried
+    between its writes and its offset commit appends twice. Keyed by batch
+    id and overwriting its own partition, the retry rewrites exactly that
+    batch's files, so the store equals the stream regardless of retries.
+    Every batch-keyed store (dead letter, raw append, the streaming catalog
+    entries' stores) writes through here."""
+    overwrite_partitions(
+        df.withColumn("_batch_id", F.lit(batch_id)), path, "_batch_id", fmt=fmt
     )
 
 
@@ -89,9 +105,7 @@ def write_quarantine(invalid: DataFrame, path: str, batch_id: int | None = None)
     if batch_id is None:
         invalid.write.mode("append").json(path)
     else:
-        overwrite_partitions(
-            invalid.withColumn("_batch_id", F.lit(batch_id)), path, "_batch_id", fmt="json"
-        )
+        write_batch_partition(invalid, path, batch_id, fmt="json")
 
 
 def write_raw_events_parquet(valid: DataFrame, path: str) -> None:
@@ -760,22 +774,16 @@ def write_events_jdbc(df: DataFrame, url: str, table: str, batchsize: int = 1000
 
 
 def foreach_batch_raw_append(path: str):
-    """Exactly-once raw-event append for streaming (S6 + §2.5 delivery).
-
-    A plain parquet append from foreachBatch is at-least-once: a retried
-    micro-batch appends twice (the reference has the same hazard between DB
-    write and offset commit, consumer.py:515-518, and no dedup key to
-    recover with). Keying the write by batch_id and OVERWRITING that batch's
-    partition makes the retry idempotent — replaying batch N rewrites
-    exactly batch N's files, so raw-store contents equal the source stream
-    regardless of retries. (Same mechanics a Delta txn log would give;
-    expressed with dynamic partition overwrite so it runs anywhere.)
+    """Exactly-once raw-event append for streaming (S6 + §2.5 delivery):
+    each micro-batch lands through ``write_batch_partition``. The reference
+    has the retry hazard between DB write and offset commit
+    (consumer.py:515-518) and no dedup key to recover with; here the batch
+    id is that key. (Same mechanics a Delta txn log would give; expressed
+    with dynamic partition overwrite so it runs anywhere.)
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        overwrite_partitions(
-            batch_df.withColumn("_batch_id", F.lit(batch_id)), path, "_batch_id"
-        )
+        write_batch_partition(batch_df, path, batch_id)
 
     return fn
 
@@ -851,7 +859,7 @@ def refresh_hourly_incremental(
     logical increment) and the raw landing becomes a dynamic-partition
     OVERWRITE keyed by ``(_increment_id, event_date)`` — a retried call
     rewrites exactly its own files, same mechanics as
-    ``foreach_batch_raw_append``, so the store (and hence the recomputed
+    ``write_batch_partition``, so the store (and hence the recomputed
     hours) is idempotent under at-least-once delivery. Without an id the
     landing is a plain append and the CALLER must guarantee at-most-once
     application of each increment.

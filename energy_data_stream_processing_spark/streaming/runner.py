@@ -25,6 +25,14 @@ The catalog entries run with ``availableNow`` into a memory sink and return
 the final per-hour rows: the batch==streaming equivalence the reference can
 only approximate is an actual differential gate here.
 
+One driver per job: every memory-sink query runs through
+``run_stream_to_table``, and every checkpointed ``foreachBatch`` drain (the
+durable hourly pipeline, the ``pipeline --streaming`` CLI and the catalog
+entries that fold micro-batches into stores) through
+``run_stream_foreach_batch``. A fold's batch-keyed store is written by
+``sinks.write_batch_partition``, and a replay source's chunk files by
+``write_source_file``.
+
 Scale notes: state is one row per open hour; the distinct sets bound its
 size by |customers-per-hour| (at 100 TB: swap the sets for HLL sketches or
 pre-aggregate by (hour, customer), and keep RocksDB state store). The
@@ -50,7 +58,7 @@ from ..functions.columns import gateway_columns
 from ..operators.hourly import METRIC_COLUMNS, _build_hourly_columns
 from ..sources import sinks
 from ..sources.adapter import ENERGY_EVENTS_SQL, normalize_event_ts
-from ..sources.sinks import _conf_override, overwrite_partitions
+from ..sources.sinks import _conf_override
 from ..plans.catalog import register
 
 
@@ -65,8 +73,8 @@ def stream_raw_events(
     The file source needs a directory; testdata is a single read-only file,
     so a session-scoped temp dir of symlinks stands in (test plumbing only —
     production would point at the ingest directory or a Kafka topic).
-    ``source_dir``/``max_files_per_trigger`` let tests replay a pre-split
-    directory in several micro-batches to exercise cross-batch state.
+    ``source_dir``/``max_files_per_trigger`` replay a pre-split directory
+    in several micro-batches to exercise cross-batch state.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if source_dir is None:
@@ -447,10 +455,6 @@ def _native_hourly_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     return collapse_native_updates(out)
 
 
-def q_streaming_hourly_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _native_hourly_final(spark, sf_dir)
-
-
 @register(
     "streaming_hourly_native_audit",
     # The native path's EXACT columns (counters, decimal-exact sums cast to
@@ -518,6 +522,40 @@ def q_streaming_hourly_native_audit(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+def write_source_file(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the one parquet file ``path`` in a stream source
+    directory. It is written to a stage directory and renamed in, so the
+    file source never lists a partial file or a writer's side files."""
+    import shutil
+
+    stage = tempfile.mkdtemp(prefix="source-file-stage-")
+    try:
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+        os.rename(f"{stage}/{part}", path)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _ascending_chunks(df: DataFrame, key, n_chunks: int, prefix: str) -> str:
+    """Split ``df`` at the exact quantiles of the numeric expression ``key``
+    into ``n_chunks`` key-ascending files in a fresh source dir. They are
+    written in key order, so the file source, which lists oldest-mtime
+    first, replays them in key order."""
+    keyed = df.withColumn("_key", key)
+    q = keyed.approxQuantile("_key", [i / n_chunks for i in range(1, n_chunks)], 0.0)
+    src = tempfile.mkdtemp(prefix=prefix)
+    bounds = [None, *q, None]
+    for i in range(n_chunks):
+        chunk = keyed
+        if bounds[i] is not None:
+            chunk = chunk.where(F.col("_key") >= bounds[i])
+        if bounds[i + 1] is not None:
+            chunk = chunk.where(F.col("_key") < bounds[i + 1])
+        write_source_file(chunk.drop("_key"), f"{src}/chunk_{i}.parquet")
+    return src
+
+
 def append_watermark_sentinel(spark: SparkSession, sf_dir: str, src: str):
     """Write one far-future event into a chunk dir so the final availableNow
     micro-batch pushes the global watermark past every real event-time
@@ -525,7 +563,6 @@ def append_watermark_sentinel(spark: SparkSession, sf_dir: str, src: str):
     (callers filter output to ``< max + margin`` to drop the sentinel's own
     rows). Built on the normalized frame so the file schema matches the
     chunk files regardless of the source parquet's timestamp vintage."""
-    import shutil
     from datetime import timedelta
 
     norm = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
@@ -534,11 +571,7 @@ def append_watermark_sentinel(spark: SparkSession, sf_dir: str, src: str):
         [(-1, mx + timedelta(days=3650), -1, "sentinel", 0.0, "{}")],
         schema=norm.schema,
     )
-    stage = tempfile.mkdtemp(prefix="sentinel-stage-")
-    sdf.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    os.rename(f"{stage}/{part}", f"{src}/chunk_z_sentinel.parquet")
-    shutil.rmtree(stage, ignore_errors=True)
+    write_source_file(sdf, f"{src}/chunk_z_sentinel.parquet")
     return mx
 
 
@@ -761,29 +794,9 @@ def ascending_time_chunks(spark: SparkSession, sf_dir: str, n_chunks: int) -> st
     approxQuantile'd over a ``unix_micros(ts)`` projection — quantiles only
     support numeric columns — and the range predicates compare in micros.
     """
-    import shutil
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    micros = raw.withColumn("_ts_us", F.unix_micros(F.col("ts")))
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    q = micros.approxQuantile("_ts_us", probs, 0.0)
-    src = tempfile.mkdtemp(prefix="stream-chunks-")
-    stage = tempfile.mkdtemp(prefix="stream-chunks-stage-")
-    bounds = [None, *q, None]
-    for i in range(n_chunks):
-        chunk = micros
-        if bounds[i] is not None:
-            chunk = chunk.where(F.col("_ts_us") >= bounds[i])
-        if bounds[i + 1] is not None:
-            chunk = chunk.where(F.col("_ts_us") < bounds[i + 1])
-        chunk = chunk.drop("_ts_us")
-        d = f"{stage}/c{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.rename(f"{d}/{part}", f"{src}/chunk_{i}.parquet")
-    shutil.rmtree(stage, ignore_errors=True)
-    return src
+    return _ascending_chunks(raw, F.unix_micros(F.col("ts")), n_chunks, "stream-chunks-")
 
 
 def view_purchase_attribution_stream(
@@ -1113,26 +1126,16 @@ def ascending_doc_chunks(spark: SparkSession, sf_dir: str, n_chunks: int) -> str
     maxFilesPerTrigger=1 stream replays them as ordered micro-batches —
     cross-batch duplicate groups are then guaranteed (duplicated content has
     scattered doc_ids), which is what the streaming-dedup gate must cover."""
-    import shutil
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    q = docs.selectExpr("cast(doc_id AS DOUBLE) AS d").approxQuantile("d", probs, 0.0)
-    src = tempfile.mkdtemp(prefix="doc-chunks-")
-    stage = tempfile.mkdtemp(prefix="doc-chunks-stage-")
-    bounds = [None, *q, None]
-    for i in range(n_chunks):
-        chunk = docs
-        if bounds[i] is not None:
-            chunk = chunk.where(F.col("doc_id") >= bounds[i])
-        if bounds[i + 1] is not None:
-            chunk = chunk.where(F.col("doc_id") < bounds[i + 1])
-        d = f"{stage}/c{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.rename(f"{d}/{part}", f"{src}/chunk_{i}.parquet")
-    shutil.rmtree(stage, ignore_errors=True)
-    return src
+    return _ascending_chunks(docs, F.col("doc_id"), n_chunks, "doc-chunks-")
+
+
+def _doc_chunk_stream(spark: SparkSession, sf_dir: str, n_chunks: int) -> DataFrame:
+    """documents.parquet replayed as ``n_chunks`` doc_id-ascending
+    micro-batches, one chunk file a trigger."""
+    src = ascending_doc_chunks(spark, sf_dir, n_chunks)
+    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
 
 
 from ..plans.sampling_queries import CORPUS_CURATION_ORACLE  # noqa: E402
@@ -1159,9 +1162,8 @@ def q_streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bpe_tokens, fingerprint, words
     from ..plans.sampling_queries import _BUCKETS, hash_bucket
 
-    src = ascending_doc_chunks(spark, sf_dir, 3)
+    stream = _doc_chunk_stream(spark, sf_dir, 3)
     kept_dir = tempfile.mkdtemp(prefix="curated-corpus-") + "/store"
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -1188,22 +1190,9 @@ def q_streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             prior = None
         if prior is not None:
             inc = inc.join(prior.select("fp"), "fp", "left_anti")
-        overwrite_partitions(
-            inc.withColumn("_batch_id", F.lit(batch_id)),
-            kept_dir,
-            "_batch_id",
-        )
+        sinks.write_batch_partition(inc, kept_dir, batch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="curated-ckpt-"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream_foreach_batch(spark, stream, fold, tempfile.mkdtemp(prefix="curated-ckpt-"))
 
     kept = spark.read.parquet(kept_dir)
     m = hash_bucket(F.col("doc_id")) % 10
@@ -1238,12 +1227,10 @@ def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFram
     from ..operators.text import bpe_tokens
     from ..plans.sampling_queries import hash_bucket
 
-    src = ascending_doc_chunks(spark, sf_dir, 3)
+    stream = _doc_chunk_stream(spark, sf_dir, 3)
     store = tempfile.mkdtemp(prefix="reservoir-") + "/cands"
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
         n_tokens = F.size(bpe_tokens(F.col("text"))).cast("long")
         base = batch_df.select(
             "doc_id", "lang", n_tokens.alias("n_tokens")
@@ -1252,22 +1239,9 @@ def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFram
         keyed = base.withColumn("k", F.log(u) / F.col("n_tokens").cast("double"))
         w = Window.partitionBy("lang").orderBy(F.col("k").desc(), "doc_id")
         top = keyed.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= 5)
-        overwrite_partitions(
-            top.drop("_rn").withColumn("_batch_id", F.lit(batch_id)),
-            store,
-            "_batch_id",
-        )
+        sinks.write_batch_partition(top.drop("_rn"), store, batch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="reservoir-ckpt-"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream_foreach_batch(spark, stream, fold, tempfile.mkdtemp(prefix="reservoir-ckpt-"))
 
     cands = spark.read.parquet(store)
     w = Window.partitionBy("lang").orderBy(F.col("k").desc(), "doc_id")
@@ -1315,33 +1289,19 @@ SELECT doc_a, doc_b, jaccard FROM jpairs WHERE jaccard >= 0.5
 def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import dedup_increment
 
-    src = ascending_doc_chunks(spark, sf_dir, 3)
+    stream = _doc_chunk_stream(spark, sf_dir, 3)
     root = tempfile.mkdtemp(prefix="stream-dedup-")
     idx = f"{root}/idx"
     pairs_dir = f"{root}/pairs"
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
         found = dedup_increment(
-            s, idx, batch_df, increment_id=f"b{batch_id}", threshold=0.5
+            batch_df.sparkSession, idx, batch_df, increment_id=f"b{batch_id}",
+            threshold=0.5,
         )
-        overwrite_partitions(
-            found.withColumn("_batch_id", F.lit(batch_id)),
-            pairs_dir,
-            "_batch_id",
-        )
+        sinks.write_batch_partition(found, pairs_dir, batch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="stream-dedup-ckpt-"))
-        .start()
-    )
-    q.awaitTermination()
+    run_stream_foreach_batch(spark, stream, fold, tempfile.mkdtemp(prefix="stream-dedup-ckpt-"))
 
     return (
         spark.read.parquet(pairs_dir)
@@ -1373,8 +1333,6 @@ from ..plans.energy_queries import SCD2_ORACLE  # noqa: E402
     "bucket-slice-sized; the dimension is never rebuilt whole.",
 )
 def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..operators.scd2 import scd2_apply_increment, scd2_init_store
     from ..sources.adapter import energy_events
 
@@ -1385,18 +1343,11 @@ def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 3 hash-chunk files -> time-interleaved ordered micro-batches
     src = tempfile.mkdtemp(prefix="scd2-chunks-")
-    stage = tempfile.mkdtemp(prefix="scd2-chunks-stage-")
     for i in range(3):
-        d = f"{stage}/c{i}"
-        (
-            sw.where(F.pmod(F.xxhash64(F.col("event_id")), F.lit(3)) == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d)
+        write_source_file(
+            sw.where(F.pmod(F.xxhash64(F.col("event_id")), F.lit(3)) == i),
+            f"{src}/chunk_{i}.parquet",
         )
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.rename(f"{d}/{part}", f"{src}/chunk_{i}.parquet")
-    shutil.rmtree(stage, ignore_errors=True)
 
     store = tempfile.mkdtemp(prefix="scd2-stream-") + "/dim"
 
@@ -1407,16 +1358,12 @@ def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             scd2_apply_increment(s, store, batch_df)
 
-    q = (
-        spark.readStream.schema(sw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="scd2-stream-ckpt-"))
-        .start()
+    run_stream_foreach_batch(
+        spark,
+        spark.readStream.schema(sw.schema).option("maxFilesPerTrigger", 1).parquet(src),
+        fold,
+        tempfile.mkdtemp(prefix="scd2-stream-ckpt-"),
     )
-    q.awaitTermination()
 
     return spark.read.parquet(store).select(
         "customer_id", "tariff_type", "valid_from", "valid_to",
@@ -1452,7 +1399,6 @@ def q_streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="stream-asof-")
     sw_dir = f"{root}/switches"
     out_dir = f"{root}/enriched"
-    schema = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).schema
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -1464,11 +1410,7 @@ def q_streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("customer_id", "event_time")
             .agg(F.max_by("tariff_type", "event_id").alias("active_tariff"))
         )
-        overwrite_partitions(
-            sw.withColumn("_batch_id", F.lit(batch_id)),
-            sw_dir,
-            "_batch_id",
-        )
+        sinks.write_batch_partition(sw, sw_dir, batch_id)
         readings = en.where(F.col("event_type") == "energy_consumed").select(
             "event_id",
             "customer_id",
@@ -1482,22 +1424,14 @@ def q_streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             readings, store, key="customer_id", ts="event_time",
             value_cols=["active_tariff"],
         )
-        overwrite_partitions(
-            enriched.withColumn("_batch_id", F.lit(batch_id)),
-            out_dir,
-            "_batch_id",
-        )
+        sinks.write_batch_partition(enriched, out_dir, batch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="stream-asof-ckpt-"))
-        .start()
+    run_stream_foreach_batch(
+        spark,
+        stream_raw_events(spark, sf_dir, source_dir=src, max_files_per_trigger=1),
+        fold,
+        tempfile.mkdtemp(prefix="stream-asof-ckpt-"),
     )
-    q.awaitTermination()
 
     return (
         spark.read.parquet(out_dir)
@@ -1529,10 +1463,8 @@ def q_streaming_wau_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = ascending_time_chunks(spark, sf_dir, 3)
     store = tempfile.mkdtemp(prefix="wau-") + "/pairs"
-    schema = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).schema
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
         pairs = batch_df.select(
             F.date_trunc("week", F.col("ts")).alias("week"), "user_id"
         ).distinct()
@@ -1542,22 +1474,14 @@ def q_streaming_wau_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc = pairs.join(counts, "week").select(
             "week", "user_id", "events"
         )
-        overwrite_partitions(
-            inc.withColumn("_batch_id", F.lit(batch_id)),
-            store,
-            "_batch_id",
-        )
+        sinks.write_batch_partition(inc, store, batch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="wau-ckpt-"))
-        .start()
+    run_stream_foreach_batch(
+        spark,
+        stream_raw_events(spark, sf_dir, source_dir=src, max_files_per_trigger=1),
+        fold,
+        tempfile.mkdtemp(prefix="wau-ckpt-"),
     )
-    q.awaitTermination()
 
     raw = spark.read.parquet(store)
     # events per (batch, week) were replicated onto every pair row of that

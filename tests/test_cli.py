@@ -138,6 +138,33 @@ def test_cli_streaming_reads_each_line_once(spark, mixed_file, tmp_path, capsys)
     assert _dead_letter_reasons(f"{out}/dead_letter") == _REASONS
 
 
+def _batch_stores(spark, out):
+    """The rows of a batch output's three stores, as multisets."""
+    return {
+        "raw_events": Counter(map(tuple, spark.read.parquet(f"{out}/raw_events").collect())),
+        "dead_letter": Counter(map(tuple, spark.read.json(f"{out}/dead_letter").collect())),
+        "hourly_metrics": Counter(map(tuple, spark.read.parquet(f"{out}/hourly_metrics").collect())),
+    }
+
+
+def test_batch_rerun_leaves_the_stores_of_one_run(spark, mixed_file, tmp_path, capsys):
+    """A second batch ``pipeline`` of the same input into the same output
+    leaves the raw, dead-letter and hourly stores exactly as one run
+    leaves them, and reports the same summary."""
+    out = str(tmp_path / "b")
+    cmd = ["pipeline", "--input", mixed_file, "--output", out]
+    assert main(cmd) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    once = _batch_stores(spark, out)
+    assert (first["valid"], first["invalid"]) == (96, 28)
+    assert sum(once["raw_events"].values()) == 96
+    assert sum(once["dead_letter"].values()) == 28
+    assert main(cmd) == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) == first
+    assert _batch_stores(spark, out) == once
+    assert _dead_letter_reasons(f"{out}/dead_letter") == _REASONS
+
+
 def test_fold_rerun_of_a_batch_is_idempotent(spark, mixed_file, tmp_path):
     """A micro-batch re-run under the same batch id (a crash between its
     writes and its offset commit) rewrites its own dead-letter, raw and

@@ -8,6 +8,10 @@ micro-batches must equal the one-pass batch aggregation exactly.
 
 from __future__ import annotations
 
+import os
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from energy_data_stream_processing_spark.operators.hourly import hourly_business_metrics
@@ -367,3 +371,42 @@ def test_streaming_hourly_native_approx_within_sketch_bound(spark, sf_dir):
             assert abs(got[approx_c] - want[exact_c]) <= tol, (
                 hour, approx_c, got[approx_c], want[exact_c], tol
             )
+
+
+_FOLD_ENTRIES = [
+    "streaming_corpus_curation",
+    "streaming_weighted_reservoir",
+    "streaming_incremental_dedup",
+    "streaming_scd2_maintenance",
+    "streaming_asof_enrichment",
+    "streaming_wau_growth",
+]
+
+
+@pytest.mark.parametrize("entry", _FOLD_ENTRIES)
+def test_fold_entry_runs_one_micro_batch_per_chunk_file(spark, sf_dir, entry):
+    """Each foreachBatch catalog entry replays its chunk directory one file
+    a trigger: its last batch id is the chunk count minus one and every
+    batch read rows. Collapsed into one micro-batch, an entry would still
+    match its oracle while its cross-batch code (the anti-join against
+    earlier batches, late SCD2 rows, pairs across batches) went untested."""
+    from energy_data_stream_processing_spark.functions.observe import ProgressCapture
+    from energy_data_stream_processing_spark.plans.catalog import all_queries
+    from energy_data_stream_processing_spark.streaming import runner
+
+    runner.LAST_STREAM_PROGRESS = None
+    capture = ProgressCapture(spark)
+    try:
+        all_queries()[entry].builder(spark, sf_dir).collect()
+        spark._jsc.sc().listenerBus().waitUntilEmpty(15_000)
+    finally:
+        capture.close()
+    last = runner.LAST_STREAM_PROGRESS
+    assert last is not None, f"{entry} did not run through run_stream_foreach_batch"
+    (source,) = last["sources"]
+    src = re.fullmatch(r"FileStreamSource\[file:(.*)\]", source["description"]).group(1)
+    chunks = [f for f in os.listdir(src) if f.endswith(".parquet")]
+    assert last["batchId"] + 1 == len(chunks) >= 3
+    batches = [b for b in capture.batches if b["sources"] == [source["description"]]]
+    assert [b["batchId"] for b in batches] == list(range(len(chunks)))
+    assert all(b["numInputRows"] > 0 for b in batches)
