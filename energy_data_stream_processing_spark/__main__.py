@@ -26,8 +26,10 @@ micro-batch (``fold``) reads its source once: it tags every row with its
 reason and persists that, then runs only the jobs that write output (the
 dead letter, whose write also observes the valid/invalid counts; the raw
 landing, whose write observes the touched hours; the touched-hour
-recompute). The batch form takes its summary counts from observations on
-its writes too, and a re-run replaces its three stores.
+recompute). The batch form reads the input with Spark's parallel JSON
+reader and lands it as micro-batch 0 of the same dead-letter and raw
+layout (increment ``b0``); its hourly store is a plain overwrite, and a
+re-run replaces its three stores.
 """
 
 from __future__ import annotations
@@ -103,6 +105,25 @@ def cmd_oracle_check(args) -> int:
     return 0 if ok else 1
 
 
+def _dead_letter(out: str, tagged, raw, batch_id: int) -> dict[str, int]:
+    """Dead-letter the rows of ``tagged`` with a ``reason``, as ``raw`` and
+    the reason, in micro-batch ``batch_id``; the write observes and returns
+    ``{"valid": n, "invalid": m}``."""
+    from pyspark.sql import functions as F
+
+    from .functions.observe import observed_ingest
+    from .sources import sinks
+
+    observed, obs = observed_ingest(tagged)
+    sinks.write_quarantine(
+        observed.where(F.col("reason").isNotNull()).select(raw.alias("raw"), "reason"),
+        f"{out}/dead_letter",
+        batch_id,
+    )
+    n = obs.get
+    return {"valid": n["events_valid"], "invalid": n["events_failed"]}
+
+
 def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
     """One ``pipeline --streaming`` micro-batch (module docstring: one
     source scan). The tagged frame is persisted because two writes read it,
@@ -112,7 +133,6 @@ def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
     """
     from pyspark.sql import functions as F
 
-    from .functions.observe import observed_ingest
     from .operators.validation import flatten_events, validation_reason
     from .sources import sinks
     from .sources.jsonl import CORRUPT_COL, PAYLOAD_SCHEMA
@@ -135,14 +155,8 @@ def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
         "event_type", "event_time", "payload", "reason", dead_letter_raw.alias("raw")
     ).persist()
     try:
-        observed, obs = observed_ingest(tagged)
-        sinks.write_quarantine(
-            observed.where(F.col("reason").isNotNull()).select("raw", "reason"),
-            f"{out}/dead_letter",
-            batch_id,
-        )
-        n = obs.get
-        if n["events_valid"]:
+        counts = _dead_letter(out, tagged, F.col("raw"), batch_id)
+        if counts["valid"]:
             # idempotent landing + touched-hour recompute (exact distincts
             # across batches, no additive-merge drift)
             sinks.refresh_hourly_incremental(
@@ -152,7 +166,7 @@ def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
             )
     finally:
         tagged.unpersist()
-    return {"valid": n["events_valid"], "invalid": n["events_failed"]}
+    return counts
 
 
 def _positive_int(text: str) -> int:
@@ -175,16 +189,17 @@ def cmd_pipeline(args) -> int:
     from pyspark.sql import functions as F
 
     from .operators.hourly import hourly_business_metrics
-    from .operators.validation import split_events
+    from .operators.validation import flatten_events, validation_reason
     from .sources.jsonl import read_events_jsonl
-    from .sources.sinks import write_quarantine, write_raw_events_parquet
+    from .sources.sinks import land_raw_increment
 
     out = args.output.rstrip("/")
     seg_dir = f"{out}/_replay"
-    # the two modes lay the stores out differently (streaming keys them by
-    # micro-batch: _increment_id=, _batch_id=, hour_key=), and a store
-    # mixing both layouts cannot be read, so each mode refuses the other's
-    # output before writing anything
+    # both modes land raw events and dead letters in one keyed layout, a
+    # batch run as micro-batch 0, but their hourly stores differ (a plain
+    # overwrite vs hour_key= partitions, unreadable mixed), and a streaming
+    # batch 0 would overwrite a batch run's b0 / _batch_id=0 rows, so each
+    # mode refuses the other's output before writing anything
     streamed = os.path.exists(seg_dir) or os.path.exists(f"{out}/_checkpoint")
     if args.streaming:
         # staging precedes the query's first checkpoint write, so a
@@ -201,12 +216,12 @@ def cmd_pipeline(args) -> int:
         ):
             raise ValueError(
                 f"{out} was written by pipeline without --streaming: its "
-                "stores are not keyed by micro-batch; use a fresh output"
+                "hourly store is not partitioned by hour_key; use a fresh output"
             )
     elif streamed:
         raise ValueError(
-            f"{out} was written by pipeline --streaming: its stores are "
-            "keyed by micro-batch; use a fresh output"
+            f"{out} was written by pipeline --streaming: its hourly store "
+            "is partitioned by hour_key; use a fresh output"
         )
 
     spark = _spark()
@@ -229,32 +244,23 @@ def cmd_pipeline(args) -> int:
         run_stream_foreach_batch(spark, stream, on_batch, f"{out}/_checkpoint")
         print(json.dumps({"mode": "streaming", **counts, "output": out}))
     else:
-        raw = read_events_jsonl(spark, args.input)
-        valid, invalid = split_events(raw)
+        tagged = read_events_jsonl(spark, args.input).withColumn("reason", validation_reason())
         # a batch run replaces its output, as the hourly store's overwrite
         # does: a re-run of one input leaves what one run leaves
         for store in ("raw_events", "dead_letter"):
             shutil.rmtree(f"{out}/{store}", ignore_errors=True)
-        landed, n_valid = _counted(valid)
-        write_raw_events_parquet(landed, f"{out}/raw_events")
-        quarantined, n_invalid = _counted(invalid)
-        write_quarantine(
-            quarantined.select(F.to_json(F.struct("*")).alias("raw"), "reason"),
-            f"{out}/dead_letter",
-        )
-        metrics, n_hours = _counted(hourly_business_metrics(valid))
-        metrics.write.mode("overwrite").parquet(f"{out}/hourly_metrics")
-        print(
-            json.dumps(
-                {
-                    "mode": "batch",
-                    "valid": n_valid.get["n"],
-                    "invalid": n_invalid.get["n"],
-                    "hours": n_hours.get["n"],
-                    "output": out,
-                }
-            )
-        )
+        # micro-batch 0 of the streaming layout; persisted because three
+        # writes read it
+        tagged.persist()
+        try:
+            counts = _dead_letter(out, tagged, F.to_json(F.struct("*")), 0)
+            valid = flatten_events(tagged.where(F.col("reason").isNull()))
+            land_raw_increment(valid, f"{out}/raw_events", "b0")
+            metrics, n_hours = _counted(hourly_business_metrics(valid))
+            metrics.write.mode("overwrite").parquet(f"{out}/hourly_metrics")
+        finally:
+            tagged.unpersist()
+        print(json.dumps({"mode": "batch", **counts, "hours": n_hours.get["n"], "output": out}))
     return 0
 
 

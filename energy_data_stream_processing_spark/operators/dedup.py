@@ -646,20 +646,14 @@ def build_dedup_index(
     OWN signatures (narrow, linear in the increment) and (b) shuffle-join
     its band codes against the stored band frame. The store is
     corpus-sized but narrow (ints only, no text)."""
-    from ..sources.sinks import overwrite_partitions
+    from ..sources.sinks import write_increment_partition
 
     sigs = minhash_signatures(docs, num_perm)
-    bands_df = _band_frame(sigs, num_perm, bands)
-    sh = with_shingles(docs, hashed=True)
-    overwrite_partitions(
-        bands_df.withColumn("_increment_id", F.lit(str(increment_id))),
-        f"{index_path}/bands",
-        "_increment_id",
+    write_increment_partition(
+        _band_frame(sigs, num_perm, bands), f"{index_path}/bands", increment_id
     )
-    overwrite_partitions(
-        sh.withColumn("_increment_id", F.lit(str(increment_id))),
-        f"{index_path}/shingles",
-        "_increment_id",
+    write_increment_partition(
+        with_shingles(docs, hashed=True), f"{index_path}/shingles", increment_id
     )
 
 

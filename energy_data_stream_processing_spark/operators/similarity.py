@@ -482,9 +482,10 @@ def refresh_ivf_incremental(
     against the frozen centroids (narrow Arrow-batched pass) and land it
     keyed by (_increment_id, cell) with dynamic partition overwrite — a
     replayed increment rewrites exactly its own files, so the index is
-    idempotent under at-least-once delivery (same mechanics as
-    refresh_hourly_incremental / foreach_batch_raw_append)."""
-    from ..sources.sinks import overwrite_partitions
+    idempotent under at-least-once delivery (the same
+    ``sinks.write_increment_partition`` as refresh_hourly_incremental's
+    raw landing)."""
+    from ..sources.sinks import write_increment_partition
 
     C = _load_ivf_centroids(spark, index_path)
     assigned = increment.select(
@@ -492,12 +493,7 @@ def refresh_ivf_incremental(
         "embedding",
         _cell_assign_udf(C)(F.col("embedding")).alias("cell"),
     )
-    overwrite_partitions(
-        assigned.withColumn("_increment_id", F.lit(str(increment_id))),
-        f"{index_path}/cells",
-        "_increment_id",
-        "cell",
-    )
+    write_increment_partition(assigned, f"{index_path}/cells", increment_id, "cell")
 
 
 def ivf_index_topk(

@@ -140,19 +140,13 @@ def register(
     return deco
 
 
-def stage_result(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
-    """Materialize a builder's output to a per-name parquet staging path and
-    return a scan of it. For builders whose result plan reads from a
-    TEMPORARY store directory (incremental-index entries), the result must
-    be made durable before the store is cleaned up — staging through parquet
-    keeps that materialization distributed (executor writes), where a
-    ``collect()``/``createDataFrame`` round-trip would funnel every row
-    through the driver. The stage path is namespaced by the session's
+def _app_dir(spark: SparkSession) -> str:
+    """This process's scratch root, ``<tmp>/edsp_stage/<app>-<pid>``,
+    removed at interpreter exit. It is namespaced by the session's
     applicationId AND the driver pid — local-mode applicationId is just
     'local-<currentTimeMillis>', so two processes starting in the same
     millisecond would otherwise share a namespace and the first to exit
-    would atexit-rmtree the other's live staging mid-read. Per-entry and
-    overwritten each run within a session; removed at interpreter exit."""
+    would atexit-rmtree the other's live files mid-read."""
     import atexit
     import os
     import shutil
@@ -165,8 +159,32 @@ def stage_result(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
     )
     if app_dir not in _STAGE_CLEANUPS:
         _STAGE_CLEANUPS.add(app_dir)
+        os.makedirs(app_dir, exist_ok=True)
         atexit.register(shutil.rmtree, app_dir, ignore_errors=True)
-    stage = os.path.join(app_dir, name)
+    return app_dir
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory under ``_app_dir`` for a builder's temporary
+    stores, checkpoints and source files: it outlives the builder call, as
+    the frame it returns may read it lazily."""
+    import tempfile
+
+    return tempfile.mkdtemp(prefix=prefix, dir=_app_dir(spark))
+
+
+def stage_result(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
+    """Materialize a builder's output to a per-name parquet staging path and
+    return a scan of it. For builders whose result plan reads from a
+    TEMPORARY store directory (incremental-index entries), the result must
+    be made durable before the store is cleaned up — staging through parquet
+    keeps that materialization distributed (executor writes), where a
+    ``collect()``/``createDataFrame`` round-trip would funnel every row
+    through the driver. Per-entry under ``_app_dir`` and overwritten each
+    run within a session; removed at interpreter exit."""
+    import os
+
+    stage = os.path.join(_app_dir(spark), name)
     df.write.mode("overwrite").parquet(stage)
     return spark.read.parquet(stage)
 

@@ -47,7 +47,7 @@ from ..operators.text import (
     token_stats_by_lang,
 )
 from ..sources.adapter import load_table
-from .catalog import register, stage_result
+from .catalog import register, scratch_dir, stage_result
 
 _STOP = "['the','and','is','of','to','a','in','it','that','for']"
 
@@ -1329,8 +1329,6 @@ SELECT query_id, vec_id AS neighbor_id, cosine, cast(rank AS INTEGER) AS rank FR
     "query top-5.",
 )
 def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.similarity import (
         build_ivf_index,
         ivf_index_topk,
@@ -1338,7 +1336,7 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _emb(spark, sf_dir)
-    index_path = tempfile.mkdtemp(prefix="ivf-index-") + "/idx"
+    index_path = scratch_dir(spark, "ivf-index-") + "/idx"
     build_ivf_index(spark, emb.where(F.col("vec_id") % 3 != 2), index_path)
     refresh_ivf_incremental(
         spark, index_path, emb.where(F.col("vec_id") % 3 == 2), "inc1"

@@ -1,8 +1,12 @@
-"""Sinks: raw-event append, hourly-metrics upsert, dead-letter quarantine.
+"""Sinks: raw-event landing, hourly-metrics upsert, dead-letter quarantine.
 
 Reference counterparts: S6 JDBC batch insert (consumer/consumer.py:186-237),
 S7 additive upsert flush (consumer/consumer.py:296-391), S8 dead-letter file
 append (producer.py:35-39, consumer.py:76-79).
+
+Raw events and dead letters land keyed, so a replayed write rewrites its
+own rows: ``land_raw_increment`` (``_increment_id=/event_date=``) and
+``write_quarantine`` (``_batch_id=``), for both ``pipeline`` modes.
 
 Spark-first, the additive merge disappears: streaming state (or a batch agg)
 always holds FULL per-hour aggregates, so each flush OVERWRITES the hour's
@@ -67,8 +71,7 @@ def overwrite_partitions(
     mode — a full-table overwrite that deletes every partition not in that
     micro-batch. The writer-level option is scoped to this one write and
     touches no shared state. Every replay-keyed write runs through it:
-    ``write_batch_partition`` and the incremental refresh's
-    ``_increment_id`` landing."""
+    ``write_batch_partition`` and ``write_increment_partition``."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -88,38 +91,66 @@ def write_batch_partition(
     between its writes and its offset commit appends twice. Keyed by batch
     id and overwriting its own partition, the retry rewrites exactly that
     batch's files, so the store equals the stream regardless of retries.
-    Every batch-keyed store (dead letter, raw append, the streaming catalog
+    Every batch-keyed store (the dead letter, the streaming catalog
     entries' stores) writes through here."""
     overwrite_partitions(
         df.withColumn("_batch_id", F.lit(batch_id)), path, "_batch_id", fmt=fmt
     )
 
 
-def write_quarantine(invalid: DataFrame, path: str, batch_id: int | None = None) -> None:
-    """Dead-letter sink: reason + raw envelope as JSON lines (S8).
+def write_increment_partition(
+    df: DataFrame, path: str, increment_id: int | str, *cols: str
+) -> None:
+    """Land ``df`` in the ``_increment_id=<increment_id>`` partition of
+    ``path`` (under the further partition columns ``cols``), replacing
+    whatever an earlier application of that increment left there: the
+    ``write_batch_partition`` contract for stores keyed by a caller's
+    increment id. The id is stored as a string. The raw-event landing, the
+    dedup index and the IVF cells write through here."""
+    overwrite_partitions(
+        df.withColumn("_increment_id", F.lit(str(increment_id))),
+        path,
+        "_increment_id",
+        *cols,
+    )
 
-    With ``batch_id`` (a streaming micro-batch) the rows land in that
-    batch's ``_batch_id=`` partition, overwritten on a re-run, so a batch
+
+def write_quarantine(invalid: DataFrame, path: str, batch_id: int) -> None:
+    """Dead-letter sink: reason + raw envelope as JSON lines (S8), in the
+    ``_batch_id=<batch_id>`` partition, overwritten on a re-run, so a batch
     replayed after a crash before its offset commit does not duplicate its
-    dead letters. Without one the write is a plain append."""
-    if batch_id is None:
-        invalid.write.mode("append").json(path)
-    else:
-        write_batch_partition(invalid, path, batch_id, fmt="json")
+    dead letters. The batch ``pipeline`` writes as micro-batch 0."""
+    write_batch_partition(invalid, path, batch_id, fmt="json")
 
 
-def write_raw_events_parquet(valid: DataFrame, path: str) -> None:
-    """Engine-native raw store: columnar append partitioned by event date.
+def land_raw_increment(df: DataFrame, raw_path: str, increment_id: int | str) -> None:
+    """Land valid events in the raw store keyed by
+    ``(_increment_id, event_date)``: a re-landed increment rewrites exactly
+    its own files. Partitioning by ``event_date`` is the scan-pruning
+    equivalent of the reference's B-tree index on event_time
+    (database/schema.sql:25-27): a time-ranged query at 100 TB touches only
+    its days.
 
-    Partitioning by ``event_date`` is the scan-pruning equivalent of the
-    reference's B-tree index on event_time (database/schema.sql:25-27): a
-    time-ranged query at 100 TB touches only its partitions.
+    Earlier versions appended a plain ``event_date=`` layout, and parquet
+    cannot read a root that mixes it with the keyed one ('Conflicting
+    directory structures'), so a landing that would CREATE the mix is
+    refused instead of corrupting the store. Best-effort local check (same
+    posture as the hour-store guards); scheme-qualified raw paths skip it —
+    the read-side error still fires, just later.
     """
-    (
-        valid.withColumn("event_date", F.to_date("event_time"))
-        .write.mode("append")
-        .partitionBy("event_date")
-        .parquet(path)
+    local = "://" not in raw_path.split("?", 1)[0] and os.path.isdir(raw_path)
+    if local and any(e.startswith("event_date=") for e in os.listdir(raw_path)):
+        raise ValueError(
+            f"{raw_path} holds a plain event_date layout written by an "
+            "earlier version; landing an _increment_id-keyed increment next "
+            "to it would make the store unreadable (conflicting partition "
+            "depths). Land into a fresh store."
+        )
+    write_increment_partition(
+        df.withColumn("event_date", F.to_date("event_time")),
+        raw_path,
+        increment_id,
+        "event_date",
     )
 
 
@@ -773,21 +804,6 @@ def write_events_jdbc(df: DataFrame, url: str, table: str, batchsize: int = 1000
     )
 
 
-def foreach_batch_raw_append(path: str):
-    """Exactly-once raw-event append for streaming (S6 + §2.5 delivery):
-    each micro-batch lands through ``write_batch_partition``. The reference
-    has the retry hazard between DB write and offset commit
-    (consumer.py:515-518) and no dedup key to recover with; here the batch
-    id is that key. (Same mechanics a Delta txn log would give; expressed
-    with dynamic partition overwrite so it runs anywhere.)
-    """
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_partition(batch_df, path, batch_id)
-
-    return fn
-
-
 def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 8) -> None:
     """Bucketed table write: pre-shuffles ONCE at write time so every future
     equi-join/aggregation on ``key`` between same-bucketed tables runs with
@@ -803,42 +819,12 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 8) -> Non
     )
 
 
-def _refuse_mixed_raw_layout(raw_path: str, increment_id) -> None:
-    """The raw store has two valid layouts — plain ``event_date=`` (append
-    path) and ``_increment_id=.../event_date=`` (replay-idempotent path) —
-    and parquet cannot read a root that mixes them ('Conflicting directory
-    structures'). Refuse the write that would CREATE the mix, naming the
-    layouts, instead of corrupting the store and failing on the next read.
-    Best-effort local check (same posture as the hour-store guards);
-    scheme-qualified raw paths skip it — the read-side error still fires,
-    just later."""
-    if "://" in raw_path.split("?", 1)[0] or not os.path.isdir(raw_path):
-        return
-    entries = os.listdir(raw_path)
-    has_plain = any(e.startswith("event_date=") for e in entries)
-    has_keyed = any(e.startswith("_increment_id=") for e in entries)
-    if increment_id is None and has_keyed:
-        raise ValueError(
-            f"{raw_path} is keyed by _increment_id; appending a plain "
-            "event_date layout next to it would make the store unreadable "
-            "(conflicting partition depths). Pass increment_id, or use a "
-            "separate store for un-keyed appends."
-        )
-    if increment_id is not None and has_plain:
-        raise ValueError(
-            f"{raw_path} holds a plain event_date layout; landing an "
-            "_increment_id-keyed increment next to it would make the store "
-            "unreadable (conflicting partition depths). Use increment_id="
-            "None here, or start a fresh keyed store."
-        )
-
-
 def refresh_hourly_incremental(
     spark: SparkSession,
     raw_path: str,
     store_path: str,
     increment: DataFrame,
-    increment_id: int | str | None = None,
+    increment_id: int | str,
 ) -> list:
     """Continuous-aggregate maintenance: fold an event increment into the
     raw store, then recompute ONLY the touched hours.
@@ -855,14 +841,11 @@ def refresh_hourly_incremental(
     100 TB a refresh prices at O(touched days of raw) + O(touched hours of
     output), not O(history).
 
-    Replay safety: pass ``increment_id`` (a batch/ingest id unique per
-    logical increment) and the raw landing becomes a dynamic-partition
-    OVERWRITE keyed by ``(_increment_id, event_date)`` — a retried call
-    rewrites exactly its own files, same mechanics as
-    ``write_batch_partition``, so the store (and hence the recomputed
-    hours) is idempotent under at-least-once delivery. Without an id the
-    landing is a plain append and the CALLER must guarantee at-most-once
-    application of each increment.
+    Replay safety: ``increment_id`` (a batch/ingest id unique per logical
+    increment) keys the raw landing (``land_raw_increment``), a
+    dynamic-partition OVERWRITE of ``(_increment_id, event_date)`` — a
+    retried call rewrites exactly its own files, so the store (and hence
+    the recomputed hours) is idempotent under at-least-once delivery.
 
     Touched hours and days are observed ON the landing write (an
     ``Observation``, computed by the write's own job): they come from
@@ -884,32 +867,23 @@ def refresh_hourly_incremental(
 
     from ..operators.hourly import hourly_business_metrics
 
-    _refuse_mixed_raw_layout(raw_path, increment_id)
     touched_obs = Observation()
     landed = increment.observe(
         touched_obs,
         F.collect_set(F.unix_seconds(F.date_trunc("hour", "event_time"))).alias("hours"),
         F.collect_set(F.to_date("event_time").cast("string")).alias("days"),
     )
-    if increment_id is None:
-        write_raw_events_parquet(landed, raw_path)
-    else:
-        overwrite_partitions(
-            landed.withColumn("_increment_id", F.lit(increment_id))
-            .withColumn("event_date", F.to_date("event_time")),
-            raw_path,
-            "_increment_id",
-            "event_date",
-        )
+    land_raw_increment(landed, raw_path, increment_id)
     seen = touched_obs.get
     epochs = sorted(seen["hours"])
     if not epochs:
         return []
     # the store's schema is the increment's plus the partition columns the
     # landing set: given, the read runs no schema-inference job
-    keys = [StructField("event_date", DateType())]
-    if increment_id is not None:
-        keys.insert(0, StructField("_increment_id", StringType()))
+    keys = [
+        StructField("_increment_id", StringType()),
+        StructField("event_date", DateType()),
+    ]
     data = [f for f in increment.schema.fields if f.name not in {k.name for k in keys}]
     raw = (
         spark.read.schema(StructType(data + keys))

@@ -59,7 +59,7 @@ from ..operators.hourly import METRIC_COLUMNS, _build_hourly_columns
 from ..sources import sinks
 from ..sources.adapter import ENERGY_EVENTS_SQL, normalize_event_ts
 from ..sources.sinks import _conf_override
-from ..plans.catalog import register
+from ..plans.catalog import register, scratch_dir
 
 
 def stream_raw_events(
@@ -78,7 +78,7 @@ def stream_raw_events(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if source_dir is None:
-        source_dir = tempfile.mkdtemp(prefix="stream-events-")
+        source_dir = scratch_dir(spark, "stream-events-")
         os.symlink(f"{sf_dir}/events.parquet", f"{source_dir}/events.parquet")
         schema_src = f"{sf_dir}/events.parquet"
     else:
@@ -544,7 +544,7 @@ def _ascending_chunks(df: DataFrame, key, n_chunks: int, prefix: str) -> str:
     first, replays them in key order."""
     keyed = df.withColumn("_key", key)
     q = keyed.approxQuantile("_key", [i / n_chunks for i in range(1, n_chunks)], 0.0)
-    src = tempfile.mkdtemp(prefix=prefix)
+    src = scratch_dir(df.sparkSession, prefix)
     bounds = [None, *q, None]
     for i in range(n_chunks):
         chunk = keyed
@@ -636,7 +636,7 @@ FROM events GROUP BY event_type
     "keys by event_id.",
 )
 def q_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = tempfile.mkdtemp(prefix="stream-dedup-")
+    src = scratch_dir(spark, "stream-dedup-")
     os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_a.parquet")
     os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_b.parquet")
     raw = stream_raw_events(spark, sf_dir, source_dir=src, max_files_per_trigger=1)
@@ -1163,7 +1163,7 @@ def q_streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.sampling_queries import _BUCKETS, hash_bucket
 
     stream = _doc_chunk_stream(spark, sf_dir, 3)
-    kept_dir = tempfile.mkdtemp(prefix="curated-corpus-") + "/store"
+    kept_dir = scratch_dir(spark, "curated-corpus-") + "/store"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -1192,7 +1192,7 @@ def q_streaming_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             inc = inc.join(prior.select("fp"), "fp", "left_anti")
         sinks.write_batch_partition(inc, kept_dir, batch_id)
 
-    run_stream_foreach_batch(spark, stream, fold, tempfile.mkdtemp(prefix="curated-ckpt-"))
+    run_stream_foreach_batch(spark, stream, fold, scratch_dir(spark, "curated-ckpt-"))
 
     kept = spark.read.parquet(kept_dir)
     m = hash_bucket(F.col("doc_id")) % 10
@@ -1228,7 +1228,7 @@ def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFram
     from ..plans.sampling_queries import hash_bucket
 
     stream = _doc_chunk_stream(spark, sf_dir, 3)
-    store = tempfile.mkdtemp(prefix="reservoir-") + "/cands"
+    store = scratch_dir(spark, "reservoir-") + "/cands"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         n_tokens = F.size(bpe_tokens(F.col("text"))).cast("long")
@@ -1241,7 +1241,7 @@ def q_streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFram
         top = keyed.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= 5)
         sinks.write_batch_partition(top.drop("_rn"), store, batch_id)
 
-    run_stream_foreach_batch(spark, stream, fold, tempfile.mkdtemp(prefix="reservoir-ckpt-"))
+    run_stream_foreach_batch(spark, stream, fold, scratch_dir(spark, "reservoir-ckpt-"))
 
     cands = spark.read.parquet(store)
     w = Window.partitionBy("lang").orderBy(F.col("k").desc(), "doc_id")
@@ -1290,7 +1290,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators.dedup import dedup_increment
 
     stream = _doc_chunk_stream(spark, sf_dir, 3)
-    root = tempfile.mkdtemp(prefix="stream-dedup-")
+    root = scratch_dir(spark, "stream-dedup-")
     idx = f"{root}/idx"
     pairs_dir = f"{root}/pairs"
 
@@ -1301,7 +1301,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         sinks.write_batch_partition(found, pairs_dir, batch_id)
 
-    run_stream_foreach_batch(spark, stream, fold, tempfile.mkdtemp(prefix="stream-dedup-ckpt-"))
+    run_stream_foreach_batch(spark, stream, fold, scratch_dir(spark, "stream-dedup-ckpt-"))
 
     return (
         spark.read.parquet(pairs_dir)
@@ -1342,14 +1342,14 @@ def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("customer_id", "tariff_type", "event_time", "event_id")
     )
     # 3 hash-chunk files -> time-interleaved ordered micro-batches
-    src = tempfile.mkdtemp(prefix="scd2-chunks-")
+    src = scratch_dir(spark, "scd2-chunks-")
     for i in range(3):
         write_source_file(
             sw.where(F.pmod(F.xxhash64(F.col("event_id")), F.lit(3)) == i),
             f"{src}/chunk_{i}.parquet",
         )
 
-    store = tempfile.mkdtemp(prefix="scd2-stream-") + "/dim"
+    store = scratch_dir(spark, "scd2-stream-") + "/dim"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -1362,7 +1362,7 @@ def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         spark.readStream.schema(sw.schema).option("maxFilesPerTrigger", 1).parquet(src),
         fold,
-        tempfile.mkdtemp(prefix="scd2-stream-ckpt-"),
+        scratch_dir(spark, "scd2-stream-ckpt-"),
     )
 
     return spark.read.parquet(store).select(
@@ -1396,7 +1396,7 @@ def q_streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join
 
     src = ascending_time_chunks(spark, sf_dir, 4)
-    root = tempfile.mkdtemp(prefix="stream-asof-")
+    root = scratch_dir(spark, "stream-asof-")
     sw_dir = f"{root}/switches"
     out_dir = f"{root}/enriched"
 
@@ -1430,7 +1430,7 @@ def q_streaming_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         stream_raw_events(spark, sf_dir, source_dir=src, max_files_per_trigger=1),
         fold,
-        tempfile.mkdtemp(prefix="stream-asof-ckpt-"),
+        scratch_dir(spark, "stream-asof-ckpt-"),
     )
 
     return (
@@ -1462,7 +1462,7 @@ def q_streaming_wau_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     src = ascending_time_chunks(spark, sf_dir, 3)
-    store = tempfile.mkdtemp(prefix="wau-") + "/pairs"
+    store = scratch_dir(spark, "wau-") + "/pairs"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         pairs = batch_df.select(
@@ -1480,7 +1480,7 @@ def q_streaming_wau_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         stream_raw_events(spark, sf_dir, source_dir=src, max_files_per_trigger=1),
         fold,
-        tempfile.mkdtemp(prefix="wau-ckpt-"),
+        scratch_dir(spark, "wau-ckpt-"),
     )
 
     raw = spark.read.parquet(store)

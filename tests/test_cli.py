@@ -165,6 +165,31 @@ def test_batch_rerun_leaves_the_stores_of_one_run(spark, mixed_file, tmp_path, c
     assert _dead_letter_reasons(f"{out}/dead_letter") == _REASONS
 
 
+def _partition_dirs(path):
+    """The entries of a store's top level, less the writer's marker."""
+    return sorted(e for e in os.listdir(path) if e != "_SUCCESS" and not e.startswith("."))
+
+
+def test_batch_and_streaming_share_one_raw_and_dead_letter_layout(
+        spark, mixed_file, tmp_path, capsys):
+    """A batch run lands as micro-batch 0 of the streaming layout: raw
+    events under ``_increment_id=b0``, dead letters under ``_batch_id=0``,
+    and its raw rows are the streaming run's."""
+    b, s = str(tmp_path / "b"), str(tmp_path / "s")
+    assert main(["pipeline", "--input", mixed_file, "--output", b]) == 0
+    assert main(["pipeline", "--input", mixed_file, "--output", s,
+                 "--streaming", "--lines-per-batch", "40"]) == 0
+    assert _partition_dirs(f"{b}/raw_events") == ["_increment_id=b0"]
+    assert _partition_dirs(f"{b}/dead_letter") == ["_batch_id=0"]
+
+    def raw_rows(out):
+        raw = spark.read.parquet(f"{out}/raw_events").drop("_increment_id")
+        return Counter(map(tuple, raw.collect()))
+
+    assert raw_rows(b) == raw_rows(s)
+    assert sum(raw_rows(b).values()) == 96
+
+
 def test_fold_rerun_of_a_batch_is_idempotent(spark, mixed_file, tmp_path):
     """A micro-batch re-run under the same batch id (a crash between its
     writes and its offset commit) rewrites its own dead-letter, raw and
@@ -337,10 +362,9 @@ def test_output_of_the_pre_staging_cli_is_refused(events_file, tmp_path):
 
 
 def test_batch_into_a_streaming_output_is_refused(spark, events_file, tmp_path, capsys):
-    """A batch run into an output written by ``--streaming`` would append
-    plain ``event_date=`` partitions beside the ``_increment_id=`` ones and
-    leave the raw store unreadable; it is refused before anything is
-    written."""
+    """A batch run into an output written by ``--streaming`` would write a
+    plain hourly store over the ``hour_key=`` one and overwrite the
+    stream's micro-batch 0; it is refused before anything is written."""
     out = str(tmp_path / "s")
     assert main(["pipeline", "--input", events_file, "--output", out,
                  "--streaming", "--lines-per-batch", "60"]) == 0

@@ -367,25 +367,23 @@ def test_ann_audit_catches_middle_rank_swap(spark, sf_dir):
 # writer-scoped dynamic overwrite, canonical hour_key label
 # --------------------------------------------------------------------------
 def test_refresh_refuses_mixed_raw_layout(spark, tmp_path, sf_dir):
-    """Landing a plain event_date layout next to an _increment_id-keyed
-    store (or vice versa) makes the root unreadable — the write that would
-    CREATE the mix must refuse, not corrupt."""
+    """Landing an _increment_id-keyed increment next to a plain event_date
+    store written by an earlier version makes the root unreadable — the
+    write that would CREATE the mix must refuse, not corrupt."""
     from energy_data_stream_processing_spark.sources.adapter import energy_events
     from energy_data_stream_processing_spark.sources.sinks import (
         refresh_hourly_incremental,
     )
 
     ev = energy_events(spark, sf_dir).limit(50)
-    raw = str(tmp_path / "raw")
     store = str(tmp_path / "metrics")
-    refresh_hourly_incremental(spark, raw, store, ev, increment_id="b0")
-    with pytest.raises(ValueError, match="keyed by _increment_id"):
-        refresh_hourly_incremental(spark, raw, store, ev, increment_id=None)
-
-    raw2 = str(tmp_path / "raw2")
-    refresh_hourly_incremental(spark, raw2, store, ev, increment_id=None)
+    raw = str(tmp_path / "raw")
+    # the plain layout of the earlier un-keyed append
+    ev.withColumn("event_date", F.to_date("event_time")).write.partitionBy(
+        "event_date"
+    ).parquet(raw)
     with pytest.raises(ValueError, match="plain event_date layout"):
-        refresh_hourly_incremental(spark, raw2, store, ev, increment_id="b1")
+        refresh_hourly_incremental(spark, raw, store, ev, increment_id="b1")
 
 
 def test_compact_preserves_increment_keyed_layout(spark, tmp_path, sf_dir):
@@ -421,11 +419,11 @@ def test_compact_preserves_increment_keyed_layout(spark, tmp_path, sf_dir):
 def test_compact_refuses_batch_id_only_store(spark, tmp_path):
     from energy_data_stream_processing_spark.sources.sinks import (
         compact_raw_store,
-        foreach_batch_raw_append,
+        write_batch_partition,
     )
 
     path = str(tmp_path / "rawb")
-    foreach_batch_raw_append(path)(spark.range(5), 0)
+    write_batch_partition(spark.range(5), path, 0)
     with pytest.raises(Exception, match="event_date"):
         compact_raw_store(spark, path)
 

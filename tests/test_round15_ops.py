@@ -226,15 +226,15 @@ def test_compact_plain_store_behavior_unchanged(spark, tmp_path, sf_dir):
     from energy_data_stream_processing_spark.sources.adapter import (
         energy_events,
     )
-    from energy_data_stream_processing_spark.sources.sinks import (
-        compact_raw_store,
-        write_raw_events_parquet,
-    )
+    from energy_data_stream_processing_spark.sources.sinks import compact_raw_store
 
     ev = energy_events(spark, sf_dir).limit(120)
     raw = str(tmp_path / "raw")
-    write_raw_events_parquet(ev.limit(60).repartition(3), raw)
-    write_raw_events_parquet(ev.subtract(ev.limit(60)).repartition(3), raw)
+    # the plain layout of the earlier un-keyed append, in two appends
+    for part in (ev.limit(60), ev.subtract(ev.limit(60))):
+        part.repartition(3).withColumn("event_date", F.to_date("event_time")).write.mode(
+            "append"
+        ).partitionBy("event_date").parquet(raw)
     before = spark.read.parquet(raw).count()
 
     assert compact_raw_store(spark, raw, max_files_per_partition=1)

@@ -19,9 +19,9 @@ from energy_data_stream_processing_spark.sources.jsonl import read_events_jsonl
 from energy_data_stream_processing_spark.sources.kafka import parse_kafka_values
 from energy_data_stream_processing_spark.sources.sinks import (
     jdbc_upsert_statement,
+    land_raw_increment,
     read_hourly_metrics_parquet,
     upsert_hourly_metrics_parquet,
-    write_raw_events_parquet,
 )
 
 
@@ -54,10 +54,10 @@ def test_hourly_upsert_overwrites_touched_hours_only(spark, sf_dir, tmp_path):
 def test_raw_store_partitioned_by_date(spark, sf_dir, tmp_path):
     path = str(tmp_path / "raw")
     ev = energy_events(spark, sf_dir)
-    write_raw_events_parquet(ev, path)
+    land_raw_increment(ev, path, "b0")
     import os
 
-    partitions = [d for d in os.listdir(path) if d.startswith("event_date=")]
+    partitions = [d for d in os.listdir(f"{path}/_increment_id=b0") if d.startswith("event_date=")]
     assert len(partitions) > 1
     back = spark.read.parquet(path)
     assert back.count() == ev.count()
@@ -123,20 +123,19 @@ def test_jdbc_upsert_statement_shape():
     assert "+ EXCLUDED" not in sql
 
 
-def test_foreach_batch_raw_append_idempotent(spark, sf_dir, tmp_path):
+def test_write_batch_partition_idempotent(spark, sf_dir, tmp_path):
     """Retried micro-batch (same batch_id) must not duplicate rows; a new
     batch_id appends."""
-    from energy_data_stream_processing_spark.sources.sinks import foreach_batch_raw_append
+    from energy_data_stream_processing_spark.sources.sinks import write_batch_partition
 
     ev = energy_events(spark, sf_dir)
     b0 = ev.where(F.col("event_id") % 2 == 0)
     b1 = ev.where(F.col("event_id") % 2 == 1)
     path = str(tmp_path / "raw_stream")
-    fn = foreach_batch_raw_append(path)
 
-    fn(b0, 0)
-    fn(b0, 0)  # retry of batch 0 — must overwrite, not append
-    fn(b1, 1)
+    write_batch_partition(b0, path, 0)
+    write_batch_partition(b0, path, 0)  # retry of batch 0 — must overwrite, not append
+    write_batch_partition(b1, path, 1)
 
     back = spark.read.parquet(path)
     assert back.count() == ev.count()
@@ -290,10 +289,7 @@ def test_raw_store_schema_evolution(spark, sf_dir, tmp_path):
     """A later ingest adds a payload column; the evolution-aware reader
     surfaces it as NULL on old partitions, old projections still work, and
     partition pruning survives the merged-schema scan."""
-    from energy_data_stream_processing_spark.sources.sinks import (
-        read_raw_events_parquet,
-        write_raw_events_parquet,
-    )
+    from energy_data_stream_processing_spark.sources.sinks import read_raw_events_parquet
 
     path = str(tmp_path / "raw_evolved")
     ev = energy_events(spark, sf_dir)
@@ -302,8 +298,8 @@ def test_raw_store_schema_evolution(spark, sf_dir, tmp_path):
     v2 = ev.where(F.to_date("event_time") == days[1]).withColumn(
         "meter_firmware", F.concat(F.lit("fw-"), (F.col("event_id") % 3).cast("string"))
     )
-    write_raw_events_parquet(v1, path)
-    write_raw_events_parquet(v2, path)
+    land_raw_increment(v1, path, "b0")
+    land_raw_increment(v2, path, "b1")
 
     back = read_raw_events_parquet(spark, path)
     assert "meter_firmware" in back.columns
@@ -416,17 +412,16 @@ def test_histogram_p95_matches_promql_reference(spark):
 
 
 def test_compact_raw_store_and_backfill(spark, sf_dir, tmp_path):
-    """Five small appends oversplit each day's partition; compaction must
-    collapse oversplit days to one file each, keep the row set identical,
-    leave under-target partitions' files untouched, and a subsequent
-    range backfill over the compacted store must equal the one-pass batch
-    aggregation."""
+    """A five-way split landing oversplits each day's partition; compaction
+    must collapse oversplit days to one file each, keep the row set
+    identical, leave under-target partitions' files untouched, and a
+    subsequent range backfill over the compacted store must equal the
+    one-pass batch aggregation."""
     from energy_data_stream_processing_spark.sources.sinks import (
         backfill_hourly_range,
         compact_raw_store,
         read_hourly_metrics_parquet,
         small_files_audit,
-        write_raw_events_parquet,
     )
 
     path = str(tmp_path / "raw_split")
@@ -435,12 +430,11 @@ def test_compact_raw_store_and_backfill(spark, sf_dir, tmp_path):
         r[0] for r in ev.select(F.to_date("event_time").alias("d")).distinct().collect()
     )
     lone_day = days[-1]
-    # 5 slivers per day for all but the last day; the last day lands once
+    # 5 files per day for all but the last day; the last day lands as one
     busy = ev.where(F.to_date("event_time") != str(lone_day))
-    for s in range(5):
-        write_raw_events_parquet(busy.where(F.col("event_id") % 5 == s), path)
-    write_raw_events_parquet(
-        ev.where(F.to_date("event_time") == str(lone_day)), path
+    land_raw_increment(busy.repartition(5), path, "b0")
+    land_raw_increment(
+        ev.where(F.to_date("event_time") == str(lone_day)).coalesce(1), path, "b1"
     )
 
     before = {str(r["event_date"]): r for r in small_files_audit(spark, path).collect()}
@@ -450,7 +444,7 @@ def test_compact_raw_store_and_backfill(spark, sf_dir, tmp_path):
 
     import os
 
-    lone_dir = f"{path}/event_date={lone_day}"
+    lone_dir = f"{path}/_increment_id=b1/event_date={lone_day}"
     lone_files_before = sorted(os.listdir(lone_dir))
 
     compacted = compact_raw_store(spark, path, max_files_per_partition=1)

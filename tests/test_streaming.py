@@ -410,3 +410,49 @@ def test_fold_entry_runs_one_micro_batch_per_chunk_file(spark, sf_dir, entry):
     batches = [b for b in capture.batches if b["sources"] == [source["description"]]]
     assert [b["batchId"] for b in batches] == list(range(len(chunks)))
     assert all(b["numInputRows"] > 0 for b in batches)
+
+
+# the temporary directories the streaming catalog entries and the
+# incremental IVF entry create for their sources, stores and checkpoints
+_SCRATCH_PREFIXES = (
+    "stream-events-", "stream-chunks-", "doc-chunks-", "scd2-chunks-",
+    "curated-", "reservoir-", "stream-dedup-", "scd2-stream-",
+    "stream-asof-", "wau-", "ivf-index-",
+)
+
+
+def test_streaming_entries_leave_no_temp_dirs_after_exit(sf_dir, tmp_path):
+    """A process that draws two chunk-replay streaming entries and exits
+    leaves none of their source, store or checkpoint directories under its
+    temp dir: they live under the per-process scratch root, removed at
+    interpreter exit."""
+    import subprocess
+    import sys
+
+    script = (
+        "from energy_data_stream_processing_spark.plans.catalog import all_queries\n"
+        "from energy_data_stream_processing_spark.session import get_spark\n"
+        "spark = get_spark('scratch-check')\n"
+        "for name in ('streaming_weighted_reservoir', 'streaming_hourly_bounded'):\n"
+        f"    assert all_queries()[name].builder(spark, {sf_dir!r}).collect()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        PYTHONPATH=os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    left = [
+        os.path.join(d, n)
+        for d, dirs, _ in os.walk(tmp_path)
+        for n in dirs
+        if n.startswith(_SCRATCH_PREFIXES)
+    ]
+    assert left == []
