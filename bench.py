@@ -108,9 +108,6 @@ def _committed_baseline_ratios(sf: float) -> tuple[dict[str, float], str]:
 # triangulation rounds 10-11 needed. The shape deliberately spans the
 # hot paths the catalog leans on: codegen expressions (sha2), Expand +
 # two-phase distinct agg, decimal sums, a shuffle, and a global sort.
-# Module-level and importable (round 15) so replicate tooling
-# (scripts/cosine_warm_replicate.py) times the SAME denominator instead
-# of a copy that could drift.
 def frozen_canary_run(spark) -> float:
     t0 = time.perf_counter()
     (

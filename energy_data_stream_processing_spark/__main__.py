@@ -12,24 +12,27 @@ pipeline against this repo directly (see MIGRATION.md for the full map).
 ``pipeline`` is the producer+consumer pair end-to-end: JSONL in, envelope +
 semantic validation with a dead-letter quarantine, partitioned raw event
 store, hourly business metrics table, and an ingest-metrics summary on
-stdout (the reference's Prometheus counters, engine-side). ``--streaming``
-is the producer/consumer form: the driver stages the file once as
-verdict-tagged segments, one per ``--lines-per-batch`` lines, under
-``<output>/_replay/``, and Spark's built-in file stream source replays them
-one segment per micro-batch with checkpointed upserts
+stdout (the reference's Prometheus counters, engine-side). Both forms read
+the input as text and judge every line with the one line verdict
+(``operators.validation.tag_lines``), so they count, dead-letter and land
+the same lines. ``--streaming`` is the producer/consumer form: the driver
+copies the file once into segments, one per ``--lines-per-batch`` lines,
+under ``<output>/_replay/``, and Spark's built-in file stream source
+replays them one segment per micro-batch with checkpointed upserts
 (``replay_source.replay_stream``), so no Python source process runs per
 batch. A re-run into the same output stages only lines the input gained and
 resumes from the checkpoint; a shrunk input, a changed
-``--lines-per-batch``, or an output whose checkpoint predates segment
-staging is refused, and so is an output written by the other mode. Each
-micro-batch (``fold``) reads its source once: it tags every row with its
-reason and persists that, then runs only the jobs that write output (the
-dead letter, whose write also observes the valid/invalid counts; the raw
-landing, whose write observes the touched hours; the touched-hour
-recompute). The batch form reads the input with Spark's parallel JSON
-reader and lands it as micro-batch 0 of the same dead-letter and raw
-layout (increment ``b0``); its hourly store is a plain overwrite, and a
-re-run replaces its three stores.
+``--lines-per-batch``, an output whose checkpoint predates segment
+staging or whose segments hold verdict-tagged rows is refused, and so is
+an output written by the other mode. Each micro-batch (``fold``) reads its
+source once: it tags every line with its reason and persists that, then
+runs only the jobs that write output (the dead letter, whose write also
+observes the valid/invalid counts; the raw landing, whose write observes
+the touched hours; the touched-hour recompute). The batch form reads the
+input with ``spark.read.text``, which splits per file, and lands it as
+micro-batch 0 of the same dead-letter and raw layout (increment ``b0``);
+its hourly store is a plain overwrite, and a re-run replaces its three
+stores.
 """
 
 from __future__ import annotations
@@ -105,10 +108,10 @@ def cmd_oracle_check(args) -> int:
     return 0 if ok else 1
 
 
-def _dead_letter(out: str, tagged, raw, batch_id: int) -> dict[str, int]:
-    """Dead-letter the rows of ``tagged`` with a ``reason``, as ``raw`` and
-    the reason, in micro-batch ``batch_id``; the write observes and returns
-    ``{"valid": n, "invalid": m}``."""
+def _dead_letter(out: str, tagged, batch_id: int) -> dict[str, int]:
+    """Dead-letter the rows of ``tagged`` with a ``reason``, as their source
+    line and the reason, in micro-batch ``batch_id``; the write observes
+    and returns ``{"valid": n, "invalid": m}``."""
     from pyspark.sql import functions as F
 
     from .functions.observe import observed_ingest
@@ -116,7 +119,7 @@ def _dead_letter(out: str, tagged, raw, batch_id: int) -> dict[str, int]:
 
     observed, obs = observed_ingest(tagged)
     sinks.write_quarantine(
-        observed.where(F.col("reason").isNotNull()).select(raw.alias("raw"), "reason"),
+        observed.where(F.col("reason").isNotNull()).select("raw", "reason"),
         f"{out}/dead_letter",
         batch_id,
     )
@@ -125,37 +128,20 @@ def _dead_letter(out: str, tagged, raw, batch_id: int) -> dict[str, int]:
 
 
 def fold(out: str, batch_df, batch_id: int) -> dict[str, int]:
-    """One ``pipeline --streaming`` micro-batch (module docstring: one
-    source scan). The tagged frame is persisted because two writes read it,
-    and both writes are keyed by ``batch_id``, so a batch re-run after a
-    crash before its offset commit rewrites its own rows. Returns the
-    batch's ``{"valid": n, "invalid": m}``.
+    """One ``pipeline --streaming`` micro-batch of source lines (module
+    docstring: one source scan). The tagged frame is persisted because two
+    writes read it, and both writes are keyed by ``batch_id``, so a batch
+    re-run after a crash before its offset commit rewrites its own rows.
+    Returns the batch's ``{"valid": n, "invalid": m}``.
     """
     from pyspark.sql import functions as F
 
-    from .operators.validation import flatten_events, validation_reason
+    from .operators.validation import flatten_events, tag_lines
     from .sources import sinks
-    from .sources.jsonl import CORRUPT_COL, PAYLOAD_SCHEMA
 
-    # one reason per row: the transport verdict for envelope-invalid replay
-    # rows, semantic validation for the rest
-    envelope = batch_df.withColumns({
-        "payload": F.from_json("payload", PAYLOAD_SCHEMA),
-        CORRUPT_COL: F.lit(None).cast("string"),
-    }).withColumn(
-        "reason", F.when(F.col("valid"), validation_reason()).otherwise(F.col("reason"))
-    )
-    # envelope-invalid rows dead-letter their source line; semantically
-    # invalid ones the envelope as validated, reason included
-    dead_letter_raw = F.when(~F.col("valid"), F.col("raw")).when(
-        F.col("reason").isNotNull(),
-        F.to_json(F.struct("event_type", "event_time", "payload", CORRUPT_COL, "reason")),
-    )
-    tagged = envelope.select(
-        "event_type", "event_time", "payload", "reason", dead_letter_raw.alias("raw")
-    ).persist()
+    tagged = tag_lines(batch_df).persist()
     try:
-        counts = _dead_letter(out, tagged, F.col("raw"), batch_id)
+        counts = _dead_letter(out, tagged, batch_id)
         if counts["valid"]:
             # idempotent landing + touched-hour recompute (exact distincts
             # across batches, no additive-merge drift)
@@ -189,8 +175,7 @@ def cmd_pipeline(args) -> int:
     from pyspark.sql import functions as F
 
     from .operators.hourly import hourly_business_metrics
-    from .operators.validation import flatten_events, validation_reason
-    from .sources.jsonl import read_events_jsonl
+    from .operators.validation import flatten_events, tag_lines
     from .sources.sinks import land_raw_increment
 
     out = args.output.rstrip("/")
@@ -229,8 +214,8 @@ def cmd_pipeline(args) -> int:
         from .sources.replay_source import replay_stream
         from .streaming.runner import run_stream_foreach_batch
 
-        # producer: verdict-tagged segments, one per micro-batch; consumer:
-        # Spark's file stream source, one segment per trigger
+        # producer: segments of source lines, one per micro-batch;
+        # consumer: Spark's file stream source, one segment per trigger
         stream = replay_stream(spark, args.input, seg_dir, args.lines_per_batch)
         counts = {"valid": 0, "invalid": 0, "batches": 0}
 
@@ -244,7 +229,7 @@ def cmd_pipeline(args) -> int:
         run_stream_foreach_batch(spark, stream, on_batch, f"{out}/_checkpoint")
         print(json.dumps({"mode": "streaming", **counts, "output": out}))
     else:
-        tagged = read_events_jsonl(spark, args.input).withColumn("reason", validation_reason())
+        tagged = tag_lines(spark.read.text(args.input))
         # a batch run replaces its output, as the hourly store's overwrite
         # does: a re-run of one input leaves what one run leaves
         for store in ("raw_events", "dead_letter"):
@@ -253,7 +238,7 @@ def cmd_pipeline(args) -> int:
         # writes read it
         tagged.persist()
         try:
-            counts = _dead_letter(out, tagged, F.to_json(F.struct("*")), 0)
+            counts = _dead_letter(out, tagged, 0)
             valid = flatten_events(tagged.where(F.col("reason").isNull()))
             land_raw_increment(valid, f"{out}/raw_events", "b0")
             metrics, n_hours = _counted(hourly_business_metrics(valid))

@@ -1,11 +1,13 @@
 """Validation / dead-letter split / flatten (reference F1-F4).
 
-Mirrors, as declarative column predicates, the reference's three validation
-layers:
+``tag_lines`` is the one way source lines become envelopes and reasons
+(batch and streaming ``pipeline``, the Kafka parse). As declarative column
+predicates it mirrors the reference's validation layers:
 
-- F1 envelope (producer/producer.py:55-67): object-shaped, required keys
-  {event_type, event_time, payload}, non-blank ``event_type`` after strip,
-  non-empty ``payload``;
+- F1 envelope (producer/producer.py:55-67) on the raw line, in the
+  producer's order and words (missing keys listed sorted, so the text is
+  deterministic); ``0``, ``false``, ``null``, ``""``, ``[]``, ``{}`` and a
+  blank-after-strip string ``event_type`` are empty, as in Python;
 - F2 semantic (consumer/consumer.py:102-123): parseable ``event_time``
   (Z-suffix tolerated), per-type required payload fields from
   ``REQUIRED_PAYLOAD_FIELDS`` — unknown event types have no required fields
@@ -16,13 +18,17 @@ layers:
   from aggregates; NULL input is "valid 0.0" in aggregation context, which a
   ``sum`` that skips NULLs reproduces.
 
-Fixed-schema JSON cannot distinguish a key that is absent from one that is
-JSON-null; both map to NULL here, so "missing key" == "null field"
-(a documented, strictly-wider invalidity than the reference's key-presence
-check).
+Spark's JSON parsers are not ``json.loads``: text after the closing brace
+is accepted (the producer: ``Malformed JSON``), and a bare ``NaN`` line
+(the producer: ``Event is not a dictionary``) or a duplicate key outside a
+clean known-type parse (the producer: last key wins) is ``Malformed JSON``.
 
-The split is a single pass: one ``reason`` expression evaluated once; valid
-rows flow on flattened (F4: ``payload.*`` to top level,
+``validation_reason`` is the same tree for frames that are already
+envelopes (``_corrupt`` marks unparseable records); there an absent key and
+a JSON null both read NULL, so "missing key" == "null field" (a documented,
+strictly-wider invalidity than the reference's key-presence check).
+
+Valid rows flow on flattened (F4: ``payload.*`` to top level,
 consumer/consumer.py:193-217), invalid rows carry their first failing reason.
 Everything is built-in column algebra — no Python UDFs (SURVEY.md §2.6).
 """
@@ -35,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import gateway_columns
-from ..sources.jsonl import CORRUPT_COL
+from ..sources.jsonl import CORRUPT_COL, ENVELOPE_SCHEMA
 
 # consumer/consumer.py:102-110 verbatim semantics.
 REQUIRED_PAYLOAD_FIELDS: dict[str, set[str]] = {
@@ -87,8 +93,9 @@ def parsed_event_time() -> Column:
 
 
 def validation_reason() -> Column:
-    """NULL for valid rows, else the first failing reason (reference order:
-    malformed -> envelope -> event_time -> per-type payload fields).
+    """NULL for valid rows of an envelope frame, else the first failing
+    reason (reference order: malformed -> envelope -> event_time ->
+    per-type payload fields).
 
     The tree is built once per JVM (``gateway_columns``): it takes some
     hundred py4j round trips, which a streaming micro-batch would otherwise
@@ -98,7 +105,6 @@ def validation_reason() -> Column:
 
 
 def _build_validation_reason() -> Column:
-    blank_type = F.col("event_type").isNull() | (F.trim(F.col("event_type")) == "")
     return (
         F.when(F.col(CORRUPT_COL).isNotNull(), "Malformed JSON")
         .when(
@@ -107,10 +113,83 @@ def _build_validation_reason() -> Column:
             | F.col("payload").isNull(),
             "Missing required keys",
         )
-        .when(blank_type | _payload_empty(), "event_type or payload is empty")
+        .otherwise(_content_reason())
+    )
+
+
+def _content_reason() -> Column:
+    """The branches both trees share: blank type or empty payload, then F2."""
+    blank_type = F.col("event_type").isNull() | (F.trim(F.col("event_type")) == "")
+    return (
+        F.when(blank_type | _payload_empty(), "event_type or payload is empty")
         .when(parsed_event_time().isNull(), "Invalid event_time format")
         .otherwise(_missing_required())
     )
+
+
+_ENVELOPE_KEYS = ("event_time", "event_type", "payload")  # sorted, as F1 lists them
+_BLANK = r"(?U)^[\s\x1c-\x1f]*$"  # what Python's str.strip() strips
+
+
+def tag_lines(lines: DataFrame) -> DataFrame:
+    """Source lines (string column ``value``, as ``spark.read.text``, the
+    text stream source and a cast Kafka ``value`` give them) -> ``event_type,
+    event_time, payload, reason, raw``: ``reason`` NULL for a valid event,
+    ``raw`` the line on rows with a reason. The trees are built once per
+    JVM (``gateway_columns``) and carry no alias."""
+    envelope, event, reason, raw = gateway_columns("tag_lines", _build_tag_lines)
+    return (
+        lines.select(envelope.alias("envelope"), "value")
+        .select("envelope.*", "value")
+        .withColumn("event", event)
+        .withColumn("reason", reason)
+        .select("event_type", "event_time", "payload", "reason", raw.alias("raw"))
+    )
+
+
+def _build_tag_lines() -> tuple[Column, Column, Column, Column]:
+    envelope = F.from_json(
+        "value", ENVELOPE_SCHEMA, {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
+    )
+    # one from_json decides a clean parse of a known type (its event_type
+    # was a JSON string, every key present); only other lines pay for F1
+    decided = (
+        F.col(CORRUPT_COL).isNull()
+        & F.col("event_type").isin(*REQUIRED_PAYLOAD_FIELDS)
+        & F.col("event_time").isNotNull()
+        & F.col("payload").isNotNull()
+    )
+    event = F.when(~decided, F.try_parse_json("value"))
+    reason = F.coalesce(F.when(~decided, _producer_reason(F.col("event"))), _content_reason())
+    return envelope, event, reason, F.when(F.col("reason").isNotNull(), F.col("value"))
+
+
+def _producer_reason(event: Column) -> Column:
+    """producer.py::validate_event's reason for the line parsed as a
+    variant (NULL: unparseable), or NULL when F1 passes."""
+    field = {k: F.variant_get(event, f"$.{k}", "variant") for k in _ENVELOPE_KEYS}
+    absent = [F.when(v.isNull(), F.lit(f"'{k}'")) for k, v in field.items()]
+    return (
+        F.when(event.isNull(), "Malformed JSON")
+        .when(~F.schema_of_variant(event).startswith("OBJECT"), "Event is not a dictionary")
+        .when(
+            reduce(lambda a, b: a | b, [c.isNotNull() for c in absent]),
+            F.concat(F.lit("Missing required keys: ["), F.concat_ws(", ", *absent), F.lit("]")),
+        )
+        .when(
+            _falsy(field["event_type"], _BLANK) | _falsy(field["payload"], "^$"),
+            "event_type or payload is empty",
+        )
+    )
+
+
+def _falsy(value: Column, blank: str) -> Column:
+    """Python falsiness of a JSON ``value`` (variant), a string counting
+    as empty when it matches ``blank``."""
+    text = F.try_variant_get(value, "$", "string")
+    return F.is_variant_null(value) | F.when(
+        F.schema_of_variant(value) == "STRING", text.rlike(blank)
+    ).otherwise(text.isin("false", "[]", "{}") | (text.try_cast("double") == 0))
 
 
 def flatten_events(df: DataFrame) -> DataFrame:
@@ -141,13 +220,14 @@ def _build_flatten_columns() -> list[Column]:
     ]
 
 
-def split_events(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid flattened events, dead-letter rows with ``reason``).
+def split_events(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid flattened events, dead-letter rows with ``reason`` and
+    ``raw``) of a frame of source lines (``tag_lines``).
 
-    The dead-letter side keeps the raw envelope + reason — the engine-native
+    The dead-letter side keeps the source line + reason — the engine-native
     quarantine (reference: producer.py:35-39, consumer.py:76-79, 125-128).
     """
-    with_reason = df.withColumn("reason", validation_reason())
-    valid = flatten_events(with_reason.where(F.col("reason").isNull()))
-    invalid = with_reason.where(F.col("reason").isNotNull())
+    tagged = tag_lines(lines)
+    valid = flatten_events(tagged.where(F.col("reason").isNull()))
+    invalid = tagged.where(F.col("reason").isNotNull())
     return valid, invalid

@@ -1,23 +1,21 @@
-"""JSONL event-envelope source (reference: producer/producer.py:41-53).
+"""JSONL event-envelope schema (reference: producer/producer.py:41-53).
 
-Reads the reference's event format — one JSON object per line with envelope
-``{event_type, event_time, payload{...}}`` — with an EXPLICIT schema (never
-inference inside the engine) in PERMISSIVE mode; unparseable lines land in a
-``_corrupt`` column instead of failing the job, which is the engine-native
-form of the reference's dead-letter file (data/bad_events.log).
+The reference's event format is one JSON object per line with envelope
+``{event_type, event_time, payload{...}}``. Every source hands the engine
+its lines as text (``spark.read.text``, the text stream source, a Kafka
+``value``), and ``operators.validation.tag_lines`` parses them with this
+EXPLICIT schema (never inference inside the engine) in PERMISSIVE mode: a
+record that does not fit lands in the ``_corrupt`` column instead of
+failing the job.
 
 String-first numerics: the reference accepts JSON numbers *and* numeric
 strings for session_id / energy_consumed / payment_amount
 (consumer/consumer.py:249, tests/test_consumer.py:14-17), so the envelope
 types them as strings and casting happens in the validation/flatten layer.
-
-Scale note: a JSONL scan parallelizes per file-split; schema-on-read keeps
-the parse single-pass and column-pruned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 CORRUPT_COL = "_corrupt"
@@ -41,12 +39,3 @@ ENVELOPE_SCHEMA = StructType(
         StructField(CORRUPT_COL, StringType(), True),
     ]
 )
-
-
-def read_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    return (
-        spark.read.schema(ENVELOPE_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-    )

@@ -20,9 +20,11 @@ real-connector round-trip is env-gated; the SAME functions also execute
 end-to-end against the file-backed contract double (sources/kafka_fake.py,
 ``fmt="kafkafake"`` — Spark reserves the short name "kafka" even without
 the jar) in tests/test_kafka_optional.py, so serialization, option surface,
-offset pacing, and the dead-letter parse all run for real here. Everything
-downstream of ``parse`` is the same source-agnostic transform pipeline used
-by the file paths.
+offset pacing, and the dead-letter parse all run for real here. The parse
+hands each record's ``value`` to the one line verdict
+(``operators.validation.tag_lines``) that judges the file sources' lines,
+so a record gets the reason and dead-letter ``raw`` its line would get in
+``pipeline``.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .jsonl import ENVELOPE_SCHEMA
+from ..operators.validation import tag_lines
 
 
 def kafka_stream_source(
@@ -43,7 +45,7 @@ def kafka_stream_source(
     subscribe_pattern: str | None = None,
     fail_on_data_loss: bool | None = None,
 ) -> DataFrame:
-    """Streaming Kafka source -> parsed envelope rows (+ _corrupt capture).
+    """Streaming Kafka source -> the tagged frame of ``parse_kafka_values``.
 
     ``maxOffsetsPerTrigger`` is the engine-native backpressure bound the
     reference approximates with ``max_poll_records`` (consumer.py:491).
@@ -74,37 +76,9 @@ def kafka_stream_source(
 
 
 def parse_kafka_values(raw: DataFrame) -> DataFrame:
-    """value bytes -> JSON envelope with corrupt-record capture.
-
-    ``from_json`` puts unparseable payloads into the schema's _corrupt field
-    (PERMISSIVE), feeding the same dead-letter split as the file source.
-    """
-    parsed = raw.select(
-        F.from_json(
-            F.col("value").cast("string"),
-            ENVELOPE_SCHEMA,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("e"),
-        F.col("value").cast("string").alias("_raw"),
-    )
-    # from_json yields a fully-null struct (not a _corrupt entry) for
-    # non-JSON input; normalize that to the corrupt column so the validation
-    # split sees one shape from every source.
-    return parsed.select(
-        F.col("e.event_type").alias("event_type"),
-        F.col("e.event_time").alias("event_time"),
-        F.col("e.payload").alias("payload"),
-        F.coalesce(
-            F.col("e._corrupt"),
-            F.when(
-                F.col("e.event_type").isNull()
-                & F.col("e.event_time").isNull()
-                & F.col("e.payload").isNull()
-                & ~F.col("_raw").rlike("^\\s*\\{"),
-                F.col("_raw"),
-            ),
-        ).alias("_corrupt"),
-    )
+    """value bytes -> the tagged frame ``event_type, event_time, payload,
+    reason, raw`` of ``tag_lines``, each value read as one source line."""
+    return tag_lines(raw.select(F.col("value").cast("string").alias("value")))
 
 
 def to_kafka_sink(

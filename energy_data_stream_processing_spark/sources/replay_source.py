@@ -5,28 +5,20 @@ The reference's transport layer is a Kafka producer that replays a JSONL
 file line by line — parsing each line, diverting malformed JSON and
 envelope-invalid events to an error log with a reason, optionally
 shuffling, and pacing sends with a sleep (producer/producer.py:41-67).
-This module is that transport re-expressed as a first-class Spark source:
+This module is that transport re-expressed as a first-class Spark source.
+It moves lines only: the producer's verdicts are the engine's one line
+verdict, ``operators.validation.tag_lines``, which every consumer of these
+lines applies (``pipeline --streaming`` in ``__main__.fold``).
 
-- ``replay_stream``: the streaming replay. ``stage_replay`` writes the
-  rows on the driver as one JSON segment file per ``lines_per_batch``
-  lines, and Spark's built-in file stream source reads them one segment
+- ``replay_stream``: the streaming replay. ``stage_replay`` copies the
+  input's lines unchanged into one segment file per ``lines_per_batch``
+  lines, and Spark's built-in text stream source reads them one segment
   per trigger: the paced replay the reference gets from ``time.sleep``,
   but checkpoint-resumable (a restarted query resumes at the first segment
   its seen-files log lacks, which the reference's fire-and-forget loop
   cannot do). ``pipeline --streaming`` reads through it.
-- ``jsonl_replay`` batch form: one scan, every line becomes a row carrying
-  its validity verdict and the producer's exact reason string.
-
-Envelope verdicts mirror producer.py::validate_event:
-  * unparseable line            -> "Malformed JSON"
-  * parsed but not a dict       -> "Event is not a dictionary"
-  * missing envelope keys       -> "Missing required keys: <sorted names>"
-    (the reference formats the raw Python set — engine-side the names are
-    sorted so the reason string is deterministic; documented divergence)
-  * empty event_type / payload  -> "event_type or payload is empty"
-    (the reference calls .strip() on a possibly-non-string event_type and
-    crashes on e.g. a numeric type; engine-side non-strings stringify —
-    documented divergence, same verdict)
+- ``jsonl_replay`` batch form: one scan, every line becomes a
+  ``(line_no, raw)`` row in replay order.
 
 Deterministic shuffle: ``shuffle_seed`` orders lines by md5(seed:line_no) —
 the reference's random.shuffle made replays irreproducible; this keeps the
@@ -34,7 +26,7 @@ the reference's random.shuffle made replays irreproducible; this keeps the
 
 Scale note: this source is the TRANSPORT-semantics twin (single ordered
 file, like the single Kafka partition it stands in for). Parallel bulk
-ingest of many JSONL files stays on the native reader (sources/jsonl.py),
+ingest of many JSONL files is batch ``pipeline``'s ``spark.read.text``,
 which splits per file; a sharded topic maps to one replay source per shard
 directory.
 """
@@ -43,7 +35,6 @@ from __future__ import annotations
 
 import hashlib
 import itertools
-import json
 import os
 import re
 import time
@@ -53,12 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import StructType
 
-REPLAY_SCHEMA = (
-    "line_no bigint, valid boolean, reason string, event_type string, "
-    "event_time string, payload string, raw string"
-)
-
-_REQUIRED = ("event_type", "event_time", "payload")
+REPLAY_SCHEMA = "line_no bigint, raw string"
 
 
 def _order(n: int, seed: str | None) -> Sequence[int]:
@@ -69,59 +55,38 @@ def _order(n: int, seed: str | None) -> Sequence[int]:
     return sorted(range(n), key=lambda i: hashlib.md5(f"{seed}:{i}".encode()).hexdigest())
 
 
-def _parse_line(line_no: int, raw: str):
-    line = raw.rstrip("\n")
-    try:
-        event = json.loads(line)
-    except json.JSONDecodeError:
-        return (line_no, False, "Malformed JSON", None, None, None, line)
-    if not isinstance(event, dict):
-        return (line_no, False, "Event is not a dictionary", None, None, None, line)
-    missing = [k for k in _REQUIRED if k not in event]
-    if missing:
-        return (
-            line_no, False,
-            f"Missing required keys: {sorted(missing)}",
-            None, None, None, line,
-        )
-    etype = str(event.get("event_type") or "")
-    payload = event.get("payload")
-    if not etype.strip() or not payload:
-        return (line_no, False, "event_type or payload is empty", None, None, None, line)
-    return (
-        line_no, True, "",
-        etype,
-        str(event.get("event_time")),
-        json.dumps(payload, sort_keys=True),
-        line,
-    )
-
-
-_FIELDS = tuple(col.split()[0] for col in REPLAY_SCHEMA.split(", "))
 _SEGMENT = re.compile(r"seg-(\d+)-(\d+)\.jsonl")
-# hidden from Spark's file listing (dot prefix), like the segment temp files
-_STAGE_MANIFEST = ".lines_per_batch"
+# hidden from Spark's file listing (dot prefix), like the segment temp
+# files; segments of verdict-tagged rows, which an earlier stage_replay
+# wrote, sit beside a ".lines_per_batch" manifest instead
+_STAGE_MANIFEST = ".line_segments"
 
 
 def stage_replay(path: str, seg_dir: str, lines_per_batch: int) -> int:
     """Stage ``path`` for the file stream source: one ``seg-<start>-<end>.jsonl``
-    segment per ``lines_per_batch`` lines in ``seg_dir``, each row the
-    ``REPLAY_SCHEMA`` row ``_parse_line`` gives the line. Returns the number
-    of segments written.
+    segment per ``lines_per_batch`` lines in ``seg_dir``, each the input's
+    lines byte for byte. Returns the number of segments written.
 
     The input is streamed once. Each segment lands by ``os.replace`` from a
     dot-prefixed temp name, so a listing never sees a partial file, and
     segment mtimes increase in line order, so the source replays in file
     order. Segments already staged are kept: a re-run stages only the lines
-    after the last staged end. A shrunk input, or a different
+    after the last staged end. A shrunk input, a different
     ``lines_per_batch`` against existing segments (whose lines would land
-    again under new batch ids), raises ``ValueError``."""
+    again under new batch ids), or segments of verdict-tagged rows (read as
+    lines, every row would be dead-lettered) raise ``ValueError`` before
+    anything is written."""
     os.makedirs(seg_dir, exist_ok=True)
     manifest = os.path.join(seg_dir, _STAGE_MANIFEST)
     staged = sorted(
         (int(m[2]), name) for name in os.listdir(seg_dir) if (m := _SEGMENT.fullmatch(name))
     )
     if staged:
+        if not os.path.exists(manifest):
+            raise ValueError(
+                f"{seg_dir} holds segments of verdict-tagged rows, not source "
+                "lines: use a fresh output"
+            )
         with open(manifest) as f:
             staged_lpb = int(f.read())
         if staged_lpb != lines_per_batch:
@@ -139,7 +104,7 @@ def stage_replay(path: str, seg_dir: str, lines_per_batch: int) -> int:
     mtime_ms = max(mtime_ms + 1, time.time_ns() // 1_000_000)
 
     written = 0
-    with open(path) as f:
+    with open(path, "rb") as f:
         lines = enumerate(f)
         if sum(1 for _ in itertools.islice(lines, end)) < end:
             raise ValueError(
@@ -149,11 +114,8 @@ def stage_replay(path: str, seg_dir: str, lines_per_batch: int) -> int:
         while chunk := list(itertools.islice(lines, lines_per_batch)):
             name = f"seg-{chunk[0][0]}-{chunk[-1][0] + 1}.jsonl"
             tmp = os.path.join(seg_dir, f".{name}")
-            with open(tmp, "w") as out:
-                out.writelines(
-                    json.dumps(dict(zip(_FIELDS, _parse_line(i, raw)))) + "\n"
-                    for i, raw in chunk
-                )
+            with open(tmp, "wb") as out:
+                out.writelines(line for _, line in chunk)
             os.utime(tmp, ns=(mtime_ms * 1_000_000,) * 2)
             os.replace(tmp, os.path.join(seg_dir, name))
             mtime_ms += 1
@@ -166,16 +128,12 @@ def replay_stream(
 ) -> DataFrame:
     """The paced streaming replay of ``path``: stage it into ``seg_dir``
     (``stage_replay``) and read the segments with Spark's file stream
-    source, one segment (``lines_per_batch`` lines) per trigger. A query on
-    the same checkpoint resumes at the first segment its seen-files log
-    lacks, so a restart, or a restart after the input grew, emits each
-    line once."""
+    source as text (one ``value`` row per line), one segment
+    (``lines_per_batch`` lines) per trigger. A query on the same checkpoint
+    resumes at the first segment its seen-files log lacks, so a restart, or
+    a restart after the input grew, emits each line once."""
     stage_replay(path, seg_dir, lines_per_batch)
-    return (
-        spark.readStream.schema(REPLAY_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(seg_dir)
-    )
+    return spark.readStream.option("maxFilesPerTrigger", 1).text(seg_dir)
 
 
 class _ReplayBatchReader(DataSourceReader):
@@ -186,10 +144,10 @@ class _ReplayBatchReader(DataSourceReader):
         self.seed = options.get("shuffle_seed")
 
     def read(self, partition) -> Iterator[tuple]:
-        with open(self.path) as f:
+        with open(self.path, encoding="utf-8") as f:
             lines = f.readlines()
         for pos, i in enumerate(_order(len(lines), self.seed)):
-            yield _parse_line(pos, lines[i])
+            yield pos, lines[i].rstrip("\n")
 
 
 class JsonlReplayDataSource(DataSource):

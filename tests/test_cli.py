@@ -194,12 +194,7 @@ def test_fold_rerun_of_a_batch_is_idempotent(spark, mixed_file, tmp_path):
     """A micro-batch re-run under the same batch id (a crash between its
     writes and its offset commit) rewrites its own dead-letter, raw and
     hour rows instead of adding to them."""
-    from energy_data_stream_processing_spark.sources.replay_source import (
-        JsonlReplayDataSource,
-    )
-
-    spark.dataSource.register(JsonlReplayDataSource)
-    batch = spark.read.format("jsonl_replay").option("path", mixed_file).load()
+    batch = spark.read.text(mixed_file)
     out = str(tmp_path / "out")
     assert fold(out, batch, 7) == {"valid": 96, "invalid": 28}
     hours = sorted(map(tuple, spark.read.parquet(f"{out}/hourly_metrics").collect()))
@@ -211,22 +206,157 @@ def test_fold_rerun_of_a_batch_is_idempotent(spark, mixed_file, tmp_path):
 
 def test_fold_runs_five_spark_jobs(spark, mixed_file, tmp_path):
     """A warm micro-batch runs five Spark jobs: the dead-letter write, the
-    raw landing, and the touched-hour recompute's three (a batch frame read
-    through the replay source stands in for a segment). The raw store is
-    read back with the increment's schema, so no job infers it."""
-    from energy_data_stream_processing_spark.sources.replay_source import (
-        JsonlReplayDataSource,
-    )
-
+    raw landing, and the touched-hour recompute's three (a batch text read
+    of the file stands in for a segment). The raw store is read back with
+    the increment's schema, so no job infers it."""
     from tests.test_round10_ops import _last_job_id
 
-    spark.dataSource.register(JsonlReplayDataSource)
-    batch = spark.read.format("jsonl_replay").option("path", mixed_file).load()
+    batch = spark.read.text(mixed_file)
     out = str(tmp_path / "out")
     fold(out, batch, 0)
     before = _last_job_id(spark)
     assert fold(out, batch, 1) == {"valid": 96, "invalid": 28}
     assert _last_job_id(spark) - before - 1 == 5
+
+
+# one line of each class the producer's F1 and the consumer's F2 tell
+# apart, with the reason every source gives it (None: a valid event)
+_EVENT = {"event_type": "user_login", "event_time": "2024-02-01T00:15:00",
+          "payload": {"customer_id": "C1", "session_id": 1, "channel": "web"}}
+_EMPTY = "event_type or payload is empty"
+
+
+def _envelope(**fields):
+    return json.dumps({**_EVENT, **fields}, ensure_ascii=False)
+
+
+_VERDICTS = [
+    (json.dumps(_EVENT), None),
+    ("{broken json", "Malformed JSON"),
+    ("", "Malformed JSON"),
+    ("   ", "Malformed JSON"),
+    ("\t", "Malformed JSON"),
+    ("[1, 2]", "Event is not a dictionary"),
+    ("42", "Event is not a dictionary"),
+    ('"a string"', "Event is not a dictionary"),
+    ("null", "Event is not a dictionary"),
+    (json.dumps([_EVENT, _EVENT]), "Event is not a dictionary"),
+    (json.dumps({k: v for k, v in _EVENT.items() if k != "event_time"}),
+     "Missing required keys: ['event_time']"),
+    ("{}", "Missing required keys: ['event_time', 'event_type', 'payload']"),
+    (_envelope(event_type="  "), _EMPTY),
+    (_envelope(event_type="\t"), _EMPTY),
+    (_envelope(event_type=0), _EMPTY),
+    (_envelope(event_type=False), _EMPTY),
+    (_envelope(event_type=None), _EMPTY),
+    (_envelope(payload={}), _EMPTY),
+    (_envelope(payload=None), _EMPTY),
+    (_envelope(payload="abc"), _EMPTY),
+    (_envelope(payload=[1, 2]), _EMPTY),
+    (_envelope(event_time=None), "Invalid event_time format"),
+    (_envelope(event_type="bill_payment"), "Missing payload fields: bill_payment"),
+    (_envelope(payload={"customer_id": "Zoë-東京", "session_id": 2, "channel": "web"}), None),
+    ("{ünparseable", "Malformed JSON"),
+    # Spark's JSON parser, not json.loads: the reference producer gives
+    # these two "Malformed JSON" and "Event is not a dictionary"
+    (json.dumps(_EVENT) + " trailing", None),
+    ("NaN", "Malformed JSON"),
+]
+
+
+def _dead_letters(out):
+    """A store's dead letters as a multiset of (raw, reason)."""
+    rows = Counter()
+    for root, _, names in os.walk(f"{out}/dead_letter"):
+        for n in names:
+            if n.endswith(".json"):
+                with open(os.path.join(root, n), encoding="utf-8") as f:
+                    rows.update((r["raw"], r["reason"]) for r in map(json.loads, f))
+    return rows
+
+
+def test_every_source_gives_each_line_its_verdict(spark, tmp_path, capsys):
+    """Batch ``pipeline``, ``pipeline --streaming`` and the Kafka parse give
+    every line of the verdict table its reason and dead-letter it as the
+    source line; the two modes land the same raw and hourly stores."""
+    import base64
+
+    from energy_data_stream_processing_spark.sources.kafka import kafka_stream_source
+    from energy_data_stream_processing_spark.sources.kafka_fake import FileKafkaDataSource
+
+    src = tmp_path / "verdicts.jsonl"
+    src.write_text("".join(f"{line}\n" for line, _ in _VERDICTS), encoding="utf-8")
+    want = Counter((line, reason) for line, reason in _VERDICTS if reason)
+    n_valid = sum(1 for _, reason in _VERDICTS if reason is None)
+
+    b, s = str(tmp_path / "b"), str(tmp_path / "s")
+    assert main(["pipeline", "--input", str(src), "--output", b]) == 0
+    batch = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert main(["pipeline", "--input", str(src), "--output", s,
+                 "--streaming", "--lines-per-batch", "8"]) == 0
+    stream = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (batch["valid"], batch["invalid"]) == (stream["valid"], stream["invalid"]) \
+        == (n_valid, len(_VERDICTS) - n_valid)
+    assert _dead_letters(b) == _dead_letters(s) == want
+    raw = {out: Counter(map(tuple, spark.read.parquet(f"{out}/raw_events")
+                            .drop("_increment_id").collect())) for out in (b, s)}
+    assert raw[b] == raw[s] and sum(raw[b].values()) == n_valid
+    assert _hours(spark, s, spark.read.parquet(f"{b}/hourly_metrics").columns) == _hours(spark, b)
+
+    # the Kafka double: one record per line, in a single-partition topic
+    try:
+        spark.dataSource.register(FileKafkaDataSource)
+    except Exception:  # noqa: BLE001 — already registered in this session
+        pass
+    topic_dir = tmp_path / "broker" / "verdicts"
+    topic_dir.mkdir(parents=True)
+    with open(topic_dir / "records.jsonl", "w") as f:
+        for line, _ in _VERDICTS:
+            value = base64.b64encode(line.encode("utf-8")).decode("ascii")
+            f.write(json.dumps({"key": None, "value": value}) + "\n")
+    rows = []
+    query = (
+        kafka_stream_source(spark, str(tmp_path / "broker"), "verdicts", fmt="kafkafake")
+        .writeStream.foreachBatch(lambda df, _: rows.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "kafka_ckpt"))
+        .start()
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert Counter((r["raw"], r["reason"]) for r in rows if r["reason"]) == want
+    assert [r["raw"] for r in rows if r["reason"] is None] == [None] * n_valid
+
+
+def test_output_staged_as_verdict_tagged_rows_is_refused(events_file, tmp_path):
+    """An output whose ``_replay/`` segments hold verdict-tagged JSON rows
+    (segment staging before segments held the source lines) is refused with
+    a ``ValueError`` before anything is written: read as lines, every row
+    would be dead-lettered."""
+    out = tmp_path / "old"
+    seg = out / "_replay"
+    seg.mkdir(parents=True)
+    (seg / ".lines_per_batch").write_text("20")
+    tagged = [
+        {"line_no": 0, "valid": True, "reason": "", "event_type": "user_login",
+         "event_time": "2024-02-01T00:15:00", "raw": "{}",
+         "payload": '{"channel": "web", "customer_id": "C0", "session_id": 0}'},
+        {"line_no": 1, "valid": False, "reason": "Malformed JSON", "event_type": None,
+         "event_time": None, "payload": None, "raw": "{broken json"},
+    ]
+    (seg / "seg-0-20.jsonl").write_text("".join(json.dumps(r) + "\n" for r in tagged))
+    for sub in ("offsets", "commits", "sources/0"):
+        (out / "_checkpoint" / sub).mkdir(parents=True)
+    (out / "_checkpoint" / "metadata").write_text('{"id":"0b7f6c0e-9d4a-4b8e-8f00-2f1c7a3e5d11"}')
+    before = _tree(out)
+    dirs = sorted(d for d, _, _ in os.walk(out))
+
+    with pytest.raises(ValueError, match=rf"{re.escape(str(seg))} holds segments of verdict-tagged rows"):
+        main(["pipeline", "--input", events_file, "--output", str(out),
+              "--streaming", "--lines-per-batch", "20"])
+    assert _tree(out) == before
+    assert sorted(d for d, _, _ in os.walk(out)) == dirs
 
 
 @pytest.mark.parametrize("lpb", ["0", "-5"])

@@ -81,7 +81,7 @@ def test_kafka_roundtrip(spark, sf_dir, tmp_path):
     a = sorted(map(tuple, out.select("event_type", "event_time").collect()))
     b = sorted(map(tuple, expected.select("event_type", "event_time").collect()))
     assert a == b
-    assert out.where(F.col("_corrupt").isNotNull()).count() == 0
+    assert out.where(F.col("reason").isNotNull()).count() == 0
 
 
 # --------------------------------------------------------------------------
@@ -142,7 +142,7 @@ def _envelopes(spark, sf_dir, n=120):
 
 def test_fake_kafka_batch_write_stream_read_roundtrip(fake_broker, sf_dir, tmp_path):
     """events -> write_kafka_batch -> kafka_stream_source (paced micro-
-    batches) must reproduce the batch parse of the same rows, corrupt-free."""
+    batches) must reproduce the batch parse of the same rows, every row valid."""
     from energy_data_stream_processing_spark.sources.kafka import (
         kafka_stream_source,
         parse_kafka_values,
@@ -168,12 +168,12 @@ def test_fake_kafka_batch_write_stream_read_roundtrip(fake_broker, sf_dir, tmp_p
     # maxOffsetsPerTrigger pacing: 120 records at 50/trigger => >= 3 batches
     assert len([x for x in batches if x]) >= 3
     assert all(len(x) <= 50 for x in batches)
-    assert all(r["_corrupt"] is None for x in batches for r in x)
+    assert all(r["reason"] is None for x in batches for r in x)
 
 
 def test_fake_kafka_corrupt_record_diverts(fake_broker, sf_dir, tmp_path):
     """A rogue non-JSON record on the topic must surface through the
-    _corrupt dead-letter column, not crash the parse."""
+    dead-letter reason and raw columns, not crash the parse."""
     import base64
     import json as _json
 
@@ -196,7 +196,9 @@ def test_fake_kafka_corrupt_record_diverts(fake_broker, sf_dir, tmp_path):
     )
     rows = [r for b in batches for r in b]
     assert len(rows) == 11
-    assert sum(1 for r in rows if r["_corrupt"] is not None) == 1
+    assert [(r["reason"], r["raw"]) for r in rows if r["reason"] is not None] == [
+        ("Malformed JSON", "this is not json")
+    ]
     assert sum(1 for r in rows if r["event_type"] is not None) == 10
 
 

@@ -602,11 +602,6 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
     from energy_data_stream_processing_spark.operators.validation import (
         split_events,
     )
-    from energy_data_stream_processing_spark.sources.jsonl import (
-        CORRUPT_COL,
-        ENVELOPE_SCHEMA,
-        read_events_jsonl,
-    )
     from energy_data_stream_processing_spark.sources.sinks import (
         foreach_batch_statement_upsert,
     )
@@ -626,13 +621,7 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
     pg.sql("CREATE TABLE sample_bad_events (raw TEXT, reason TEXT)")
 
     def read_stream():
-        return (
-            spark.readStream.schema(ENVELOPE_SCHEMA)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
+        return spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
 
     valid_stream, _ = split_events(read_stream())
     flush = foreach_batch_statement_upsert(
@@ -651,12 +640,7 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
     _, invalid_stream = split_events(read_stream())
 
     def flush_dead(batch_df, batch_id):
-        import pyspark.sql.functions as SF
-
-        rows = batch_df.select(
-            SF.coalesce(SF.col(CORRUPT_COL), SF.to_json(SF.struct("*"))).alias("raw"),
-            "reason",
-        ).collect()
+        rows = batch_df.select("raw", "reason").collect()
         for r in rows:
             pg.sql(
                 "INSERT INTO sample_bad_events VALUES ("
@@ -673,7 +657,7 @@ def test_reference_sample_end_to_end_live(pg, spark, tmp_path):
     assert q_metrics.awaitTermination(300), "metrics stream did not terminate"
     assert q_dead.awaitTermination(300), "dead-letter stream did not terminate"
 
-    valid_batch, _ = split_events(read_events_jsonl(spark, str(src)))
+    valid_batch, _ = split_events(spark.read.text(str(src)))
     assert valid_batch.count() == 220  # every sample line passes validation
     want = {
         str(r["hour"]): r.asDict()

@@ -1,13 +1,16 @@
-"""Paced JSONL replay: producer-parity verdicts of the ``jsonl_replay``
-batch source, stream≡batch law and checkpoint-resumable pacing of
-``replay_stream``, deterministic shuffle, segment staging."""
+"""Paced JSONL replay: producer-parity verdicts of the lines the
+``jsonl_replay`` batch source yields, stream≡batch law and
+checkpoint-resumable pacing of ``replay_stream``, deterministic shuffle,
+segment staging."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
+from energy_data_stream_processing_spark.operators.validation import tag_lines
 from energy_data_stream_processing_spark.sources.replay_source import (
     JsonlReplayDataSource,
     replay_stream,
@@ -38,43 +41,34 @@ def registered(spark):
 
 
 def test_batch_verdicts_match_producer_semantics(registered, fixture_path):
-    rows = {
-        r.line_no: r
-        for r in registered.read.format("jsonl_replay")
-        .option("path", fixture_path)
-        .load()
-        .collect()
-    }
+    replay = registered.read.format("jsonl_replay").option("path", fixture_path).load()
+    # one partition, in file order
+    rows = tag_lines(replay.select(F.col("raw").alias("value"))).collect()
     assert len(rows) == 7
-    assert rows[0].valid and rows[0].event_type == "user_login"
-    assert json.loads(rows[0].payload) == {"customer_id": "C1"}
-    assert not rows[1].valid and rows[1].reason == "Malformed JSON"
-    assert not rows[2].valid and rows[2].reason == "Event is not a dictionary"
-    assert not rows[3].valid and rows[3].reason == "Missing required keys: ['event_time']"
-    assert not rows[4].valid and rows[4].reason == "event_type or payload is empty"
-    assert not rows[5].valid and rows[5].reason == "event_type or payload is empty"
-    assert rows[6].valid
+    assert rows[0].reason == "Missing payload fields: user_login"  # F1 passes, F2 does not
+    assert rows[0].event_type == "user_login" and rows[0].payload.customer_id == "C1"
+    assert rows[1].reason == "Malformed JSON" and rows[1].raw == LINES[1]
+    assert rows[2].reason == "Event is not a dictionary"
+    assert rows[3].reason == "Missing required keys: ['event_time']"
+    assert rows[4].reason == "event_type or payload is empty"
+    assert rows[5].reason == "event_type or payload is empty"
+    assert rows[6].reason == "event_type or payload is empty"  # no known payload field
 
 
 def test_stream_equals_batch_and_paces(registered, fixture_path, tmp_path):
-    """Drained stream == batch scan (same rows), delivered in paced
+    """Drained stream == batch scan (same lines), delivered in paced
     micro-batches of lines_per_batch lines: 7 lines at 3 per batch are 3
     batches."""
     batch = sorted(
-        map(
-            tuple,
-            registered.read.format("jsonl_replay")
-            .option("path", fixture_path)
-            .load()
-            .collect(),
-        )
+        r.raw
+        for r in registered.read.format("jsonl_replay").option("path", fixture_path).load().collect()
     )
     seen_batches = []
 
     def fold(df, batch_id):
         rows = df.collect()
         if rows:
-            seen_batches.append(sorted(map(tuple, rows)))
+            seen_batches.append(sorted(r.value for r in rows))
 
     q = (
         replay_stream(registered, fixture_path, str(tmp_path / "_replay"), 3)
@@ -140,14 +134,12 @@ def _rows_by_full_read(path, seed):
     """Reference read: the whole file in the full md5 order."""
     import hashlib
 
-    from energy_data_stream_processing_spark.sources.replay_source import _parse_line
-
     with open(path) as f:
-        lines = f.readlines()
+        lines = f.read().splitlines()
     order = list(range(len(lines)))
     if seed is not None:
         order.sort(key=lambda i: hashlib.md5(f"{seed}:{i}".encode()).hexdigest())
-    return [_parse_line(pos, lines[i]) for pos, i in enumerate(order)]
+    return [(pos, lines[i]) for pos, i in enumerate(order)]
 
 
 @pytest.mark.parametrize("seed", [None, "s1"])
@@ -170,12 +162,10 @@ def test_range_reads_match_full_file_reads(tmp_path, seed):
 
 
 def test_staged_rows_equal_jsonl_replay_rows(registered, tmp_path):
-    """``stage_replay`` segments read back by Spark's JSON reader give the
-    jsonl_replay rows, for every envelope verdict and non-ASCII text."""
-    from energy_data_stream_processing_spark.sources.replay_source import (
-        REPLAY_SCHEMA,
-        stage_replay,
-    )
+    """``stage_replay`` segments read back by Spark's text reader give the
+    jsonl_replay lines byte for byte, for every envelope verdict and
+    non-ASCII text."""
+    from energy_data_stream_processing_spark.sources.replay_source import stage_replay
 
     p = tmp_path / "verdicts.jsonl"
     non_ascii = json.dumps({"event_type": "user_login", "event_time": "2024-01-01T02:00:00",
@@ -183,14 +173,13 @@ def test_staged_rows_equal_jsonl_replay_rows(registered, tmp_path):
     p.write_text("\n".join([*LINES, non_ascii, "{ünparseable"]) + "\n", encoding="utf-8")
     seg_dir = str(tmp_path / "_replay")
     assert stage_replay(str(p), seg_dir, 4) == 3
-    staged = registered.read.schema(REPLAY_SCHEMA).json(seg_dir)
+    staged = registered.read.text(seg_dir)
     replay = registered.read.format("jsonl_replay").option("path", str(p)).load()
-    assert staged.columns == replay.columns
-    rows = sorted(map(tuple, staged.collect()))
-    assert rows == sorted(map(tuple, replay.collect()))
-    assert len(rows) == 9 and rows[7][-1] == non_ascii
-    assert {r[2] for r in rows} == {
-        "", "Malformed JSON", "Event is not a dictionary",
+    lines = sorted(r.value for r in staged.collect())
+    assert lines == sorted(r.raw for r in replay.collect())
+    assert len(lines) == 9 and non_ascii in lines
+    assert {r.reason for r in tag_lines(staged).collect()} == {
+        "Missing payload fields: user_login", "Malformed JSON", "Event is not a dictionary",
         "Missing required keys: ['event_time']", "event_type or payload is empty",
     }
 
@@ -220,7 +209,7 @@ def test_stage_replay_extends_a_grown_input_and_refuses_a_mismatch(tmp_path):
     assert stage_replay(str(p), seg_dir, 3) == 2
     assert segments()[3:] == ["seg-7-10.jsonl", "seg-10-11.jsonl"]
     with open(os.path.join(seg_dir, "seg-7-10.jsonl")) as f:
-        assert [json.loads(line)["line_no"] for line in f] == [7, 8, 9]
+        assert f.read().splitlines() == LINES[:3]
     assert not [n for n in os.listdir(seg_dir) if n.startswith(".seg-")]
 
     with pytest.raises(ValueError, match=rf"{re.escape(seg_dir)}.*3 lines per batch, not 4"):

@@ -44,7 +44,11 @@ def test_replay_restart_with_file_growth_e2e(spark, replay_fixture, tmp_path):
     seen: list = []
 
     def fold(df, batch_id):
-        seen.extend(r.line_no for r in df.collect())
+        seen.extend(r.value for r in df.collect())
+
+    def file_lines():
+        with open(replay_fixture) as f:
+            return sorted(f.read().splitlines())
 
     def run_once():
         q = (
@@ -59,7 +63,7 @@ def test_replay_restart_with_file_growth_e2e(spark, replay_fixture, tmp_path):
             q.stop()
 
     run_once()
-    assert sorted(seen) == list(range(_N_LINES))
+    assert sorted(seen) == file_lines() and len(seen) == _N_LINES
 
     extra = [
         json.dumps(
@@ -75,7 +79,7 @@ def test_replay_restart_with_file_growth_e2e(spark, replay_fixture, tmp_path):
         f.write("\n".join(extra) + "\n")
 
     run_once()  # restart #1: must emit exactly the 3 appended lines
-    assert sorted(seen) == list(range(_N_LINES + 3)), (
+    assert sorted(seen) == file_lines() and len(seen) == _N_LINES + 3, (
         f"after restart with growth: {sorted(seen)}"
     )
     run_once()  # restart #2: nothing new — must emit nothing

@@ -72,11 +72,7 @@ def _split_sample(spark, ingest_dir):
     from energy_data_stream_processing_spark.operators.validation import (
         split_events,
     )
-    from energy_data_stream_processing_spark.sources.jsonl import (
-        read_events_jsonl,
-    )
-
-    return split_events(read_events_jsonl(spark, ingest_dir))
+    return split_events(spark.read.text(ingest_dir))
 
 
 @needs_ref_sample
@@ -141,21 +137,11 @@ def test_reference_sample_stream_matches_batch(spark, ingest_dir):
     from energy_data_stream_processing_spark.operators.validation import (
         split_events,
     )
-    from energy_data_stream_processing_spark.sources.jsonl import (
-        CORRUPT_COL,
-        ENVELOPE_SCHEMA,
-    )
     from energy_data_stream_processing_spark.streaming.runner import (
         run_hourly_stream,
     )
 
-    raw = (
-        spark.readStream.schema(ENVELOPE_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("maxFilesPerTrigger", 1)
-        .json(ingest_dir)
-    )
+    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(ingest_dir)
     valid_stream, _ = split_events(raw)
     final = run_hourly_stream(spark, valid_stream, horizon=None)
 
@@ -262,10 +248,6 @@ def test_reference_sample_bounded_stream_matches_batch(spark, ingest_dir):
     from energy_data_stream_processing_spark.operators.validation import (
         split_events,
     )
-    from energy_data_stream_processing_spark.sources.jsonl import (
-        CORRUPT_COL,
-        ENVELOPE_SCHEMA,
-    )
     from energy_data_stream_processing_spark.streaming.runner import (
         run_hourly_stream,
     )
@@ -279,13 +261,7 @@ def test_reference_sample_bounded_stream_matches_batch(spark, ingest_dir):
     with open(os.path.join(ingest_dir, "z_sentinel.jsonl"), "w") as f:
         f.write(json.dumps(ev) + "\n")
 
-    raw = (
-        spark.readStream.schema(ENVELOPE_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("maxFilesPerTrigger", 1)
-        .json(ingest_dir)
-    )
+    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(ingest_dir)
     valid_stream, _ = split_events(raw)
     out = run_hourly_stream(spark, valid_stream, horizon="2 hours")
     import datetime

@@ -13,9 +13,8 @@ from energy_data_stream_processing_spark.operators.hourly import (
     METRIC_COLUMNS,
     hourly_business_metrics,
 )
-from energy_data_stream_processing_spark.operators.validation import validation_reason
+from energy_data_stream_processing_spark.operators.validation import tag_lines
 from energy_data_stream_processing_spark.sources.adapter import energy_events
-from energy_data_stream_processing_spark.sources.jsonl import read_events_jsonl
 from energy_data_stream_processing_spark.sources.kafka import parse_kafka_values
 from energy_data_stream_processing_spark.sources.sinks import (
     jdbc_upsert_statement,
@@ -84,7 +83,7 @@ def test_observe_counters(spark, tmp_path):
     ]
     p = tmp_path / "ev.jsonl"
     p.write_text("\n".join(lines) + "\n")
-    df = read_events_jsonl(spark, str(p)).withColumn("reason", validation_reason())
+    df = tag_lines(spark.read.text(str(p)))
     observed, obs = observed_ingest(df)
     observed.write.format("noop").mode("overwrite").save()
     got = obs.get
@@ -107,10 +106,10 @@ def test_kafka_value_parsing_without_broker(spark):
     parsed = parse_kafka_values(raw)
     out = parsed.collect()
     assert len(out) == 2
-    ok = [r for r in out if r["_corrupt"] is None]
-    bad = [r for r in out if r["_corrupt"] is not None]
+    ok = [r for r in out if r["reason"] is None]
+    bad = [r for r in out if r["reason"] is not None]
     assert len(ok) == 1 and ok[0]["event_type"] == "user_login"
-    assert len(bad) == 1
+    assert [(r["reason"], r["raw"]) for r in bad] == [("Malformed JSON", "totally not json")]
 
 
 def test_jdbc_upsert_statement_shape():
@@ -191,7 +190,7 @@ def test_prometheus_exposition_format(spark, sf_dir, tmp_path):
     ]
     p = tmp_path / "ev.jsonl"
     p.write_text("\n".join(lines) + "\n")
-    df = read_events_jsonl(spark, str(p)).withColumn("reason", validation_reason())
+    df = tag_lines(spark.read.text(str(p)))
     observed, obs = observed_ingest(df)
     observed.write.format("noop").mode("overwrite").save()
 

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from energy_data_stream_processing_spark.operators.hourly import hourly_business_metrics
 from energy_data_stream_processing_spark.operators.validation import split_events
-from energy_data_stream_processing_spark.sources.jsonl import read_events_jsonl
 
 
 def _write_jsonl(tmp_path, lines, name="events.jsonl"):
@@ -44,7 +43,7 @@ def test_jsonl_roundtrip_and_malformed_diversion(spark, tmp_path):
         tmp_path,
         [_event(), _event(etype="user_logout"), "not a json line at all"],
     )
-    valid, invalid = split_events(read_events_jsonl(spark, path))
+    valid, invalid = split_events(spark.read.text(path))
     assert valid.count() == 2
     bad = invalid.collect()
     assert len(bad) == 1 and bad[0]["reason"] == "Malformed JSON"
@@ -53,9 +52,9 @@ def test_jsonl_roundtrip_and_malformed_diversion(spark, tmp_path):
 def test_envelope_missing_keys(spark, tmp_path):
     # test_producer.py:35-41 — {"event_type": "login"} lacks event_time/payload.
     path = _write_jsonl(tmp_path, [json.dumps({"event_type": "login"})])
-    valid, invalid = split_events(read_events_jsonl(spark, path))
+    valid, invalid = split_events(spark.read.text(path))
     assert valid.count() == 0
-    assert invalid.collect()[0]["reason"] == "Missing required keys"
+    assert invalid.collect()[0]["reason"] == "Missing required keys: ['event_time', 'payload']"
 
 
 def test_envelope_blank_event_type_and_empty_payload(spark, tmp_path):
@@ -67,7 +66,7 @@ def test_envelope_blank_event_type_and_empty_payload(spark, tmp_path):
         {"event_type": "user_login", "event_time": "2025-06-04T12:00:00Z", "payload": {}}
     )
     path = _write_jsonl(tmp_path, [blank_type, empty_payload])
-    valid, invalid = split_events(read_events_jsonl(spark, path))
+    valid, invalid = split_events(spark.read.text(path))
     assert valid.count() == 0
     assert {r["reason"] for r in invalid.collect()} == {"event_type or payload is empty"}
 
@@ -79,7 +78,7 @@ def test_semantic_validation(spark, tmp_path):
     missing_tariff = _event(etype="tariff_switch")  # needs tariff_type
     unknown_type = _event(etype="mystery_event")  # unknown type => passes
     path = _write_jsonl(tmp_path, [ok, bad_time, missing_tariff, unknown_type])
-    valid, invalid = split_events(read_events_jsonl(spark, path))
+    valid, invalid = split_events(spark.read.text(path))
     assert valid.count() == 2
     reasons = sorted(r["reason"] for r in invalid.collect())
     assert reasons == ["Invalid event_time format", "Missing payload fields: tariff_switch"]
@@ -96,7 +95,7 @@ def test_negative_and_uncastable_numerics_null_out(spark, tmp_path):
             _event(etype="energy_consumed", energy_consumed="oops"),
         ],
     )
-    valid, invalid = split_events(read_events_jsonl(spark, path))
+    valid, invalid = split_events(spark.read.text(path))
     assert invalid.count() == 0
     rows = {(r["event_type"], str(r["payment_amount"]), str(r["energy_consumed"])) for r in valid.collect()}
     assert ("bill_payment", "None", "None") in rows  # negative nulled
@@ -110,7 +109,7 @@ def test_single_event_aggregation(spark, tmp_path):
         tmp_path,
         [_event(etype="tariff_switch", tariff_type="green", payment_amount="20.5")],
     )
-    valid, _ = split_events(read_events_jsonl(spark, path))
+    valid, _ = split_events(spark.read.text(path))
     row = hourly_business_metrics(valid).collect()[0]
     assert row["tariff_switches"] == 1
     assert row["green_tariff_switches"] == 1
@@ -130,7 +129,7 @@ def test_multi_event_distinct_sessions(spark, tmp_path):
             _event(session="101"),  # duplicate session
         ],
     )
-    valid, _ = split_events(read_events_jsonl(spark, path))
+    valid, _ = split_events(spark.read.text(path))
     row = hourly_business_metrics(valid).collect()[0]
     assert row["total_logins"] == 3
     assert row["new_sessions"] == 2
@@ -151,8 +150,26 @@ def test_order_independence(spark, tmp_path, seed):
     random.Random(seed).shuffle(shuffled)
     p1 = _write_jsonl(tmp_path, lines, "a.jsonl")
     p2 = _write_jsonl(tmp_path, shuffled, "b.jsonl")
-    r1 = hourly_business_metrics(split_events(read_events_jsonl(spark, p1))[0])
-    r2 = hourly_business_metrics(split_events(read_events_jsonl(spark, p2))[0])
+    r1 = hourly_business_metrics(split_events(spark.read.text(p1))[0])
+    r2 = hourly_business_metrics(split_events(spark.read.text(p2))[0])
     rows1 = sorted(map(tuple, r1.collect()))
     rows2 = sorted(map(tuple, r2.collect()))
     assert rows1 == rows2
+
+
+def test_line_verdict_tree_is_built_once_per_jvm(spark, monkeypatch):
+    """Two ``tag_lines`` calls reuse one memoized tree: the first builds it
+    through py4j, the second builds nothing (a tree rebuilt every
+    micro-batch cost the ingest benchmark a quarter more CPU per batch)."""
+    from energy_data_stream_processing_spark.functions import columns
+    from energy_data_stream_processing_spark.operators import validation
+
+    builds = []
+    real = validation._build_tag_lines
+    monkeypatch.setattr(validation, "_build_tag_lines", lambda: builds.append(1) or real())
+    monkeypatch.delitem(columns._GATEWAY_MEMO, "tag_lines", raising=False)
+    lines = spark.createDataFrame([(_event(),), ("not json",)], "value string")
+    first = validation.tag_lines(lines).collect()
+    assert validation.tag_lines(lines).collect() == first
+    assert builds == [1]
+    assert [r["reason"] for r in first] == [None, "Malformed JSON"]
