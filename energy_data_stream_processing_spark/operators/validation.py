@@ -92,6 +92,10 @@ def parsed_event_time() -> Column:
     return F.try_to_timestamp(normalized)
 
 
+_ENVELOPE_KEYS = ("event_time", "event_type", "payload")  # sorted, as F1 lists them
+_BLANK = r"(?U)^[\s\x1c-\x1f]*$"  # what Python's str.strip() strips
+
+
 def validation_reason() -> Column:
     """NULL for valid rows of an envelope frame, else the first failing
     reason (reference order: malformed -> envelope -> event_time ->
@@ -119,16 +123,12 @@ def _build_validation_reason() -> Column:
 
 def _content_reason() -> Column:
     """The branches both trees share: blank type or empty payload, then F2."""
-    blank_type = F.col("event_type").isNull() | (F.trim(F.col("event_type")) == "")
+    blank_type = F.col("event_type").isNull() | F.col("event_type").rlike(_BLANK)
     return (
         F.when(blank_type | _payload_empty(), "event_type or payload is empty")
         .when(parsed_event_time().isNull(), "Invalid event_time format")
         .otherwise(_missing_required())
     )
-
-
-_ENVELOPE_KEYS = ("event_time", "event_type", "payload")  # sorted, as F1 lists them
-_BLANK = r"(?U)^[\s\x1c-\x1f]*$"  # what Python's str.strip() strips
 
 
 def tag_lines(lines: DataFrame) -> DataFrame:
@@ -152,9 +152,11 @@ def _build_tag_lines() -> tuple[Column, Column, Column, Column]:
         "value", ENVELOPE_SCHEMA, {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
     )
     # one from_json decides a clean parse of a known type (its event_type
-    # was a JSON string, every key present); only other lines pay for F1
+    # was a JSON string, every key present); only other lines pay for F1.
+    # Every term is two-valued (a NULL ``decided`` would skip F1)
     decided = (
         F.col(CORRUPT_COL).isNull()
+        & F.col("event_type").isNotNull()
         & F.col("event_type").isin(*REQUIRED_PAYLOAD_FIELDS)
         & F.col("event_time").isNotNull()
         & F.col("payload").isNotNull()

@@ -18,7 +18,8 @@ lines applies (``pipeline --streaming`` in ``__main__.fold``).
   its seen-files log lacks, which the reference's fire-and-forget loop
   cannot do). ``pipeline --streaming`` reads through it.
 - ``jsonl_replay`` batch form: one scan, every line becomes a
-  ``(line_no, raw)`` row in replay order.
+  ``(line_no, value)`` row in replay order, ``value`` the line as
+  ``operators.validation.tag_lines`` takes it.
 
 Deterministic shuffle: ``shuffle_seed`` orders lines by md5(seed:line_no) —
 the reference's random.shuffle made replays irreproducible; this keeps the
@@ -44,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import StructType
 
-REPLAY_SCHEMA = "line_no bigint, raw string"
+REPLAY_SCHEMA = "line_no bigint, value string"
 
 
 def _order(n: int, seed: str | None) -> Sequence[int]:

@@ -243,6 +243,10 @@ _VERDICTS = [
     (json.dumps([_EVENT, _EVENT]), "Event is not a dictionary"),
     (json.dumps({k: v for k, v in _EVENT.items() if k != "event_time"}),
      "Missing required keys: ['event_time']"),
+    (json.dumps({k: v for k, v in _EVENT.items() if k != "event_type"}),
+     "Missing required keys: ['event_type']"),
+    (json.dumps({k: v for k, v in _EVENT.items() if k != "payload"}),
+     "Missing required keys: ['payload']"),
     ("{}", "Missing required keys: ['event_time', 'event_type', 'payload']"),
     (_envelope(event_type="  "), _EMPTY),
     (_envelope(event_type="\t"), _EMPTY),

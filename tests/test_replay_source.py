@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from energy_data_stream_processing_spark.operators.validation import tag_lines
 from energy_data_stream_processing_spark.sources.replay_source import (
@@ -43,7 +42,7 @@ def registered(spark):
 def test_batch_verdicts_match_producer_semantics(registered, fixture_path):
     replay = registered.read.format("jsonl_replay").option("path", fixture_path).load()
     # one partition, in file order
-    rows = tag_lines(replay.select(F.col("raw").alias("value"))).collect()
+    rows = tag_lines(replay).collect()
     assert len(rows) == 7
     assert rows[0].reason == "Missing payload fields: user_login"  # F1 passes, F2 does not
     assert rows[0].event_type == "user_login" and rows[0].payload.customer_id == "C1"
@@ -60,7 +59,7 @@ def test_stream_equals_batch_and_paces(registered, fixture_path, tmp_path):
     micro-batches of lines_per_batch lines: 7 lines at 3 per batch are 3
     batches."""
     batch = sorted(
-        r.raw
+        r.value
         for r in registered.read.format("jsonl_replay").option("path", fixture_path).load().collect()
     )
     seen_batches = []
@@ -91,10 +90,10 @@ def test_shuffle_is_deterministic_and_complete(registered, fixture_path):
     b = base.option("shuffle_seed", "s1").load().collect()
     c = base.option("shuffle_seed", "s2").load().collect()
     plain = base.load().collect()
-    assert [r.raw for r in a] == [r.raw for r in b]  # same seed, same order
-    assert sorted(r.raw for r in a) == sorted(r.raw for r in plain)  # complete
-    assert [r.raw for r in a] != [r.raw for r in plain] or [r.raw for r in c] != [
-        r.raw for r in plain
+    assert [r.value for r in a] == [r.value for r in b]  # same seed, same order
+    assert sorted(r.value for r in a) == sorted(r.value for r in plain)  # complete
+    assert [r.value for r in a] != [r.value for r in plain] or [r.value for r in c] != [
+        r.value for r in plain
     ]  # some seed actually permutes
 
 
@@ -176,7 +175,7 @@ def test_staged_rows_equal_jsonl_replay_rows(registered, tmp_path):
     staged = registered.read.text(seg_dir)
     replay = registered.read.format("jsonl_replay").option("path", str(p)).load()
     lines = sorted(r.value for r in staged.collect())
-    assert lines == sorted(r.raw for r in replay.collect())
+    assert lines == sorted(r.value for r in replay.collect())
     assert len(lines) == 9 and non_ascii in lines
     assert {r.reason for r in tag_lines(staged).collect()} == {
         "Missing payload fields: user_login", "Malformed JSON", "Event is not a dictionary",

@@ -71,6 +71,23 @@ def test_envelope_blank_event_type_and_empty_payload(spark, tmp_path):
     assert {r["reason"] for r in invalid.collect()} == {"event_type or payload is empty"}
 
 
+def test_envelope_frames_strip_event_type_as_python_does(spark):
+    """``validation_reason`` on an envelope frame blanks the same
+    ``event_type`` strings as ``str.strip``: tabs, ideographic spaces and
+    the ASCII separators, not only spaces."""
+    from energy_data_stream_processing_spark.operators.validation import validation_reason
+
+    types = [" ", "\t", "\u3000", "\x1f", "user_login"]
+    env = spark.createDataFrame(
+        [(None, t, "2025-06-04T12:00:00Z", ("C1", "1", "web", None, None, None)) for t in types],
+        "_corrupt string, event_type string, event_time string,"
+        " payload struct<customer_id: string, session_id: string, channel: string,"
+        " tariff_type: string, energy_consumed: string, payment_amount: string>",
+    )
+    reasons = [r[0] for r in env.select(validation_reason()).collect()]
+    assert reasons == ["event_type or payload is empty"] * 4 + [None]
+
+
 def test_semantic_validation(spark, tmp_path):
     # test_consumer.py:33-47 — valid passes; bad time / missing per-type field fail.
     ok = _event()
