@@ -47,6 +47,39 @@ METRIC_COLUMNS = [
 ]
 
 
+def _hourly_aggregates(distinct=F.count_distinct) -> dict:
+    """The 12 aggregates of the hourly tree, unaliased, keyed by output
+    name. ``distinct`` builds the two distinct counts: the exact batch
+    form, the streaming twin's ``size(collect_set(..))`` (streaming
+    aggregation rejects ``count(DISTINCT ..)``), or the approximate
+    stream's ``approx_count_distinct``."""
+    t = F.col("event_type")
+    pay = F.col("payment_amount")
+    energy = F.col("energy_consumed")
+    return {
+        "tariff_switches": F.count(F.when(t == "tariff_switch", 1)),
+        "total_switch_revenue": dsum(F.when(t == "tariff_switch", pay)),
+        "green_tariff_switches": F.count(
+            F.when((t == "tariff_switch") & (F.col("tariff_type") == "green"), 1)
+        ),
+        "incentive_claims": F.count(F.when(t == "incentive_claim", 1)),
+        "total_incentive_payouts": dsum(F.when(t == "incentive_claim", pay)),
+        "total_logins": F.count(F.when(t == "user_login", 1)),
+        "new_sessions": distinct(F.when(t == "user_login", F.col("session_id"))),
+        "active_customers": distinct(F.col("customer_id")),
+        "total_energy_consumed": dsum(F.when(t == "energy_consumed", energy)),
+        "peak_hour_usage": F.coalesce(
+            F.max(F.when(t == "energy_consumed", energy)).cast("double"), F.lit(0.0)
+        ),
+        "total_payments": dsum(F.when(t == "bill_payment", pay)),
+        # counts VALID payments only, like the reference (consumer.py:283-287
+        # increments the pair under `if has_pay`) — a bill_payment with a
+        # NULL/invalid amount contributes to neither sum nor count. Caught by
+        # the randomized differential in tests/test_properties.py.
+        "payment_events": F.count(F.when((t == "bill_payment") & pay.isNotNull(), 1)),
+    }
+
+
 def _build_hourly_columns(distinct=F.count_distinct) -> tuple:
     """(group_key, agg_columns, derived_columns) — constructed once per JVM
     via ``gateway_columns`` (round 16, guide §7.3): the 15-aggregate tree is
@@ -54,36 +87,9 @@ def _build_hourly_columns(distinct=F.count_distinct) -> tuple:
     EVERY caller (the hourly entry itself, rolling_24h, business_kpis_growth,
     daily_energy_summary, the streaming twins).
 
-    ``distinct`` builds the two exact distinct counts; the streaming twin
-    passes a ``size(collect_set(..))`` form because streaming aggregation
-    rejects ``count(DISTINCT ..)``."""
-    t = F.col("event_type")
-    pay = F.col("payment_amount")
-    energy = F.col("energy_consumed")
-
+    ``distinct`` builds the two distinct counts (``_hourly_aggregates``)."""
     group_key = F.date_trunc("hour", F.col("event_time")).alias("hour")
-    agg_cols = (
-        F.count(F.when(t == "tariff_switch", 1)).alias("tariff_switches"),
-        dsum(F.when(t == "tariff_switch", pay)).alias("total_switch_revenue"),
-        F.count(F.when((t == "tariff_switch") & (F.col("tariff_type") == "green"), 1)).alias(
-            "green_tariff_switches"
-        ),
-        F.count(F.when(t == "incentive_claim", 1)).alias("incentive_claims"),
-        dsum(F.when(t == "incentive_claim", pay)).alias("total_incentive_payouts"),
-        F.count(F.when(t == "user_login", 1)).alias("total_logins"),
-        distinct(F.when(t == "user_login", F.col("session_id"))).alias("new_sessions"),
-        distinct(F.col("customer_id")).alias("active_customers"),
-        dsum(F.when(t == "energy_consumed", energy)).alias("total_energy_consumed"),
-        F.coalesce(F.max(F.when(t == "energy_consumed", energy)).cast("double"), F.lit(0.0)).alias(
-            "peak_hour_usage"
-        ),
-        dsum(F.when(t == "bill_payment", pay)).alias("total_payments"),
-        # counts VALID payments only, like the reference (consumer.py:283-287
-        # increments the pair under `if has_pay`) — a bill_payment with a
-        # NULL/invalid amount contributes to neither sum nor count. Caught by
-        # the randomized differential in tests/test_properties.py.
-        F.count(F.when((t == "bill_payment") & pay.isNotNull(), 1)).alias("payment_events"),
-    )
+    agg_cols = tuple(c.alias(n) for n, c in _hourly_aggregates(distinct).items())
     derived = {
         "avg_switch_value": round_half_up(
             safe_div(F.col("total_switch_revenue"), F.col("tariff_switches"))

@@ -23,11 +23,6 @@ is accepted (the producer: ``Malformed JSON``), and a bare ``NaN`` line
 (the producer: ``Event is not a dictionary``) or a duplicate key outside a
 clean known-type parse (the producer: last key wins) is ``Malformed JSON``.
 
-``validation_reason`` is the same tree for frames that are already
-envelopes (``_corrupt`` marks unparseable records); there an absent key and
-a JSON null both read NULL, so "missing key" == "null field" (a documented,
-strictly-wider invalidity than the reference's key-presence check).
-
 Valid rows flow on flattened (F4: ``payload.*`` to top level,
 consumer/consumer.py:193-217), invalid rows carry their first failing reason.
 Everything is built-in column algebra — no Python UDFs (SURVEY.md §2.6).
@@ -96,33 +91,8 @@ _ENVELOPE_KEYS = ("event_time", "event_type", "payload")  # sorted, as F1 lists 
 _BLANK = r"(?U)^[\s\x1c-\x1f]*$"  # what Python's str.strip() strips
 
 
-def validation_reason() -> Column:
-    """NULL for valid rows of an envelope frame, else the first failing
-    reason (reference order: malformed -> envelope -> event_time ->
-    per-type payload fields).
-
-    The tree is built once per JVM (``gateway_columns``): it takes some
-    hundred py4j round trips, which a streaming micro-batch would otherwise
-    pay on every trigger. It carries no alias, so sharing it across plans
-    pins no exprId."""
-    return gateway_columns("validation_reason", _build_validation_reason)
-
-
-def _build_validation_reason() -> Column:
-    return (
-        F.when(F.col(CORRUPT_COL).isNotNull(), "Malformed JSON")
-        .when(
-            F.col("event_type").isNull()
-            | F.col("event_time").isNull()
-            | F.col("payload").isNull(),
-            "Missing required keys",
-        )
-        .otherwise(_content_reason())
-    )
-
-
 def _content_reason() -> Column:
-    """The branches both trees share: blank type or empty payload, then F2."""
+    """The branches after F1: blank type or empty payload, then F2."""
     blank_type = F.col("event_type").isNull() | F.col("event_type").rlike(_BLANK)
     return (
         F.when(blank_type | _payload_empty(), "event_type or payload is empty")
@@ -199,7 +169,7 @@ def flatten_events(df: DataFrame) -> DataFrame:
     table (database/schema.sql:12-23 minus the serial id / created_at).
 
     The projection is built once per JVM (``gateway_columns``), like
-    ``validation_reason``; its aliases pin their exprIds, which Spark
+    ``tag_lines``' trees; its aliases pin their exprIds, which Spark
     re-keys when two flattened frames meet in one plan."""
     return df.select(*gateway_columns("flatten_events", _build_flatten_columns))
 

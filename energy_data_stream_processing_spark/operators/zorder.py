@@ -49,11 +49,3 @@ def interleave_bits(a: Column, b: Column, bits: int) -> Column:
         ).bitwiseOR(F.shiftleft(b.bitwiseAND(F.lit(1 << i)), i + 1))
     return out
 
-
-def interleave_bits_sql(a: str, b: str, bits: int) -> str:
-    """DuckDB twin of :func:`interleave_bits` (same unrolled expression)."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"(({a} & {1 << i}) << {i})")
-        terms.append(f"(({b} & {1 << i}) << {i + 1})")
-    return " | ".join(terms)

@@ -1101,7 +1101,7 @@ def q_distinct_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
 SELECT
   CASE WHEN event_id % 101 = 0 THEN 'Malformed JSON'
-       WHEN event_id % 89 = 0 THEN 'Missing required keys'
+       WHEN event_id % 89 = 0 THEN 'Missing required keys: [''event_type'']'
        WHEN event_id % 97 = 0 THEN 'event_type or payload is empty'
        WHEN event_id % 83 = 0 THEN 'Invalid event_time format'
        WHEN (event_id % 79 = 0 OR customer_id IS NULL) OR session_id IS NULL OR channel IS NULL
@@ -1116,21 +1116,20 @@ GROUP BY 1
 """
     ),
     doc="F1/F2 validation + dead-letter split, differential-gated: energy "
-    "events are re-wrapped as envelopes with DETERMINISTIC corruption "
-    "injection (residue classes of event_id: malformed JSON, null keys, "
-    "blank type, bad timestamp, nulled required field); the engine's "
-    "validation_reason() classifies them and the oracle re-derives the "
-    "expected reasons INDEPENDENTLY from the spec — two encodings of "
-    "consumer.py:55-123 must agree per-reason, per-count.",
+    "events are re-written as JSON source lines with DETERMINISTIC "
+    "corruption injection (residue classes of event_id: malformed JSON, "
+    "absent event_type key, blank type, bad timestamp, absent required "
+    "field); the engine's tag_lines classifies them and the oracle "
+    "re-derives the expected reasons INDEPENDENTLY from the spec — two "
+    "encodings of producer.py:55-67 + consumer.py:55-123 must agree "
+    "per-reason, per-count.",
 )
 def q_ingest_validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.validation import validation_reason
-    from ..sources.jsonl import CORRUPT_COL
+    from ..operators.validation import tag_lines
 
     ev = energy_events(spark, sf_dir)
     eid = F.col("event_id")
-    env = ev.select(
-        F.when(eid % 101 == 0, F.lit('{"truncated')).alias(CORRUPT_COL),
+    envelope = F.struct(
         F.when(eid % 89 == 0, F.lit(None).cast("string"))
         .when(eid % 97 == 0, F.lit("   "))
         .otherwise(F.col("event_type"))
@@ -1149,9 +1148,16 @@ def q_ingest_validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("payment_amount").cast("string").alias("payment_amount"),
         ).alias("payload"),
     )
+    # a NULL field leaves its key out of the line: the % 89 rows lack
+    # ``event_type``, the % 79 rows their payload's ``customer_id``
+    lines = ev.select(
+        F.when(eid % 101 == 0, F.lit('{"truncated'))
+        .otherwise(F.to_json(envelope, {"ignoreNullFields": "true"}))
+        .alias("value")
+    )
     return (
-        env.withColumn("reason", F.coalesce(validation_reason(), F.lit("valid")))
-        .groupBy("reason")
+        tag_lines(lines)
+        .groupBy(F.coalesce(F.col("reason"), F.lit("valid")).alias("reason"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

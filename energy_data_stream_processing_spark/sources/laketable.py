@@ -18,13 +18,15 @@ transactional core those formats provide, with the same interface shape:
   app id — Delta's ``txnAppId``/``txnVersion``, O(#writers) not
   O(#batches)).
 - **Atomic visibility**: data files are written first, then the next
-  version file lands via write-temp + ``os.replace`` (atomic on POSIX).
-  Readers resolve the latest version ONCE and read exactly its file list —
-  a reader never sees a partial commit, and a crash before the log write
-  leaves only orphan data files (invisible; vacuumable).
-- **Optimistic concurrency**: ``O_CREAT|O_EXCL`` on the version file —
-  exactly one of two racing committers wins a version; the loser re-reads
-  the head and retries its reconciliation (Delta's conflict protocol).
+  version file is published by hard-linking a fully-written temp file to
+  the version name (``os.link``, atomic on POSIX). Readers resolve the
+  latest version ONCE and read exactly its file list — a reader never
+  sees a partial commit, and a crash before the log write leaves only
+  orphan data files (invisible; vacuumable).
+- **Optimistic concurrency**: the link fails EEXIST when the version name
+  exists — exactly one of two racing committers wins a version; the loser
+  re-reads the head and retries its reconciliation (Delta's conflict
+  protocol).
 - **MERGE upsert**: ``merge_upsert(df, key)`` groups the incoming rows by
   the partition key, writes one file per touched key, and commits a
   snapshot = (carried-forward files of untouched keys) + (new files) — an
@@ -37,18 +39,11 @@ transactional core those formats provide, with the same interface shape:
 
 Scale notes: the log is tiny JSON (file lists for a metrics-cardinality
 table); data I/O is executor-side parquet exactly like the plain sink; the
-driver only renames and lists. For a billions-of-files table swap the full
+driver only links and lists. For a billions-of-files table swap the full
 snapshot for Delta-style incremental log entries — interface unchanged.
-The commit protocol is behind an injectable **LogStore** seam (the same
-abstraction point Delta has for S3): ``PosixLogStore`` (default) relies on
-POSIX atomic link, i.e. a shared POSIX filesystem (local, NFS,
-HDFS-via-mount); ``CoordinatedLogStore`` is the object-store shape — the
-backing store has NO atomic create-if-absent, so mutual exclusion on the
-version name comes from an external coordinator (DynamoDB/ZooKeeper in
-production; an in-process one here) that serializes put-if-absent while
-payload bytes live in the plain store. Data files are executor-written
-parquet in both cases; only the tiny commit-log record goes through the
-seam.
+The commit protocol needs a filesystem with atomic hard links shared by
+every writer (local, NFS, HDFS-via-mount); data files are executor-written
+parquet, and only the tiny commit-log record is published by the driver.
 """
 
 from __future__ import annotations
@@ -98,205 +93,11 @@ def _txn_already_applied(applied: dict, app: str | None, ver: int) -> bool:
     return app is not None and app in applied and applied[app] >= ver
 
 
-class PosixLogStore:
-    """Commit-log store for filesystems with atomic create-if-absent.
-
-    ``put_if_absent`` hard-links a fully-written temp file to the version
-    name: ``os.link`` atomically creates the name WITH its content and
-    fails EEXIST when a concurrent committer won the version first — no
-    window where a reader can observe an empty or partial log entry."""
-
-    def list(self, log_dir: str) -> list[str]:
-        try:
-            return os.listdir(log_dir)
-        except FileNotFoundError:
-            return []
-
-    def read(self, path: str) -> str:
-        with open(path) as f:
-            return f.read()
-
-    def put_if_absent(self, path: str, content: str) -> None:
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(content)
-        try:
-            os.link(tmp, path)
-        finally:
-            os.unlink(tmp)
-
-    def delete(self, path: str) -> None:
-        os.unlink(path)
-
-
-def _is_complete_snapshot(path: str) -> bool:
-    """True when ``path`` holds a fully-written snapshot (parseable JSON
-    dict with a version). CoordinatedLogStore publishes with a plain byte
-    copy (object-store PUT, no rename atomicity), so a writer killed
-    mid-publish leaves a torn file under the version name — but every file
-    that was ever COMMITTED (under this or any previous coordinator) was
-    fully written before being made visible, so an unparseable version
-    file is PROVABLY a torn PUT and safe to overwrite on retry. A file
-    that parses could still be either committed or a fully-copied-but-
-    never-registered crash leftover; guards must stay conservative there."""
-    try:
-        with open(path) as f:
-            snap = json.loads(f.read())
-        return isinstance(snap, dict) and "version" in snap
-    except (OSError, ValueError):
-        return False
-
-
-class CoordinatedLogStore:
-    """Commit-log store for object stores WITHOUT atomic create-if-absent
-    (S3-style): every log write goes through an external coordinator that
-    serializes put-if-absent on the object name — Delta's S3SingleDriver/
-    DynamoDB LogStore shape. This in-process implementation IS the
-    coordinator (one lock + one committed-names registry shared by every
-    handle onto the same store object); swap the registry for DynamoDB
-    conditional puts or a ZooKeeper znode in production — LakeTable code
-    is unchanged, which is the point of the seam.
-
-    The payload is still written to the backing store (plain files, no
-    atomicity assumed — written under a temp name then copied, as an
-    object-store PUT would be); only the name-reservation needs the
-    coordinator, so coordinator state is O(#commits) names, not data.
-
-    ``lock``/``registry`` are injectable so the coordinator can be shared
-    ACROSS PROCESSES (``multiprocessing.Manager().Lock()`` + ``.dict()``),
-    the production shape where independent writer processes meet at
-    DynamoDB. Defaults are in-process (threading.Lock + plain dict).
-
-    The registry is authoritative: a version file on disk that the
-    registry does not know about is either (a) a torn PUT from a writer
-    that crashed mid-publish — safe to overwrite on retry, because the
-    coordinator never made it visible — or (b) an existing table this
-    FRESH coordinator was mistakenly pointed at, where an overwrite would
-    silently rewind committed state. The two are distinguished by whether
-    the registry holds ANY committed name under the table's log dir:
-    case (b) raises, and ``adopt_existing`` is the explicit opt-in that
-    imports the on-disk log into a new coordinator (e.g. a streaming
-    restart that could not carry the coordinator handle over)."""
-
-    def __init__(self, lock=None, registry=None):
-        import threading
-
-        self._lock = lock if lock is not None else threading.Lock()
-        # dict-used-as-set (path -> True): multiprocessing.Manager has no
-        # set proxy, and a dict proxy supports everything needed
-        self._committed = registry if registry is not None else {}
-
-    def _dir_known(self, log_dir: str) -> bool:
-        """True when the registry holds at least one committed name under
-        ``log_dir`` (caller must hold the lock)."""
-        d = log_dir.rstrip("/")
-        return any(os.path.dirname(p) == d for p in self._committed.keys())
-
-    def adopt_existing(self, log_dir: str) -> int:
-        """Import an existing on-disk commit log into this coordinator's
-        registry (explicit recovery for a fresh coordinator pointed at a
-        table committed under a previous coordinator). Returns the number
-        of version files adopted. Only trust this on a quiesced table: a
-        file written by a writer that crashed mid-publish (never
-        registered) is indistinguishable from a committed one here."""
-        import re
-
-        with self._lock:
-            n = 0
-            try:
-                names = os.listdir(log_dir)
-            except FileNotFoundError:
-                names = []
-            for f in names:
-                if re.fullmatch(r"v\d{12}\.json", f):
-                    p = os.path.join(log_dir, f)
-                    # never import a torn PUT: an unparseable version file
-                    # is a crashed writer's leftover, and adopting it would
-                    # poison every subsequent snapshot() read
-                    if p not in self._committed and _is_complete_snapshot(p):
-                        self._committed[p] = True
-                        n += 1
-            return n
-
-    def list(self, log_dir: str) -> list[str]:
-        with self._lock:
-            names = [
-                os.path.basename(p)
-                for p in self._committed.keys()
-                if os.path.dirname(p) == log_dir.rstrip("/")
-            ]
-        return names
-
-    def read(self, path: str) -> str:
-        with self._lock:
-            if path not in self._committed:
-                raise FileNotFoundError(path)
-        with open(path) as f:
-            return f.read()
-
-    def put_if_absent(self, path: str, content: str) -> None:
-        # Stage the payload OUTSIDE the coordinator lock (an object-store
-        # PUT does its byte transfer before the conditional commit, and a
-        # writer crashing here must not leave the lock held)...
-        tmp = path + f".staged.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(content)
-        try:
-            with self._lock:
-                if path in self._committed:
-                    raise FileExistsError(path)
-                if (
-                    os.path.exists(path)
-                    and not self._dir_known(os.path.dirname(path))
-                    and _is_complete_snapshot(path)
-                ):
-                    # A torn (unparseable) file is excluded above: a writer
-                    # killed mid-copyfile of the FIRST version leaves one
-                    # under a dir with no registered commits, and without
-                    # the parse check every retry would raise here forever
-                    # (and adopt_existing would import the torn bytes).
-                    # fresh coordinator pointed at a table committed under
-                    # a DIFFERENT coordinator: overwriting would silently
-                    # rewind committed state (data loss). Loud stop instead;
-                    # adopt_existing() is the explicit recovery.
-                    raise RuntimeError(
-                        f"coordinator out of sync with {path}: the log file "
-                        "exists on disk but this coordinator's registry has "
-                        "no commits for the table — refusing to overwrite "
-                        "committed state; call adopt_existing(log_dir) to "
-                        "import the on-disk log, or reuse the original "
-                        "coordinator handle"
-                    )
-                # ...then publish under the lock: plain byte copy (no rename
-                # atomicity assumed — object-store PUT), registered only
-                # after the write returned. An unregistered on-disk file
-                # under a KNOWN dir is a torn PUT from a crashed writer;
-                # overwriting it here is the retry path.
-                import shutil
-
-                shutil.copyfile(tmp, path)
-                self._committed[path] = True
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-
-    def delete(self, path: str) -> None:
-        with self._lock:
-            self._committed.pop(path, None)
-            try:
-                os.unlink(path)
-            except FileNotFoundError:
-                pass
-
-
 class LakeTable:
-    def __init__(self, path: str, log_store=None):
+    def __init__(self, path: str):
         self.path = path
         self.log_dir = os.path.join(path, "_log")
         self.data_dir = os.path.join(path, "data")
-        self.log_store = log_store if log_store is not None else PosixLogStore()
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
 
@@ -304,19 +105,23 @@ class LakeTable:
     def _version_file(self, v: int) -> str:
         return os.path.join(self.log_dir, f"v{v:012d}.json")
 
+    def _log_files(self) -> list[str]:
+        try:
+            names = os.listdir(self.log_dir)
+        except FileNotFoundError:
+            return []
+        return [f for f in names if f.startswith("v") and f.endswith(".json")]
+
     def latest_version(self) -> int:
-        vs = [
-            int(f[1:13])
-            for f in self.log_store.list(self.log_dir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
+        vs = [int(f[1:13]) for f in self._log_files()]
         return max(vs) if vs else -1
 
     def snapshot(self, version: int | None = None) -> dict:
         v = self.latest_version() if version is None else version
         if v < 0:
             return {"version": -1, "files": {}, "applied": {}}
-        snap = json.loads(self.log_store.read(self._version_file(v)))
+        with open(self._version_file(v)) as f:
+            snap = json.load(f)
         if isinstance(snap.get("applied"), list):
             # pre-round-7 snapshots stored a flat id list; normalize to the
             # bounded per-app-id map (each legacy id is exact-match/v0)
@@ -324,43 +129,23 @@ class LakeTable:
         return snap
 
     def _commit(self, snap: dict, expected_head: int) -> int:
-        """Atomically publish ``snap`` as version expected_head+1 through
-        the LogStore seam: put_if_absent makes exactly one of two racing
-        committers win the version name (POSIX hard-link EEXIST, or the
-        object-store coordinator's conditional put)."""
+        """Atomically publish ``snap`` as version expected_head+1: a
+        fully-written temp file is hard-linked to the version name.
+        ``os.link`` atomically creates the name WITH its content and fails
+        EEXIST when a concurrent committer won the version first — no
+        window where a reader can observe an empty or partial log entry,
+        and exactly one of two racing committers wins the version."""
         v = expected_head + 1
-        if v == 0:
-            # Defense-in-depth against a log store whose view of the table
-            # is out of sync with the disk (e.g. a fresh CoordinatedLogStore
-            # registry pointed at an existing table): a first-ever commit
-            # while the on-disk log already holds version files would
-            # rewind committed state. Raise instead; never truncate.
-            import re
-
-            try:
-                on_disk = os.listdir(self.log_dir)
-            except FileNotFoundError:
-                on_disk = []
-            if any(
-                re.fullmatch(r"v\d{12}\.json", f)
-                # torn (unparseable) leftovers from a writer killed
-                # mid-publish don't block the retry of version 0 — only a
-                # COMPLETE snapshot the store can't see means out-of-sync
-                and _is_complete_snapshot(os.path.join(self.log_dir, f))
-                for f in on_disk
-            ):
-                raise RuntimeError(
-                    f"refusing to commit version 0 to {self.path}: the log "
-                    "dir already contains committed version files the log "
-                    "store cannot see — the store's registry is out of sync "
-                    "with the table (adopt the existing log or reuse the "
-                    "original coordinator)"
-                )
-        snap = dict(snap, version=v)
+        path = self._version_file(v)
+        tmp = path + f".tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(dict(snap, version=v), f)
         try:
-            self.log_store.put_if_absent(self._version_file(v), json.dumps(snap))
+            os.link(tmp, path)
         except FileExistsError:
             raise CommitConflict(f"version {v} already committed") from None
+        finally:
+            os.unlink(tmp)
         return v
 
     # ---- read -------------------------------------------------------------
@@ -502,9 +287,9 @@ class LakeTable:
                 if sub.startswith("_k=") and f"{d}/{sub}" not in live:
                     shutil.rmtree(os.path.join(full, sub), ignore_errors=True)
         log_removed = 0
-        for f in self.log_store.list(self.log_dir):
-            if f.startswith("v") and f.endswith(".json") and int(f[1:13]) < keep_floor:
-                self.log_store.delete(os.path.join(self.log_dir, f))
+        for f in self._log_files():
+            if int(f[1:13]) < keep_floor:
+                os.unlink(os.path.join(self.log_dir, f))
                 log_removed += 1
         return {"data_dirs_removed": removed, "log_files_removed": log_removed}
 
@@ -561,9 +346,7 @@ def _bad_hour_key_flags(keys: DataFrame) -> DataFrame:
     )
 
 
-def migrate_lake_hour_keys(
-    spark: SparkSession, path: str, log_store=None
-) -> int:
+def migrate_lake_hour_keys(spark: SparkSession, path: str) -> int:
     """One-time rewrite of a LakeTable's ``hour_key`` column to the
     canonical injective label+epoch key — the lake twin of
     ``sinks.migrate_hour_store_keys`` (round-15 verdict item 2: the
@@ -598,7 +381,7 @@ def migrate_lake_hour_keys(
     rewritten canonical, which is the exact property the marker memoizes."""
     from .sinks import hour_partition_key
 
-    table = LakeTable(path, log_store=log_store)
+    table = LakeTable(path)
     head = table.snapshot()
     if head["version"] < 0 or not any(head["files"].values()):
         return 0
@@ -682,7 +465,6 @@ def foreach_batch_lake_merge(
     path: str,
     key_col: str = "hour_key",
     txn_app_id: str | None = None,
-    log_store=None,
 ):
     """Streaming metrics flush into a LakeTable — the lake-format twin of
     ``sinks.foreach_batch_upsert`` with atomic multi-hour visibility.
@@ -696,23 +478,12 @@ def foreach_batch_lake_merge(
     the new query's batches as replays. Default None records no txn ids:
     replays then re-apply, which is still CONTENT-idempotent here because
     every flush carries complete per-key aggregates (full-row
-    replacement), just not commit-count-idempotent.
-
-    ``log_store`` caveat: a ``CoordinatedLogStore``'s registry is the
-    authority on committed versions, so a RESTARTED query must reuse the
-    same coordinator handle (or a registry backed by durable shared state,
-    e.g. a Manager dict / DynamoDB) — a fresh empty coordinator pointed at
-    the existing table refuses to commit (see put_if_absent) rather than
-    silently rewinding it; ``adopt_existing(log_dir)`` is the explicit
-    recovery for that case."""
+    replacement), just not commit-count-idempotent."""
 
     legacy_checked = {"done": False}
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch runs driver-side, so the closure can carry a live
-        # coordinator handle (log_store) across batches — required for
-        # CoordinatedLogStore, whose registry lives on the object
-        table = LakeTable(path, log_store=log_store)
+        table = LakeTable(path)
         df = batch_df
         if key_col == "hour_key" and "hour_key" not in df.columns:
             # injective tz-proof key (label + epoch): the wall label alone
@@ -740,9 +511,7 @@ def foreach_batch_lake_merge(
                     # carried no rows): table.read() would raise "table is
                     # empty" here and every restart would crash-loop on
                     # the guard before any data could merge. Skip the scan
-                    # — there are no keys to verify — and do NOT mark
-                    # (zero files proves nothing about versions a stale
-                    # coordinator view can't see).
+                    # — there are no keys to verify — and do NOT mark.
                     has_files = v >= 0 and any(
                         ps for ps in table.snapshot(v)["files"].values()
                     )
@@ -780,13 +549,12 @@ def foreach_batch_lake_merge(
                                 path,
                             )
                         # only a scan that actually SAW table data may
-                        # persist the memo. v == -1 can mean "fresh
-                        # table" OR "fresh CoordinatedLogStore pointed at
-                        # an existing table" (the adopt_existing recovery
-                        # case) — marking on that stale view would skip
-                        # the legacy scan forever on a table that was
-                        # never checked. A fresh table simply earns its
-                        # marker on the first post-commit restart's scan.
+                        # persist the memo: a marker over a head with no
+                        # files would certify nothing yet skip the scan
+                        # forever, so rows another writer (an older
+                        # engine, a hand copy) lands later would never be
+                        # checked. A fresh table simply earns its marker
+                        # on the first post-commit restart's scan.
                         with open(marker, "w") as mf:
                             mf.write(f"verified at table version {v}\n")
                 legacy_checked["done"] = True

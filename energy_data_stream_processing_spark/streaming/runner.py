@@ -55,7 +55,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.columns import gateway_columns
-from ..operators.hourly import METRIC_COLUMNS, _build_hourly_columns
+from ..operators.hourly import METRIC_COLUMNS, _build_hourly_columns, _hourly_aggregates
 from ..sources import sinks
 from ..sources.adapter import ENERGY_EVENTS_SQL, normalize_event_ts
 from ..sources.sinks import _conf_override
@@ -125,37 +125,34 @@ def hourly_metrics_native_stream(
     not otherwise provide, which ``collapse_native_updates`` needs to keep
     the LAST (final) emission without assuming sums are monotone.
     """
-    t = F.col("event_type")
-    pay = F.col("payment_amount")
-    energy = F.col("energy_consumed")
+    agg_cols = gateway_columns("hourly_metrics_native_stream", _build_native_columns)
     ordinal = (
         [F.count(F.lit(1)).alias("_rows_total")] if with_emit_ordinal else []
     )
     return (
         events.withWatermark("event_time", watermark)
         .groupBy(F.window("event_time", "1 hour"))
-        .agg(
-            F.count(F.when(t == "tariff_switch", 1)).alias("tariff_switches"),
-            F.coalesce(F.sum(F.when(t == "tariff_switch", pay)).cast("double"), F.lit(0.0)).alias(
-                "total_switch_revenue"
-            ),
-            F.count(F.when(t == "incentive_claim", 1)).alias("incentive_claims"),
-            F.count(F.when(t == "user_login", 1)).alias("total_logins"),
-            F.approx_count_distinct("customer_id").alias("active_customers_approx"),
-            F.approx_count_distinct(F.when(t == "user_login", F.col("session_id"))).alias(
-                "new_sessions_approx"
-            ),
-            F.coalesce(F.sum(F.when(t == "energy_consumed", energy)).cast("double"), F.lit(0.0)).alias(
-                "total_energy_consumed"
-            ),
-            F.coalesce(F.sum(F.when(t == "bill_payment", pay)).cast("double"), F.lit(0.0)).alias(
-                "total_payments"
-            ),
-            *ordinal,
-        )
+        .agg(*agg_cols, *ordinal)
         .select(F.col("window.start").alias("hour"), "*")
         .drop("window")
     )
+
+
+def _build_native_columns() -> list:
+    """8 of the hourly tree's aggregates, its distincts as HLL sketches."""
+    agg = _hourly_aggregates(distinct=F.approx_count_distinct)
+    names = [
+        "tariff_switches",
+        "total_switch_revenue",
+        "incentive_claims",
+        "total_logins",
+        "active_customers",
+        "new_sessions",
+        "total_energy_consumed",
+        "total_payments",
+    ]
+    approx = {"active_customers", "new_sessions"}
+    return [agg[n].alias(f"{n}_approx" if n in approx else n) for n in names]
 
 
 def collapse_native_updates(out: DataFrame) -> DataFrame:

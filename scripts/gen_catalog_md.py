@@ -8,7 +8,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from energy_data_stream_processing_spark.plans.catalog import all_queries
 
 
-def main() -> None:
+def render() -> str:
+    """CATALOG.md's text for the live registry."""
     qs = all_queries()
     lines = [
         "# CATALOG — generated query inventory",
@@ -39,10 +40,14 @@ def main() -> None:
         "`energy_data_stream_processing_spark/plans/*.py`; regenerate this file with",
         "`python scripts/gen_catalog_md.py`.",
     ]
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "CATALOG.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"CATALOG.md: {len(qs)} entries")
+        f.write(render())
+    print(f"CATALOG.md: {len(all_queries())} entries")
 
 
 if __name__ == "__main__":

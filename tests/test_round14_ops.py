@@ -240,10 +240,9 @@ def test_lake_merge_persists_legacy_scan_marker(spark, tmp_path):
     fn = foreach_batch_lake_merge(path, key_col="hour_key")
     fn(df, 0)
     marker = os.path.join(path, "_log", "_hour_keys_v2_verified")
-    # a FRESH table must NOT earn the marker: latest_version() == -1 is
-    # also what a stale CoordinatedLogStore reports for an EXISTING table
-    # (the adopt_existing recovery case), and marking that view would
-    # disable the legacy scan on a table that was never checked
+    # a FRESH table must NOT earn the marker: no scan saw table data, and
+    # marking that head would disable the legacy scan for rows that land
+    # later and were never checked
     assert not os.path.exists(marker)
 
     # restart (fresh closure): the scan now sees real data, passes, and

@@ -7,10 +7,8 @@ Covers the round-6 verdict items and ADVICE findings:
   deliberately array-outputting result, green on scalars);
 - kafka-fake un-namespaced sidecar reset warning (ADVICE 1);
 - LakeTable bounded per-app-id txn map, Delta txnAppId/txnVersion
-  semantics + legacy list-snapshot compat (ADVICE 3);
-- `CoordinatedLogStore` (object-store commit protocol) conflict and
-  time-travel behavior (verdict item 6; the model-based property test in
-  test_laketable.py is parameterized over both stores).
+  semantics + legacy list-snapshot compat (ADVICE 3), and concurrent
+  writers racing one table's commit log.
 """
 
 from __future__ import annotations
@@ -20,11 +18,7 @@ import os
 
 import pytest
 
-from energy_data_stream_processing_spark.sources.laketable import (
-    CommitConflict,
-    CoordinatedLogStore,
-    LakeTable,
-)
+from energy_data_stream_processing_spark.sources.laketable import LakeTable
 
 
 # ---------------------------------------------------------------------------
@@ -207,63 +201,21 @@ def test_streaming_lake_merge_log_entry_is_o_one(spark, tmp_path):
     assert max(sizes) - min(sizes) <= 2  # version-number digit wiggle only
 
 
-# ---------------------------------------------------------------------------
-# CoordinatedLogStore: object-store commit protocol
-# ---------------------------------------------------------------------------
-def test_coordinated_store_single_version_winner(spark, tmp_path):
-    store = CoordinatedLogStore()
-    t = LakeTable(str(tmp_path / "t"), log_store=store)
-    t.merge_upsert(spark, _metrics(spark, [("h1", 1, 1.0)]), "hour_key")
-    head = t.snapshot()
-    t._commit({"files": head["files"], "applied": head["applied"]}, head["version"])
-    with pytest.raises(CommitConflict):
-        t._commit({"files": head["files"], "applied": head["applied"]}, head["version"])
-
-
-def test_coordinated_store_time_travel_and_vacuum(spark, tmp_path):
-    store = CoordinatedLogStore()
-    t = LakeTable(str(tmp_path / "t"), log_store=store)
-    t.merge_upsert(spark, _metrics(spark, [("h1", 1, 1.0)]), "hour_key")
-    t.merge_upsert(spark, _metrics(spark, [("h1", 2, 2.0)]), "hour_key")
-    t.merge_upsert(spark, _metrics(spark, [("h2", 3, 3.0)]), "hour_key")
-    assert [r.n for r in t.read(spark, version=0).collect()] == [1]
-    stats = t.vacuum(retain_versions=2, orphan_ttl_seconds=0)
-    assert stats["log_files_removed"] == 1
-    with pytest.raises(FileNotFoundError):
-        t.read(spark, version=0)
-    assert sorted(r.n for r in t.read(spark).collect()) == [2, 3]
-
-
-def test_coordinated_store_visibility_is_registry_gated(tmp_path):
-    """The coordinator registers a name only after the payload write
-    returned — a name not in the registry is invisible even if backing
-    bytes exist (object-store list-after-write inconsistency is masked)."""
-    store = CoordinatedLogStore()
-    t = LakeTable(str(tmp_path / "t"), log_store=store)
-    rogue = t._version_file(0)
-    with open(rogue, "w") as f:  # bytes land without a coordinator commit
-        f.write("{}")
-    assert t.latest_version() == -1
-    with pytest.raises(FileNotFoundError):
-        store.read(rogue)
-
-
-def test_coordinated_store_concurrent_writers_both_land(spark, tmp_path):
-    """Two writers racing through ONE coordinator (the object-store
-    scenario the seam exists for): exactly one wins each version, the
-    loser's optimistic retry reconciles on top, and no upsert is lost."""
+def test_concurrent_writers_both_land(spark, tmp_path):
+    """Three writer threads racing one table's commit log: exactly one wins
+    each version (the hard link fails EEXIST for the losers), the losers'
+    optimistic retry reconciles on top, and no upsert is lost."""
     import threading
 
-    store = CoordinatedLogStore()
     path = str(tmp_path / "t")
-    LakeTable(path, log_store=store).merge_upsert(
+    LakeTable(path).merge_upsert(
         spark, _metrics(spark, [("h0", 0, 0.0)]), "hour_key"
     )
     errs = []
 
     def writer(key, n):
         try:
-            LakeTable(path, log_store=store).merge_upsert(
+            LakeTable(path).merge_upsert(
                 spark, _metrics(spark, [(key, n, float(n))]), "hour_key"
             )
         except Exception as e:  # noqa: BLE001
@@ -277,7 +229,7 @@ def test_coordinated_store_concurrent_writers_both_land(spark, tmp_path):
     for t in threads:
         t.join()
     assert not errs
-    t = LakeTable(path, log_store=store)
+    t = LakeTable(path)
     got = sorted(map(tuple, t.read(spark).collect()))
     assert got == [("h0", 0, 0.0), ("h1", 1, 1.0), ("h2", 2, 2.0), ("h3", 3, 3.0)]
     assert t.latest_version() == 3  # one version per successful merge
@@ -309,47 +261,6 @@ def test_gate_prefix_names_all_resolve():
     assert len(mod._GATE_PREFIX) <= 50, (
         f"{len(mod._GATE_PREFIX)} prefix names overflow the driver's ~50 sample"
     )
-
-
-def test_streaming_lake_merge_through_coordinator(spark, sf_dir, tmp_path):
-    """foreach_batch_lake_merge with an injected CoordinatedLogStore: the
-    exact hourly stream's flush commits through the object-store
-    coordinator and lands the batch-equal final state (the
-    test_laketable.py streaming test's twin on the other LogStore)."""
-    from energy_data_stream_processing_spark.operators.hourly import (
-        hourly_business_metrics,
-    )
-    from energy_data_stream_processing_spark.sources.adapter import energy_events
-    from energy_data_stream_processing_spark.sources.laketable import (
-        foreach_batch_lake_merge,
-    )
-    from energy_data_stream_processing_spark.streaming.runner import (
-        energy_events_stream,
-        hourly_metrics_stream,
-    )
-
-    store = CoordinatedLogStore()
-    path = str(tmp_path / "lake")
-    q = (
-        hourly_metrics_stream(energy_events_stream(spark, sf_dir), horizon=None)
-        .drop("_rows_total")
-        .writeStream.foreachBatch(
-            foreach_batch_lake_merge(path, txn_app_id="q-coord", log_store=store)
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    t = LakeTable(path, log_store=store)
-    want = hourly_business_metrics(energy_events(spark, sf_dir))
-    got = sorted(
-        map(tuple, t.read(spark).drop("hour_key").select(*want.columns).collect())
-    )
-    assert got == sorted(map(tuple, want.collect()))
-    # bounded txn map through the streaming path as well
-    assert list(t.snapshot()["applied"]) == ["q-coord"]
 
 
 def test_legacy_composite_txn_upgrade_semantics(spark, tmp_path):

@@ -72,19 +72,19 @@ def test_envelope_blank_event_type_and_empty_payload(spark, tmp_path):
 
 
 def test_envelope_frames_strip_event_type_as_python_does(spark):
-    """``validation_reason`` on an envelope frame blanks the same
-    ``event_type`` strings as ``str.strip``: tabs, ideographic spaces and
-    the ASCII separators, not only spaces."""
-    from energy_data_stream_processing_spark.operators.validation import validation_reason
+    """``tag_lines`` blanks the same ``event_type`` strings as
+    ``str.strip``: tabs, ideographic spaces and the ASCII separators, not
+    only spaces."""
+    from energy_data_stream_processing_spark.operators.validation import tag_lines
 
     types = [" ", "\t", "\u3000", "\x1f", "user_login"]
-    env = spark.createDataFrame(
-        [(None, t, "2025-06-04T12:00:00Z", ("C1", "1", "web", None, None, None)) for t in types],
-        "_corrupt string, event_type string, event_time string,"
-        " payload struct<customer_id: string, session_id: string, channel: string,"
-        " tariff_type: string, energy_consumed: string, payment_amount: string>",
-    )
-    reasons = [r[0] for r in env.select(validation_reason()).collect()]
+    payload = {"customer_id": "C1", "session_id": "1", "channel": "web"}
+    lines = [
+        json.dumps({"event_type": t, "event_time": "2025-06-04T12:00:00Z", "payload": payload})
+        for t in types
+    ]
+    tagged = tag_lines(spark.createDataFrame([(x,) for x in lines], "value string"))
+    reasons = [r["reason"] for r in tagged.collect()]
     assert reasons == ["event_type or payload is empty"] * 4 + [None]
 
 
